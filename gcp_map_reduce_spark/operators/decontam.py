@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.dedup import (
     _gram_hashes_subquery,
-    _token_hash_expr,
-    gram_hash_arrays_arrow,
+    doc_text_features_arrow,
 )
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.plans.probes import corpus_key
@@ -44,11 +43,13 @@ def doc_shingles_for(docs: DataFrame, n: int) -> DataFrame:
     hashed form carries 8-byte longs through the broadcast + probe (and
     the gram build runs in the vectorized Arrow kernel instead of the
     interpreted string-concat chain — measured ~15 ms/doc -> ~0.1 ms/doc
-    at sf0.1). The oracle hashes identically (_gram_hashes_subquery), so
-    collisions land in both engines and the value gate stays exact."""
-    return gram_hash_arrays_arrow(
-        docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), n
-    ).select("doc_id", F.explode("gh_arr").alias("sh"))
+    at sf0.1). The md5 text kernel hashes exactly as the oracle does
+    (_gram_hashes_subquery), so collisions land in both engines and the
+    value gate stays exact; NULL or sub-``n``-token docs have no
+    shingle."""
+    return doc_text_features_arrow(docs, n, want_sig=False).select(
+        "doc_id", F.explode("gh_arr").alias("sh")
+    )
 
 
 @query(

@@ -22,14 +22,24 @@ Hash family: every sketch here hashes through ``portable_hash64`` — a
 60-bit integer parsed from the md5 hex digest. md5 is available in both
 Spark (JVM codegen) and DuckDB, so the minhash signatures and simhash
 fingerprints are bit-reproducible in the oracle: the sketch operators are
-fully value-hash-checked, not rows-only. (xxhash64 would be marginally
-faster but exists only in Spark.)
+fully value-hash-checked, not rows-only. ``fast_hash=True`` swaps in
+Spark's xxhash64 (faster, but not in DuckDB).
+
+MinHash/gram features: one numpy core (``_gram_features``) behind two
+front halves — the fused md5 text kernel (``doc_text_features_arrow``)
+and the JVM token-hash kernel (``minhash_features_arrow``, the xxhash64
+family) — picked in one place (``minhash_features_for``); every corpus
+consumer loads through ``doc_minhash_features``. The higher-order-
+function forms (``gram_hash_arrays_for``, ``minhash_signatures_for``)
+are the executable spec the kernels are tested against.
 """
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
+import string
 import threading
 
 import numpy as np
@@ -216,7 +226,7 @@ shingles AS (
 def _gram_hashes_subquery(n: int = 3, pred: str = "TRUE") -> str:
     """Self-contained DuckDB subquery: DISTINCT (doc_id, gh) rolling
     n-gram hashes of the documents matching ``pred`` — the twin of
-    :func:`gram_hash_arrays_arrow` (portable md5 family; identical
+    :func:`doc_text_features_arrow`'s gram arrays (identical
     integer arithmetic, so collisions — ~1e-3 likely per 10^5 docs in
     the 2^31 space — land identically in both engines)."""
     p, c = MERSENNE31, ROLL_C
@@ -359,11 +369,11 @@ def dedup_ngram_jaccard(
     t_num, t_den = 4, 5
     assert t_num / t_den == t
     # ``arr`` lets a caller supply an ALREADY-MATERIALIZED
-    # (doc_id, gh_arr) relation — dedup_pair_scores shares one fused
-    # minhash_features_arrow pass across its ngram and minhash legs
-    # instead of paying the corpus scan + per-token hash twice (r9)
+    # (doc_id, gh_arr) relation — dedup_pair_scores shares one feature
+    # pass across its ngram and minhash legs instead of paying the
+    # corpus scan + per-token hash twice (r9)
     if arr is None:
-        arr = materialize(doc_gram_hash_arrays(spark, sf_dir, n=3))
+        arr = materialize(doc_minhash_features(spark, sf_dir, want_sig=False))
     if not prefix_filter:
         # carry |A| on the exploded rows (+4 bytes/row): the AllPairs
         # LENGTH bound (jac >= 4/5 forces 4*max <= 5*min, exact integer
@@ -489,7 +499,10 @@ BANDS = 8  # b bands of r = k/b rows; P(collide) = 1-(1-j^r)^b
 
 def _token_hash_expr(fast_hash: bool) -> Column:
     """array<bigint> of per-token base hashes (mod P) for the ``text``
-    column — the shared front half of the gram/signature pipelines."""
+    column, as a JVM expression. ``fast_hash=True`` (xxhash64) is the
+    front half of :func:`minhash_features_for`'s fast family; the md5
+    form hashes every token OCCURRENCE and stays only as the reference
+    the fused text kernel is tested against."""
     w = F.filter(
         F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT),
         lambda t: t != "",
@@ -505,17 +518,16 @@ def gram_hash_arrays_for(
     docs: DataFrame, n: int = 3, fast_hash: bool = False
 ) -> DataFrame:
     """(doc_id, gh_arr: array<bigint>) — DISTINCT rolling hashes of each
-    doc's n-token shingles, built WITHOUT materializing gram strings:
-    hash each TOKEN once (md5 portable / xxhash64 fast), then combine
-    with the exact integer polynomial ``((h1*C + h2) % P) * C + h3) % P``
-    via the same shifted zip_with chain as the string shingles. Skips
-    both the per-gram string concat and the per-gram md5 of a ~25-byte
-    string — the signature pipeline's two biggest CPU items. All
-    operands stay under 2^52 (h < 2^31, C < 2^20), so the arithmetic is
-    exact in both Spark longs and DuckDB BIGINTs and the oracle
-    reproduces identical gram hashes (null padding past the shorter
-    slice propagates through the arithmetic and is filtered, same as
-    the string form)."""
+    doc's n-token shingles as higher-order-function expressions: hash
+    each TOKEN once (md5 portable / xxhash64 fast), then combine with
+    the exact integer polynomial ``((h1*C + h2) % P) * C + h3) % P`` via
+    the same shifted zip_with chain as the string shingles. All operands
+    stay under 2^52 (h < 2^31, C < 2^20), so the arithmetic is exact in
+    both Spark longs and DuckDB BIGINTs (null padding past the shorter
+    slice propagates through the arithmetic and is filtered, same as the
+    string form). The executable spec of the Arrow feature kernels
+    (pytest-gated) and the density probe's sampled gram build; every
+    operator runs :func:`minhash_features_for` instead."""
     th = _token_hash_expr(fast_hash)
     g = th
     for j in range(1, n):
@@ -536,13 +548,8 @@ MINHASH_B = [int(v) for v in _rng.randint(0, MERSENNE31, NUM_HASHES, dtype=np.in
 
 def minhash_signatures_for(gh: DataFrame) -> DataFrame:
     """Signatures for a (doc_id, gh_arr) gram-hash DataFrame (see
-    :func:`gram_hash_arrays_for`) — the DF-level core of
-    :func:`minhash_signatures` (streaming micro-batches use this
-    directly)."""
-    # single-traversal fold: one pass over the hash array updating all k
-    # mins via zip_with/least — ~15% faster than k separate
-    # array_min(transform(...)) passes (same arithmetic, 1/k the
-    # traversals), and bit-identical (verified)
+    :func:`gram_hash_arrays_for`) as one higher-order-function fold —
+    the reference the Arrow signature arithmetic is tested against."""
     init = F.array(*[F.lit(MERSENNE31).cast("long")] * NUM_HASHES)
     remaps = lambda h: F.array(  # noqa: E731
         *[(F.lit(a) * h + F.lit(b)) % MERSENNE31 for a, b in zip(MINHASH_A, MINHASH_B)]
@@ -557,382 +564,250 @@ def minhash_signatures_for(gh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """Signatures from a (doc_id, th_arr) token-hash DataFrame via ONE
-    vectorized Arrow kernel — bit-identical to the higher-order-function
-    form (asserted in tests), ~20x less CPU.
+# Feature and SimHash kernels reach only module constants, numpy, pandas
+# and the stdlib from inside a task: Spark ships nested functions by
+# value but module-level ones by reference, and a Python worker need not
+# be able to import this package. Helpers are therefore factories called
+# on the driver.
 
-    Why this exists: Spark's array lambdas (``transform``/``zip_with``/
+# Distinct tokens one task's md5 memo holds before it starts over. The
+# memo pays because a corpus's vocabulary is tiny next to its token
+# occurrences; the cap bounds a task's memory (~130 B per entry, so
+# ~35 MB at the cap) on a vocabulary-rich shard.
+TOKEN_HASH_CACHE_MAX = 1 << 18
+
+# de-punctuate table of the Python normalize chain (PY_NORMALIZE's rule
+# order: de-punctuate, lower, ASCII-delete; after the fold str.split()
+# is the WS-class split)
+_PUNCT_DEL = str.maketrans("", "", string.punctuation)
+
+
+def _md5_token_hasher():
+    """``w -> int(md5(utf8(w))[:15 hex], 16)`` — :func:`portable_hash64`
+    in Python — memoised per distinct token. Built on the driver; every
+    task unpickles its own copy with an empty memo, which is cleared
+    whenever it holds ``TOKEN_HASH_CACHE_MAX`` tokens (a reset costs
+    re-hashes, never a different answer). Shared by the fused feature
+    kernel and the SimHash kernel."""
+    cap = TOKEN_HASH_CACHE_MAX
+    memo: dict[str, int] = {}
+
+    def h64(w: str) -> int:
+        v = memo.get(w)
+        if v is None:
+            if len(memo) >= cap:
+                memo.clear()
+            v = memo[w] = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
+        return v
+
+    return h64
+
+
+def _gram_features(n: int, want_sig: bool, want_arr: bool):
+    """The numpy core of the MinHash/gram feature family, built for one
+    kernel: ``core(ids, ths)`` maps per-doc token-hash arrays to a pandas
+    frame of (doc_id[, sig][, gh_arr]), or None when no doc has a gram.
+    Both front halves call it. Token hashes are reduced mod P here, once
+    per batch (the JVM front half already did; the md5 one passes raw
+    60-bit hashes).
+
+    A NULL array (NULL text) or one with fewer than ``n`` tokens has no
+    gram and produces no row — the size>0 semantics of the HOF form.
+    Signatures are the k affine remaps' per-segment minima over the raw
+    gram stream (``array_distinct`` is skipped on purpose: duplicates
+    cannot change a minimum); gram arrays are each doc's distinct values,
+    sorted, from one stable (segment, value) sort and a first-in-run
+    mask — no Python loop over docs. Work for an output that was not
+    asked for is skipped. Exactness: h < 2^31 and C < 2^20 keep every
+    intermediate under 2^62, so int64 numpy == Spark long == DuckDB
+    BIGINT and the oracle reproduces both outputs bit for bit."""
+
+    def core(ids, ths):
+        import pandas as pd
+
+        lens = np.fromiter(
+            (-1 if v is None else len(v) for v in ths), np.int64, len(ths)
+        )
+        keep = lens >= n
+        if not keep.any():
+            return None
+        flat = (
+            np.concatenate(
+                [np.asarray(v, np.int64) for v, k in zip(ths, keep) if k]
+            )
+            % MERSENNE31
+        )
+        gk = lens[keep] - (n - 1)
+        offs = np.concatenate(([0], np.cumsum(lens[keep])))[:-1]
+        gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
+        # flat indices of each doc's gram windows (boundary-safe)
+        idx = np.repeat(offs, gk) + (
+            np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
+        )
+        g = flat[idx]
+        for j in range(1, n):
+            g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
+        out = {"doc_id": np.asarray(ids, np.int64)[keep]}
+        if want_sig:
+            a_arr = np.array(MINHASH_A, np.int64)
+            b_arr = np.array(MINHASH_B, np.int64)
+            sig = np.empty((len(gk), NUM_HASHES), np.int64)
+            for i in range(NUM_HASHES):
+                sig[:, i] = np.minimum.reduceat(
+                    (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
+                )
+            out["sig"] = list(sig)
+        if want_arr:
+            seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
+            order = np.lexsort((g, seg))
+            gs, ss = g[order], seg[order]
+            first = np.ones(len(gs), bool)
+            first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
+            counts = np.bincount(ss[first], minlength=len(gk))
+            out["gh_arr"] = np.split(gs[first], np.cumsum(counts)[:-1])
+        return pd.DataFrame(out)
+
+    return core
+
+
+def _features_schema(want_sig: bool, want_arr: bool) -> str:
+    if not (want_sig or want_arr):
+        raise ValueError("need at least one of want_sig/want_arr")
+    return ", ".join(
+        ["doc_id long"]
+        + ["sig array<long>"] * want_sig
+        + ["gh_arr array<long>"] * want_arr
+    )
+
+
+def minhash_features_arrow(
+    th_df: DataFrame, n: int = 3, want_sig: bool = True, want_arr: bool = True
+) -> DataFrame:
+    """(doc_id[, sig][, gh_arr]) from a (doc_id, th_arr) token-hash
+    DataFrame — the JVM front half: the per-token hash already ran as a
+    Spark expression (:func:`_token_hash_expr`), and this
+    ``mapInPandas`` pass runs only the numpy core
+    (:func:`_gram_features`).
+
+    Why Arrow: Spark's array lambdas (``transform``/``zip_with``/
     ``aggregate``) are CodegenFallback — every element op is an
     interpreted expression eval (~0.5 us measured). The rolling-gram
     chain plus the k-min fold is ~(n-1 + k) ops per gram; at 50k docs x
     ~300 grams x (2+32) ops that interpreted ~380 CPU-seconds on the sf1
-    stress set. The same integer arithmetic in numpy over the Arrow
-    batch (flat gram array + segment reduceat) is ~100x fewer cycles per
-    op. Exactness: h < 2^31 and C < 2^20 keep every intermediate under
-    2^62, so int64 numpy == Spark long == DuckDB BIGINT — the oracle
-    still reproduces signatures exactly. ``array_distinct`` is skipped
-    on purpose: duplicate grams cannot change a minimum.
-
-    Scale shape: mapInPandas is per-partition streaming over Arrow
-    batches — no shuffle, no driver collection; memory is O(batch
-    grams), bounded by arrow.maxRecordsPerBatch."""
-    import numpy as np
-    import pandas as pd
-
-    a_arr, b_arr = np.array(MINHASH_A, np.int64), np.array(MINHASH_B, np.int64)
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            # flat indices of each doc's gram windows (boundary-safe)
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            sig = np.empty((len(gk), NUM_HASHES), np.int64)
-            for i in range(NUM_HASHES):
-                sig[:, i] = np.minimum.reduceat(
-                    (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy()[keep], "sig": list(sig)}
-            )
-
-    return th_df.mapInPandas(kernel, "doc_id long, sig array<long>")
-
-
-def gram_hash_arrays_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, gh_arr) DISTINCT rolling gram hashes from a (doc_id,
-    th_arr) token-hash DataFrame — the vectorized twin of
-    :func:`gram_hash_arrays_for` (same numpy segment arithmetic as
-    :func:`minhash_signatures_arrow`; set-equal arrays, sorted order).
-    Docs with fewer than ``n`` tokens produce no row, matching the
-    downstream size>0 semantics."""
-    import numpy as np
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            # per-segment distinct: stable (segment, value) sort, then
-            # first-in-run mask — no Python loop over docs
-            seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-            order = np.lexsort((g, seg))
-            gs, ss = g[order], seg[order]
-            first = np.ones(len(gs), bool)
-            first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-            gu, su = gs[first], ss[first]
-            counts = np.bincount(su, minlength=len(gk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[keep],
-                    "gh_arr": np.split(gu, np.cumsum(counts)[:-1]),
-                }
-            )
-
-    return th_df.mapInPandas(kernel, "doc_id long, gh_arr array<long>")
-
-
-def minhash_features_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sig, gh_arr) in ONE kernel pass — the fusion of
-    :func:`minhash_signatures_arrow` and :func:`gram_hash_arrays_arrow`
-    (identical arithmetic on the shared rolling-gram array; per-column
-    equality to the two single-purpose kernels is pytest-gated).
-
-    Why: the banded-plus-verified edge plan needs BOTH the signatures
-    (band candidates) and the distinct gram arrays (exact Jaccard
-    verification). Materializing them separately runs the JVM
-    tokenize + per-token hash expression AND the gram build twice over
-    the full corpus — measured ~2.9 s of the 6.5 s
+    stress set, where the same integer arithmetic in numpy is ~100x
+    fewer cycles per op. One pass yields both outputs: the banded plus
+    verified edge plan needs signatures AND gram arrays, and separate
+    passes ran the tokenize + hash expression twice (~2.9 s of the 6.5 s
     ``dedup_clusters(edge_source="minhash")`` wall at the sf1 stress
-    set. One pass halves the dominant corpus-side stage.
-    """
-    import numpy as np
-    import pandas as pd
-
-    a_arr, b_arr = np.array(MINHASH_A, np.int64), np.array(MINHASH_B, np.int64)
+    set). Per-partition streaming over Arrow batches — no shuffle, no
+    driver collection; memory is O(batch grams)."""
+    schema = _features_schema(want_sig, want_arr)
+    core = _gram_features(n, want_sig, want_arr)
 
     def kernel(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            # signatures: k per-segment minima over the raw gram stream
-            sig = np.empty((len(gk), NUM_HASHES), np.int64)
-            for i in range(NUM_HASHES):
-                sig[:, i] = np.minimum.reduceat(
-                    (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
-                )
-            # distinct gram arrays: stable (segment, value) sort + run mask
-            seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-            order = np.lexsort((g, seg))
-            gs, ss = g[order], seg[order]
-            first = np.ones(len(gs), bool)
-            first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-            gu, su = gs[first], ss[first]
-            counts = np.bincount(su, minlength=len(gk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[keep],
-                    "sig": list(sig),
-                    "gh_arr": np.split(gu, np.cumsum(counts)[:-1]),
-                }
-            )
+            out = core(pdf["doc_id"].to_numpy(), pdf["th_arr"].to_numpy())
+            if out is not None:
+                yield out
 
-    return th_df.mapInPandas(
-        kernel, "doc_id long, sig array<long>, gh_arr array<long>"
-    )
+    return th_df.mapInPandas(kernel, schema)
 
 
 def doc_text_features_arrow(
     docs: DataFrame, n: int = 3, want_sig: bool = True, want_arr: bool = True
 ) -> DataFrame:
-    """Fused text -> minhash/gram features in ONE Python pass (r17).
+    """(doc_id[, sig][, gh_arr]) from a (doc_id, text) DataFrame — the
+    fused md5 front half (r17): normalize, tokenize and md5 run inside
+    the same ``mapInPandas`` task as the numpy core.
 
-    The r16 shape (``_token_hash_expr`` front half + th_arr kernel)
-    evaluated md5 + hex parse PER TOKEN OCCURRENCE in the JVM — the
-    dominant CPU of every md5-family dedup stage (curated_corpus's
-    gram-checkpoint stage profiled 14.7 CPU-s at sf0.1, most of it the
-    per-occurrence md5). Here the whole front half runs inside the same
-    ``mapInPandas`` task that builds the grams: the normalize/tokenize
-    chain is the C-level Python twin the engine-equivalence property
-    tests pin (PY_NORMALIZE rule order; post-ASCII-fold tokens make
-    ``str.split()`` the WS-class split — the proven simhash-kernel
-    replica), and each DISTINCT token is md5-hashed ONCE per task
-    (vocabulary cache — corpus vocabulary is tiny next to occurrences).
-
-    Exactness: ``int(md5(utf8)[:15 hex], 16)`` IS
-    ``conv(substring(md5(w),1,15),16,10)`` (:func:`portable_hash64`),
-    mod the same prime; the rolling-gram / affine-min numpy machinery
-    is byte-for-byte the th_arr kernels'. Bit-equality to the r16 path
-    is pytest-gated and every downstream registered query re-checks
-    against the DuckDB oracle.
-
-    NULL or sub-``n``-token docs produce no output row (the th_arr
-    kernels' ``gcounts <= 0`` drop, made explicit — a NULL text only
-    ever reached the old kernels in theory, where it would raise)."""
-    import string as _string
-
-    import numpy as np
-    import pandas as pd
-
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    punct_del = {ord(c): None for c in _string.punctuation}
-    a_arr = np.array(MINHASH_A, np.int64) if want_sig else None
-    b_arr = np.array(MINHASH_B, np.int64) if want_sig else None
-    if not (want_sig or want_arr):
-        raise ValueError("need at least one of want_sig/want_arr")
+    The JVM md5 front half evaluated md5 + hex parse PER TOKEN
+    OCCURRENCE — the dominant CPU of every md5-family dedup stage
+    (curated_corpus's gram-checkpoint stage profiled 14.7 CPU-s at
+    sf0.1, most of it the per-occurrence md5). Here each DISTINCT token
+    is md5-hashed once per task (:func:`_md5_token_hasher`), after the
+    C-level Python twin of the normalize chain. ``int(md5(utf8)[:15
+    hex], 16)`` IS ``conv(substring(md5(w),1,15),16,10)``, mod the same
+    prime, so the output is bit-equal to the JVM md5 front half
+    (pytest-gated) and every downstream registered query re-checks
+    against the DuckDB oracle."""
+    schema = _features_schema(want_sig, want_arr)
+    core = _gram_features(n, want_sig, want_arr)
+    h64 = _md5_token_hasher()
 
     def kernel(batches):
-        import hashlib
-
-        hash_cache: dict[str, int] = {}
-
-        def h64(w: str) -> int:
-            v = hash_cache.get(w)
-            if v is None:
-                v = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    % MERSENNE31
-                )
-                hash_cache[w] = v
-            return v
-
         for pdf in batches:
-            if pdf.empty:
-                continue
-            ids: list[int] = []
-            ths: list[np.ndarray] = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                if t is None:
-                    continue
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
+            ths = [
+                None
+                if t is None
+                else np.fromiter(
+                    map(
+                        h64,
+                        t.translate(_PUNCT_DEL)
+                        .lower()
+                        .encode("ascii", "ignore")
+                        .decode("ascii")
+                        .split(),
+                    ),
+                    np.int64,
                 )
-                toks = norm.split()
-                if len(toks) < n:
-                    continue  # no grams -> no row (gcounts<=0 parity)
-                ids.append(doc_id)
-                ths.append(
-                    np.fromiter((h64(w) for w in toks), np.int64, len(toks))
-                )
-            if not ids:
-                continue
-            # shared rolling-gram machinery (identical to the th_arr
-            # kernels above; every doc here has >= 1 gram)
-            lens = np.fromiter((len(v) for v in ths), np.int64, len(ths))
-            gk = lens - (n - 1)
-            flat = np.concatenate(ths)
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs, gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            out = {"doc_id": pd.Series(ids, dtype="int64")}
-            if want_sig:
-                sig = np.empty((len(gk), NUM_HASHES), np.int64)
-                for i in range(NUM_HASHES):
-                    sig[:, i] = np.minimum.reduceat(
-                        (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
-                    )
-                out["sig"] = list(sig)
-            if want_arr:
-                seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-                order = np.lexsort((g, seg))
-                gs, ss = g[order], seg[order]
-                first = np.ones(len(gs), bool)
-                first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-                gu, su = gs[first], ss[first]
-                counts = np.bincount(su, minlength=len(gk))
-                out["gh_arr"] = np.split(gu, np.cumsum(counts)[:-1])
-            yield pd.DataFrame(out)
+                for t in pdf["text"]
+            ]
+            out = core(pdf["doc_id"].to_numpy(), ths)
+            if out is not None:
+                yield out
 
-    fields = ["doc_id long"]
-    if want_sig:
-        fields.append("sig array<long>")
-    if want_arr:
-        fields.append("gh_arr array<long>")
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, ", ".join(fields)
-    )
+    return docs.select("doc_id", "text").mapInPandas(kernel, schema)
+
+
+def minhash_features_for(
+    docs: DataFrame,
+    n: int = 3,
+    fast_hash: bool = False,
+    want_sig: bool = True,
+    want_arr: bool = True,
+) -> DataFrame:
+    """(doc_id[, sig][, gh_arr]) for a (doc_id, text) DataFrame — the
+    one place that picks the hash family's front half. The portable md5
+    family (default; reproducible in DuckDB, so the registered queries
+    stay value-hash-checked) runs the fused text kernel; ``fast_hash``
+    swaps in Spark's xxhash64 (same statistical quality, not in DuckDB),
+    which has no Python twin and so keeps the JVM front half. Batch
+    operators and both streaming ``foreachBatch`` bodies call this."""
+    if fast_hash:
+        return minhash_features_arrow(
+            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")),
+            n, want_sig, want_arr,
+        )
+    return doc_text_features_arrow(docs, n, want_sig, want_arr)
 
 
 def doc_minhash_features(
-    spark: SparkSession, sf_dir: str, n: int = 3, fast_hash: bool = False
+    spark: SparkSession,
+    sf_dir: str,
+    n: int = 3,
+    fast_hash: bool = False,
+    want_sig: bool = True,
+    want_arr: bool = True,
 ) -> DataFrame:
-    """(doc_id, sig, gh_arr) per document — one corpus scan, one Arrow
-    pass (see :func:`minhash_features_arrow`). The portable-md5 family
-    routes through the fused text kernel (r17,
-    :func:`doc_text_features_arrow` — md5 per DISTINCT token per task);
-    ``fast_hash`` keeps the JVM xxhash64 front half, which has no
-    Python twin."""
+    """(doc_id[, sig][, gh_arr]) per document of the corpus — one scan,
+    one Arrow pass (:func:`minhash_features_for`).
+
+    ZERO-shuffle: each document is one row, and the gram build plus the
+    k mins run over the scan's own partitions. No explode, no groupBy:
+    at 100 TB the feature stage adds no Exchange at all, where a (doc_id,
+    shingle)-exploded groupBy formulation would shuffle k longs per doc.
+    Docs shorter than ``n`` tokens are dropped, matching the exploded/
+    grouped semantics. ``sig`` feeds the LSH bands, ``gh_arr`` (the
+    DISTINCT shingle fingerprints — the hashed replacement for
+    :func:`doc_shingle_arrays`) the exact Jaccard; ask only for what the
+    caller reads."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = ensure_parallelism(
         docs,
         spark.sparkContext.defaultParallelism,
         cache_key=corpus_key(sf_dir, "documents"),
     )
-    if fast_hash:
-        return minhash_features_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")), n
-        )
-    return doc_text_features_arrow(docs, n)
-
-
-def doc_gram_hash_arrays(
-    spark: SparkSession, sf_dir: str, n: int = 3, fast_hash: bool = False
-) -> DataFrame:
-    """(doc_id, gh_arr) DISTINCT shingle fingerprints per document — the
-    hashed replacement for :func:`doc_shingle_arrays` on every dedup
-    path (the string form remains for operators whose semantics need the
-    literal grams, e.g. decontamination overlap reporting)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
-    if fast_hash:
-        return gram_hash_arrays_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")), n
-        )
-    # r17: portable-md5 family runs the fused text kernel (md5 per
-    # DISTINCT token per task instead of per occurrence in the JVM)
-    return doc_text_features_arrow(docs, n, want_sig=False)
-
-
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, fast_hash: bool = False
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>[k]) — k independent min-hashes per doc.
-
-    ZERO-shuffle: each document is one row holding its token-hash array
-    (JVM-side md5/xxhash64 per token), and the rolling-gram combine plus
-    the k mins run in ONE vectorized Arrow kernel over the scan's own
-    partitions (:func:`minhash_signatures_arrow` — numpy segment
-    arithmetic, bit-identical to the higher-order-function form but ~20x
-    less CPU; the HOF form :func:`minhash_signatures_for` stays as the
-    cross-check reference). No explode, no groupBy: at 100 TB the
-    signature stage adds no Exchange at all, where a (doc_id, shingle)-
-    exploded groupBy formulation would shuffle k longs per doc. Empty
-    gram arrays (docs shorter than n tokens) are dropped, matching the
-    exploded/grouped semantics. (A_i*h + B_i stays under 2^62: both
-    operands < 2^31.)
-
-    ``fast_hash=True`` swaps the portable md5 base hash for Spark's
-    xxhash64 — ~30% faster signatures, same statistical quality, but NOT
-    reproducible in DuckDB. Production/bench plans use it; the default
-    stays the portable family so the registered query remains fully
-    value-hash-checked by the oracle. Candidate sets agree for true
-    near-dups either way (asserted in tests).
-    """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
-    if fast_hash:
-        return minhash_signatures_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")),
-            n=3,
-        )
-    # r17: portable-md5 family runs the fused text kernel (md5 per
-    # DISTINCT token per task instead of per occurrence in the JVM)
-    return doc_text_features_arrow(docs, n=3, want_arr=False)
+    return minhash_features_for(docs, n, fast_hash, want_sig, want_arr)
 
 
 def _minhash_oracle() -> str:
@@ -1054,7 +929,11 @@ def dedup_minhash(
     # lets a caller supply an already-materialized (doc_id, sig)
     # relation (dedup_pair_scores' shared fused-features pass, r9).
     if sig is None:
-        sig = materialize(minhash_signatures(spark, sf_dir, fast_hash=fast_hash))
+        sig = materialize(
+            doc_minhash_features(
+                spark, sf_dir, fast_hash=fast_hash, want_arr=False
+            )
+        )
     # repartition the candidate set before the signature re-joins (same
     # shape as near_dup_edges_minhash_verified): AQE coalesces the
     # ~10 MB candidate shuffle to 2 partitions by BYTES, but the
@@ -1106,8 +985,9 @@ def simhash_fingerprints(
 
     ``engine="arrow"`` (default, r8): ZERO-shuffle — one ``mapInPandas``
     pass per doc runs the proven C-level normalize chain, a token
-    Counter, the md5 hash per DISTINCT word (cached across the batch's
-    docs — the corpus vocabulary is tiny next to token occurrences) and
+    Counter, the md5 hash per DISTINCT word (the per-task memo of
+    :func:`_md5_token_hasher` — the corpus vocabulary is tiny next to
+    token occurrences) and
     the 60 votes as one numpy sign-matrix product. Replaces the
     tokenize-explode + (doc, word) groupBy + 60-column doc groupBy
     pipeline (two corpus-scale shuffles). Votes are exact integer sums
@@ -1126,27 +1006,15 @@ def simhash_fingerprints(
         cache_key=corpus_key(sf_dir, "documents"),
     )
     if engine == "arrow":
-        import string as _string
-
-        ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-        punct_del = {ord(c): None for c in _string.punctuation}
         n_bits = SIMHASH_BITS
+        h64 = _md5_token_hasher()
 
         def kernel(batches):
-            import hashlib
             from collections import Counter
 
             import pandas as pd
 
-            hash_cache: dict[str, int] = {}
             shifts = np.arange(n_bits, dtype=np.int64)
-
-            def h64(w: str) -> int:
-                v = hash_cache.get(w)
-                if v is None:
-                    v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    hash_cache[w] = v
-                return v
 
             for pdf in batches:
                 ids, fps = [], []
@@ -1154,14 +1022,13 @@ def simhash_fingerprints(
                     if t is None:
                         continue  # expr parity: explode(split(NULL))
                         # emits no (doc, word) rows -> no fingerprint
-                    norm = (
-                        t.translate(punct_del)
+                    toks = (
+                        t.translate(_PUNCT_DEL)
                         .lower()
                         .encode("ascii", "ignore")
                         .decode("ascii")
-                        .strip(ws_chars)
+                        .split()
                     )
-                    toks = norm.split()  # pure ASCII == the WS-class split
                     if not toks:
                         continue  # no (doc, word) rows -> no fingerprint
                     cnt = Counter(toks)
@@ -1401,7 +1268,7 @@ def near_dup_edges_minhash_verified(
     Round-7 measured fixes (this edge leg 4.7 -> 3.0 s best-of-3 at the
     sf1 stress set; the full minhash clustering 7.4 -> ~6.5 s):
     signatures + gram arrays come from ONE fused corpus pass
-    (:func:`minhash_features_arrow` — separate materializes ran the
+    (:func:`doc_minhash_features` — separate materializes ran the
     tokenize/hash expression twice, ~0.9 s), and the candidate set is
     repartitioned before the verification join (~1.6 s): when the
     payload side broadcasts, no exchange re-spreads the AQE-coalesced
@@ -1909,8 +1776,8 @@ def dedup_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one fused corpus pass (scan + per-token md5 + gram/signature
     # kernel) feeds BOTH the ngram and the minhash legs — separate
-    # doc_gram_hash_arrays / minhash_signatures materializes paid the
-    # scan and the JVM per-token hash twice (r9; the multi-consumer-
+    # gram-array / signature materializes paid the scan and the
+    # per-token hash twice (r9; the multi-consumer-
     # recompute class from the r8 audit, one level up). SimHash keeps
     # its own scan: its kernel hashes distinct WORDS, not gram arrays.
     feats = materialize(doc_minhash_features(spark, sf_dir))

@@ -62,70 +62,14 @@ _TOKENS_CTE = f"WITH toks AS ({sql_tokens_cte()}) "
     oracle=_TOKENS_CTE
     + "SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
 )
-def wordcount(
-    spark: SparkSession, sf_dir: str, engine: str = "expr"
-) -> DataFrame:
+def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token -> occurrence count over the whole corpus (flagship query).
 
-    ``engine`` picks the map side; the result is identical (pytest-gated):
-
-    - ``"expr"`` (default, registered/bench plan, what the oracle
-      mirrors): JVM ``normalize -> split -> explode -> hash agg`` — best
-      at bench scale (0.67 vs 0.75 s at sf0.1: the Arrow exchange costs
-      more than the regex passes save on 5k docs);
-    - ``"arrow"``: one Python pass per partition builds a token Counter
-      (the same C-level normalize chain as the ``text_profile`` kernel)
-      and emits (word, partial_count) — the shuffle then carries one row
-      per distinct word per partition, same as the JVM partial agg, but
-      the 3-regex normalize + explode CPU collapses into C string ops:
-      1.26 -> 0.76 s at the sf1 stress set. The 100 TB option when the
-      corpus-side CPU dominates; same boundary rule as ``text_profile``.
-    """
-    if engine == "expr":
-        return (
-            doc_tokens(spark, sf_dir)
-            .groupBy("word")
-            .agg(F.count("*").alias("cnt"))
-        )
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'expr' or 'arrow', got {engine!r}")
-    import string as _string
-
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    punct_del = {ord(c): None for c in _string.punctuation}
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("text"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
-
-    def kernel(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        cnt = Counter()
-        for pdf in batches:
-            for t in pdf["text"]:
-                if t is None:
-                    continue  # expr parity: tokenize emits no rows
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
-                )
-                # post-ASCII-fold, str.split() == the explicit WS class
-                # (the WS_CLASS design invariant; see functions/text.py)
-                cnt.update(norm.split())
-        if cnt:
-            yield pd.DataFrame(
-                {"word": list(cnt.keys()), "pc": list(cnt.values())}
-            )
-
-    partials = docs.mapInPandas(kernel, "word string, pc long")
-    return partials.groupBy("word").agg(F.sum("pc").alias("cnt"))
+    JVM ``normalize -> split -> explode -> hash agg``, the plan the
+    oracle mirrors: at bench scale it beats a per-partition Arrow token
+    Counter (0.67 vs 0.75 s at sf0.1), whose Arrow exchange costs more
+    than the regex passes it saves."""
+    return doc_tokens(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
 
 
 def wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,11 +12,12 @@ arrive. Per trigger:
    (lowest doc_id within the batch). The store holds every seen hash —
    one short row per distinct text — because the batch pipeline's
    keeper rule is min-doc_id over ALL docs, not over quality survivors.
-2. **near-dup removal** — the fused :func:`minhash_features_arrow`
-   kernel computes (sig, gh_arr) for the WHOLE batch; band collisions
-   against the seen-feature store generate candidates (batch side
-   broadcast, store map-side — the shared stream posture) and the EXACT
-   shingle Jaccard on the gram arrays verifies each candidate, the
+2. **near-dup removal** — :func:`minhash_features_for`, the batch
+   operators' feature kernel, computes (sig, gh_arr) for the WHOLE
+   batch; band collisions against the seen-feature store generate
+   candidates (batch side broadcast, store map-side — the shared
+   stream posture) and the EXACT shingle Jaccard on the gram arrays
+   verifies each candidate, the
    identical criterion ``near_dup_edges_minhash_verified`` applies in
    batch. All batch features append to the store: the batch pipeline
    drops doc_b of ANY verified edge with a lower-id doc, accepted or
@@ -55,10 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.dedup import (
-    _token_hash_expr,
-    doc_text_features_arrow,
     minhash_band_rows,
-    minhash_features_arrow,
+    minhash_features_for,
 )
 from gcp_map_reduce_spark.operators.text_analysis import text_quality_df
 from gcp_map_reduce_spark.streaming.near_dup import read_store
@@ -297,20 +296,11 @@ def run_streaming_curated_corpus(
             F.broadcast(seen_hits), "text_hash", "left_anti"
         ).select("doc_id")
 
-        # 2. near-dup features + verified drop set for the WHOLE batch.
-        # md5 family routes through the fused text kernel (r17 — md5 per
-        # DISTINCT token per task, bit-equal to the expr front half,
-        # same routing as the batch operators); xxhash64 keeps the JVM
-        # front half (no Python twin).
-        feats = (
-            doc_text_features_arrow(batch.select("doc_id", "text"))
-            if not fast_hash
-            else minhash_features_arrow(
-                batch.select(
-                    "doc_id", _token_hash_expr(True).alias("th_arr")
-                )
-            )
-        ).localCheckpoint(eager=True)
+        # 2. near-dup features + verified drop set for the WHOLE batch,
+        # through the batch operators' hash-family switch
+        feats = minhash_features_for(batch, fast_hash=fast_hash).localCheckpoint(
+            eager=True
+        )
         dups = _verified_dup_ids(ss, feats, sig_store_dir, batch_id)
 
         # 3+4. quality gate decides the emit; the stores persist ALL

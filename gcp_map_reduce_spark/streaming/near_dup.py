@@ -39,16 +39,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.operators.dedup import (
     BANDS,
     NUM_HASHES,
-    _token_hash_expr,
-    doc_text_features_arrow,
     minhash_band_rows,
-    minhash_signatures_arrow,
+    minhash_features_for,
 )
 
 NEAR_DUP_EST_JACCARD = 0.7  # same acceptance threshold as dedup_minhash
@@ -63,20 +60,20 @@ def read_store(ss: SparkSession, schema: str, store_dir: str) -> DataFrame:
     also match `_codebook` (wrong schema -> silent NULL columns) and a
     `.compact-staging` dir a killed compaction left behind (a full
     duplicate copy of the store scanned every trigger until the next
-    compact call). Missing patterns are skipped; no store at all yields
-    an empty relation."""
-    dfs = []
-    for pat in ("batch_id=*", "compacted=*"):
-        try:
-            dfs.append(ss.read.schema(schema).parquet(f"{store_dir}/{pat}"))
-        except AnalysisException:
-            continue
-    if not dfs:
+    compact call). The dirs are listed with one Hadoop ``globStatus``
+    per pattern and read by name, so a missing pattern costs no failed
+    read and no logged stack trace; no store at all yields an empty
+    relation."""
+    path = ss.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = path(store_dir).getFileSystem(ss.sparkContext._jsc.hadoopConfiguration())
+    paths = [
+        st.getPath().toString()
+        for pat in ("batch_id=*", "compacted=*")
+        for st in fs.globStatus(path(f"{store_dir}/{pat}")) or []
+    ]
+    if not paths:
         return ss.createDataFrame([], schema)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    return ss.read.schema(schema).parquet(*paths)
 
 
 def _est_jaccard(sig_a, sig_b):
@@ -549,19 +546,8 @@ def run_streaming_near_dup_dedup(
             if spread_batch
             else batch_df
         )
-        # md5 family routes through the fused text kernel (r17 — md5
-        # per DISTINCT token per task, bit-equal; see dedup.py);
-        # xxhash64 keeps the JVM front half (no Python twin)
-        sigs = (
-            doc_text_features_arrow(
-                spread.select("doc_id", "text"), want_arr=False
-            )
-            if not fast_hash
-            else minhash_signatures_arrow(
-                spread.select(
-                    "doc_id", _token_hash_expr(True).alias("th_arr")
-                )
-            )
+        sigs = minhash_features_for(
+            spread, fast_hash=fast_hash, want_arr=False
         )
         if collected_accept:
             # one job: kernel + collect (the batch was already assumed

@@ -4,7 +4,7 @@ operator (which IS oracle-checked) instead of an SQL oracle."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def _pairs(df, a="doc_a", b="doc_b"):
@@ -81,9 +81,12 @@ def test_simhash_finds_planted_dups(spark):
 
 
 def test_minhash_signatures_shape(spark):
-    from gcp_map_reduce_spark.operators.dedup import NUM_HASHES, minhash_signatures
+    from gcp_map_reduce_spark.operators.dedup import (
+        NUM_HASHES,
+        doc_minhash_features,
+    )
 
-    sig = minhash_signatures(spark, "/root/testdata/sf0.001")
+    sig = doc_minhash_features(spark, SF_SMALL, want_arr=False)
     assert sig.columns == ["doc_id", "sig"]
     row = sig.limit(1).collect()[0]
     assert len(row["sig"]) == NUM_HASHES
@@ -96,8 +99,8 @@ def test_minhash_arrow_kernel_bit_identical_to_hof(spark):
     min arithmetic in numpy int64) — the oracle's value-hash gate rides
     on this equivalence."""
     from gcp_map_reduce_spark.operators.dedup import (
+        doc_minhash_features,
         gram_hash_arrays_for,
-        minhash_signatures,
         minhash_signatures_for,
     )
     from gcp_map_reduce_spark.sources.tables import load_table
@@ -108,21 +111,16 @@ def test_minhash_arrow_kernel_bit_identical_to_hof(spark):
         ref = minhash_signatures_for(
             gram_hash_arrays_for(docs, n=3, fast_hash=fast)
         )
-        got = minhash_signatures(spark, d, fast_hash=fast)
+        got = doc_minhash_features(spark, d, fast_hash=fast, want_arr=False)
         assert ref.exceptAll(got).count() == 0
         assert got.exceptAll(ref).count() == 0
 
 
 def test_minhash_fused_features_kernel_matches_single_kernels(spark):
-    """The fused (sig, gh_arr) kernel powering the verified-edge plan
-    must reproduce the two single-purpose kernels column-for-column —
-    one corpus pass replaces two, and this gate is what makes the fusion
-    safe to keep."""
-    from gcp_map_reduce_spark.operators.dedup import (
-        doc_gram_hash_arrays,
-        doc_minhash_features,
-        minhash_signatures,
-    )
+    """The want_sig/want_arr subsets of the feature kernel must equal the
+    full (sig, gh_arr) output column-for-column, in both hash families —
+    skipping an output skips work, never changes the other one."""
+    from gcp_map_reduce_spark.operators.dedup import doc_minhash_features
 
     d = "/root/testdata/sf0.01"
     for fast in (False, True):
@@ -130,14 +128,12 @@ def test_minhash_fused_features_kernel_matches_single_kernels(spark):
             r.doc_id: (tuple(r.sig), tuple(r.gh_arr))
             for r in doc_minhash_features(spark, d, fast_hash=fast).collect()
         }
-        sig = {
-            r.doc_id: tuple(r.sig)
-            for r in minhash_signatures(spark, d, fast_hash=fast).collect()
-        }
-        arrs = {
-            r.doc_id: tuple(r.gh_arr)
-            for r in doc_gram_hash_arrays(spark, d, fast_hash=fast).collect()
-        }
+        only_sig = doc_minhash_features(spark, d, fast_hash=fast, want_arr=False)
+        only_arr = doc_minhash_features(spark, d, fast_hash=fast, want_sig=False)
+        assert only_sig.columns == ["doc_id", "sig"]
+        assert only_arr.columns == ["doc_id", "gh_arr"]
+        sig = {r.doc_id: tuple(r.sig) for r in only_sig.collect()}
+        arrs = {r.doc_id: tuple(r.gh_arr) for r in only_arr.collect()}
         assert feats and set(feats) == set(sig) == set(arrs)
         for k, (s, g) in feats.items():
             assert s == sig[k] and g == arrs[k], k
@@ -293,12 +289,71 @@ def test_fused_text_kernel_bit_equal_to_expr_front_half(spark):
     assert a == b and len(a) > 0
 
 
+def test_text_kernel_gram_arrays_equal_jvm_md5_reference_n5(spark):
+    """Decontamination's shingles (n=5, want_sig=False) come from the
+    fused text kernel: its gram arrays must equal the JVM md5 front-half
+    reference set-for-set, with docs shorter than n dropped."""
+    from gcp_map_reduce_spark.operators.dedup import (
+        doc_text_features_arrow,
+        gram_hash_arrays_for,
+    )
+    from gcp_map_reduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    ref = {
+        r["doc_id"]: sorted(r["gh_arr"])
+        for r in gram_hash_arrays_for(docs, n=5).collect()
+        if r["gh_arr"]
+    }
+    got = doc_text_features_arrow(docs, 5, want_sig=False)
+    assert got.columns == ["doc_id", "gh_arr"]
+    got = {r["doc_id"]: list(r["gh_arr"]) for r in got.collect()}
+    assert got == ref and len(got) > 0
+
+
+def test_token_hash_cache_cap_resets_are_bit_equal(spark, monkeypatch):
+    """The per-task md5 memo is bounded: a cap small enough to force
+    many resets must leave the feature and SimHash outputs bit-equal to
+    the default-cap run."""
+    import hashlib
+
+    from gcp_map_reduce_spark.operators import dedup
+
+    docs = dedup.load_table(spark, SF_ORACLE, "documents").select(
+        "doc_id", "text"
+    )
+
+    def run():
+        feats = {
+            r["doc_id"]: (list(r["sig"]), list(r["gh_arr"]))
+            for r in dedup.doc_text_features_arrow(docs, 3).collect()
+        }
+        fps = {
+            r["doc_id"]: r["simhash"]
+            for r in dedup.simhash_fingerprints(spark, SF_ORACLE).collect()
+        }
+        return feats, fps
+
+    full = run()
+    monkeypatch.setattr(dedup, "TOKEN_HASH_CACHE_MAX", 3)
+    h64 = dedup._md5_token_hasher()
+    words = "a b c a d b e a".split()
+    assert [h64(w) for w in words] == [
+        int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in words
+    ]
+    capped = run()
+    assert capped == full and full[0] and full[1]
+
+
 def test_fused_text_kernel_drops_null_and_short_docs(spark, tmp_path):
-    from gcp_map_reduce_spark.operators.dedup import doc_text_features_arrow
+    """Both front halves drop NULL and sub-n-token docs the same way (a
+    NULL text reaches the JVM front half's kernel as a None array)."""
+    from gcp_map_reduce_spark.operators.dedup import minhash_features_for
 
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma delta"), (1, None), (2, "one two"), (3, "")],
         "doc_id bigint, text string",
     )
-    rows = doc_text_features_arrow(docs, 3).collect()
-    assert [r["doc_id"] for r in rows] == [0]
+    for fast in (False, True):
+        rows = minhash_features_for(docs, 3, fast_hash=fast).collect()
+        assert [r["doc_id"] for r in rows] == [0], fast

@@ -78,20 +78,3 @@ def test_wordcount_topk_matches_python_topk(spark):
     got = [(r.word, r.cnt) for r in wordcount_topk(spark, SF_ORACLE).collect()]
     assert got == want
 
-
-def test_wordcount_arrow_engine_matches_expr(spark):
-    """The Arrow partial-count engine (Counter per partition, C-level
-    normalize chain) must reproduce the registered expression plan's
-    counts exactly — it is the measured scale option (1.26 -> 0.76 s at
-    the sf1 stress set), never a different answer."""
-    import pytest
-
-    from tests.conftest import SF_ORACLE
-
-    from gcp_map_reduce_spark.operators.wordcount import wordcount
-
-    a = {r.word: r.cnt for r in wordcount(spark, SF_ORACLE).collect()}
-    b = {r.word: r.cnt for r in wordcount(spark, SF_ORACLE, engine="arrow").collect()}
-    assert a and a == b
-    with pytest.raises(ValueError, match="engine"):
-        wordcount(spark, SF_ORACLE, engine="nope")

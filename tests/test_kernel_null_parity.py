@@ -78,11 +78,27 @@ def test_corpus_bigrams_null_parity(spark, null_docs_dir):
 
 
 def test_wordcount_null_parity(spark, null_docs_dir):
+    """NULL docs add no token: the counts equal those of the non-NULL
+    docs alone (Python normalize twin)."""
+    from collections import Counter
+
+    from gcp_map_reduce_spark.functions.text import PY_NORMALIZE
     from gcp_map_reduce_spark.operators.wordcount import wordcount
 
-    a = _rows(wordcount(spark, null_docs_dir, engine="expr"))
-    b = _rows(wordcount(spark, null_docs_dir, engine="arrow"))
-    assert a == b and a
+    want = Counter(
+        w for _, t, _ in TEXTS if t is not None for w in PY_NORMALIZE(t).split()
+    )
+    a = _rows(wordcount(spark, null_docs_dir))
+    assert a == sorted(want.items()) and a
+
+
+def test_decontamination_and_fast_minhash_survive_null_text(spark, null_docs_dir):
+    from gcp_map_reduce_spark.operators.decontam import corpus_decontamination
+    from gcp_map_reduce_spark.operators.dedup import dedup_minhash
+
+    # doc 0 is the eval stand-in; no train doc shares a 5-gram with it
+    assert corpus_decontamination(spark, null_docs_dir).collect() == []
+    assert dedup_minhash(spark, null_docs_dir, fast_hash=True).collect() == []
 
 
 def test_text_profile_null_parity(spark, null_docs_dir):

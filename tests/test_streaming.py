@@ -3,8 +3,20 @@ wordcount, and incremental watermarked aggregation vs the batch answer."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
+
+
+def _ingest_in_name_order(src) -> None:
+    """The file source takes new files in mtime order (ms), and files
+    written within one ms tie in directory-listing order. Give each file
+    in ``src`` its own second, in name order, so that a
+    ``max_files_per_trigger=1`` stream ingests f0, f1, ... as the
+    order-dependent assertions below assume."""
+    for i, p in enumerate(sorted(src.iterdir())):
+        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
 
 
 def test_file_trigger_full_recompute(spark, tmp_path):
@@ -341,6 +353,7 @@ def test_near_dup_collected_accept_equals_distributed(spark, tmp_path):
         for b in range(4):
             sl = full.iloc[b * per : (b + 1) * per]
             sl.to_parquet(str(src / f"f{b}.parquet"), index=False)
+        _ingest_in_name_order(src)
         q = run_streaming_near_dup_dedup(
             spark, str(src), str(root / "ckpt"), str(root / "store"),
             str(root / "out"), max_files_per_trigger=1,
@@ -675,6 +688,49 @@ def test_streaming_upsert_bucketed_rewrites_only_affected_buckets(
     assert keys == set(range(40)) | {41, 42}
 
 
+_STORE_SCHEMA = "doc_id bigint, sig array<bigint>"
+
+
+def _write_store_dir(spark, path, ids):
+    spark.createDataFrame(
+        [(i, [i, i + 1]) for i in ids], _STORE_SCHEMA
+    ).coalesce(1).write.parquet(str(path))
+
+
+def _store_ids(spark, store_dir):
+    from gcp_map_reduce_spark.streaming.near_dup import read_store
+
+    df = read_store(spark, _STORE_SCHEMA, str(store_dir))
+    assert df.columns == ["doc_id", "sig"]
+    return sorted(r["doc_id"] for r in df.collect())
+
+
+def test_read_store_missing_dir_is_empty(spark, tmp_path):
+    assert _store_ids(spark, tmp_path / "no_store") == []
+    (tmp_path / "empty_store").mkdir()
+    assert _store_ids(spark, tmp_path / "empty_store") == []
+
+
+def test_read_store_batch_dirs_only(spark, tmp_path):
+    """Only `batch_id=*` exists: its rows are read, and neither a
+    `_codebook` dir nor a leftover `.compact-staging` dir leaks in."""
+    store = tmp_path / "store"
+    _write_store_dir(spark, store / "batch_id=0", [1, 2])
+    _write_store_dir(spark, store / "batch_id=1", [3])
+    _write_store_dir(spark, store / ".compact-staging", [100])
+    spark.createDataFrame([("x",)], "c string").write.parquet(
+        str(store / "_codebook")
+    )
+    assert _store_ids(spark, store) == [1, 2, 3]
+
+
+def test_read_store_batch_and_compacted_dirs(spark, tmp_path):
+    store = tmp_path / "store"
+    _write_store_dir(spark, store / "compacted=1", [1, 2, 3])
+    _write_store_dir(spark, store / "batch_id=2", [4])
+    assert _store_ids(spark, store) == [1, 2, 3, 4]
+
+
 def test_signature_store_compaction_preserves_acceptance(spark, tmp_path):
     """r11: `compact_signature_store` must (a) reduce the store to one
     compacted dir + `keep_last` batch dirs with identical row content,
@@ -706,6 +762,7 @@ def test_signature_store_compaction_preserves_acceptance(spark, tmp_path):
         src.mkdir(exist_ok=True)
         for name, sl in files:
             sl.to_parquet(str(src / name), index=False)
+        _ingest_in_name_order(src)
         q = run_streaming_near_dup_dedup(
             spark, str(src), str(root / "ckpt"), str(root / "store"),
             str(root / "out"),
@@ -847,6 +904,7 @@ def test_streaming_embedding_near_dup_parity_with_batch_ivf(spark, tmp_path):
         sl.to_parquet(str(src / f"f{b}.parquet"), index=False)
         for v in sl["vec_id"]:
             batch_of[int(v)] = b
+    _ingest_in_name_order(src)
 
     store = str(tmp_path / "store")
     out = str(tmp_path / "out")
@@ -1007,6 +1065,7 @@ def test_streaming_curated_corpus_equals_batch_pipeline(spark, tmp_path):
         pdf.iloc[b * per : (b + 1) * per].to_parquet(
             str(src / f"f{b}.parquet"), index=False
         )
+    _ingest_in_name_order(src)
 
     out = str(tmp_path / "out")
     q = run_streaming_curated_corpus(

@@ -26,9 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import tokenize
+from gcp_map_reduce_spark.operators.wordcount import reduce_tokens
 from gcp_map_reduce_spark.sinks.writers import write_sorted_single_json
 from gcp_map_reduce_spark.sources.text import read_text_corpus
 
@@ -36,18 +36,11 @@ OPERATIONS = ("wordcount", "invertedindex")
 
 
 def _run_operation(spark: SparkSession, operation: str, input_dir: str) -> DataFrame:
+    if operation not in OPERATIONS:
+        raise ValueError(f"unknown operation {operation!r}; known: {OPERATIONS}")
     corpus = read_text_corpus(spark, input_dir)
     toks = tokenize(corpus, text_col="line", out_col="word", keep_cols=["doc"])
-    if operation == "wordcount":
-        return toks.groupBy("word").agg(F.count("*").alias("cnt"))
-    if operation == "invertedindex":
-        return (
-            toks.select("word", "doc")
-            .distinct()
-            .groupBy("word")
-            .agg(F.sort_array(F.collect_set("doc")).alias("docs"))
-        )
-    raise ValueError(f"unknown operation {operation!r}; known: {OPERATIONS}")
+    return reduce_tokens(toks, operation, doc="doc")
 
 
 def launch_map_reduce(

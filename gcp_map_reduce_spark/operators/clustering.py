@@ -24,10 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus
 
 K_CELLS = 8
 N_ITERS = 3
@@ -70,11 +68,7 @@ def kmeans_fit(
     Seeds are the first k vectors (deterministic); empty cells keep their
     previous centroid (coalesce on the update join).
     """
-    emb = ensure_parallelism(
-        load_table(spark, sf_dir, "embeddings"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "embeddings"),
-    ).select(
+    emb = load_corpus(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
     centroids = emb.filter(F.col("vec_id") < k).select(

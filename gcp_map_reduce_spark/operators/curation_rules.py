@@ -39,13 +39,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import WS_SPLIT
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.operators.text_analysis import (
     LANG_MARKERS as _PROFILE_LANG_MARKERS,
 )
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus
 
 # Java/RE2-common-subset PII patterns.
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -220,15 +218,11 @@ def pii_scrub(
     kernel-boundary rule from SCALING.md applied once more.
 
     Plan (either engine): one documents scan, zero shuffles, linear in
-    text length; degenerate-split fan-out via ``ensure_parallelism``.
+    text length; degenerate-split fan-out via ``load_corpus``.
     """
     if engine not in ("arrow", "expr"):
         raise ValueError(f"unknown engine: {engine!r}")
-    doc = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    doc = load_corpus(spark, sf_dir, "documents")
     if engine == "arrow":
         return _pii_scrub_kernel(doc.select("doc_id", "text"))
     return _pii_scrub_expr(doc)
@@ -439,11 +433,7 @@ def quality_rules(
     # the per-row frequency work is the heaviest CPU in the engine; a
     # small local file scans as one split and would serialize it — fan
     # out only in that degenerate case
-    doc = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    doc = load_corpus(spark, sf_dir, "documents")
     if engine == "arrow":
         return _quality_rules_kernel(doc.select("doc_id", "text"))
     tokens = F.split(F.lower(F.col("text")), WS_SPLIT)

@@ -27,10 +27,8 @@ from gcp_map_reduce_spark.operators.dedup import (
     _gram_hashes_subquery,
     doc_text_features_arrow,
 )
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 DECONTAM_NGRAM = 5
 EVAL_MOD = 50  # doc_id % EVAL_MOD == 0 -> eval-set stand-in
@@ -89,10 +87,10 @@ def corpus_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle build is the dominant per-row CPU; a small local file
     # scans as 1 split and would serialize it — fan out only in that
     # degenerate case (at 100 TB the scan alone yields plenty of splits)
-    train = ensure_parallelism(
-        docs.filter(~is_eval),
-        spark.sparkContext.defaultParallelism,
-        cache_key=(corpus_key(sf_dir, "documents"), "train"),
+    train = (
+        load_corpus(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(~is_eval)
     )
     train_sh = doc_shingles_for(train, DECONTAM_NGRAM)
     return (

@@ -47,10 +47,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import WS_SPLIT, normalize_text, sql_normalize
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize
-from gcp_map_reduce_spark.plans.probes import corpus_key
+from gcp_map_reduce_spark.operators.scale import materialize
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 log = logging.getLogger(__name__)
 
@@ -165,8 +164,8 @@ def shingle_arrays_for(docs: DataFrame, n: int = 3) -> DataFrame:
 def doc_shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """(doc_id, sh_arr: array<string>) — the DISTINCT n-token shingles of
     each document as one array row. Zero shuffle on the scale path:
-    per-doc array work only (see ``ensure_parallelism`` — an Exchange is
-    added ONLY when the scan under-splits a tiny local file).
+    per-doc array work only (see ``load_corpus`` — an Exchange is added
+    ONLY when the scan under-splits a tiny local file).
 
     Each document is one row, so shingles are built array-natively with
     zip_with over shifted slices of the token array — ~2x faster than a
@@ -175,12 +174,7 @@ def doc_shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFram
     end; nulls mark incomplete trailing grams and are filtered before
     distinct.
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     return shingle_arrays_for(docs, n)
 
 
@@ -801,12 +795,7 @@ def doc_minhash_features(
     DISTINCT shingle fingerprints — the hashed replacement for
     :func:`doc_shingle_arrays`) the exact Jaccard; ask only for what the
     caller reads."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     return minhash_features_for(docs, n, fast_hash, want_sig, want_arr)
 
 
@@ -1000,11 +989,7 @@ def simhash_fingerprints(
     """
     if engine not in ("arrow", "expr"):
         raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     if engine == "arrow":
         n_bits = SIMHASH_BITS
         h64 = _md5_token_hasher()

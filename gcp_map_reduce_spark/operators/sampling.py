@@ -37,10 +37,9 @@ from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import WS_SPLIT, normalize_text, sql_normalize
 from gcp_map_reduce_spark.operators.dedup import portable_hash64, sql_portable_hash64
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize
-from gcp_map_reduce_spark.plans.probes import corpus_key
+from gcp_map_reduce_spark.operators.scale import materialize
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 # per-language keep rates in permille: oversample the low-resource
 # languages relative to en — the standard mixture-rebalancing shape
@@ -362,11 +361,9 @@ def corpus_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted) plus one bounded-cardinality lang shuffle (stratified);
     the union is a shuffle-free concatenation."""
     profile = materialize(
-        ensure_parallelism(
-            load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-            spark.sparkContext.defaultParallelism,
-            cache_key=corpus_key(sf_dir, "documents"),
-        ).select("doc_id", "lang", _n_tokens_expr().alias("n_tokens"))
+        load_corpus(spark, sf_dir, "documents").select(
+            "doc_id", "lang", _n_tokens_expr().alias("n_tokens")
+        )
     )
     mix = _mixture_plan(profile).select(
         F.lit("mixture").alias("strategy"),

@@ -22,12 +22,9 @@ from __future__ import annotations
 
 import logging
 import os
-import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from gcp_map_reduce_spark.plans.probes import corpus_key
 
 log = logging.getLogger(__name__)
 
@@ -78,38 +75,14 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-# Cached fan-out decisions (r16): the split/row-group probe below costs
-# ~200 ms of driver-side physical planning per call (rdd.getNumPartitions
-# plans the whole subtree; inputFiles + pyarrow footers add more), and
-# every batch operator re-asks the SAME question about the same immutable
-# corpus on every invocation. Callers that can name their scan (an
-# sf_dir table) pass ``cache_key=corpus_key(sf_dir, table)`` — the
-# decision (a bool: fan out or not) is then memoized per (application,
-# key, min_partitions). The key folds the parquet mtime/size, so
-# regenerating a corpus in place self-invalidates, and a stale hit can
-# only ever cost performance (an extra or missing Exchange), never
-# correctness. Callers probing arbitrary relations (streaming
-# micro-batches) pass no key and keep the uncached probe.
-#
-# r17 (VERDICT task): entries for stopped applications are swept on
-# access (the ``_NARROW_SESSIONS`` eviction discipline, dedup.py) — a
-# long-lived driver running applications serially no longer grows the
-# dict unboundedly. The sweep needs a live context to ask, so each
-# entry carries the session that created it alongside the bool.
-_EP_CACHE: dict[tuple, tuple] = {}
-_EP_CACHE_LOCK = threading.Lock()
-
-
-def ensure_parallelism(
-    df: DataFrame, min_partitions: int, cache_key: tuple | None = None
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame, min_partitions: int) -> DataFrame:
     """Fan a DataFrame out to ``min_partitions`` ONLY when the plan would
     otherwise provide fewer USEFUL partitions.
 
     ``repartition()`` always inserts an Exchange — an unconditional call
     before CPU-heavy per-row work would shuffle the full input once even
     when the scan already yields plenty of splits (at 100 TB the parquet
-    scan alone produces tens of thousands). This helper adds the Exchange
+    scan alone produces tens of thousands). This probe adds the Exchange
     only in the degenerate small-input case (e.g. a single tiny file whose
     one split would serialize all per-row work on one core).
 
@@ -127,40 +100,11 @@ def ensure_parallelism(
        work, only attempted when the scan has fewer files than the
        target (a many-file scan can't be row-group-starved).
 
-    ``cache_key`` (r16): callers scanning a nameable immutable source
-    memoize the probe's decision per (application, key, min_partitions)
-    — see ``_EP_CACHE``. The caller owns key completeness: the key must
-    determine the scan (all call sites pass ``corpus_key(sf_dir,
-    table)``, whose mtime/size fold makes in-place regeneration
-    self-invalidating). One more caller obligation (r17, ADVICE): the
-    memo stores only a BOOL, so a hit replays ``repartition`` without
-    re-probing THIS df's plan shape — every call site sharing a key must
-    therefore pass the same plain-scan plan (they all do: bare
-    ``load_table`` projections). Do not pass a key for a df that may
-    already carry an Exchange; the row-group branch's has-Exchange
-    decline would be skipped on hits.
+    Returns ``df`` itself when no fan-out is needed. Planning the
+    subtree costs ~200 ms of driver time per call; corpus operators
+    reach this through :func:`~gcp_map_reduce_spark.sources.tables.load_corpus`,
+    which probes once per session and corpus generation.
     """
-    if cache_key is not None:
-        k = (
-            df.sparkSession.sparkContext.applicationId,
-            cache_key,
-            min_partitions,
-        )
-        with _EP_CACHE_LOCK:
-            for stale in [
-                sk
-                for sk, (s, _) in _EP_CACHE.items()
-                if s.sparkContext._jsc is None
-                or s.sparkContext._jsc.sc().isStopped()
-            ]:
-                del _EP_CACHE[stale]
-            hit = _EP_CACHE.get(k)
-        if hit is None:
-            out = ensure_parallelism(df, min_partitions)
-            with _EP_CACHE_LOCK:
-                _EP_CACHE[k] = (df.sparkSession, out is not df)
-            return out
-        return df.repartition(min_partitions) if hit[1] else df
     if df.rdd.getNumPartitions() < min_partitions:
         return df.repartition(min_partitions)
     try:
@@ -327,7 +271,7 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
 
 from gcp_map_reduce_spark.functions.text import sql_tokens_cte, tokenize  # noqa: E402
 from gcp_map_reduce_spark.plans.registry import query  # noqa: E402
-from gcp_map_reduce_spark.sources.tables import load_table  # noqa: E402
+from gcp_map_reduce_spark.sources.tables import load_corpus  # noqa: E402
 
 
 @query(
@@ -349,11 +293,7 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize stage of ``salted_token_counts``, degenerate-split
     guarded (exposed so the fan-out guard is testable on the production
     path itself, not a replica)."""
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     return tokenize(docs, text_col="text", out_col="word", keep_cols=[])
 
 

@@ -33,10 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize
-from gcp_map_reduce_spark.plans.probes import corpus_key
+from gcp_map_reduce_spark.operators.scale import materialize
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 log = logging.getLogger(__name__)
 
@@ -57,11 +56,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     local file scans as ONE split, serializing them on one core — fan
     out only in that case (at real scale the scan yields thousands of
     splits and this is a no-op)."""
-    return ensure_parallelism(
-        load_table(spark, sf_dir, "embeddings"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "embeddings"),
-    )
+    return load_corpus(spark, sf_dir, "embeddings")
 
 
 def _dot(a: Column, b: Column) -> Column:

@@ -29,9 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import tokenize
-from gcp_map_reduce_spark.plans.probes import corpus_key
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus
 
 HLL_LG_K = 14  # 2^14 buckets: ~0.8% relative standard error, ~16 KiB/sketch
 
@@ -39,11 +37,7 @@ HLL_LG_K = 14  # 2^14 buckets: ~0.8% relative standard error, ~16 KiB/sketch
 def token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, word) token stream of the documents corpus
     (degenerate-split fan-out: tokenize is per-row regex CPU)."""
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("lang", "text"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("lang", "text")
     return tokenize(docs, text_col="text", out_col="word", keep_cols=["lang"])
 
 

@@ -31,9 +31,8 @@ from gcp_map_reduce_spark.functions.text import (
     normalize_text,
     sql_normalize,
 )
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 # Language marker stopwords (tiny on purpose: the operator demonstrates
 # n-gram-free marker scoring; swap in real profiles for production).
@@ -124,11 +123,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row regex CPU on a possibly single-row-group scan: without the
     # fan-out this leg was a ONE-task 4.2 s straggler inside
     # curated_corpus at the sf1 stress set (11-task stage, median 9 ms)
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents")
     return text_quality_df(docs)
 
 
@@ -247,11 +242,7 @@ def text_profile(
         raise ValueError(f"engine must be 'expr' or 'arrow', got {engine!r}")
     # heaviest per-row pass in the text family; fan out the degenerate
     # single-split local scan (no-op at real scale)
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents")
     metrics = (
         profile_metrics_arrow(docs)
         if engine == "arrow"
@@ -500,7 +491,7 @@ def _profile_finalize(m: DataFrame) -> DataFrame:
 # -- TF-IDF + n-grams ------------------------------------------------------
 
 from gcp_map_reduce_spark.functions.text import sql_tokens_cte, tokenize  # noqa: E402
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize  # noqa: E402
+from gcp_map_reduce_spark.operators.scale import materialize  # noqa: E402
 
 
 _TFIDF_ORACLE = f"""
@@ -544,12 +535,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured bench tradeoff of the scalar-literal pattern, shared with
     :func:`gcp_map_reduce_spark.operators.sampling.corpus_shards`.
     """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokenize(docs, text_col="text", out_col="word", keep_cols=["doc_id"])
     tf = materialize(toks.groupBy("doc_id", "word").agg(F.count("*").alias("tf")))
     df = tf.groupBy("word").agg(F.count("*").alias("df"))
@@ -612,14 +598,9 @@ def corpus_bigrams(
     explode, groupBy + count_distinct."""
     if engine not in ("arrow", "expr"):
         raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Fan out ONLY if the scan under-splits (tiny local files); at scale
     # the scan's own splits carry the per-row work with no Exchange.
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     if engine == "expr":
         w = F.filter(
             F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT),

@@ -26,9 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gcp_map_reduce_spark.functions.text import NON_WS, WS_SPLIT, sql_tokens_cte
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus, load_table
 
 
 @dataclass(frozen=True)
@@ -147,15 +146,9 @@ def udf_scalar_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     def n_tokens(s: pd.Series) -> pd.Series:
         return s.str.findall(NON_WS + "+").str.len().astype("int32")
 
-    from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-
     # degenerate-split guard: per-row Python over text (the r8 stress
     # audit caught this leg's whole scan serializing on one task)
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents")
     return docs.select("doc_id", n_tokens("text").alias("n_tokens"))
 
 
@@ -195,17 +188,11 @@ def udf_tokenize_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             for w in PY_NORMALIZE(text or "").split():
                 yield (w,)
 
-    from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-
     spark.udtf.register("tokenize_udtf", TokenizeUDTF)
     # degenerate-split guard matters MOST here: the UDTF is row-at-a-time
     # Python, so a single-split scan serializes the whole corpus's
     # tokenization on one core (r8 stress audit)
-    ensure_parallelism(
-        load_table(spark, sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    ).createOrReplaceTempView("_udtf_docs")
+    load_corpus(spark, sf_dir, "documents").createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         "SELECT t.word, count(*) AS cnt "
         "FROM _udtf_docs d, LATERAL tokenize_udtf(d.text) t "

@@ -13,10 +13,13 @@ These re-express the reference's two built-in "queries" over the synthetic
 
 - inverted index: ``scripts/invertedindex_map.py:4-18`` (map-side set
   dedup of ``(token, doc)`` pairs) + ``scripts/invertedindex_reduce.py:3-17``
-  (posting-list build). Spark: ``distinct`` pairs (partial-agg dedup is the
-  map-side combiner) + ``collect_set``. Posting lists are set-ordered in the
-  reference (nondeterministic), so the oracle-checked form sorts and joins
-  them into a canonical string.
+  (posting-list build). Spark: one ``collect_set`` per token (its partial
+  aggregation is the map-side set dedup). Posting lists are set-ordered in
+  the reference (nondeterministic), so they are sorted here, and the
+  oracle-checked form joins them into a canonical string.
+
+Both reduce steps live in :func:`reduce_tokens`, shared with
+``api.launch_map_reduce``.
 
 Scale notes (100 TB): groupBy(token) hash-partitions on the full token —
 strictly better than the reference's letter->reducer round-robin
@@ -32,10 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import sql_tokens_cte, tokenize
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
-from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
-from gcp_map_reduce_spark.sources.tables import load_table
+from gcp_map_reduce_spark.sources.tables import load_corpus
 
 
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,14 +45,26 @@ def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate-split correction on the scan: tokenize's regex split +
     explode is per-row CPU, and the stress run showed a single-row-group
     file serializing it on one core (wordcount max task 1.5 s vs 37 ms
-    median) — ``ensure_parallelism`` adds the Exchange only in that case.
+    median) — ``load_corpus`` adds the Exchange only in that case.
     """
-    docs = ensure_parallelism(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
+    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     return tokenize(docs, text_col="text", out_col="word", keep_cols=["doc_id"])
+
+
+def reduce_tokens(toks: DataFrame, operation: str, doc: str = "doc_id") -> DataFrame:
+    """The reduce step of a map-reduce ``operation`` over a (word, doc)
+    token frame, one shuffle each:
+
+    - ``wordcount`` -> (word, cnt);
+    - ``invertedindex`` -> (word, docs: sorted distinct ``doc`` values).
+      ``collect_set`` dedups per (word, doc) by itself, so a
+      ``distinct()`` pre-pass would only add a second Exchange (r17).
+    """
+    if operation == "wordcount":
+        return toks.groupBy("word").agg(F.count("*").alias("cnt"))
+    if operation == "invertedindex":
+        return toks.groupBy("word").agg(F.sort_array(F.collect_set(doc)).alias("docs"))
+    raise ValueError(f"unknown operation {operation!r}")
 
 
 _TOKENS_CTE = f"WITH toks AS ({sql_tokens_cte()}) "
@@ -69,7 +82,7 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle mirrors: at bench scale it beats a per-partition Arrow token
     Counter (0.67 vs 0.75 s at sf0.1), whose Arrow exchange costs more
     than the regex passes it saves."""
-    return doc_tokens(spark, sf_dir).groupBy("word").agg(F.count("*").alias("cnt"))
+    return reduce_tokens(doc_tokens(spark, sf_dir), "wordcount")
 
 
 def wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,19 +124,16 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sort_array(collect_set(...))`` pins the set-iteration nondeterminism
     the reference exhibits (``scripts/invertedindex_reduce.py:14-15``).
 
-    r17: aggregates the RAW token stream in one shuffle —
-    ``collect_set`` dedups per (word, doc_id) by itself, so the former
-    ``distinct()`` pre-pass added a second full Exchange plus a
-    HashAggregate pair for work the set aggregation already does
-    (``n_docs`` = the set's size, exactly count-distinct). The flat
-    deduped-pairs form stays registered as ``inverted_index_pairs``.
+    r17: aggregates the RAW token stream in one shuffle
+    (:func:`reduce_tokens`; ``n_docs`` = the set's size, exactly
+    count-distinct). The flat deduped-pairs form stays registered as
+    ``inverted_index_pairs``.
     """
-    toks = doc_tokens(spark, sf_dir)
-    return toks.groupBy("word").agg(
-        F.size(F.collect_set("doc_id")).cast("long").alias("n_docs"),
-        F.array_join(
-            F.sort_array(F.collect_set("doc_id")).cast("array<string>"), ","
-        ).alias("docs"),
+    posts = reduce_tokens(doc_tokens(spark, sf_dir), "invertedindex")
+    return posts.select(
+        "word",
+        F.size("docs").cast("long").alias("n_docs"),
+        F.array_join(F.col("docs").cast("array<string>"), ",").alias("docs"),
     )
 
 

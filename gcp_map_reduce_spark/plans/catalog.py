@@ -8,15 +8,17 @@ correctness window — the registry is consolidated to exactly fit it
 ``tests/test_registry_docs.py`` gates the count). Reference-parity
 operators (wordcount / inverted index / UDF plug-in surface) register
 first, then the LLM-pipeline families (text, dedup, similarity,
-multimodal), then the extended relational surface.
+multimodal), then the extended relational surface. ``scale`` leads the
+list because its ``salted_token_counts`` has always registered ahead of
+``wordcount``.
 """
 
 from gcp_map_reduce_spark.operators import (  # noqa: F401,I001
+    scale,
     wordcount,
     udf_plugin,
     text_analysis,
     curation_rules,
-    scale,
     decontam,
     dedup,
     pipeline,

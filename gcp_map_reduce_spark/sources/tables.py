@@ -51,7 +51,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # SparkContext is stopped (the ``_NARROW_SESSIONS`` eviction
 # discipline, dedup.py). Per (sf_dir, table) only the LATEST corpus
 # generation is kept, so in-place regenerations replace instead of
-# accumulate.
+# accumulate. Each generation's record is ``(corpus_key, scan,
+# fanned-out scan or None)``; :func:`load_corpus` fills the third slot.
 _DF_CACHE: dict[tuple, tuple[SparkSession, dict]] = {}
 _DF_CACHE_LOCK = threading.Lock()
 
@@ -100,8 +101,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         with _DF_CACHE_LOCK:
             entry = _DF_CACHE.get(cache_id)
             if entry is not None:
-                entry[1][(sf_dir, name)] = (key, df)
+                entry[1][(sf_dir, name)] = (key, df, None)
     return df
+
+
+def load_corpus(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The scan the per-row text and embedding operators start from:
+    :func:`load_table`, fanned out to ``defaultParallelism`` only when
+    the scan is split- or row-group-starved (the
+    :func:`~gcp_map_reduce_spark.operators.scale.ensure_parallelism`
+    probe).
+
+    The probe plans the scan on the driver (~200 ms), so its result is
+    kept in the scan's own ``_DF_CACHE`` record: one probe per session
+    and corpus generation, dropped with the record on regeneration or
+    session stop. Callers project and filter AFTER this call; Spark
+    pushes projections and deterministic filters below the round-robin
+    repartition, so the scan still reads only what they ask for."""
+    # imported here: operators.scale imports this module
+    from gcp_map_reduce_spark.operators.scale import ensure_parallelism
+
+    df = load_table(spark, sf_dir, name)
+    cache_id = (spark.sparkContext.applicationId, id(spark))
+    with _DF_CACHE_LOCK:
+        per_session = _DF_CACHE.get(cache_id, (spark, {}))[1]
+        rec = per_session.get((sf_dir, name))
+    if rec is not None and rec[1] is df and rec[2] is not None:
+        return rec[2]
+    fanned = ensure_parallelism(df, spark.sparkContext.defaultParallelism)
+    with _DF_CACHE_LOCK:
+        rec = per_session.get((sf_dir, name))
+        if rec is not None and rec[1] is df:
+            per_session[(sf_dir, name)] = (rec[0], df, fanned)
+    return fanned
 
 
 def _canonicalize_timestamps(df: DataFrame, name: str) -> DataFrame:

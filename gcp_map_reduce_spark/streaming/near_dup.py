@@ -40,7 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.operators.dedup import (
     BANDS,
     NUM_HASHES,
@@ -503,7 +502,6 @@ def run_streaming_near_dup_dedup(
     output_dir: str,
     max_files_per_trigger: int | None = None,
     fast_hash: bool = True,
-    spread_batch: bool = False,
     collected_accept: bool = True,
 ):
     """Start the stream (availableNow trigger: drains pending files and
@@ -533,21 +531,10 @@ def run_streaming_near_dup_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
-        # spread_batch: one file per trigger = ONE split, so the whole
-        # tokenize+minhash kernel runs in a single task. MEASURED A/B at
-        # 3k-doc batches (r11, 2 rounds each, same session): fanout
-        # 1203/1628 docs/s vs no-fanout 1716/1756 — the exchange plus
-        # its extra stage costs MORE than the ~0.4 s single-task kernel
-        # saves, so the default is off. Turn it on when triggers carry
-        # large batches (many files or big files per trigger), where the
-        # serialized kernel, not the per-trigger fixed cost, dominates.
-        spread = (
-            ensure_parallelism(batch_df, ss.sparkContext.defaultParallelism)
-            if spread_batch
-            else batch_df
-        )
+        # no fan-out: at 3k-doc triggers a repartition cost more than
+        # the single-task kernel it spreads (r11 A/B)
         sigs = minhash_features_for(
-            spread, fast_hash=fast_hash, want_arr=False
+            batch_df, fast_hash=fast_hash, want_arr=False
         )
         if collected_accept:
             # one job: kernel + collect (the batch was already assumed

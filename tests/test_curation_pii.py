@@ -138,7 +138,6 @@ def test_quality_rules_arrow_kernel_row_identical(spark):
         _quality_rules_kernel,
         quality_rules,
     )
-    from gcp_map_reduce_spark.operators.scale import ensure_parallelism  # noqa: F401
 
     d = "/root/testdata/sf0.01"
     a = sorted(map(tuple, quality_rules(spark, d, engine="expr").collect()))
@@ -179,7 +178,7 @@ def test_quality_rules_arrow_kernel_row_identical(spark):
     # internals by writing the frame to a temp table dir is overkill —
     # compare the kernel against a DuckDB-free python reimplementation?
     # No: run the real expression pipeline by monkey-path — simplest is
-    # the library seam: both engines share ensure_parallelism(load_table)
+    # the library seam: both engines share load_corpus(sf_dir, "documents")
     # so drive them through a parquet round-trip.
     import tempfile, shutil, os
     work = tempfile.mkdtemp(prefix="qr_adv_")

@@ -4,8 +4,11 @@ joins, with plan-level proof."""
 from __future__ import annotations
 
 import contextlib
+import importlib
 import io
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.scale import (
@@ -263,23 +266,47 @@ def test_grouped_topk_equals_one_window_form(spark):
         assert n == min(k, sizes[ck])
 
 
-def test_tokenize_paths_fan_out_degenerate_splits(spark):
-    """The tokenize+explode sources must never serialize on one core when
-    the input is a single tiny file / row group (the stress-set straggler:
+@pytest.mark.parametrize(
+    "source",
+    [
+        "wordcount.doc_tokens",
+        "scale._tokenized_docs",
+        "dedup.doc_shingle_arrays",
+        "similarity._emb",
+        "text_analysis.text_quality",
+    ],
+)
+def test_tokenize_paths_fan_out_degenerate_splits(spark, source):
+    """The per-row sources must never serialize on one core when the
+    input is a single tiny file / row group (the stress-set straggler:
     wordcount max task 1.5 s vs 37 ms median before the guard). Pins the
-    conditional ensure_parallelism on doc_tokens; dedup_exact deliberately
-    has no guard (see its docstring) so it is not asserted here."""
-    from gcp_map_reduce_spark.operators.wordcount import doc_tokens
-
+    conditional fan-out each source gets from ``load_corpus``, so no
+    migrated site can drop it without a test failing (r6 advice item);
+    dedup_exact deliberately has no guard (see its docstring) so it is
+    not asserted here."""
+    module, fn = source.split(".")
+    build = getattr(
+        importlib.import_module(f"gcp_map_reduce_spark.operators.{module}"), fn
+    )
     want = spark.sparkContext.defaultParallelism
-    assert doc_tokens(spark, SF_ORACLE).rdd.getNumPartitions() >= want
+    assert build(spark, SF_ORACLE).rdd.getNumPartitions() >= want
 
-    # salted_token_counts carries the same guard on its tokenize source —
-    # assert the production path's pre-aggregation stage fans out too, so
-    # the guard cannot be dropped without a test failing (r6 advice item).
-    from gcp_map_reduce_spark.operators.scale import _tokenized_docs
 
-    assert _tokenized_docs(spark, SF_ORACLE).rdd.getNumPartitions() >= want
+def test_fanned_out_wordcount_plan_shape(spark):
+    """The fan-out sits under the caller's projection: Spark must push
+    the column pruning below the round-robin Exchange (the scan reads
+    only doc_id/text), and the wordcount plan keeps exactly two
+    Exchanges — the fan-out and the aggregate's hash shuffle."""
+    from gcp_map_reduce_spark.operators.wordcount import wordcount
+
+    plan = wordcount(spark, SF_ORACLE)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
+    assert len(re.findall(r"\bExchange ", plan)) == 2, plan
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert schemas, plan
+    for schema in schemas:
+        cols = {field.split(":")[0] for field in schema.split(",")}
+        assert cols <= {"doc_id", "text"}, schema
 
 
 def test_ensure_parallelism_sees_through_empty_byte_range_splits(spark, tmp_path):

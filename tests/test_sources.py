@@ -126,30 +126,39 @@ def test_df_cache_sweeps_stopped_sessions(spark):
     assert live, "live session's entry must survive the sweep"
 
 
-def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
-    # regenerating a corpus in place must REPLACE the cached plan, not
-    # accumulate a second generation
+def _copy_documents(sf_dir: str) -> pathlib.Path:
+    """Copy the oracle corpus's documents table into ``sf_dir``."""
     import shutil
 
-    from gcp_map_reduce_spark.sources import tables
-
-    import os as _os
-    import time as _time
-
-    sf_dir = str(tmp_path)
     src = pathlib.Path(SF_ORACLE, "documents.parquet")
     dst = pathlib.Path(sf_dir, "documents.parquet")
     if src.is_dir():
         shutil.copytree(src, dst)
     else:
         shutil.copy2(src, dst)
+    return dst
+
+
+def _regenerate_in_place(dst: pathlib.Path) -> None:
+    """Bump the dataset mtime (5 s forward — the fingerprint must
+    actually change), as an in-place regeneration would."""
+    import os
+    import time
+
+    later = time.time() + 5
+    for p in list(dst.rglob("*")) if dst.is_dir() else [dst]:
+        os.utime(p, (later, later))
+
+
+def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
+    # regenerating a corpus in place must REPLACE the cached plan, not
+    # accumulate a second generation
+    from gcp_map_reduce_spark.sources import tables
+
+    sf_dir = str(tmp_path)
+    dst = _copy_documents(sf_dir)
     load_table(spark, sf_dir, "documents")
-    # regenerate in place: bump the dataset mtime (1s forward — the
-    # fingerprint must actually change)
-    later = _time.time() + 5
-    targets = list(dst.rglob("*")) if dst.is_dir() else [dst]
-    for p in targets:
-        _os.utime(p, (later, later))
+    _regenerate_in_place(dst)
     load_table(spark, sf_dir, "documents")
     with tables._DF_CACHE_LOCK:
         entry = next(
@@ -159,19 +168,33 @@ def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
     assert len(gens) == 1
 
 
-def test_ep_cache_sweeps_stopped_applications(spark):
-    # r17 VERDICT task: decision memo evicts stopped apps' entries
+def test_load_corpus_probes_once_per_corpus_generation(
+    spark, tmp_path, monkeypatch
+):
+    # the fan-out probe plans the scan on the driver; it must run once
+    # per corpus generation, and again after an in-place regeneration
     from gcp_map_reduce_spark.operators import scale
+    from gcp_map_reduce_spark.sources.tables import load_corpus
 
-    with scale._EP_CACHE_LOCK:
-        scale._EP_CACHE[("app-dead", ("k",), 4)] = (_StoppedSession(), True)
-    df = load_table(spark, SF_ORACLE, "documents")
-    scale.ensure_parallelism(df, 2, cache_key=("sweep-test-key",))
-    with scale._EP_CACHE_LOCK:
-        assert ("app-dead", ("k",), 4) not in scale._EP_CACHE
-        live = [
-            k
-            for k, (s, _) in scale._EP_CACHE.items()
-            if k[1] == ("sweep-test-key",)
-        ]
-    assert live, "live probe decision must be memoized"
+    calls = []
+    probe = scale.ensure_parallelism
+
+    def counting_probe(df, min_partitions):
+        calls.append(min_partitions)
+        return probe(df, min_partitions)
+
+    monkeypatch.setattr(scale, "ensure_parallelism", counting_probe)
+    sf_dir = str(tmp_path)
+    dst = _copy_documents(sf_dir)
+    first = load_corpus(spark, sf_dir, "documents")
+    load_table(spark, sf_dir, "documents")  # a plain load keeps the decision
+    assert load_corpus(spark, sf_dir, "documents") is first
+    assert calls == [spark.sparkContext.defaultParallelism]
+
+    _regenerate_in_place(dst)
+    second = load_corpus(spark, sf_dir, "documents")
+    assert second is not first
+    assert load_corpus(spark, sf_dir, "documents") is second
+    assert len(calls) == 2
+    # the one-file corpus is split-starved: the kept decision fans out
+    assert second.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism

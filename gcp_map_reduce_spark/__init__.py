@@ -45,8 +45,6 @@ def __getattr__(name):
         "dataset_stats": "gcp_map_reduce_spark.sinks.writers",
         "choose_edge_source": "gcp_map_reduce_spark.operators.dedup",
         "estimate_candidate_pairs_per_doc": "gcp_map_reduce_spark.operators.dedup",
-        "choose_embedding_payload": "gcp_map_reduce_spark.operators.similarity",
-        "estimate_band_candidates_per_vec": "gcp_map_reduce_spark.operators.similarity",
         "embedding_near_dup_pairs_ivf": "gcp_map_reduce_spark.operators.similarity",
         "publish_atomic": "gcp_map_reduce_spark.sinks.writers",
     }
@@ -81,9 +79,7 @@ __all__ = [
     "dataset_stats",
     "choose_edge_source",
     "estimate_candidate_pairs_per_doc",
-    "choose_embedding_payload",
     "embedding_near_dup_pairs_ivf",
     "publish_atomic",
-    "estimate_band_candidates_per_vec",
 ]
 __version__ = "0.1.0"

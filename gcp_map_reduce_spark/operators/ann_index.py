@@ -97,6 +97,8 @@ from gcp_map_reduce_spark.operators.similarity import (
     TOP_K,
     _dot,
     _emb,
+    _np_n2,
+    _seq_dot,
     _with_norm2,
     ivf_dedup_n_cells,
     ivf_probe_cells,
@@ -569,17 +571,6 @@ def _sweep_stale_generations(
                     os.remove(victim + ".last-used")
         except TimeoutError:
             continue  # live writer owns it — not stale, skip this pass
-
-
-def _np_n2(E):
-    """Squared L2 norms via the d-sequential fold (the module's shared
-    accumulation order)."""
-    import numpy as np
-
-    n2 = np.zeros(E.shape[0], dtype=np.float64)
-    for d in range(E.shape[1]):
-        n2 += E[:, d] * E[:, d]
-    return n2
 
 
 def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
@@ -2399,18 +2390,6 @@ def _probes_driver_2l(
     return probes, sorted({row[3] for row in out})
 
 
-def _seq_dot(A, B):
-    """d-sequential left-fold dot of every row pair (A[i], B[j]) —
-    bit-identical to the JVM ``_dot`` fold and the Arrow kernels (same
-    per-element accumulation order; see similarity._cosine_arrow)."""
-    import numpy as np
-
-    acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
-    for d in range(A.shape[1]):
-        acc += A[:, d][:, None] * B[:, d][None, :]
-    return acc
-
-
 def _probes_rel(spark: SparkSession, out: list) -> DataFrame:
     """Driver-computed probe rows ``(query_id, qe, qn2, cell_id)`` as
     ONE Arrow record batch — createDataFrame(list) would parallelize
@@ -2775,10 +2754,9 @@ def ann_index_screen_batch(
             )
         Q = np.stack(q["e"].to_numpy()).astype(np.float64)
         V = np.stack(v["e"].to_numpy()).astype(np.float64)
-        # the module's ONE shared d-sequential fold (_seq_dot) — the
-        # same definition the driver probes and the JVM _dot expression
-        # pin bit-identical, so the SQL oracle stays exact with no
-        # fourth hand copy of the accumulation order to drift
+        # the engine's one shared d-sequential fold (similarity._seq_dot,
+        # bit-identical to the JVM _dot expression), so the SQL oracle
+        # stays exact
         acc = _seq_dot(Q, V)
         qn2 = q["n2"].to_numpy(dtype=np.float64)
         vn2 = v["n2"].to_numpy(dtype=np.float64)

@@ -1,11 +1,10 @@
 """Session-scoped cache for sampled plan-choice probes.
 
 The cost-based choosers (``choose_edge_source``,
-``choose_embedding_payload``, ``prefix_filter="auto"``) each run one
-small sampled Spark job over the corpus. The probe is cheap next to the
-plan choice it informs (~1.3 s vs ~15 s saved at stress scale) but NOT
-free at bench scale (+0.3-0.5 s — the reason the r8 auto-default was
-reverted). Within a session the corpus under an ``sf_dir`` is immutable,
+``prefix_filter="auto"``) each run one small sampled Spark job over the
+corpus. The probe is cheap next to the plan choice it informs (~1.3 s
+vs ~15 s saved at stress scale) but NOT free at bench scale
+(+0.3-0.5 s — the reason the r8 auto-default was reverted). Within a session the corpus under an ``sf_dir`` is immutable,
 and several operators ask the SAME question about it (dedup_clusters and
 curated_corpus share the candidate-pair-density probe; a bench warm-up
 pass asks once more than the timed runs), so the estimate is cached per

@@ -37,42 +37,39 @@ key="vec_id")`` applies unchanged.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
-
-log = logging.getLogger(__name__)
-
-
-def _is_missing_path(exc: AnalysisException) -> bool:
-    """True iff ``exc`` is the path-does-not-exist analysis error — the
-    ONLY AnalysisException the codebook-existence probes may treat as
-    "no codebook yet". Anything else (schema mismatch, corrupt footer
-    surfacing at analysis, permission failures wrapped by the catalog)
-    means the store EXISTS but is unreadable — silently reseeding the
-    codebook over it would fork the cell space and disable dedup against
-    everything accepted so far, so those re-raise."""
-    cls = exc.getCondition() if hasattr(exc, "getCondition") else None
-    return cls == "PATH_NOT_FOUND" or (
-        cls is None and "Path does not exist" in str(exc)
-    )
 
 from gcp_map_reduce_spark.operators.similarity import (
     IVF_DEDUP_CELLS,
     IVF_DEDUP_NPROBE,
     NEAR_DUP_COSINE,
     _cosine_arrow,
+    _seq_dot,
     embed_features_arrow,
     ivf_dedup_n_cells,
     ivf_probe_cells,
 )
-from gcp_map_reduce_spark.streaming.near_dup import read_store
+from gcp_map_reduce_spark.streaming.near_dup import glob_paths, read_store
 
 EMB_STORE_SCHEMA = (
     "vec_id bigint, e array<double>, n2 double, cells array<bigint>"
 )
+_CODEBOOK_SCHEMA = "cell_id bigint, ce array<double>, cn2 double"
+
+
+def _codebook_committed(ss: SparkSession, path: str) -> bool:
+    """True iff ``path`` holds a committed codebook: at least one visible
+    (not ``_``- or ``.``-prefixed) entry, i.e. a file a parquet read
+    would scan. A missing dir and a first trigger killed mid-write
+    (``_codebook/_temporary`` only) both read False, so both reseed.
+    One listing (:func:`near_dup.glob_paths`, as ``read_store`` lists
+    the store): neither case costs a failed read or a logged stack
+    trace. A committed codebook that cannot be read is NOT reseeded —
+    the read raises, because a new codebook over an existing store
+    would fork the cell space and disable dedup against everything
+    accepted so far."""
+    return bool(glob_paths(ss, f"{path}/[!_.]*"))
 
 
 def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
@@ -82,22 +79,15 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
     replayed first batch — deterministic either way). One row per cell:
     (cell_id, ce, cn2).
 
-    Dir existence is NOT commitment: a first trigger killed mid-write
-    leaves ``_codebook/_temporary`` only, which an explicit-schema read
-    returns as ZERO rows — treating that as a codebook would silently
-    assign every later vector an empty probe list and disable dedup
-    forever (r11 review catch). A committed-but-empty codebook is
-    impossible: an empty first batch raises instead of seeding."""
+    Dir existence is NOT commitment (:func:`_codebook_committed`): a
+    first trigger killed mid-write leaves ``_codebook/_temporary`` only,
+    and treating that as a codebook would assign every later vector an
+    empty probe list and disable dedup forever. A committed-but-empty
+    codebook is impossible: an empty first batch raises instead of
+    seeding."""
     path = f"{store_dir}/_codebook"
-    schema = "cell_id bigint, ce array<double>, cn2 double"
-    try:
-        cb = ss.read.schema(schema).parquet(path)
-        if cb.limit(1).count() > 0:
-            return cb
-    except AnalysisException as exc:
-        if not _is_missing_path(exc):
-            raise
-        log.debug("no codebook at %s yet; seeding from this batch", path)
+    if _codebook_committed(ss, path):
+        return ss.read.schema(_CODEBOOK_SCHEMA).parquet(path)
     seeds = (
         batch_feats.orderBy("vec_id")
         .limit(n_cells)
@@ -115,7 +105,7 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
         )
     # overwrite heals a killed prior write's _temporary debris
     seeds.coalesce(1).write.mode("overwrite").parquet(path)
-    return ss.read.schema(schema).parquet(path)
+    return ss.read.schema(_CODEBOOK_SCHEMA).parquet(path)
 
 
 # Driver-side store/codebook mirror for the collected accept path (r12
@@ -127,20 +117,6 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
 # remote filesystem schemes). Bound: ~550 B per accepted vector at d=64
 # — fall back to collected_accept=False beyond driver memory.
 _EMB_CACHE: dict[str, dict] = {}
-
-
-def _seq_dots(E, C):
-    """(n, k) pairwise dot products with the d-SEQUENTIAL fold — every
-    (i, j) element accumulates E[i,d]*C[j,d] for d = 0..D-1 in order,
-    bit-identical to the JVM `_dot` left fold and to `_cosine_arrow`
-    (the tiles/cell-kernel exactness argument; never BLAS matmul, whose
-    blocked/FMA summation breaks bit-parity)."""
-    import numpy as np
-
-    acc = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-    for d in range(E.shape[1]):
-        acc += E[:, d][:, None] * C[:, d][None, :]
-    return acc
 
 
 def _emb_cache_load(ss: SparkSession, store_dir: str) -> dict | None:
@@ -234,8 +210,8 @@ def _emb_cache_append(cache: dict, batch_id: int, ids, E, n2, cells) -> None:
 # the committed codebook is immutable (created once, first batch), so
 # re-reading it every trigger was one whole Spark job per trigger of
 # pure waste — cache the arrays per store_dir after the first
-# successful load/create (an uncommitted/empty read never populates
-# the cache, so the killed-first-write rebuild path is unchanged)
+# successful load/create (an uncommitted codebook never populates the
+# cache, so the killed-first-write rebuild path is unchanged)
 _CODEBOOK_CACHE: dict[str, tuple] = {}
 
 
@@ -244,47 +220,36 @@ def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
     """Driver twin of :func:`_codebook`: (cell_ids, C, cn2) numpy
     arrays, loaded from the persisted parquet or created from this
     batch's ``n_cells`` lowest vec_ids (same commitment rules: an
-    uncommitted/empty read rebuilds; an empty first batch raises)."""
+    uncommitted codebook is reseeded, an unreadable committed one
+    raises, and an empty first batch raises)."""
     import numpy as np
 
     cached = _CODEBOOK_CACHE.get(store_dir)
     if cached is not None:
         return cached
     path = f"{store_dir}/_codebook"
-    schema = "cell_id bigint, ce array<double>, cn2 double"
-    try:
-        pdf = ss.read.schema(schema).parquet(path).toPandas()
-        if len(pdf):
-            cb = (
-                pdf["cell_id"].to_numpy(dtype=np.int64),
-                np.stack([np.asarray(e, dtype=np.float64) for e in pdf["ce"]]),
-                pdf["cn2"].to_numpy(dtype=np.float64),
+    if _codebook_committed(ss, path):
+        cb_pdf = ss.read.schema(_CODEBOOK_SCHEMA).parquet(path).toPandas()
+    else:
+        if len(feats_pdf) == 0:
+            raise ValueError(
+                "run_streaming_embedding_near_dup: the first batch is empty — "
+                "cannot seed the IVF codebook"
             )
-            _CODEBOOK_CACHE[store_dir] = cb
-            return cb
-    except AnalysisException as exc:
-        if not _is_missing_path(exc):
-            raise
-        log.debug("no codebook at %s yet; seeding from this batch", path)
-    if len(feats_pdf) == 0:
-        raise ValueError(
-            "run_streaming_embedding_near_dup: the first batch is empty — "
-            "cannot seed the IVF codebook"
-        )
-    import pandas as pd
+        import pandas as pd
 
-    seeds = feats_pdf.nsmallest(n_cells, "vec_id")
-    cb_pdf = pd.DataFrame(
-        {
-            "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
-            "ce": [[float(x) for x in e] for e in seeds["e"]],
-            "cn2": seeds["n2"].astype("float64").to_numpy(),
-        }
-    )
-    # overwrite heals a killed prior write's _temporary debris
-    ss.createDataFrame(cb_pdf, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+        seeds = feats_pdf.nsmallest(n_cells, "vec_id")
+        cb_pdf = pd.DataFrame(
+            {
+                "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
+                "ce": [[float(x) for x in e] for e in seeds["e"]],
+                "cn2": seeds["n2"].astype("float64").to_numpy(),
+            }
+        )
+        # overwrite heals a killed prior write's _temporary debris
+        ss.createDataFrame(cb_pdf, _CODEBOOK_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(path)
     cb = (
         cb_pdf["cell_id"].to_numpy(dtype=np.int64),
         np.stack([np.asarray(e, dtype=np.float64) for e in cb_pdf["ce"]]),
@@ -327,11 +292,11 @@ def run_streaming_embedding_near_dup(
     ``collected_accept`` (r12 default, the minhash stream's pattern):
     triggers run driver-centric — batch features collected once, cell
     assignment and acceptance decided in numpy with bit-identical
-    folds (``_seq_dots`` = the JVM left fold; probe tie-breaks via
-    lexsort on (d, cell_id)) against a driver mirror of the store;
-    three Spark actions per steady-state trigger. Measured on the
-    20k-vector stress drain @16 batches: 518 → 632 vecs/s fresh, 823
-    warm; decisions AND store rows pytest-asserted identical to the
+    folds (``similarity._seq_dot`` = the JVM left fold; probe
+    tie-breaks via lexsort on (d, cell_id)) against a driver mirror of
+    the store; three Spark actions per steady-state trigger. Measured
+    on the 20k-vector stress drain @16 batches: 518 → 632 vecs/s
+    fresh, 823 warm; decisions AND store rows pytest-asserted identical to the
     distributed plan, which still runs for remote store_dir schemes or
     ``collected_accept=False``."""
     if n_cells is None:
@@ -351,7 +316,7 @@ def run_streaming_embedding_near_dup(
         collect the batch's features (ONE job — the old plan broadcast
         the batch twice, each broadcast a driver collect), assign cells
         and decide acceptance in numpy against the driver store mirror
-        (bit-identical folds: `_seq_dots` for assignment distances and
+        (bit-identical folds: `_seq_dot` for assignment distances and
         pair cosines, `np.lexsort` for the (d, cell_id) probe
         tie-break), then write the two batch dirs. Steady state = three
         Spark actions; the batch-parity test pins exactness."""
@@ -369,7 +334,7 @@ def run_streaming_embedding_near_dup(
             n2 = feats_pdf["n2"].to_numpy(dtype=np.float64)
             # assignment distances: (n2 - 2*dot) + cn2 — the same
             # operand order as ivf_probe_cells' expression
-            dists = (n2[:, None] - 2 * _seq_dots(E, C)) + cn2[None, :]
+            dists = (n2[:, None] - 2 * _seq_dot(E, C)) + cn2[None, :]
             k = min(n_probe, len(cell_ids))
             cells = []
             for i in range(len(ids)):
@@ -409,7 +374,7 @@ def run_streaming_embedding_near_dup(
             hit = False
             if cand_store:
                 c = np.asarray(cand_store)
-                cos = _seq_dots(E[i : i + 1], s_E[c])[0] / np.sqrt(
+                cos = _seq_dot(E[i : i + 1], s_E[c])[0] / np.sqrt(
                     n2[i] * s_n2[c]
                 )
                 hit = bool(((cos >= threshold) & (s_ids[c] != ids[i])).any())
@@ -420,7 +385,7 @@ def run_streaming_embedding_near_dup(
                 cand_b = [j for j in cand_b if ids[j] < ids[i]]
                 if cand_b:
                     c = np.asarray(cand_b)
-                    cos = _seq_dots(E[i : i + 1], E[c])[0] / np.sqrt(
+                    cos = _seq_dot(E[i : i + 1], E[c])[0] / np.sqrt(
                         n2[i] * n2[c]
                     )
                     hit = bool((cos >= threshold).any())

@@ -50,6 +50,16 @@ from gcp_map_reduce_spark.operators.dedup import (
 NEAR_DUP_EST_JACCARD = 0.7  # same acceptance threshold as dedup_minhash
 
 
+def glob_paths(ss: SparkSession, pattern: str) -> list[str]:
+    """Paths matching a Hadoop glob ``pattern`` on any filesystem scheme;
+    empty when nothing matches or the parent dir is missing. One
+    ``FileSystem.globStatus`` listing, so a missing path costs no
+    failed read and no logged stack trace."""
+    path = ss.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = path(pattern).getFileSystem(ss.sparkContext._jsc.hadoopConfiguration())
+    return [st.getPath().toString() for st in fs.globStatus(path(pattern)) or []]
+
+
 def read_store(ss: SparkSession, schema: str, store_dir: str) -> DataFrame:
     """Read a streaming signature/feature store: the `batch_id=*` dirs
     plus any `compacted=*` dir, via Spark's Hadoop glob (works on any
@@ -59,16 +69,12 @@ def read_store(ss: SparkSession, schema: str, store_dir: str) -> DataFrame:
     also match `_codebook` (wrong schema -> silent NULL columns) and a
     `.compact-staging` dir a killed compaction left behind (a full
     duplicate copy of the store scanned every trigger until the next
-    compact call). The dirs are listed with one Hadoop ``globStatus``
-    per pattern and read by name, so a missing pattern costs no failed
-    read and no logged stack trace; no store at all yields an empty
-    relation."""
-    path = ss.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = path(store_dir).getFileSystem(ss.sparkContext._jsc.hadoopConfiguration())
+    compact call). The dirs are listed with :func:`glob_paths` and read
+    by name; no store at all yields an empty relation."""
     paths = [
-        st.getPath().toString()
+        p
         for pat in ("batch_id=*", "compacted=*")
-        for st in fs.globStatus(path(f"{store_dir}/{pat}")) or []
+        for p in glob_paths(ss, f"{store_dir}/{pat}")
     ]
     if not paths:
         return ss.createDataFrame([], schema)

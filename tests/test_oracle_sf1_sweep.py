@@ -23,8 +23,8 @@ scale, as recorded in SCALING.md "sf1 oracle sweep" note:
 Those three keep their correctness evidence from (a) the full 50/50
 value-hash sweeps at sf0.01 and sf0.1 and (b) the stress set's
 scale-independent semantic identities asserted by the pytest suite
-(exact==minhash clustering equality, banded-recall floors, tiles vs
-id-join plan equality). ``test_exclusion_list_is_pinned`` asserts the
+(exact==minhash clustering equality, the IVF near-dup recall floors
+and bit-identical cosines). ``test_exclusion_list_is_pinned`` asserts the
 list cannot grow silently.
 
 Requires the stress set (``python tools/gen_stress.py`` builds it under

@@ -151,7 +151,7 @@ def test_decontamination_streams_train_side(spark):
 
 
 def test_embedding_dedup_registered_plan_is_cell_pruned(spark):
-    # the registered near-dup plan (auto → ivf, r11): candidates come
+    # the registered near-dup plan (IVF, r11): candidates come
     # from the cell-pruned grouped GEMM — the only join is the ONE-ROW
     # broadcast codebook crossJoin (a map-side constant lookup), never
     # a corpus-sized nested loop or cartesian, and the pair work runs
@@ -162,17 +162,6 @@ def test_embedding_dedup_registered_plan_is_cell_pruned(spark):
     if "BroadcastNestedLoopJoin" in plan:
         assert "BroadcastExchange" in plan  # the 1-row codebook, broadcast
 
-
-def test_embedding_dedup_corpus_payload_is_banded_not_allpairs(spark):
-    # the band id-join option must generate candidates via the band
-    # equi-join (hash join) — an all-pairs non-equi self-join would show
-    # up as BroadcastNestedLoopJoin / CartesianProduct and die at scale
-    from gcp_map_reduce_spark.operators.similarity import dedup_embedding_cosine
-
-    df = dedup_embedding_cosine(spark, "/root/testdata/sf0.001", payload="corpus")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 def _pushed_filters(plan: str) -> list[str]:
     """Every PushedFilters line in the formatted plan (no positional
@@ -206,42 +195,6 @@ def test_q4_exists_becomes_semi_join(spark):
     assert "LeftSemi" in plan
     # date range reaches the orders scan (whichever scan it is)
     assert any("o_orderdate" in p for p in _pushed_filters(plan)), plan
-
-
-def test_embedding_dedup_checkpoint_is_skinny(spark):
-    # id-join shape (payload="corpus"): every materialized input must be
-    # id-width ONLY: (vec_id, sketch) feeding the band join and
-    # (vec_a, vec_b) candidate pairs — two longs per row either way. A
-    # checkpoint that also carries the embedding payload/norm checkpoints
-    # the whole corpus at 100 TB. The payload re-rank must instead
-    # re-read the parquet source (scan visible in the same plan),
-    # semi-joined down to candidate ids.
-    from gcp_map_reduce_spark.operators.similarity import dedup_embedding_cosine
-
-    df = dedup_embedding_cosine(spark, "/root/testdata/sf0.001", payload="corpus")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    rdd_scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
-    assert rdd_scans, plan  # the localCheckpoint shows as ExistingRDD
-    for cols in rdd_scans:
-        names = [c.split("#")[0].strip() for c in cols.split(",")]
-        assert names in (["vec_id", "sketch"], ["vec_a", "vec_b"]), names
-    assert "Scan parquet" in plan or "FileScan parquet" in plan, plan
-
-
-def test_embedding_dedup_tiles_has_no_checkpoint_and_no_join(spark):
-    # tiles shape (explicit band-recall option): a single parquet scan
-    # fans out to block pairs — no checkpoint (nothing fat pinned to
-    # executor storage), no join of any kind (per-pair rows never
-    # materialize), one exchange (the tile groupBy)
-    from gcp_map_reduce_spark.operators.similarity import dedup_embedding_cosine
-
-    df = dedup_embedding_cosine(spark, "/root/testdata/sf0.001", payload="tiles")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
 
 
 def test_curated_gram_fetch_pushes_in_filter_below_replay_guard(spark, tmp_path):

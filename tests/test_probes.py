@@ -56,26 +56,6 @@ def test_candidate_pair_probe_fires_once(spark):
     assert STATS["misses"] - m0 == 2
 
 
-def test_band_candidate_probe_fires_once_and_custom_relation_bypasses(spark):
-    from gcp_map_reduce_spark.operators.similarity import (
-        embed_features_arrow,
-        estimate_band_candidates_per_vec,
-    )
-    from gcp_map_reduce_spark.sources.tables import load_table
-    from gcp_map_reduce_spark.plans.probes import STATS
-
-    m0, h0 = STATS["misses"], STATS["hits"]
-    a = estimate_band_candidates_per_vec(spark, SF_ORACLE)
-    b = estimate_band_candidates_per_vec(spark, SF_ORACLE)
-    assert a == b
-    assert STATS["misses"] - m0 == 1 and STATS["hits"] - h0 == 1
-    # caller-supplied sketches have no stable cache key -> bypass
-    emb = load_table(spark, SF_ORACLE, "embeddings").limit(50)
-    sk = embed_features_arrow(emb).select("vec_id", "sketch")
-    estimate_band_candidates_per_vec(spark, SF_ORACLE, sketches=sk)
-    assert STATS["misses"] - m0 == 1 and STATS["hits"] - h0 == 1
-
-
 def test_corpus_regeneration_invalidates_probe_cache(spark, tmp_path):
     """r10 (r9 advice): the cache key embeds the parquet file's
     mtime/size, so regenerating a corpus IN PLACE under the same path

@@ -81,65 +81,10 @@ def test_lsh_sketch_is_deterministic(spark):
     assert a == b and all(isinstance(v, int) for v in a.values())
 
 
-def test_banded_embedding_dedup_matches_exact_allpairs(spark):
-    from gcp_map_reduce_spark.operators.similarity import (
-        dedup_embedding_cosine,
-        embedding_near_dup_pairs_exact,
-    )
-
-    exact = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs_exact(spark, SF_ORACLE).collect()
-    }
-    banded = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in dedup_embedding_cosine(
-            spark, SF_ORACLE, payload="corpus"
-        ).collect()
-    }
-    assert exact, "fixture should contain qualifying near-dup pairs"
-    # the 8x2 banding captures EVERY qualifying pair at oracle scale, and
-    # the exact cosine filter on candidates reproduces identical values
-    # (THIS test is where band recall is measured; the registered
-    # default routes to the ivf generator since r11, whose cell recall
-    # is pinned separately below)
-    assert banded == exact, (
-        set(exact) - set(banded),
-        set(banded) - set(exact),
-    )
-
-
-def test_banded_embedding_dedup_recall_floor_at_sf01(spark):
-    """At sf0.1 the banding is NOT complete (140/144 measured, r8 sweep) —
-    pin the band plan's recall floor and the no-false-positive/
-    equal-values side, so a band-layout change that silently craters
-    recall fails here (the oracle can no longer catch it: it mirrors
-    the plan's own candidate generator)."""
-    from gcp_map_reduce_spark.operators.similarity import (
-        dedup_embedding_cosine,
-        embedding_near_dup_pairs_exact,
-    )
-
-    d = "/root/testdata/sf0.1"
-    exact = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs_exact(spark, d).collect()
-    }
-    banded = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in dedup_embedding_cosine(spark, d, payload="corpus").collect()
-    }
-    assert set(banded) <= set(exact)  # candidates are exactly verified
-    assert all(banded[k] == exact[k] for k in banded)  # identical cosines
-    recall = len(banded) / len(exact)
-    assert recall >= 0.95, (len(banded), len(exact))
-
-
 def test_registered_embedding_dedup_default_recall_at_sf01(spark):
-    """The REGISTERED default (payload='auto' → ivf on this corpus,
-    r11) trades wide-angle recall for the sub-quadratic shape — pin the
-    trade's floor plus exact precision, so a codebook/probe change that
-    silently craters either fails here. r12's probe-scaled codebook
+    """The registered IVF plan trades wide-angle recall for the
+    sub-quadratic shape — pin the trade's floor plus exact precision, so
+    a codebook/probe change that silently craters either fails here. r12's probe-scaled codebook
     (ivf_dedup_n_cells: 7 cells at sf0.1 instead of the constant 64)
     raised the measured wide-angle recall 0.389 → 0.792 (114/144 at the
     0.45 threshold) — floor pinned at 0.55, the r12 verdict target.
@@ -227,98 +172,6 @@ def test_embed_features_arrow_bit_identical_to_expression_form(spark):
         b = fast[k]
         # tuple equality on floats is exact (no tolerance) — intentional
         assert (a.n2, a.sketch, a.e) == (b.n2, b.sketch, b.e), k
-
-
-def test_embedding_dedup_payload_shapes_agree(spark):
-    """All three plans — 'tiles' (default blocked GEMM), 'corpus'
-    (banded id-join) and 'candidates' (id-join + semi-joined re-rank) —
-    must return bit-identical pairs AND cosines: which one runs is a
-    measured density/scale decision, never a semantics change."""
-    from gcp_map_reduce_spark.operators.similarity import dedup_embedding_cosine
-
-    base = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in dedup_embedding_cosine(
-            spark, SF_ORACLE, payload="corpus"
-        ).collect()
-    }
-    assert base
-    for mode in ("tiles", "candidates"):
-        got = {
-            (r.vec_a, r.vec_b): r.cosine
-            for r in dedup_embedding_cosine(
-                spark, SF_ORACLE, payload=mode
-            ).collect()
-        }
-        assert got == base, mode
-
-
-def test_choose_embedding_payload_probe_and_decision(spark):
-    """The density probe must (a) read ~all-pairs density on this corpus
-    (2-bit bands on near-orthogonal vectors -> ~0.9*N candidates/vec)
-    and pick 'tiles'; (b) read zero density on an adversarial
-    collision-free sketch set and pick 'corpus'. payload='auto' wires
-    the decision into the operator."""
-    from gcp_map_reduce_spark.operators.similarity import (
-        DEDUP_BANDS,
-        N_PLANES,
-        choose_embedding_payload,
-        dedup_embedding_cosine,
-        estimate_band_candidates_per_vec,
-    )
-
-    n_vec = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").count()
-    cpv = estimate_band_candidates_per_vec(spark, SF_ORACLE)
-    # degenerate banding: a large fraction of all pairs collide — every
-    # band plan is quadratic here, so the chooser routes to the
-    # cell-pruned ivf generator (r11; tiles stays the explicit option)
-    assert cpv > 0.5 * n_vec, (cpv, n_vec)
-    assert choose_embedding_payload(spark, SF_ORACLE) == "ivf"
-
-    # 4 vectors whose sketches disagree on EVERY 2-bit band: band b of
-    # row i gets value (i) — all four values distinct per band, so the
-    # collision mass is exactly zero
-    band_bits = N_PLANES // DEDUP_BANDS
-    rows = [
-        (i, sum(i << (b * band_bits) for b in range(DEDUP_BANDS)))
-        for i in range(4)
-    ]
-    sk = spark.createDataFrame(rows, "vec_id long, sketch long")
-    assert estimate_band_candidates_per_vec(spark, SF_ORACLE, sketches=sk) == 0.0
-
-    # auto mode returns the ivf result here (cell recall — a DIFFERENT
-    # candidate generator from the band plans, so compare against ivf).
-    # Collected-set compare: exceptAll over two FlatMapGroupsInPandas +
-    # dropDuplicates plans trips a Spark attribute-rewrite internal
-    # error (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), and the result is
-    # tiny at oracle scale anyway.
-    auto = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in dedup_embedding_cosine(
-            spark, SF_ORACLE, payload="auto"
-        ).collect()
-    }
-    base = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in dedup_embedding_cosine(
-            spark, SF_ORACLE, payload="ivf"
-        ).collect()
-    }
-    assert auto == base
-
-
-def test_ivf_rerank_forms_identical(spark):
-    """Both re-rank implementations (JVM expression fold vs Arrow kernel)
-    must return identical rows — which one runs is purely a measured
-    performance choice (expr won on the probe-bounded candidate set)."""
-    from gcp_map_reduce_spark.operators.similarity import similarity_ivf_ann
-
-    key = lambda r: (r.query_id, r.cand_id)  # noqa: E731
-    expr = sorted(similarity_ivf_ann(spark, SF_ORACLE).collect(), key=key)
-    arrow = sorted(
-        similarity_ivf_ann(spark, SF_ORACLE, rerank="arrow").collect(), key=key
-    )
-    assert expr and expr == arrow
 
 
 def test_ivf_kmeans_codebook_recall_and_contract(spark):
@@ -431,6 +284,93 @@ def test_cosine_arrow_bit_identical_to_expression_form(spark):
     assert rows and all(r.c1 == r.c2 for r in rows)
 
 
+def _left_fold_dots(A, B):
+    """Reference pairwise dots: every element's own left fold over d,
+    one output row at a time, no chunking."""
+    import numpy as np
+
+    out = np.empty((A.shape[0], B.shape[0]))
+    for i in range(A.shape[0]):
+        acc = np.zeros(B.shape[0])
+        for d in range(A.shape[1]):
+            acc = acc + A[i, d] * B[:, d]
+        out[i] = acc
+    return out
+
+
+def test_shared_folds_equal_naive_left_fold_bitwise(spark):
+    """The one numpy pairwise fold (``_seq_dot``, 256-row chunks) and
+    the one norm fold (``_np_n2``) must equal a plain left fold bit for
+    bit — on shapes that cross the chunk boundary and on 1-row sides —
+    and the norm fold must equal ``embed_features_arrow``'s ``n2``."""
+    import functools
+
+    import numpy as np
+
+    from gcp_map_reduce_spark.operators.similarity import (
+        _emb,
+        _np_n2,
+        _seq_dot,
+        embed_features_arrow,
+    )
+
+    rng = np.random.default_rng(11)
+    for n_a, n_b in [(600, 300), (1, 700), (700, 1), (256, 3), (257, 3)]:
+        A = rng.standard_normal((n_a, 64))
+        B = rng.standard_normal((n_b, 64))
+        got = _seq_dot(A, B)
+        assert got.shape == (n_a, n_b)
+        assert (got == _left_fold_dots(A, B)).all(), (n_a, n_b)
+        # scalar Python folds on the rows around each chunk edge
+        for i in {0, 255, 256, 511, 512, n_a - 1} & set(range(n_a)):
+            for j in (0, n_b - 1):
+                ref = functools.reduce(
+                    lambda acc, d: acc + float(A[i, d]) * float(B[j, d]),
+                    range(64),
+                    0.0,
+                )
+                assert got[i, j] == ref, (n_a, n_b, i, j)
+        assert (_np_n2(A) == np.diag(_left_fold_dots(A, A))).all()
+
+    pdf = embed_features_arrow(_emb(spark, SF_ORACLE), sketch=False).toPandas()
+    E = np.stack(pdf["e"].to_numpy())
+    assert (_np_n2(E) == pdf["n2"].to_numpy()).all()
+    assert (np.diag(_seq_dot(E, E)) == pdf["n2"].to_numpy()).all()
+
+
+def test_shared_folds_ship_by_value(tmp_path):
+    """Kernels capture ``_seq_dot``/``_np_n2``, and Spark's Python
+    workers may be unable to import this package. The folds must
+    therefore pickle by value: they unpickle and run in a fresh
+    interpreter that cannot import ``gcp_map_reduce_spark``."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from gcp_map_reduce_spark.operators.similarity import _np_n2, _seq_dot
+
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "import numpy as np\n"
+        "assert importlib.util.find_spec('gcp_map_reduce_spark') is None\n"
+        "dot, n2 = pickle.loads(sys.stdin.buffer.read())\n"
+        "E = np.arange(6.0).reshape(2, 3)\n"
+        "print(dot(E, E)[0, 1], n2(E)[1])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps((_seq_dot, _np_n2)),
+        capture_output=True,
+        cwd=tmp_path,
+        env=env,
+    )
+    assert res.returncode == 0, res.stderr.decode()
+    assert res.stdout.split() == [b"14.0", b"50.0"]
+
+
 def test_ivf_near_dup_pairs_exact_precision_and_true_dup_recall(spark, tmp_path):
     """r10: the IVF-pruned near-dup variant (the sub-quadratic path for
     the wide-angle regime where every banding plan is O(N^2)) must be
@@ -524,28 +464,6 @@ def test_ivf_dedup_n_cells_decision():
     # the oracle embeds the same integer formula (not a literal count)
     sql = _embedding_dedup_ivf_oracle()
     assert f"// {t}" in sql and str(IVF_DEDUP_CELLS_CAP) in sql
-
-
-def test_band_payloads_keep_their_own_sql_mirror(spark):
-    """The registered oracle moved to cell recall when auto began routing
-    to the ivf generator (r11), so the band-recall payloads would
-    otherwise lose their SQL-mirror evidence. Keep it: payload='corpus'
-    must still value-match the banded DuckDB mirror
-    (_embedding_dedup_oracle — plane literals, sign sketches, 8x2-bit
-    band agreement) at oracle scale, exactly as the driver gate checked
-    it through r10. tiles/candidates equality to 'corpus' is pinned by
-    test_embedding_dedup_payload_shapes_agree, so this transitively
-    covers all three band plans."""
-    from gcp_map_reduce_spark.operators.similarity import (
-        _embedding_dedup_oracle,
-        dedup_embedding_cosine,
-    )
-    from tests.oracle_harness import _canon, duckdb_conn
-
-    sdf = dedup_embedding_cosine(spark, SF_ORACLE, payload="corpus").toPandas()
-    ddf = duckdb_conn(SF_ORACLE).execute(_embedding_dedup_oracle()).fetchdf()
-    assert len(sdf) == len(ddf) > 0
-    assert _canon(sdf).equals(_canon(ddf))
 
 
 def test_ivf_ann_broadcasts_probe_side_not_corpus(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -1040,6 +1041,55 @@ def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
         results[mode] = (out_ids, store_rows)
     assert results[True][0] == results[False][0]
     assert results[True][1] == results[False][1]
+
+
+def _codebook_cell_ids(spark, store_dir, feats, driver: bool) -> list[int]:
+    """Cell ids of the codebook the plan-side (`_codebook`) or the
+    driver-side (`_driver_codebook`) loader returns, n_cells = 3."""
+    from gcp_map_reduce_spark.streaming import embedding_near_dup as end
+
+    if driver:
+        end._CODEBOOK_CACHE.pop(str(store_dir), None)
+        cb = end._driver_codebook(spark, str(store_dir), feats.toPandas(), 3)
+        return sorted(int(c) for c in cb[0])
+    cb = end._codebook(spark, str(store_dir), feats, 3)
+    return sorted(r.cell_id for r in cb.collect())
+
+
+@pytest.mark.parametrize("driver", [False, True], ids=["plan", "driver"])
+def test_embedding_codebook_commit_rules(spark, tmp_path, driver):
+    """Both codebook loaders decide "is there a codebook" by one listing,
+    not by a failed read: an uncommitted (`_temporary`-only) codebook is
+    reseeded from the batch and then kept; an empty first batch raises;
+    a committed codebook that cannot be read raises and is left as is."""
+    schema = "vec_id bigint, e array<double>, n2 double"
+    feats = spark.createDataFrame(
+        [(i, [float(i), 1.0], float(i * i + 1)) for i in range(10, 0, -1)],
+        schema,
+    )
+
+    # a first trigger killed mid-write: readable parquet, but only
+    # under _temporary
+    killed = tmp_path / "killed"
+    spark.createDataFrame(
+        [(100, [1.0, 0.0], 1.0)], "cell_id bigint, ce array<double>, cn2 double"
+    ).write.parquet(str(killed / "_codebook" / "_temporary" / "0"))
+    assert _codebook_cell_ids(spark, killed, feats, driver) == [1, 2, 3]
+    later = feats.filter("vec_id > 5")
+    assert _codebook_cell_ids(spark, killed, later, driver) == [1, 2, 3]
+
+    with pytest.raises(ValueError, match="first batch is empty"):
+        _codebook_cell_ids(
+            spark, tmp_path / "fresh", spark.createDataFrame([], schema), driver
+        )
+
+    broken = tmp_path / "broken" / "_codebook"
+    broken.mkdir(parents=True)
+    (broken / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _codebook_cell_ids(spark, broken.parent, feats, driver)
+    assert sorted(os.listdir(broken)) == ["part-00000.parquet"]
+    assert (broken / "part-00000.parquet").read_bytes() == b"not a parquet file"
 
 
 def test_streaming_curated_corpus_equals_batch_pipeline(spark, tmp_path):

@@ -190,7 +190,7 @@ def main() -> None:
         wanted = set(args.queries)
         unknown = wanted - set(headline) - {
             "dedup_clusters_minhash", "curated_corpus_minhash",
-            "dedup_embedding_ivf", "dedup_embedding_tiles",
+            "dedup_embedding_ivf",
             "topk_naive_window", "topk_salted",
         }
         if unknown:
@@ -229,7 +229,6 @@ def main() -> None:
     from gcp_map_reduce_spark.operators.dedup import dedup_clusters
     from gcp_map_reduce_spark.operators.pipeline import curated_corpus
     from gcp_map_reduce_spark.operators.similarity import (
-        dedup_embedding_cosine,
         embedding_near_dup_pairs_ivf,
     )
 
@@ -241,15 +240,10 @@ def main() -> None:
         ("curated_corpus_minhash",
          lambda s, dd: curated_corpus(s, dd, near_dup_source="minhash",
                                       fast_hash=True)),
-        # the sub-quadratic cell-pruned pairs — since r11 this IS the
-        # registered dedup_embedding_cosine plan (auto → ivf); kept as
-        # its own row for continuity with the r10 head-to-head bank
+        # the sub-quadratic cell-pruned pairs — the registered
+        # dedup_embedding_cosine plan; kept as its own row for
+        # continuity with the r10 head-to-head bank
         ("dedup_embedding_ivf", embedding_near_dup_pairs_ivf),
-        # the band-recall blocked-GEMM option (the pre-r11 registered
-        # plan) — gated so the explicit payload="tiles" path can't
-        # silently regress, and as the scale head-to-head vs ivf
-        ("dedup_embedding_tiles",
-         lambda s, dd: dedup_embedding_cosine(s, dd, payload="tiles")),
     ]:
         if selected is not None and name not in selected:
             continue

@@ -2420,8 +2420,8 @@ def _probes_driver(
     falls out for free. Returns ``(probes_df, sorted probed cell ids)``.
     Arithmetic mirrors ``ivf_probe_cells`` exactly — ``(n2 - 2*dot) +
     cn2`` in doubles with the d-sequential fold, ties on cell_id —
-    asserted bit-identical to the plan-side path in
-    ``tests/test_ann_index.py``."""
+    asserted bit-identical to the plan-side assignment of
+    :func:`ann_index_screen_batch` in ``tests/test_ann_index.py``."""
     import numpy as np
 
     cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
@@ -2447,36 +2447,12 @@ def _probes_driver(
     return probes, sorted({row[3] for row in out})
 
 
-def _probes_plan(
-    spark: SparkSession, index_dir: str, queries: DataFrame, n_probe: int
-) -> DataFrame:
-    """Plan-side probe assignment (the shared ``ivf_probe_cells``
-    expression over a broadcast codebook) — for query relations too
-    large to collect; costs one codebook scan + one probes job per
-    search."""
-    cb = (
-        spark.read.parquet(os.path.join(index_dir, "codebook"))
-        .agg(F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb"))
-    )
-    return (
-        _with_norm2(queries)
-        .crossJoin(F.broadcast(cb))
-        .select(
-            F.col("query_id"),
-            F.col("e").alias("qe"),
-            F.col("n2").alias("qn2"),
-            F.explode(ivf_probe_cells(n_probe)).alias("cell_id"),
-        )
-    )
-
-
 def ann_index_search(
     spark: SparkSession,
     index_dir: str,
     queries: DataFrame,
     k: int = TOP_K,
     n_probe: int = 2,
-    probe_side: str = "driver",
     where: str | None = None,
     n_probe2: int = 2,
 ) -> DataFrame:
@@ -2488,10 +2464,11 @@ def ann_index_search(
     (self-match, same convention as ``similarity_bruteforce``). Returns
     (query_id, cand_id, cosine).
 
-    ``probe_side="driver"`` (default) assigns probes on the driver from
-    the cached codebook — right for the contract's broadcast-small query
-    batches (fewest jobs per search); ``"plan"`` keeps assignment in the
-    plan for larger query relations. Both produce bit-identical results
+    Probes are assigned on the driver from the cached codebook: the
+    query batch is collected and broadcast, so it must be driver-sized
+    (fewest jobs per search). A batch too large to collect goes through
+    :func:`ann_index_screen_batch`, the range form whose pairs and
+    cosines equal :func:`ann_index_range_search`'s bit for bit
     (pytest-gated).
 
     ``where`` is an optional SQL predicate over the index's persisted
@@ -2507,7 +2484,7 @@ def ann_index_search(
     filters.
     """
     cand = _search_candidates(
-        spark, index_dir, queries, n_probe, probe_side, where, n_probe2
+        spark, index_dir, queries, n_probe, where, n_probe2
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("cand_id")
@@ -2525,7 +2502,6 @@ def ann_index_range_search(
     queries: DataFrame,
     threshold: float,
     n_probe: int = 2,
-    probe_side: str = "driver",
     where: str | None = None,
     n_probe2: int = 2,
 ) -> DataFrame:
@@ -2539,13 +2515,14 @@ def ann_index_range_search(
     shuffle over all candidates, and a range query doesn't rank — the
     threshold filter runs where the cosine is computed, so this plan is
     scan -> broadcast-join -> filter with zero exchanges after the
-    probe join. Same filtered-search (``where=``) and probe knobs; the
-    same IVF recall trade documented on the top-k search applies:
-    matches in un-probed cells are missed, raise ``n_probe`` to trade
-    cost for recall.
+    probe join. Same filtered-search (``where=``) and probe knobs, and
+    the same driver-sized query contract: :func:`ann_index_screen_batch`
+    is the form for batches too large to collect. The IVF recall trade
+    documented on the top-k search applies: matches in un-probed cells
+    are missed, raise ``n_probe`` to trade cost for recall.
     """
     cand = _search_candidates(
-        spark, index_dir, queries, n_probe, probe_side, where, n_probe2
+        spark, index_dir, queries, n_probe, where, n_probe2
     )
     return cand.filter(F.col("cosine") >= threshold)
 
@@ -2846,7 +2823,6 @@ def _search_candidates(
     index_dir: str,
     queries: DataFrame,
     n_probe: int,
-    probe_side: str,
     where: str | None,
     n_probe2: int,
 ) -> DataFrame:
@@ -2854,32 +2830,15 @@ def _search_candidates(
     candidate plan under both the top-k and the range search."""
     meta = ann_index_meta(index_dir)
     # static pruning: the distinct probed-cell set is bounded by n_cells
-    # (<= 65536 longs) and usually far smaller — known for free on the
-    # driver path, one tiny job on the plan path; repaid by the scan
-    # never opening un-probed cells' files (PartitionFilters IN,
-    # plan-gated in tests)
+    # (<= 65536 longs) and usually far smaller — known for free from the
+    # driver-side probes; repaid by the scan never opening un-probed
+    # cells' files (PartitionFilters IN, plan-gated in tests)
     if meta["levels"] == 2:
-        if probe_side != "driver":
-            raise ValueError(
-                "two-level indexes probe driver-side only (the composite "
-                "distance has no expression twin by design); pass "
-                "probe_side='driver'"
-            )
         probes, cells = _probes_driver_2l(
             spark, index_dir, meta, queries, n_probe, n_probe2
         )
-    elif probe_side == "driver":
-        probes, cells = _probes_driver(spark, index_dir, queries, n_probe)
-    elif probe_side == "plan":
-        probes = _probes_plan(spark, index_dir, queries, n_probe)
-        cells = sorted(
-            r["cell_id"]
-            for r in probes.select("cell_id").distinct().collect()
-        )
     else:
-        raise ValueError(
-            f"probe_side must be 'driver' or 'plan', got {probe_side!r}"
-        )
+        probes, cells = _probes_driver(spark, index_dir, queries, n_probe)
     vecs = _load_vectors(spark, index_dir, meta)
     if where is not None:
         if not meta["attrs"]:

@@ -110,7 +110,6 @@ def semantic_decontam(
     threshold: float | None = None,
     n_probe: int = 2,
     index_dir: str | None = None,
-    probe_side: str = "driver",
 ) -> DataFrame:
     """SEMANTIC decontamination over the embeddings table: flag training
     vectors whose cosine to ANY eval vector clears ``threshold`` — the
@@ -120,15 +119,17 @@ def semantic_decontam(
 
     Eval set: the module's deterministic stand-in, ``vec_id % EVAL_MOD
     == 0`` (a real benchmark would arrive as its own table — pass its
-    vectors as the query side of :func:`ann_index.ann_index_range_search`
-    directly). Plan shape: eval vectors are the tiny broadcast query
-    side of a RANGE search against the shared persisted IVF index
-    (:func:`ann_index.ann_index_for_corpus` — built once per corpus
-    version, reused by every ANN consumer), so the train side is read
-    cell-pruned and never shuffles; eval-eval pairs are filtered out
-    AFTER the range search (the index holds all vectors). Returns one
-    row per contaminated train vector: (train_vec, n_eval_hits,
-    max_cosine, sample_eval_vec). Recall is probe-bounded — the same
+    vectors as the batch of :func:`ann_index.ann_index_screen_batch`
+    directly). Plan shape: the eval vectors are screened against the
+    shared persisted IVF index (:func:`ann_index.ann_index_for_corpus`
+    — built once per corpus version, reused by every ANN consumer) with
+    the range search's candidates and ``cosine >= threshold`` test, but
+    with cell assignment in the plan: this stand-in is 2% OF THE CORPUS,
+    so no eval row is collected to the driver, and the train side is
+    read cell-pruned. Eval-eval pairs are filtered out AFTER the screen
+    (the index holds all vectors). Returns one row per contaminated
+    train vector: (train_vec, n_eval_hits, max_cosine,
+    sample_eval_vec). Recall is probe-bounded — the same
     documented IVF trade as ``dedup_embedding_cosine``: true near-dups
     (cosine >= 0.8) share a nearest cell essentially always, wide-angle
     thresholds may need a larger ``n_probe``.
@@ -139,26 +140,20 @@ def semantic_decontam(
     """
     from gcp_map_reduce_spark.operators.ann_index import (
         ann_index_for_corpus,
-        ann_index_range_search,
+        ann_index_screen_batch,
     )
     from gcp_map_reduce_spark.operators.similarity import NEAR_DUP_COSINE
 
     if threshold is None:
         threshold = NEAR_DUP_COSINE
     idx = index_dir or ann_index_for_corpus(spark, sf_dir)
-    eval_q = (
+    eval_vecs = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % EVAL_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
+        .select("vec_id", "embedding")
     )
-    # probe_side: "driver" is right while the eval side is benchmark-
-    # sized; this module's 1/50 stand-in is 2% OF THE CORPUS, so at real
-    # scale the collected-probe contract breaks — pass "plan" to keep
-    # eval probing in the plan (one codebook scan per call instead of a
-    # driver collect of every eval vector)
-    hits = ann_index_range_search(
-        spark, idx, eval_q, threshold=threshold, n_probe=n_probe,
-        probe_side=probe_side,
+    hits = ann_index_screen_batch(
+        spark, idx, eval_vecs, threshold=threshold, n_probe=n_probe
     ).filter(F.col("cand_id") % EVAL_MOD != 0)
     return hits.groupBy(F.col("cand_id").alias("train_vec")).agg(
         F.count("*").alias("n_eval_hits"),

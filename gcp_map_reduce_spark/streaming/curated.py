@@ -60,7 +60,7 @@ from gcp_map_reduce_spark.operators.dedup import (
     minhash_features_for,
 )
 from gcp_map_reduce_spark.operators.text_analysis import text_quality_df
-from gcp_map_reduce_spark.streaming.near_dup import read_store
+from gcp_map_reduce_spark.streaming.near_dup import read_store, store_batch_id
 
 HASH_STORE_SCHEMA = "text_hash string"
 FEAT_STORE_SCHEMA = (
@@ -73,19 +73,7 @@ def _exclude_own_batch(df: DataFrame, batch_id: int) -> DataFrame:
     """Replay guard shared by both stores: drop rows a replayed batch
     wrote itself; compacted rows (no batch_id in path) default to -1 and
     always pass."""
-    return (
-        df.withColumn(
-            "_bid",
-            F.coalesce(
-                F.regexp_extract(
-                    F.input_file_name(), r"batch_id=(\d+)", 1
-                ).try_cast("long"),
-                F.lit(-1),
-            ),
-        )
-        .filter(F.col("_bid") != batch_id)
-        .drop("_bid")
-    )
+    return df.filter(store_batch_id() != batch_id)
 
 
 # Driver-side candidate-id cap for the pruned gram fetch, MEASURED at
@@ -119,7 +107,7 @@ def _verified_dup_ids(
     """(doc_id) batch docs that ARE verified near-dups of an
     earlier-seen doc or a lower-id same-batch doc: minhash band
     collisions generate candidates (store map-side, batch broadcast —
-    the ``minhash_accept`` plan shape), then the exact gram-array
+    zero store shuffle), then the exact gram-array
     Jaccard >= NEAR_DUP_JACCARD verifies — the identical expression as
     the batch ``near_dup_edges_minhash_verified``. Candidates are
     deduped before verification: each repeat would re-run an
@@ -201,7 +189,7 @@ def _verified_dup_ids(
             ]
             # the In filter must sit BELOW the replay guard:
             # input_file_name() is nondeterministic, so Catalyst will
-            # not push ANY filter past the _bid projection — filtering
+            # not push ANY filter past the replay guard — filtering
             # the raw read first is what actually reaches the scan as
             # PushedFilters: [In(doc_id, ...)] (plan-gated in
             # tests/test_plans.py; r12 review found the original

@@ -20,12 +20,15 @@ ingest is id-ordered the codebook equals the batch op's, which is what
 the parity test exploits to replay the streaming acceptance policy over
 ``embedding_near_dup_pairs_ivf``'s pair graph EXACTLY.
 
-Plan shape per trigger (the r11 minhash-stream lessons applied from the
-start): the micro-batch side is explicitly broadcast everywhere, so the
-growing store is only ever touched MAP-SIDE (scan -> broadcast hash
-join on cell_id — zero store shuffle); the dups relation has no
-shuffle at all (the anti-join consumer is multiplicity-blind); accepted
-rows are localCheckpointed once and written coalesce(1) per batch dir.
+Per trigger the batch is collected once, and cells and acceptance are
+decided in numpy against a driver mirror of the store. A remote store,
+or one over ``near_dup.STORE_MIRROR_MAX_ROWS`` rows, takes the
+store-side plan instead (the r11 minhash-stream lessons): the batch side
+is broadcast, so the growing store is only ever touched MAP-SIDE (scan
+-> broadcast hash join on cell_id — zero store shuffle); the dups
+relation has no shuffle at all (the anti-join consumer is
+multiplicity-blind); accepted rows are localCheckpointed once and
+written coalesce(1) per batch dir. Both make identical decisions.
 
 Replay safety mirrors ``near_dup``: per-batch ``batch_id=N`` dirs are
 rewritten on replay; same-id store rows are excluded by
@@ -36,6 +39,8 @@ key="vec_id")`` applies unchanged.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +55,13 @@ from gcp_map_reduce_spark.operators.similarity import (
     ivf_dedup_n_cells,
     ivf_probe_cells,
 )
-from gcp_map_reduce_spark.streaming.near_dup import glob_paths, read_store
+from gcp_map_reduce_spark.streaming.near_dup import (
+    glob_paths,
+    load_mirror,
+    read_store,
+    record_batch,
+    store_batch_id,
+)
 
 EMB_STORE_SCHEMA = (
     "vec_id bigint, e array<double>, n2 double, cells array<bigint>"
@@ -108,51 +119,28 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
     return ss.read.schema(_CODEBOOK_SCHEMA).parquet(path)
 
 
-# Driver-side store/codebook mirror for the collected accept path (r12
-# — the minhash stream's `_SIG_CACHE` pattern applied to vectors): the
-# store holds only rows this stream wrote, so a driver mirror (numpy
-# chunks + a cell index) turns the per-trigger candidate join into pure
-# python and collapses the trigger to THREE Spark actions. Parquet stays
-# the source of truth (reload on restart or layout change; disabled on
-# remote filesystem schemes). Bound: ~550 B per accepted vector at d=64
-# — fall back to collected_accept=False beyond driver memory.
+# Driver-side store mirror (r12 — the minhash stream's ``_SIG_CACHE``
+# pattern applied to vectors, sharing its loader and its row bound,
+# ``near_dup.STORE_MIRROR_MAX_ROWS``): the store holds only rows this
+# stream wrote, so a driver mirror (numpy chunks + a cell index) turns
+# the per-trigger candidate join into pure python and collapses the
+# trigger to THREE Spark actions. Parquet stays the source of truth
+# (reload on restart or layout change). A remote store, or one over the
+# bound, runs the store-side plan instead.
 _EMB_CACHE: dict[str, dict] = {}
 
 
-def _emb_cache_load(ss: SparkSession, store_dir: str) -> dict | None:
+def _emb_chunk(grp) -> tuple:
     import numpy as np
 
-    from gcp_map_reduce_spark.streaming.near_dup import _store_layout
-
-    layout = _store_layout(store_dir)
-    if layout is None:
-        return None
-    pdf = (
-        read_store(ss, EMB_STORE_SCHEMA, store_dir)
-        .withColumn(
-            "_bid",
-            F.coalesce(
-                F.regexp_extract(
-                    F.input_file_name(), r"batch_id=(\d+)", 1
-                ).try_cast("long"),
-                F.lit(-1),
-            ),
-        )
-        .toPandas()
+    return (
+        grp["vec_id"].to_numpy(dtype=np.int64),
+        np.stack([np.asarray(e, dtype=np.float64) for e in grp["e"]])
+        if len(grp)
+        else np.empty((0, 0)),
+        grp["n2"].to_numpy(dtype=np.float64),
+        [list(map(int, c)) for c in grp["cells"]],
     )
-    chunks: dict[int, tuple] = {}
-    for bid, grp in pdf.groupby("_bid"):
-        chunks[int(bid)] = (
-            grp["vec_id"].to_numpy(dtype=np.int64),
-            np.stack([np.asarray(e, dtype=np.float64) for e in grp["e"]])
-            if len(grp)
-            else np.empty((0, 0)),
-            grp["n2"].to_numpy(dtype=np.float64),
-            [list(map(int, c)) for c in grp["cells"]],
-        )
-    cache = {"layout": layout, "chunks": chunks}
-    _EMB_CACHE[store_dir] = cache
-    return cache
 
 
 def _emb_cache_merged(cache: dict, exclude_bid: int) -> tuple:
@@ -186,15 +174,11 @@ def _emb_cache_merged(cache: dict, exclude_bid: int) -> tuple:
     return cache["ids"], cache["E"], cache["n2"], cache["cell_index"]
 
 
-def _emb_cache_append(cache: dict, batch_id: int, ids, E, n2, cells) -> None:
+def _emb_cache_append(store_dir: str, batch_id: int, ids, E, n2, cells) -> None:
     import numpy as np
 
-    cache["chunks"][batch_id] = (ids, E, n2, cells)
-    if cache.get("layout") is not None:
-        cache["layout"] = tuple(
-            sorted(set(cache["layout"]) | {f"batch_id={batch_id}"})
-        )
-    if cache.get("merged_bids") is None:
+    cache = record_batch(_EMB_CACHE, store_dir, batch_id, (ids, E, n2, cells))
+    if cache is None or cache.get("merged_bids") is None:
         return
     off = len(cache["ids"])
     if len(ids):
@@ -210,9 +194,19 @@ def _emb_cache_append(cache: dict, batch_id: int, ids, E, n2, cells) -> None:
 # the committed codebook is immutable (created once, first batch), so
 # re-reading it every trigger was one whole Spark job per trigger of
 # pure waste — cache the arrays per store_dir after the first
-# successful load/create (an uncommitted codebook never populates the
-# cache, so the killed-first-write rebuild path is unchanged)
+# successful load/create, keyed on the ``_codebook`` dir's mtime as
+# ``ann_index._codebook_driver`` keys its codebook: a store removed and
+# reseeded under the same path gets a new dir, hence a cache miss (an
+# uncommitted codebook never populates the cache, so the
+# killed-first-write rebuild path is unchanged)
 _CODEBOOK_CACHE: dict[str, tuple] = {}
+
+
+def _mtime_ns(path: str) -> int | None:
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
 
 
 def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
@@ -224,10 +218,11 @@ def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
     raises, and an empty first batch raises)."""
     import numpy as np
 
-    cached = _CODEBOOK_CACHE.get(store_dir)
-    if cached is not None:
-        return cached
     path = f"{store_dir}/_codebook"
+    key = _mtime_ns(path)
+    hit = _CODEBOOK_CACHE.get(store_dir)
+    if key is not None and hit is not None and hit[0] == key:
+        return hit[1]
     if _codebook_committed(ss, path):
         cb_pdf = ss.read.schema(_CODEBOOK_SCHEMA).parquet(path).toPandas()
     else:
@@ -255,7 +250,7 @@ def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
         np.stack([np.asarray(e, dtype=np.float64) for e in cb_pdf["ce"]]),
         cb_pdf["cn2"].to_numpy(dtype=np.float64),
     )
-    _CODEBOOK_CACHE[store_dir] = cb
+    _CODEBOOK_CACHE[store_dir] = (_mtime_ns(path), cb)
     return cb
 
 
@@ -270,7 +265,6 @@ def run_streaming_embedding_near_dup(
     threshold: float = NEAR_DUP_COSINE,
     max_files_per_trigger: int | None = None,
     expected_corpus_size: int | None = None,
-    collected_accept: bool = True,
 ):
     """Start the stream (availableNow trigger: drains pending files and
     stops). ``output_dir`` accumulates accepted (vec_id) rows;
@@ -289,16 +283,15 @@ def run_streaming_embedding_near_dup(
     codebooks degrade throughput, never correctness: precision is the
     exact cosine gate either way).
 
-    ``collected_accept`` (r12 default, the minhash stream's pattern):
-    triggers run driver-centric — batch features collected once, cell
-    assignment and acceptance decided in numpy with bit-identical
-    folds (``similarity._seq_dot`` = the JVM left fold; probe
-    tie-breaks via lexsort on (d, cell_id)) against a driver mirror of
-    the store; three Spark actions per steady-state trigger. Measured
-    on the 20k-vector stress drain @16 batches: 518 → 632 vecs/s
-    fresh, 823 warm; decisions AND store rows pytest-asserted identical to the
-    distributed plan, which still runs for remote store_dir schemes or
-    ``collected_accept=False``."""
+    Triggers run driver-centric (r12, the minhash stream's pattern) —
+    batch features collected once, cell assignment and acceptance
+    decided in numpy with bit-identical folds (``similarity._seq_dot``
+    = the JVM left fold; probe tie-breaks via lexsort on (d, cell_id))
+    against a driver mirror of the store; three Spark actions per
+    steady-state trigger. Measured on the 20k-vector stress drain @16
+    batches: 518 → 632 vecs/s fresh, 823 warm. A remote store, or one
+    over ``STORE_MIRROR_MAX_ROWS`` rows, runs the store-side plan;
+    decisions AND store rows are pytest-asserted identical."""
     if n_cells is None:
         n_cells = (
             ivf_dedup_n_cells(expected_corpus_size, n_probe)
@@ -311,7 +304,7 @@ def run_streaming_embedding_near_dup(
     vecs = reader.parquet(emb_dir)
 
     def _process_collected(ss: SparkSession, feats: DataFrame,
-                           batch_id: int) -> None:
+                           batch_id: int, cache: dict) -> None:
         """Driver-centric trigger (r12, the minhash stream's pattern):
         collect the batch's features (ONE job — the old plan broadcast
         the batch twice, each broadcast a driver collect), assign cells
@@ -321,8 +314,6 @@ def run_streaming_embedding_near_dup(
         tie-break), then write the two batch dirs. Steady state = three
         Spark actions; the batch-parity test pins exactness."""
         import numpy as np
-
-        from gcp_map_reduce_spark.streaming.near_dup import _store_layout
 
         feats_pdf = feats.toPandas()
         cell_ids, C, cn2 = _driver_codebook(ss, store_dir, feats_pdf, n_cells)
@@ -345,18 +336,6 @@ def run_streaming_embedding_near_dup(
             n2 = np.empty(0)
             cells = []
 
-        layout = _store_layout(store_dir)
-        cache = _EMB_CACHE.get(store_dir)
-        if layout is not None and (
-            cache is None or cache.get("layout") != layout
-        ):
-            cache = _emb_cache_load(ss, store_dir)
-        if cache is None:
-            raise ValueError(
-                "collected_accept requires a local store_dir (driver "
-                f"mirror); got {store_dir!r} — pass collected_accept="
-                "False for remote stores"
-            )
         s_ids, s_E, s_n2, s_index = _emb_cache_merged(cache, batch_id)
 
         dup = np.zeros(len(ids), dtype=bool)
@@ -410,7 +389,7 @@ def run_streaming_embedding_near_dup(
             f"{output_dir}/batch_id={batch_id}"
         )
         _emb_cache_append(
-            cache, batch_id, ids[keep],
+            store_dir, batch_id, ids[keep],
             E[keep] if len(ids) else E,
             n2[keep] if len(ids) else n2,
             [cs for cs, k_ in zip(cells, keep) if k_],
@@ -421,13 +400,13 @@ def run_streaming_embedding_near_dup(
         feats = embed_features_arrow(batch_df, sketch=False).select(
             "vec_id", "e", "n2"
         )
-        from gcp_map_reduce_spark.streaming.near_dup import _store_layout
-
-        if collected_accept and _store_layout(store_dir) is not None:
-            _process_collected(ss, feats, batch_id)
+        cache = load_mirror(
+            ss, store_dir, EMB_STORE_SCHEMA, _EMB_CACHE, _emb_chunk
+        )
+        if cache is not None:
+            _process_collected(ss, feats, batch_id, cache)
             return
-        # distributed plan: remote store_dir schemes (no driver mirror)
-        # or explicit collected_accept=False
+        # store-side plan: a remote store, or one over the mirror bound
         cb = _codebook(ss, store_dir, feats, n_cells)
         cb_row = cb.agg(
             F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb")
@@ -438,15 +417,9 @@ def run_streaming_embedding_near_dup(
             .localCheckpoint(eager=True)
         )
 
-        store = read_store(ss, EMB_STORE_SCHEMA, store_dir).withColumn(
-            "_bid",
-            F.coalesce(
-                F.regexp_extract(
-                    F.input_file_name(), r"batch_id=(\d+)", 1
-                ).try_cast("long"),
-                F.lit(-1),
-            ),
-        ).filter(F.col("_bid") != batch_id).drop("_bid")
+        store = read_store(ss, EMB_STORE_SCHEMA, store_dir).filter(
+            store_batch_id() != batch_id
+        )
 
         def exploded(df: DataFrame, in_batch: bool) -> DataFrame:
             return df.select(
@@ -497,6 +470,7 @@ def run_streaming_embedding_near_dup(
         accepted.select("vec_id").write.mode("overwrite").parquet(
             f"{output_dir}/batch_id={batch_id}"
         )
+        record_batch(_EMB_CACHE, store_dir, batch_id)
 
     return (
         vecs.writeStream.foreachBatch(process)

@@ -12,13 +12,14 @@ Accepted docs' signatures append to the store.
 State is the store itself — one k-long signature row per accepted doc,
 partitioned by the batch that accepted it. That is bounded by DISTINCT
 content (not stream length), lives in parquet (not executor memory, so
-restarts and scale-out are free), and since r11 the per-trigger join
-touches it MAP-SIDE only (batch side broadcast — zero store shuffle).
-Since r12 the default ``collected_accept`` path additionally keeps a
-driver-side MIRROR of the store (``_SIG_CACHE`` — parquet stays the
-source of truth; the mirror reloads on restart or whenever the store
-dir's layout changes, and is disabled on remote filesystem schemes),
-so a steady-state trigger runs THREE Spark actions total.
+restarts and scale-out are free). Each trigger collects its batch once
+and decides acceptance on the driver (:func:`minhash_accept_collected`)
+against a driver-side MIRROR of the store (``_SIG_CACHE`` — parquet
+stays the source of truth; the mirror reloads on restart or whenever
+the store dir's layout changes), so a steady-state trigger runs THREE
+Spark actions total. A remote store, or one holding more than
+``STORE_MIRROR_MAX_ROWS`` rows, is probed store-side instead: one
+map-side job, the batch shipped to it, zero store shuffle.
 At 100 TB/day, run :func:`compact_signature_store` between stream runs
 so per-trigger listing/open cost stays O(1) in stream age instead of
 O(batches); at band-join selectivity pressure beyond that, the next
@@ -37,17 +38,23 @@ duplicate of itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.dedup import (
     BANDS,
     NUM_HASHES,
-    minhash_band_rows,
     minhash_features_for,
 )
 
 NEAR_DUP_EST_JACCARD = 0.7  # same acceptance threshold as dedup_minhash
+
+# The most store rows one mirror dict (``_SIG_CACHE`` here, the
+# embedding stream's ``_EMB_CACHE``) holds across all its store dirs:
+# ~264 B per signature row, ~550 B per d=64 embedding row, so ~0.3 and
+# ~0.6 GB of driver memory, twice that with the merged probe arrays.
+# A store above it is probed store-side, with identical decisions.
+STORE_MIRROR_MAX_ROWS = 1_000_000
 
 
 def glob_paths(ss: SparkSession, pattern: str) -> list[str]:
@@ -81,130 +88,36 @@ def read_store(ss: SparkSession, schema: str, store_dir: str) -> DataFrame:
     return ss.read.schema(schema).parquet(*paths)
 
 
-def _est_jaccard(sig_a, sig_b):
-    agree = F.size(
-        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda eq: eq)
-    )
-    return agree / F.lit(float(NUM_HASHES))
-
-
-def minhash_accept(
-    ss: SparkSession, sigs: DataFrame, store_dir: str, batch_id: int
-) -> DataFrame:
-    """The micro-batch MinHash-LSH acceptance core, shared by the
-    standalone near-dup stream and the streaming curation pipeline:
-    given this batch's (doc_id, sig) rows, return the subset that is NOT
-    a near-dup of (a) an earlier-batch ACCEPTED doc in ``store_dir`` or
-    (b) a lower-id doc in the same batch. Pure plan builder — the caller
-    materializes and writes.
-
-    Plan shape (r11 trigger-cost rewrite): ONE candidate pass for both
-    match classes — the two-leg form paid ~10 tiny shuffle stages per
-    trigger, with both band joins shuffling BOTH sides including the
-    GROWING store. The batch side is micro-batch-bounded, so it is
-    explicitly broadcast everywhere and the store is only ever touched
-    MAP-SIDE (scan -> broadcast hash join), which is also the 100 TB
-    shape: per-trigger cost stays O(store scan) with zero store shuffle,
-    and the dups relation has NO shuffle at all (no distinct anywhere —
-    a pair repeats once per colliding band, each repeat one more tiny
-    est_jaccard row map-side, and the left_anti consumer is
-    multiplicity-blind)."""
-    sig_schema = "doc_id bigint, sig array<bigint>"
-    # a replayed batch must not match against its own prior write. Rows
-    # from compacted=K dirs carry no batch_id in their path;
-    # regexp_extract then yields '' -> NULL after the cast, and a bare
-    # `_bid != batch_id` would silently DROP them (NULL comparison) —
-    # default to -1 so compacted rows always pass
-    store = read_store(ss, sig_schema, store_dir).withColumn(
-        "_bid",
-        F.coalesce(
-            F.regexp_extract(
-                F.input_file_name(), r"batch_id=(\d+)", 1
-            ).try_cast("long"),  # '' under ANSI: NULL, not throw
-            F.lit(-1),
-        ),
-    ).filter(F.col("_bid") != batch_id).drop("_bid")
-
-    # match classes, encoded in one filter:
-    #   - vs an earlier ACCEPTED doc (store row, any id): suppress
-    #   - within the batch: keep the lower doc_id of each pair
-    batch_bands = minhash_band_rows(sigs)
-    all_bands = minhash_band_rows(store).withColumn(
-        "in_batch", F.lit(False)
-    ).unionByName(batch_bands.withColumn("in_batch", F.lit(True)))
-    cand = (
-        all_bands.select(
-            F.col("doc_id").alias("doc_a"), "band_id", "band_key", "in_batch"
-        )
-        .join(
-            F.broadcast(
-                batch_bands.select(
-                    F.col("doc_id").alias("doc_b"), "band_id", "band_key"
-                )
-            ),
-            ["band_id", "band_key"],
-        )
-        .filter(
-            (~F.col("in_batch") & (F.col("doc_a") != F.col("doc_b")))
-            | (F.col("in_batch") & (F.col("doc_a") < F.col("doc_b")))
-        )
-        .select("doc_a", "doc_b")
-    )
-    all_sigs = store.select("doc_id", "sig").unionByName(
-        sigs.select("doc_id", "sig")
-    )
-    # sig payload joins: batch sigs broadcast onto the candidate list,
-    # then the (tiny) candidate list broadcast onto the store-sized sig
-    # relation — again map-only over the store
-    dups = (
-        all_sigs.select(
-            F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
-        )
-        .join(
-            F.broadcast(
-                cand.join(
-                    F.broadcast(
-                        sigs.select(
-                            F.col("doc_id").alias("doc_b"),
-                            F.col("sig").alias("sig_b"),
-                        )
-                    ),
-                    "doc_b",
-                )
-            ),
-            "doc_a",
-        )
-        .filter(
-            _est_jaccard(F.col("sig_a"), F.col("sig_b"))
-            >= NEAR_DUP_EST_JACCARD
-        )
-        .select("doc_b")
-    )
-    return sigs.join(
-        F.broadcast(dups), sigs.doc_id == dups.doc_b, "left_anti"
+def store_batch_id() -> Column:
+    """The N of the ``batch_id=N`` dir a store row was read from; -1 for
+    rows of a ``compacted=K`` dir. Those carry no batch id in their
+    path, so regexp_extract yields '' -> NULL after the cast, and a bare
+    ``_bid != batch_id`` would silently DROP them."""
+    return F.coalesce(
+        F.regexp_extract(
+            F.input_file_name(), r"batch_id=(\d+)", 1
+        ).try_cast("long"),  # '' under ANSI: NULL, not throw
+        F.lit(-1),
     )
 
 
-# Driver-side signature-store cache for the collected accept path: the
-# store is (doc_id, sig) rows the STREAM itself wrote — one 32-long row
-# per accepted doc — so a driver mirror (numpy chunks per batch dir + a
-# band index) turns the per-trigger store probe into pure python and
-# removes one Spark job per trigger (~0.5 s of worker/scheduling cost at
-# the measured floor). Parquet remains the source of truth: the cache is
-# (re)loaded with ONE Spark read when absent or when the store dir's
-# layout (the SET of batch_id=/compacted= entry names, checked per
-# trigger with a driver listing) differs from what the cache
-# wrote/loaded — that detects compaction and any writer that adds or
-# removes dirs. It does NOT detect an in-place rewrite of an existing
-# dir under the same name: the store contract is single-writer (this
-# stream, plus the offline compactor, both layout-changing); an
+# Driver-side store mirrors: the store is rows the STREAM itself wrote
+# (one 32-long signature row per accepted doc here), so a driver mirror
+# (numpy chunks per batch dir + a band index) turns the per-trigger store
+# probe into pure python and removes one Spark job per trigger (~0.5 s
+# of worker/scheduling cost at the measured floor). Parquet remains the
+# source of truth: a mirror is (re)loaded with ONE Spark read when absent
+# or when the store dir's layout (the SET of batch_id=/compacted= entry
+# names, checked per trigger with a driver listing) differs from what
+# the mirror wrote/loaded — that detects compaction and any writer that
+# adds or removes dirs. It does NOT detect an in-place rewrite of an
+# existing dir under the same name: the store contract is single-writer
+# (this stream, plus the offline compactor, both layout-changing); an
 # external tool rewriting batch dirs in place must be followed by a
-# process restart or a compact call. On remote filesystem schemes the
-# cache is DISABLED and the probe runs distributed, which also keeps
-# memory honest where stores can be arbitrarily large. Bound: ~264 B
-# per accepted doc — a 10M-doc distinct corpus mirrors in ~2.6 GB of
-# driver memory; beyond that run collected_accept=False (the
-# fully-distributed plan).
+# process restart or a compact call. Remote stores get no mirror, and
+# each mirror dict holds at most STORE_MIRROR_MAX_ROWS rows: an entry is
+# {"layout", "chunks": {batch_id: (ids, ...)} or None}, None marking a
+# store over the bound (kept so it is not re-read every trigger).
 _SIG_CACHE: dict[str, dict] = {}
 
 
@@ -228,45 +141,94 @@ def _store_layout(store_dir: str) -> tuple | None:
         return ()  # store not created yet: empty layout
 
 
-def _cache_load(ss: SparkSession, store_dir: str) -> dict | None:
-    """(Re)load the driver mirror from parquet. One Spark job."""
-    import numpy as np
+def _mirror_rows(mirrors: dict) -> int:
+    return sum(
+        len(chunk[0])
+        for m in mirrors.values()
+        for chunk in (m["chunks"] or {}).values()
+    )
 
+
+def _fit_mirrors(mirrors: dict, store_dir: str) -> None:
+    """Keep ``mirrors`` within STORE_MIRROR_MAX_ROWS rows: drop the other
+    stores' entries first (each reloads on its next trigger), then this
+    store's chunks, keeping its layout as the over-bound marker."""
+    if _mirror_rows(mirrors) <= STORE_MIRROR_MAX_ROWS:
+        return
+    for other in [k for k in mirrors if k != store_dir]:
+        del mirrors[other]
+    if _mirror_rows(mirrors) > STORE_MIRROR_MAX_ROWS:
+        mirrors[store_dir] = {
+            "layout": mirrors[store_dir]["layout"], "chunks": None,
+        }
+
+
+def load_mirror(
+    ss: SparkSession, store_dir: str, schema: str, mirrors: dict, chunk_of
+) -> dict | None:
+    """The driver mirror of ``store_dir`` in ``mirrors``, (re)loaded with
+    one Spark read when the store's layout changed; ``chunk_of`` turns
+    one batch dir's pandas rows into its chunk tuple (ids first). None
+    — probe store-side — for a remote store or one holding more than
+    STORE_MIRROR_MAX_ROWS rows; the read fetches at most one row past
+    the bound, so an over-bound store never reaches the driver."""
     layout = _store_layout(store_dir)
     if layout is None:
         return None
-    sig_schema = "doc_id bigint, sig array<bigint>"
-    pdf = (
-        read_store(ss, sig_schema, store_dir)
-        .withColumn(
-            "_bid",
-            F.coalesce(
-                F.regexp_extract(
-                    F.input_file_name(), r"batch_id=(\d+)", 1
-                ).try_cast("long"),
-                F.lit(-1),
-            ),
+    m = mirrors.get(store_dir)
+    if m is None or m["layout"] != layout:
+        pdf = (
+            read_store(ss, schema, store_dir)
+            .withColumn("_bid", store_batch_id())
+            .limit(STORE_MIRROR_MAX_ROWS + 1)
+            .toPandas()
         )
-        .toPandas()
+        m = {"layout": layout, "chunks": None}
+        if len(pdf) <= STORE_MIRROR_MAX_ROWS:
+            m["chunks"] = {
+                int(bid): chunk_of(grp) for bid, grp in pdf.groupby("_bid")
+            }
+        mirrors[store_dir] = m
+        _fit_mirrors(mirrors, store_dir)
+        m = mirrors[store_dir]
+    return m if m["chunks"] is not None else None
+
+
+def record_batch(
+    mirrors: dict, store_dir: str, batch_id: int, chunk: tuple | None = None
+) -> dict | None:
+    """Note the ``batch_id=N`` dir this trigger writes in the store's
+    mirror entry (so the next layout check still matches) and, while
+    mirrored, its accepted rows as ``chunk``. Returns the mirror when it
+    still fits under the bound, else None."""
+    m = mirrors.get(store_dir)
+    if m is None:
+        return None
+    m["layout"] = tuple(sorted(set(m["layout"]) | {f"batch_id={batch_id}"}))
+    if m["chunks"] is None or chunk is None:
+        return None
+    m["chunks"][batch_id] = chunk
+    _fit_mirrors(mirrors, store_dir)
+    m = mirrors[store_dir]
+    return m if m["chunks"] is not None else None
+
+
+def _sig_chunk(grp) -> tuple:
+    import numpy as np
+
+    ids = grp["doc_id"].to_numpy(dtype=np.int64)
+    sigs = (
+        np.stack([np.asarray(s, dtype=np.int64) for s in grp["sig"]])
+        if len(grp)
+        else np.empty((0, NUM_HASHES), dtype=np.int64)
     )
-    chunks: dict[int, tuple] = {}
-    for bid, grp in pdf.groupby("_bid"):
-        ids = grp["doc_id"].to_numpy(dtype=np.int64)
-        sigs = (
-            np.stack([np.asarray(s, dtype=np.int64) for s in grp["sig"]])
-            if len(grp)
-            else np.empty((0, NUM_HASHES), dtype=np.int64)
-        )
-        chunks[int(bid)] = (ids, sigs)
-    cache = {"layout": layout, "chunks": chunks}
-    _SIG_CACHE[store_dir] = cache
-    return cache
+    return ids, sigs
 
 
 def _cache_ensure_merged(cache: dict, exclude_bid: int) -> None:
     """Make the cache's flat (all_ids, all_sigs, index) cover exactly
     the chunks minus ``exclude_bid`` (the replayed batch's own rows,
-    mirroring the distributed probe's ``_bid != batch_id`` guard).
+    mirroring the store probe's ``_bid != batch_id`` guard).
     Normal appends extend the merged form incrementally; a replay or a
     layout reload rebuilds it (rare)."""
     import numpy as np
@@ -292,19 +254,15 @@ def _cache_ensure_merged(cache: dict, exclude_bid: int) -> None:
     )
 
 
-def _cache_append(cache: dict, batch_id: int, ids, sigs) -> None:
+def _cache_append(store_dir: str, batch_id: int, ids, sigs) -> None:
     """Record a just-accepted batch in the mirror: new chunk + layout
     entry + incremental index extension (offsets into the flat arrays)."""
     import numpy as np
 
-    r = NUM_HASHES // BANDS
-    cache["chunks"][batch_id] = (ids, sigs)
-    if cache.get("layout") is not None:
-        cache["layout"] = tuple(
-            sorted(set(cache["layout"]) | {f"batch_id={batch_id}"})
-        )
-    if cache.get("merged_bids") is None:
+    cache = record_batch(_SIG_CACHE, store_dir, batch_id, (ids, sigs))
+    if cache is None or cache.get("merged_bids") is None:
         return
+    r = NUM_HASHES // BANDS
     off = len(cache["all_ids"])
     cache["all_ids"] = np.concatenate([cache["all_ids"], ids])
     cache["all_sigs"] = np.concatenate([cache["all_sigs"], sigs])
@@ -351,18 +309,19 @@ def _cache_probe(cache: dict, batch_id: int, ids, sigs) -> set:
 def minhash_accept_collected(
     ss: SparkSession, sig_pdf, store_dir: str, batch_id: int
 ):
-    """Driver-centric twin of :func:`minhash_accept` for micro-batch-
-    bounded triggers: given this batch's signatures as a pandas frame,
-    return the accepted subset (same acceptance semantics, decided with
-    ONE Spark job instead of six).
+    """The micro-batch MinHash-LSH acceptance core: given this batch's
+    signatures as a pandas frame, return the subset that is NOT a
+    near-dup (est-Jaccard >= NEAR_DUP_EST_JACCARD over a shared band)
+    of (a) an earlier-batch ACCEPTED doc in ``store_dir`` or (b) a
+    lower-id doc in the same batch — decided with at most ONE Spark job
+    (plus the mirror's one read after a restart or a layout change).
 
-    Why (r12 trigger-floor profile): the distributed plan's per-trigger
-    cost is dominated by DRIVER work, not compute — 8 jobs/trigger whose
-    summed duration was 0.64 s against 1.7 s wall (Catalyst analysis +
-    scheduling per action ~0.1 s each, measured via a no-op foreachBatch
-    at ~0.2 s/trigger and +0.1 s per added action). The old plan also
+    Why (r12 trigger-floor profile): a plan-side decision's per-trigger
+    cost is dominated by DRIVER work, not compute — 8 jobs/trigger
+    whose summed duration was 0.64 s against 1.7 s wall (Catalyst
+    analysis + scheduling per action ~0.1 s each). That plan also
     broadcast the batch THREE times (band rows, candidate payload, dup
-    list) — and a broadcast IS a driver collect. Collecting the batch
+    list), and a broadcast IS a driver collect. Collecting the batch
     once and keeping only the STORE distributed removes every broadcast
     exchange:
 
@@ -370,20 +329,18 @@ def minhash_accept_collected(
       key — the same struct-equality key as ``minhash_band_rows`` — and
       vectorized est-Jaccard (integer position-equality count / k,
       exact) inside each bucket; the higher doc_id of a qualifying pair
-      is suppressed, lower-id-wins, multiplicity-blind — semantics
-      identical to the JVM filter.
-    - vs the store: ONE job — the store scan (with the same replay
-      ``_bid`` exclusion) feeds ``mapInPandas`` with the batch's band
-      index attached as an ``sc.broadcast`` (driver-side torrent, no
-      exchange job); each store partition probes its rows' band tuples
-      against the batch index and emits the batch doc_ids it suppresses.
+      is suppressed, lower-id-wins, multiplicity-blind.
+    - vs the store: the driver mirror (zero Spark jobs) while the store
+      is local and within STORE_MIRROR_MAX_ROWS; otherwise ONE job — the
+      store scan (minus the replayed batch's own ``batch_id=N`` dir)
+      feeds ``mapInPandas`` with the batch's arrays attached as an
+      ``sc.broadcast`` (driver-side torrent, no exchange job); each
+      store partition probes its rows' band tuples against the batch
+      index and emits the batch doc_ids it suppresses.
 
-    The 100 TB posture is unchanged: a micro-batch was ALREADY assumed
-    driver-sized (the old plan broadcast it everywhere); the store — the
-    unbounded side — never leaves the executors, and the per-partition
-    python pass is a dict probe + one vectorized compare per band row.
-    ``minhash_accept`` remains the fully-distributed form for
-    large-trigger deployments where batches outgrow the driver."""
+    The store — the unbounded side — never has to leave the executors,
+    and the per-partition python pass is a dict probe + one vectorized
+    compare per band row."""
     import numpy as np
     import pandas as pd
 
@@ -394,14 +351,11 @@ def minhash_accept_collected(
         # the caller still writes an (empty) batch dir, so the mirror
         # must record the chunk too or the next trigger's layout check
         # would force a full O(store) reload (r12 review catch)
-        layout = _store_layout(store_dir)
-        cache = _SIG_CACHE.get(store_dir)
-        if cache is not None and cache.get("layout") == layout:
-            _cache_append(
-                cache, batch_id,
-                np.empty(0, dtype=np.int64),
-                np.empty((0, NUM_HASHES), dtype=np.int64),
-            )
+        _cache_append(
+            store_dir, batch_id,
+            np.empty(0, dtype=np.int64),
+            np.empty((0, NUM_HASHES), dtype=np.int64),
+        )
         return sig_pdf
     ids = sig_pdf["doc_id"].to_numpy(dtype=np.int64)
     sigs = np.stack([np.asarray(s, dtype=np.int64) for s in sig_pdf["sig"]])
@@ -424,32 +378,19 @@ def minhash_accept_collected(
         dup[m[np.unique(np.nonzero(hit)[1])]] = True
 
     # ---- vs the store: driver mirror when usable (zero Spark jobs) --
-    layout = _store_layout(store_dir)
-    cache = _SIG_CACHE.get(store_dir)
-    if layout is not None and (
-        cache is None or cache.get("layout") != layout
-    ):
-        cache = _cache_load(ss, store_dir)  # one Spark read
-    if layout is None:
-        cache = None  # remote store: distributed probe, honest memory
+    cache = load_mirror(ss, store_dir, sig_schema, _SIG_CACHE, _sig_chunk)
     if cache is not None:
         store_hits = _cache_probe(cache, batch_id, ids, sigs)
         keep = ~dup & ~np.isin(
             ids, np.fromiter(store_hits, dtype=np.int64, count=len(store_hits))
         )
-        _cache_append(cache, batch_id, ids[keep], sigs[keep])
+        _cache_append(store_dir, batch_id, ids[keep], sigs[keep])
         return sig_pdf[keep]
 
-    # ---- fallback: one map-side job over the distributed store -------
-    store = read_store(ss, sig_schema, store_dir).withColumn(
-        "_bid",
-        F.coalesce(
-            F.regexp_extract(
-                F.input_file_name(), r"batch_id=(\d+)", 1
-            ).try_cast("long"),
-            F.lit(-1),
-        ),
-    ).filter(F.col("_bid") != batch_id).drop("_bid")
+    # ---- store-side: one map-side job over the distributed store -----
+    store = read_store(ss, sig_schema, store_dir).filter(
+        store_batch_id() != batch_id
+    )
     # broadcast the RAW arrays, not the band index: numpy buffers pickle
     # compactly (~32 longs/doc) where the dict of np.int64-tuple keys
     # pickled to tens of MB per trigger — rebuilding the index per task
@@ -496,6 +437,7 @@ def minhash_accept_collected(
         # per-trigger broadcasts pile up until a python GC destroys them
         # from arbitrary call sites
         bc.destroy()
+    record_batch(_SIG_CACHE, store_dir, batch_id)
     keep = ~dup & ~np.isin(ids, np.fromiter(store_hits, dtype=np.int64, count=len(store_hits)))
     return sig_pdf[keep]
 
@@ -508,7 +450,6 @@ def run_streaming_near_dup_dedup(
     output_dir: str,
     max_files_per_trigger: int | None = None,
     fast_hash: bool = True,
-    collected_accept: bool = True,
 ):
     """Start the stream (availableNow trigger: drains pending files and
     stops). ``output_dir`` accumulates accepted (doc_id) rows;
@@ -517,16 +458,12 @@ def run_streaming_near_dup_dedup(
     the right default (``fast_hash=False`` matches batch
     ``dedup_minhash`` signatures exactly for cross-checking).
 
-    ``collected_accept`` (r12 default): decide acceptance with the
-    driver-centric :func:`minhash_accept_collected` — 3 Spark actions
-    per trigger (kernel+collect and two tiny local-data writes; the
-    store probe runs on the driver mirror) instead of 8. Measured on
-    the 50k-doc stress drain @16 batches: warm 1,929 → 2,943 docs/s,
-    fresh-process 1,100 → 1,882 (driver-side planning/scheduling was
-    63% of trigger wall in the r11 plan, which also broadcast the batch
-    three times). Set False for the fully-distributed plan when
-    triggers are too large to collect — semantics are identical
-    (pytest-asserted equality)."""
+    Acceptance is :func:`minhash_accept_collected`: 3 Spark actions per
+    trigger (kernel+collect and two tiny local-data writes; the store
+    probe runs on the driver mirror, or as one more job store-side).
+    Measured on the 50k-doc stress drain @16 batches against the r11
+    plan-side decision: warm 1,929 → 2,943 docs/s, fresh-process
+    1,100 → 1,882."""
     schema = "doc_id bigint, text string"
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -542,39 +479,21 @@ def run_streaming_near_dup_dedup(
         sigs = minhash_features_for(
             batch_df, fast_hash=fast_hash, want_arr=False
         )
-        if collected_accept:
-            # one job: kernel + collect (the batch was already assumed
-            # driver-sized — the distributed plan broadcast it 3x)
-            acc_pdf = minhash_accept_collected(
-                ss, sigs.toPandas(), store_dir, batch_id
-            )
-            acc_pdf = acc_pdf.assign(
-                sig=[[int(x) for x in s] for s in acc_pdf["sig"]]
-            )
-            accepted = ss.createDataFrame(
-                acc_pdf[["doc_id", "sig"]], sig_schema
-            )
-            if len(acc_pdf):
-                accepted = accepted.coalesce(1)
-            # else: an all-duplicates trigger — write the empty batch
-            # dir WITHOUT coalesce: coalesce(1) over an empty local
-            # relation deterministically stalls each write job ~5 s
-            # (measured; the uncoalesced empty write is ~0.2 s and
-            # there is nothing to compact into one file anyway)
-        else:
-            # materialize ONCE: `accepted` feeds two writes, and without
-            # the checkpoint each write re-executes the whole band-join
-            # DAG (the multi-consumer recompute cost class). coalesce(1):
-            # 32-file batch dirs made every LATER trigger's store re-read
-            # pay 32x the listing + footer work.
-            accepted = (
-                minhash_accept(
-                    ss, sigs.localCheckpoint(eager=True), store_dir, batch_id
-                )
-                .localCheckpoint(eager=True)  # parallel DAG run, ONCE
-                .coalesce(1)  # post-checkpoint: no recompute
-            )
-
+        # one job: kernel + collect (a micro-batch is driver-sized)
+        acc_pdf = minhash_accept_collected(
+            ss, sigs.toPandas(), store_dir, batch_id
+        )
+        acc_pdf = acc_pdf.assign(
+            sig=[[int(x) for x in s] for s in acc_pdf["sig"]]
+        )
+        accepted = ss.createDataFrame(acc_pdf[["doc_id", "sig"]], sig_schema)
+        if len(acc_pdf):
+            accepted = accepted.coalesce(1)
+        # else: an all-duplicates trigger — write the empty batch dir
+        # WITHOUT coalesce: coalesce(1) over an empty local relation
+        # deterministically stalls each write job ~5 s (measured; the
+        # uncoalesced empty write is ~0.2 s and there is nothing to
+        # compact into one file anyway)
         accepted.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
         accepted.select("doc_id").write.mode("overwrite").parquet(
             f"{output_dir}/batch_id={batch_id}"

@@ -168,21 +168,30 @@ def test_rebuild_deterministic_and_publish_over_live(spark, index_dir):
     assert not os.path.exists(index_dir + ".old-publish")
 
 
-def test_probe_sides_bit_identical(spark, index_dir):
-    """probe_side='driver' (collected queries, cached codebook, numpy
-    d-sequential fold) and probe_side='plan' (shared ivf_probe_cells
-    expression) must return the SAME rows with bitwise-equal cosines —
-    the mirrored-arithmetic claim in _probes_driver's docstring."""
+def test_range_search_matches_screen_batch(spark, index_dir):
+    """At threshold -1 (every probed candidate) the range search
+    (driver-side probes over the collected queries, cached codebook,
+    numpy d-sequential fold; JVM cosine) and the batch screen (plan-side
+    ``ivf_probe_cells`` assignment; grouped numpy cosine) must return
+    the SAME (query_id, cand_id) pairs with bitwise-equal cosines. This
+    pins the driver probe assignment against the plan-side one, and the
+    range search against the screen ``semantic_decontam`` runs."""
+    from gcp_map_reduce_spark.operators.ann_index import (
+        ann_index_range_search,
+        ann_index_screen_batch,
+    )
+
     qs = _queries(spark)
     a = sorted(
-        map(tuple, ann_index_search(
-            spark, index_dir, qs, probe_side="driver").collect())
+        map(tuple, ann_index_range_search(
+            spark, index_dir, qs, threshold=-1.0).collect())
     )
     b = sorted(
-        map(tuple, ann_index_search(
-            spark, index_dir, qs, probe_side="plan").collect())
+        map(tuple, ann_index_screen_batch(
+            spark, index_dir, qs.withColumnRenamed("query_id", "vec_id"),
+            threshold=-1.0).collect())
     )
-    assert a == b  # includes float equality on cosine
+    assert a == b and len(a) > 0  # includes float equality on cosine
 
 
 def test_for_corpus_caches_and_keys_on_corpus_version(spark, tmp_path):
@@ -673,8 +682,6 @@ def test_two_level_index_end_to_end(spark, tmp_path, split_corpus):
         "PartitionFilters" in line and "cell_id" in line and " IN (" in line
         for line in plan.splitlines()
     ), plan
-    with pytest.raises(ValueError, match="driver-side only"):
-        ann_index_search(spark, d, _queries(spark), probe_side="plan")
     # grown == fresh: seeds (first K1+K2 vec_ids) live in the subset
     grown = str(tmp_path / "grown2l")
     ann_index_build(

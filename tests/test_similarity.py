@@ -466,7 +466,7 @@ def test_ivf_dedup_n_cells_decision():
     assert f"// {t}" in sql and str(IVF_DEDUP_CELLS_CAP) in sql
 
 
-def test_ivf_ann_broadcasts_probe_side_not_corpus(spark):
+def test_ivf_ann_broadcasts_probes_not_corpus(spark):
     """r17 plan pin: the IVF candidate join must build its hash relation
     from the PROBE side (|Q| x n_probe rows — constants, broadcastable
     at any corpus size). Left to estimates the planner broadcast the

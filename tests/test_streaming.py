@@ -322,14 +322,38 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
     assert not (new_ids & set(dup["doc_id"])), sorted(new_ids)[:5]
 
 
-def test_near_dup_collected_accept_equals_distributed(spark, tmp_path):
-    """r12: the driver-centric acceptance path (minhash_accept_collected
-    — the 3-actions-per-trigger default) must make IDENTICAL decisions
-    to the fully-distributed plan, store rows included, on a multi-batch
-    drain with real cross-batch and within-batch near-dups."""
+def _bound_mirrors(monkeypatch, bound: int | None) -> list[int]:
+    """Set ``near_dup.STORE_MIRROR_MAX_ROWS`` (None keeps the shipped
+    value) and return a list that collects the rows the mirror dict held
+    after every fit — the points where a mirror grows."""
+    from gcp_map_reduce_spark.streaming import near_dup as nd
+
+    monkeypatch.undo()
+    if bound is not None:
+        monkeypatch.setattr(nd, "STORE_MIRROR_MAX_ROWS", bound)
+    seen: list[int] = []
+    fit = nd._fit_mirrors
+
+    def checked(mirrors, store_dir):
+        fit(mirrors, store_dir)
+        seen.append(nd._mirror_rows(mirrors))
+
+    monkeypatch.setattr(nd, "_fit_mirrors", checked)
+    return seen
+
+
+def test_near_dup_mirror_equals_store_probe(spark, tmp_path, monkeypatch):
+    """The driver mirror probe and the store-side probe (the one-job
+    mapInPandas a remote store, or one over STORE_MIRROR_MAX_ROWS,
+    takes) must make IDENTICAL decisions, store rows included, on a
+    multi-batch drain with real cross-batch and within-batch near-dups:
+    with the shipped bound (mirror throughout), a bound of 0 (no mirror
+    kept) and a bound crossed mid-stream. The mirror dict never holds
+    more rows than the bound."""
     import pandas as pd
 
     from gcp_map_reduce_spark.sources.tables import load_table
+    from gcp_map_reduce_spark.streaming import near_dup as nd
     from gcp_map_reduce_spark.streaming.near_dup import (
         run_streaming_near_dup_dedup,
     )
@@ -346,8 +370,10 @@ def test_near_dup_collected_accept_equals_distributed(spark, tmp_path):
     full = pd.concat([pdf, dup]).sort_values("doc_id").reset_index(drop=True)
 
     results = {}
-    for mode in (True, False):
-        root = tmp_path / f"m{mode}"
+    for name, bound in (("mirror", None), ("none", 0),
+                        ("crossed", len(full) // 3)):
+        seen = _bound_mirrors(monkeypatch, bound)
+        root = tmp_path / name
         src = root / "docs"
         src.mkdir(parents=True)
         per = (len(full) + 3) // 4
@@ -358,7 +384,6 @@ def test_near_dup_collected_accept_equals_distributed(spark, tmp_path):
         q = run_streaming_near_dup_dedup(
             spark, str(src), str(root / "ckpt"), str(root / "store"),
             str(root / "out"), max_files_per_trigger=1,
-            collected_accept=mode,
         )
         q.awaitTermination(300)
         out_ids = {
@@ -371,9 +396,17 @@ def test_near_dup_collected_accept_equals_distributed(spark, tmp_path):
                 str(root / "store" / "batch_id=*")
             ).collect()
         }
-        results[mode] = (out_ids, store_rows)
-    assert results[True][0] == results[False][0]
-    assert results[True][1] == results[False][1]
+        results[name] = (out_ids, store_rows)
+        assert seen and max(seen) <= nd.STORE_MIRROR_MAX_ROWS
+        mirror = nd._SIG_CACHE[str(root / "store")]["chunks"]
+        if bound is None:
+            assert sum(len(c[0]) for c in mirror.values()) == len(store_rows)
+        else:
+            assert mirror is None  # over the bound: probed store-side
+    monkeypatch.undo()
+    for name in ("none", "crossed"):
+        assert results[name][0] == results["mirror"][0]  # accepted ids
+        assert results[name][1] == results["mirror"][1]  # store rows
 
 
 def test_stream_stream_join_matches_batch_interval_join(spark, tmp_path):
@@ -982,18 +1015,20 @@ def test_streaming_embedding_near_dup_parity_with_batch_ivf(spark, tmp_path):
     assert not (new_ids & set(int(v) for v in extra["vec_id"])), sorted(new_ids)[:5]
 
 
-def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
-    """r12: the driver-centric embedding acceptance (numpy d-sequential
+def test_embedding_mirror_equals_distributed(spark, tmp_path, monkeypatch):
+    """The driver-centric embedding acceptance (numpy d-sequential
     folds + driver store mirror) must make IDENTICAL decisions to the
-    distributed plan — store rows included (vec_id, e, n2, cells) — on
-    a multi-batch drain with true near-dups."""
+    store-side plan a remote store, or one over STORE_MIRROR_MAX_ROWS,
+    runs — store rows included (vec_id, e, n2, cells) — on a
+    multi-batch drain with true near-dups: with the shipped bound, a
+    bound of 0 and a bound crossed after the first trigger (which also
+    moves the stream from the driver codebook loader to the plan-side
+    one). The mirror dict never holds more rows than the bound."""
     import duckdb
     import os
 
-    from gcp_map_reduce_spark.streaming.embedding_near_dup import (
-        EMB_STORE_SCHEMA,
-        run_streaming_embedding_near_dup,
-    )
+    from gcp_map_reduce_spark.streaming import embedding_near_dup as end
+    from gcp_map_reduce_spark.streaming import near_dup as nd
 
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
@@ -1013,8 +1048,10 @@ def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
         .reset_index(drop=True)
     )
     results = {}
-    for mode in (True, False):
-        root = tmp_path / f"m{mode}"
+    for name, bound in (("mirror", None), ("none", 0),
+                        ("crossed", len(pdf) // 6)):
+        seen = _bound_mirrors(monkeypatch, bound)
+        root = tmp_path / name
         src = root / "vecs"
         src.mkdir(parents=True)
         per = (len(pdf) + 3) // 4
@@ -1022,10 +1059,10 @@ def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
             pdf.iloc[b * per : (b + 1) * per].to_parquet(
                 str(src / f"f{b}.parquet"), index=False
             )
-        q = run_streaming_embedding_near_dup(
+        q = end.run_streaming_embedding_near_dup(
             spark, str(src), str(root / "ckpt"), str(root / "store"),
             str(root / "out"), max_files_per_trigger=1,
-            expected_corpus_size=len(pdf), collected_accept=mode,
+            expected_corpus_size=len(pdf),
         )
         q.awaitTermination(300)
         out_ids = {
@@ -1034,13 +1071,67 @@ def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
         }
         store_rows = {
             (int(r["vec_id"]), tuple(r["e"]), r["n2"], tuple(r["cells"]))
-            for r in spark.read.schema(EMB_STORE_SCHEMA)
+            for r in spark.read.schema(end.EMB_STORE_SCHEMA)
             .parquet(str(root / "store" / "batch_id=*"))
             .collect()
         }
-        results[mode] = (out_ids, store_rows)
-    assert results[True][0] == results[False][0]
-    assert results[True][1] == results[False][1]
+        results[name] = (out_ids, store_rows)
+        assert seen and max(seen) <= nd.STORE_MIRROR_MAX_ROWS
+        mirror = end._EMB_CACHE[str(root / "store")]["chunks"]
+        if bound is None:
+            assert sum(len(c[0]) for c in mirror.values()) == len(store_rows)
+        else:
+            assert mirror is None  # over the bound: store-side plan
+    monkeypatch.undo()
+    for name in ("none", "crossed"):
+        assert results[name][0] == results["mirror"][0]  # accepted ids
+        assert results[name][1] == results["mirror"][1]  # store rows
+
+
+def test_embedding_stream_reseeds_codebook_after_store_removed(
+    spark, tmp_path
+):
+    """A store removed and re-created under the same path is seeded
+    from ITS first batch: the driver codebook cache is keyed to the
+    committed ``_codebook`` dir, so it must not hand back the removed
+    store's cells (nor skip writing the new ``_codebook``)."""
+    import duckdb
+    import shutil
+
+    from gcp_map_reduce_spark.streaming.embedding_near_dup import (
+        run_streaming_embedding_near_dup,
+    )
+
+    store = tmp_path / "store"
+
+    def drain(name: str, offset: int) -> None:
+        src = tmp_path / name / "vecs"
+        src.mkdir(parents=True)
+        duckdb.sql(
+            f"COPY (SELECT vec_id + {offset} AS vec_id, embedding"
+            " FROM '/root/testdata/sf0.001/embeddings.parquet')"
+            f" TO '{src}/a.parquet' (FORMAT PARQUET)"
+        )
+        q = run_streaming_embedding_near_dup(
+            spark, str(src), str(tmp_path / name / "ckpt"), str(store),
+            str(tmp_path / name / "out"), n_cells=3,
+        )
+        q.awaitTermination(300)
+
+    drain("first", 0)
+    shutil.rmtree(store)
+    drain("second", 5000)
+    assert (store / "_codebook").is_dir()
+    cells = sorted(
+        r.cell_id for r in spark.read.parquet(str(store / "_codebook")).collect()
+    )
+    lowest = sorted(
+        r.vec_id + 5000
+        for r in spark.read.parquet(
+            "/root/testdata/sf0.001/embeddings.parquet"
+        ).collect()
+    )[:3]
+    assert cells == lowest
 
 
 def _codebook_cell_ids(spark, store_dir, feats, driver: bool) -> list[int]:

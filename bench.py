@@ -200,10 +200,8 @@ def build_overrides() -> dict:
     1. Production-mode: dedup_minhash benches with its production hash
        family (xxhash64) instead of the DuckDB-portable md5 the
        registered entry keeps for the oracle gate. dedup_clusters /
-       curated_corpus bench their r9 default (edge_source="auto"): the
-       density probe fires once during warm-up and is session-cached,
-       so the timed runs measure the chosen plan (exact at this scale)
-       plus a dict lookup.
+       curated_corpus bench their library default (exact edges from
+       the prefix-filtered shingle join).
     2. Historical-comparability: names the registry consolidated into
        tagged suite unions (driver-window fit) keep benching their
        ORIGINAL single-operator library plans, so per-query timings
@@ -226,9 +224,7 @@ def build_overrides() -> dict:
         "corpus_shards": corpus_shards,
         # historical-comparability: the registered row is the two-edge
         # SUITE; bench times the single-operator form at its library
-        # default (edge_source="auto" since r9 — the probe fires once in
-        # warm-up and is session-cached, so timed runs measure the
-        # chosen plan plus a dict lookup)
+        # default (edge_source="exact")
         "dedup_clusters": lambda s, d: dedup_clusters(s, d),
         "similarity_ivf_ann": similarity_ivf_ann,
         "similarity_lsh_ann": similarity_lsh_ann,

@@ -43,8 +43,6 @@ def __getattr__(name):
         "suggest_n_buckets": "gcp_map_reduce_spark.sinks.writers",
         "write_sorted_layout": "gcp_map_reduce_spark.sinks.writers",
         "dataset_stats": "gcp_map_reduce_spark.sinks.writers",
-        "choose_edge_source": "gcp_map_reduce_spark.operators.dedup",
-        "estimate_candidate_pairs_per_doc": "gcp_map_reduce_spark.operators.dedup",
         "embedding_near_dup_pairs_ivf": "gcp_map_reduce_spark.operators.similarity",
         "publish_atomic": "gcp_map_reduce_spark.sinks.writers",
     }
@@ -77,8 +75,6 @@ __all__ = [
     "suggest_n_buckets",
     "write_sorted_layout",
     "dataset_stats",
-    "choose_edge_source",
-    "estimate_candidate_pairs_per_doc",
     "embedding_near_dup_pairs_ivf",
     "publish_atomic",
 ]

@@ -5,16 +5,17 @@ Not present in the reference (its only dedup is the map-side ``set`` on
 These are the standard large-corpus dedup ladder:
 
 - exact: hash-groupBy on content (or normalized content);
-- n-gram Jaccard: exact set-similarity via shingle inverted index + join;
+- n-gram Jaccard: exact set-similarity via a prefix-filtered shingle
+  index join (AllPairs/PPJoin bounds);
 - MinHash + LSH banding: the 100 TB path — constant-size signatures, only
   band-collision candidates are verified, never all pairs;
 - SimHash: 60-bit fingerprints, near-dup = small Hamming distance, banded
   by 15-bit chunks.
 
-Scale notes: the shingle self-join in ``dedup_ngram_jaccard`` is quadratic
-in the hottest shingle's doc-frequency — fine as the exactness oracle /
-verifier, but at 100 TB you run ``dedup_minhash`` (bounded shuffle: k
-signature longs per doc) and verify only its candidates. Hot-shingle
+Scale notes: the prefix join in ``dedup_ngram_jaccard`` is exact at every
+density but still quadratic in the size of a dup clique sharing a prefix
+gram; at 100 TB you run ``dedup_minhash`` (bounded shuffle: k signature
+longs per doc) and verify only its candidates. Hot-shingle
 skew is handled by dropping top-percentile shingles (like stop-words),
 controlled by ``max_shingle_df``.
 
@@ -38,7 +39,6 @@ from __future__ import annotations
 
 import hashlib
 import logging
-import os
 import string
 import threading
 
@@ -268,7 +268,6 @@ JACCARD_THRESHOLD = 0.8
 def dedup_ngram_jaccard(
     spark: SparkSession,
     sf_dir: str,
-    prefix_filter: bool | str = False,
     arr: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs: 3-shingle Jaccard >= 0.8 over shingle FINGERPRINTS
@@ -281,81 +280,41 @@ def dedup_ngram_jaccard(
     stays exact; semantically a collision perturbs one intersection
     count with probability ~|shingles|^2/2^31 per corpus.
 
-    ``prefix_filter=True`` is the SCALE form (r8): exact PREFIX
-    FILTERING (Bayardo et al.'s AllPairs bound) — index only each doc's
-    FIRST ``|A| - ceil(t*|A|) + 1`` gram hashes under the global
+    The plan is exact PREFIX FILTERING (Bayardo et al.'s AllPairs bound)
+    with the PPJoin length and positional filters: index only each
+    doc's FIRST ``|A| - ceil(t*|A|) + 1`` gram hashes under the global
     ascending hash order; any pair with Jaccard >= t must share a
     prefix gram, so the candidate set provably contains every
     qualifying pair. Each candidate is then verified ONCE via
-    ``array_intersect`` on the checkpointed per-doc arrays (distinct
-    elements, so its size IS the intersection count; same ints, same
-    division -> bit-identical output, oracle unchanged; pytest asserts
-    the two forms agree at sf0.01/sf0.1). The ceil is exact integer
-    arithmetic — double 0.8 sits above the rational 4/5, and a float
-    ceil would shorten the prefix into false negatives at |A| % 5 == 0.
+    ``array_intersect`` on the per-doc arrays (distinct elements, so
+    its size IS the intersection count). The result is bit-identical to
+    the full inverted-index self-join the oracle spells out
+    (``tests/ngram_reference.py`` keeps that join as the test
+    reference). The ceil is exact integer arithmetic — double 0.8 sits
+    above the rational 4/5, and a float ceil would shorten the prefix
+    into false negatives at |A| % 5 == 0.
 
-    Measured crossover (same shape as the exact/minhash edge-source
-    choice): at the 10x-dup-density stress set the full inverted-index
-    self-join emits one row per SHARED GRAM per pair — 113M
-    intersection rows — where the prefix plan emits 23.9M
-    candidate-gram rows, and with the r9 LENGTH + POSITIONAL filters
-    (below) the surviving pairs drop 22.46M -> 8.42M -> fewer still:
-    prefix+filters win 4.6 vs 18.7 s quiet-box (4x); at sf0.1's low dup
-    density the dedup+verify overhead still exceeds the savings (1.76
-    vs 1.51 s interleaved A/B, r9 — the filters narrowed the gap from
-    0.94 to 0.25 s but didn't flip it), so full stays the low-density
-    choice and the probe threshold is unchanged.
+    It is the one form because it is the only exact one that holds at
+    every density. The full self-join emits one row per SHARED GRAM per
+    pair — 113M intersection rows at the 10x-dup-density stress set,
+    where the prefix plan emits 23.9M candidate-gram rows — and on the
+    50k-doc ``tools/gen_stress.py`` set it lost the JVM, while the
+    prefix form finished. At bench density the full form was ~0.1-0.9 s
+    faster, less than the sampled density probe that used to choose
+    between them cost.
 
-    ``prefix_filter="auto"`` decides by the SAME sampled density probe
-    as ``choose_edge_source`` — candidate pairs per doc
-    (sum df*(df-1)/2 over gram fingerprints) is exactly the row count
-    the full join materializes, and the measured crossover sits on the
-    same side of the existing threshold as the edge-source choice (~267
-    pairs/doc at sf0.1 -> full wins; ~2,743 at stress -> prefix wins).
-    The probe is one ~1.3 s sampled job at stress scale, repaid ~5x by
-    the right plan. The DEFAULT stays the plain full form (False): the
-    probe is pure overhead for callers that already know their regime —
-    ``dedup_clusters``/``curated_corpus`` only take exact edges when
-    ``choose_edge_source`` has ALREADY measured the density below the
-    same threshold (where full wins), and the registered pair-scores
-    suite opts into "auto" because its exact leg must run at every
-    density (tagged branch).
-
-    Join-strategy asymmetry (measured): Catalyst's size estimate under
-    an explode is the CHILD's, so it happily broadcasts the corpus-wide
-    inverted index (~20M rows at stress from a ~1 MB estimate) — fatal
-    once per-doc fan-out times corpus size outgrows memory, and it
-    blocks AQE's skew split (sort-merge only). The PREFIX form — the
-    high-density/scale switch — therefore pins SHUFFLE_MERGE. The FULL
-    form deliberately does NOT: it is the documented at-bench-scale
-    choice (past the density crossover you switch to prefix or minhash
-    edges), and in exactly that regime the local broadcast is the
-    fastest plan (hint measured +0.2 s at sf0.1 on this leg and ~+0.3 s
-    on each of dedup_clusters/curated_corpus, whose exact edge source
-    rides it)."""
-    # Materialize the COMPACT array form (one row per doc), not the
-    # exploded inverted index: the checkpoint is |docs| rows instead of
-    # |docs|*|shingles| rows (~50x fewer at bench scale, measured 2x on
-    # the whole operator), |A| comes free as size(gh_arr) with no
-    # groupBy shuffle, and each join side re-explodes/re-slices from the
-    # checkpoint — explode is cheap narrow compute; the gram build above
-    # it is what must not run twice. The checkpoint stays UNSORTED (the
-    # full form doesn't care, and the sort is ~0.13 s at sf0.1); the
-    # prefix branch sorts on read — its bound needs one global total
-    # order shared by every doc, and array_intersect is
+    The join is pinned to SHUFFLE_MERGE: Catalyst's size estimate under
+    an explode is the CHILD's, so it would happily broadcast the
+    corpus-wide prefix index (~20M rows at stress from a ~1 MB
+    estimate) — fatal once per-doc fan-out times corpus size outgrows
+    memory, and it blocks AQE's skew split (sort-merge only)."""
+    # ``arr`` is the COMPACT array form (one row per doc), not the
+    # exploded index: |A| comes free as size(gh_arr) with no groupBy
+    # shuffle, and each join side re-slices from the checkpoint — the
+    # gram build is what must not run twice. The checkpoint stays
+    # UNSORTED; the prefix sorts on read — its bound needs one global
+    # total order shared by every doc, and array_intersect is
     # order-insensitive.
-    if prefix_filter == "auto":
-        cpd = estimate_candidate_pairs_per_doc(spark, sf_dir)
-        prefix_filter = cpd >= EDGE_SOURCE_CPD_THRESHOLD
-        log.info(
-            "dedup_ngram_jaccard: est candidate pairs/doc %.1f -> %s form",
-            cpd,
-            "prefix" if prefix_filter else "full",
-        )
-    elif not isinstance(prefix_filter, bool):
-        raise ValueError(
-            f"prefix_filter must be bool or 'auto', got {prefix_filter!r}"
-        )
     t = JACCARD_THRESHOLD
     # t as an exact rational: double 0.8 is slightly ABOVE 4/5, so every
     # bound below uses integer arithmetic on (t_num, t_den) — float
@@ -368,43 +327,6 @@ def dedup_ngram_jaccard(
     # corpus scan + per-token hash twice (r9)
     if arr is None:
         arr = materialize(doc_minhash_features(spark, sf_dir, want_sig=False))
-    if not prefix_filter:
-        # carry |A| on the exploded rows (+4 bytes/row): the AllPairs
-        # LENGTH bound (jac >= 4/5 forces 4*max <= 5*min, exact integer
-        # arithmetic) prunes size-mismatched pairs' shared-gram rows
-        # INSIDE the join, before the pair groupBy — and F.first(sz)
-        # inside that groupBy replaces the two post-agg size joins the
-        # previous plan paid. Exact (r9 pytest: 256 == 256 pairs at
-        # sf0.1) and ~10% faster at sf0.1 (1.39 vs 1.54 s best-of-3).
-        sh = arr.select(
-            "doc_id", F.size("gh_arr").alias("sz"), F.explode("gh_arr").alias("gh")
-        )
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.gh") == F.col("b.gh"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (F.col("a.sz") * t_den >= F.col("b.sz") * t_num)
-                & (F.col("b.sz") * t_den >= F.col("a.sz") * t_num),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .agg(
-                F.count("*").alias("isect"),
-                F.first(F.col("a.sz")).alias("sza"),
-                F.first(F.col("b.sz")).alias("szb"),
-            )
-        )
-        jac = F.col("isect").cast("double") / (
-            F.col("sza") + F.col("szb") - F.col("isect")
-        )
-        return inter.select(
-            "doc_a", "doc_b", "isect", jac.alias("jaccard")
-        ).filter(F.col("jaccard") >= t)
     # prefix length |A| - ceil(t|A|) + 1 (AllPairs): if the two docs
     # share NO gram among these heads, fewer than t|A| of A's grams can
     # be shared at all, so Jaccard < t
@@ -465,9 +387,8 @@ def dedup_ngram_jaccard(
     )
     ga = arr.select(F.col("doc_id").alias("doc_a"), F.col("gh_arr").alias("ga"))
     gb = arr.select(F.col("doc_id").alias("doc_b"), F.col("gh_arr").alias("gb"))
-    # cast to long: the full form's F.count emits LongType, and with
-    # prefix_filter='auto' the output schema must not vary with the
-    # sampled corpus density (r8 advice)
+    # cast to long: the oracle's count(*) and the test reference's
+    # F.count are LongType, and callers union / write this schema
     isect = F.size(F.array_intersect("ga", "gb")).cast("long")
     jac = isect.cast("double") / (
         F.size("ga") + F.size("gb") - isect
@@ -520,8 +441,7 @@ def gram_hash_arrays_for(
     both Spark longs and DuckDB BIGINTs (null padding past the shorter
     slice propagates through the arithmetic and is filtered, same as the
     string form). The executable spec of the Arrow feature kernels
-    (pytest-gated) and the density probe's sampled gram build; every
-    operator runs :func:`minhash_features_for` instead."""
+    (pytest-gated); every operator runs :func:`minhash_features_for` instead."""
     th = _token_hash_expr(fast_hash)
     g = th
     for j in range(1, n):
@@ -1172,21 +1092,7 @@ CC_EDGES_PER_PARTITION = 250_000
 # the loop-width clamp above: at 100 TB edge counts the fast path never
 # fires. Exactness is pinned by tests/test_connected_components.py,
 # which checks BOTH paths against the same reference union-find.
-# Hard ceiling on the env override (r17 VERDICT task): the fast path
-# collect()s the edge list into driver memory, so an operator-set
-# SPARK_GRAFT_CC_DRIVER_MAX_EDGES could otherwise point a query path at
-# an unbounded driver collect. 2M edges is ~32 MB of raw longs
-# (hundreds of MB as driver Rows) and already past where the
-# distributed loop wins; larger graphs always take the loop.
-CC_DRIVER_MAX_EDGES_CEILING = 2_000_000
-CC_DRIVER_MAX_EDGES = min(
-    CC_DRIVER_MAX_EDGES_CEILING,
-    int(
-        os.environ.get(
-            "SPARK_GRAFT_CC_DRIVER_MAX_EDGES", str(CC_EDGES_PER_PARTITION)
-        )
-    ),
-)
+CC_DRIVER_MAX_EDGES = CC_EDGES_PER_PARTITION
 
 # One cloned narrow session per (application, width), reused across CC
 # calls: newSession() allocates JVM session state that is never
@@ -1277,109 +1183,6 @@ def near_dup_edges_minhash_verified(
     )
 
 
-# -- adaptive edge-source selection (cost-based exact vs minhash) ---------
-
-# Crossover threshold for choose_edge_source, in estimated candidate
-# pairs per document. Set from measurement (r8): cpd ~28 at sf0.01 and
-# ~267 at sf0.1 — densities where the exact shingle self-join is the
-# faster plan — vs ~2,743 at the 10x-dup-clique stress set, where the
-# exact join goes quadratic in the clique size. The r9 length filter
-# narrowed the stress-side gap (exact pairs now ~7.3 s vs ~19 s before;
-# minhash-verified edges still win there, 5.2 s banked for the whole
-# clustering) without moving the crossover's sign at either measured
-# density, so the threshold stands. 1,000 sits at the geometric middle
-# of the measured gap; both real workloads clear it by >3x on their own
-# side.
-EDGE_SOURCE_CPD_THRESHOLD = 1000.0
-
-
-def estimate_candidate_pairs_per_doc(
-    spark: SparkSession,
-    sf_dir: str,
-    sample_target: int = 2000,
-    seed: int = 42,
-) -> float:
-    """Sampled estimate of the exact shingle self-join's output size,
-    per document: E[candidate pairs] / |docs|, where candidate pairs =
-    sum over gram fingerprints of df*(df-1)/2 — the exact quantity the
-    inverted-index join materializes and the reason that plan is
-    quadratic in dup-clique size.
-
-    Estimator: sample each doc independently with probability ``p``
-    (sized so ~``sample_target`` docs survive), build the sampled grams
-    with the cheap xxhash64 family (probe-internal — no oracle needs to
-    mirror it), and scale the sampled collision mass by 1/p^2: a pair
-    survives doc-sampling with probability exactly p^2, so
-    sum(df_s*(df_s-1)) / p^2 is unbiased for sum(df*(df-1)). One small
-    job over ~sample_target docs — measured ~1.3 s against the 50k-doc
-    stress corpus, vs the ~15 s the right plan choice saves there — and
-    cached per (corpus fingerprint, sample_target, seed) for the session
-    (r9; r10 folded the documents.parquet mtime/size into the key so an
-    in-place regeneration re-probes instead of serving a stale density):
-    every caller after the first gets a dict lookup.
-    """
-    from gcp_map_reduce_spark.plans.probes import cached_probe, corpus_key
-
-    return cached_probe(
-        ("cpd", corpus_key(sf_dir, "documents"), sample_target, seed),
-        lambda: _estimate_candidate_pairs_per_doc(
-            spark, sf_dir, sample_target, seed
-        ),
-    )
-
-
-def _estimate_candidate_pairs_per_doc(
-    spark: SparkSession, sf_dir: str, sample_target: int, seed: int
-) -> float:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = docs.count()
-    if n == 0:
-        return 0.0
-    p = min(1.0, sample_target / n)
-    sample = docs.sample(fraction=p, seed=seed) if p < 1.0 else docs
-    grams = gram_hash_arrays_for(sample, n=3, fast_hash=True).select(
-        F.explode("gh_arr").alias("gh")
-    )
-    row = (
-        grams.groupBy("gh")
-        .agg(F.count("*").alias("df"))
-        .agg(F.sum(F.expr("df * (df - 1)")).alias("m"))
-        .collect()[0]
-    )
-    est_pairs = (row["m"] or 0) / (2.0 * p * p)
-    return est_pairs / n
-
-
-def choose_edge_source(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = EDGE_SOURCE_CPD_THRESHOLD,
-    sample_target: int = 2000,
-    seed: int = 42,
-) -> str:
-    """Cost-based exact-vs-minhash decision for the near-dup pair graph
-    (the one plan choice the engine previously left to the caller):
-    probe the corpus's candidate-pair density and return ``"exact"``
-    below ``threshold`` (full-recall inverted-index join, the faster
-    plan at low dup density) or ``"minhash"`` above it (banded
-    candidates + exact verify, the bounded-shuffle plan that holds when
-    dup cliques or sheer corpus size make the exact join quadratic).
-    Pass ``edge_source="auto"`` / ``near_dup_source="auto"`` to
-    :func:`dedup_clusters` / ``curated_corpus`` to apply it in place.
-    """
-    cpd = estimate_candidate_pairs_per_doc(
-        spark, sf_dir, sample_target=sample_target, seed=seed
-    )
-    choice = "exact" if cpd < threshold else "minhash"
-    log.info(
-        "choose_edge_source: est candidate pairs/doc %.1f (threshold %.0f) -> %s",
-        cpd,
-        threshold,
-        choice,
-    )
-    return choice
-
-
 _CLUSTERS_ORACLE = f"""
 WITH RECURSIVE {_gram_hashes_sql()},
 sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
@@ -1412,7 +1215,7 @@ FROM reach GROUP BY s
 def dedup_clusters(
     spark: SparkSession,
     sf_dir: str,
-    edge_source: str = "auto",
+    edge_source: str = "exact",
     fast_hash: bool = False,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph: every document
@@ -1421,30 +1224,17 @@ def dedup_clusters(
 
     ``edge_source`` picks where the pair graph comes from:
 
-    - ``"auto"`` (default, r9): :func:`choose_edge_source` probes the
-      corpus's candidate-pair density (sampled, ~1 small job, CACHED
-      per sf_dir for the session) and picks between the two — the
-      cost-based form of the SCALING.md crossover table, now cheap
-      enough to be the default (the r8 auto-default was reverted only
-      for the +0.3-0.5 s uncached probe cost per bench query);
-    - ``"exact"`` (what the recursive-CTE oracle checks): the exact
-      shingle inverted-index self-join (``dedup_ngram_jaccard``) —
-      full recall, but quadratic in the hottest shingle's doc frequency;
-    - ``"minhash"`` (the 100 TB plan): minhash band-collision candidates
-      exactly verified per pair (``near_dup_edges_minhash_verified``) —
-      bounded shuffle, recall = band recall (~1.0 for true copies).
-      ``tests/test_dedup.py`` asserts both sources produce IDENTICAL
-      clusterings at oracle scale.
-
-    Recall caveat on the default (r9 advice): above the density
-    threshold ``"auto"`` trades EXACT recall for bounded shuffle — a
-    borderline pair (jaccard barely >= 0.8) can miss every minhash band
-    and drop its edge, so the default output is band-recall, not the
-    exact edge set, precisely when the corpus is dup-heavy. Equality of
-    the two sources is asserted at oracle scale only. Callers for whom
-    a missed borderline edge is a correctness bug (legal-hold dedup,
-    eval-set decontamination) should pass ``edge_source="exact"`` and
-    pay the quadratic worst case knowingly.
+    - ``"exact"`` (default; what the recursive-CTE oracle checks): the
+      prefix-filtered shingle join (``dedup_ngram_jaccard``) — full
+      recall at every density, answers independent of any sampling;
+    - ``"minhash"`` (the named scale plan): minhash band-collision
+      candidates exactly verified per pair
+      (``near_dup_edges_minhash_verified``) — bounded shuffle, recall =
+      band recall (~1.0 for true copies; a borderline jaccard-0.8 pair
+      can miss every band). ``tests/test_dedup.py`` asserts both sources
+      produce IDENTICAL clusterings at oracle scale. Dup-heavy callers
+      that accept band recall pass it explicitly: it is the faster plan
+      on dup-clique corpora such as the ``tools/gen_stress.py`` set.
 
     Spark side is min-label propagation WITH pointer doubling: each round
     a node's label drops to the minimum of (its label, its neighbors'
@@ -1459,8 +1249,6 @@ def dedup_clusters(
     closure — engine-independent agreement on an iterative algorithm's
     fixpoint. reach_size doubles as the component size.
     """
-    if edge_source == "auto":
-        edge_source = choose_edge_source(spark, sf_dir)
     if edge_source == "exact":
         edge_df = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     elif edge_source == "minhash":
@@ -1767,15 +1555,9 @@ def dedup_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its own scan: its kernel hashes distinct WORDS, not gram arrays.
     feats = materialize(doc_minhash_features(spark, sf_dir))
     return (
-        # "auto": this leg must run at EVERY density (tagged branch), so
-        # the sampled probe picks full vs prefix-filtered per corpus —
-        # both bit-identical (see dedup_ngram_jaccard's crossover notes)
         norm(
             dedup_ngram_jaccard(
-                spark,
-                sf_dir,
-                prefix_filter="auto",
-                arr=feats.select("doc_id", "gh_arr"),
+                spark, sf_dir, arr=feats.select("doc_id", "gh_arr")
             ),
             "ngram_jaccard",
             F.col("jaccard"),

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.dedup import (
     _gram_hashes_sql,
-    choose_edge_source,
     dedup_exact_keepers,
     dedup_ngram_jaccard,
     near_dup_edges_minhash_verified,
@@ -81,27 +80,19 @@ ANTI JOIN drops USING (doc_id)
 def curated_corpus(
     spark: SparkSession,
     sf_dir: str,
-    near_dup_source: str = "auto",
+    near_dup_source: str = "exact",
     fast_hash: bool = False,
 ) -> DataFrame:
     """Documents surviving quality gate + exact dedup + near-dup removal,
     with their token budget — the corpus a training run would consume.
 
-    ``near_dup_source`` mirrors ``dedup_clusters``' edge_source: "auto"
-    (default, r9) lets ``choose_edge_source`` pick by the sampled
-    candidate-pair-density probe (cached per sf_dir for the session, so
-    the probe job runs at most once even though dedup_clusters asks the
-    same question); "exact" (what the oracle replicates) uses the
-    shingle self-join, "minhash" (the 100 TB plan, optionally with
-    ``fast_hash``) drops docs via verified band-collision candidates —
+    ``near_dup_source`` mirrors ``dedup_clusters``' edge_source: "exact"
+    (default; what the oracle replicates) drops docs via the
+    prefix-filtered shingle join, "minhash" (the scale plan, optionally
+    with ``fast_hash``) via verified band-collision candidates —
     identical survivor sets at oracle scale (tests/test_dedup.py asserts
-    edge-set equality). Same recall caveat as ``dedup_clusters`` (r9
-    advice): above the density threshold the default's survivor set is
-    band-recall — a borderline >= 0.8-jaccard near-dup can slip through
-    if it misses every band; pass ``near_dup_source="exact"`` when
-    missing one is a correctness bug."""
-    if near_dup_source == "auto":
-        near_dup_source = choose_edge_source(spark, sf_dir)
+    edge-set equality), band recall in general: a borderline >= 0.8
+    near-dup can slip through if it misses every band."""
     docs = load_table(spark, sf_dir, "documents")
     quality = (
         text_quality(spark, sf_dir)

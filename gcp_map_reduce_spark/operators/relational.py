@@ -594,8 +594,8 @@ def choose_window_plan(
 ) -> str:
     """``"two_pass"`` when the hottest user is both >= ``share_threshold``
     of events and >= ``min_rows`` estimated rows (a single-task window
-    straggler); ``"single"`` otherwise — the same sampled, session-cached
-    plan-choice pattern as ``choose_edge_source``."""
+    straggler); ``"single"`` otherwise. Both inputs are sampled or
+    counted once per corpus and cached through ``plans.probes``."""
     share = estimate_max_user_share(spark, sf_dir)
     n = _events_row_count(spark, sf_dir)
     choice = (

@@ -1,22 +1,18 @@
-"""Session-scoped cache for sampled plan-choice probes.
+"""Session-scoped cache for plan-time probes.
 
-The cost-based choosers (``choose_edge_source``,
-``prefix_filter="auto"``) each run one small sampled Spark job over the
-corpus. The probe is cheap next to the plan choice it informs (~1.3 s
-vs ~15 s saved at stress scale) but NOT free at bench scale
-(+0.3-0.5 s — the reason the r8 auto-default was reverted). Within a session the corpus under an ``sf_dir`` is immutable,
-and several operators ask the SAME question about it (dedup_clusters and
-curated_corpus share the candidate-pair-density probe; a bench warm-up
-pass asks once more than the timed runs), so the estimate is cached per
-(probe, sf_dir, params): the first caller pays the sampled job, every
-later caller — including every timed bench run after the warm-up — gets
-the number back for a dict lookup.
+A few plan decisions need one number about an input table: the
+embeddings row count behind the IVF cell count
+(``similarity.corpus_vec_count``), and the events row count and hottest
+user share behind ``relational.choose_window_plan``. Each is one small
+Spark job, and several plan builds over the same corpus ask the same
+question, so the value is cached per (probe, corpus, params): the first
+caller pays the job, every later caller gets a dict lookup.
 
-Deliberately NOT an LRU with eviction: the value space is a handful of
-floats per corpus, and silent eviction would turn "probe fires once" —
-the property pytest pins — into a load-dependent maybe. Keys embed a
-:func:`corpus_key` fingerprint (parquet mtime/size), so regenerating a
-corpus in place self-invalidates (r10); ``clear()`` remains for tests.
+Keys embed a :func:`corpus_key` fingerprint (parquet mtime/size), so
+regenerating a corpus in place self-invalidates. Every fresh corpus adds
+entries, so the cache is bounded: it is cleared whenever it holds
+``PROBE_CACHE_MAX`` entries (a reset costs re-probes, never a different
+answer). ``clear()`` remains for tests.
 """
 
 from __future__ import annotations
@@ -33,7 +29,7 @@ def corpus_key(sf_dir: str, table: str) -> tuple:
 
     The r9 cache keyed on the ``sf_dir`` PATH STRING only, so a corpus
     regenerated in place within one session (``tools/gen_stress.py``
-    re-run, a test fixture rewrite) silently served the OLD density
+    re-run, a test fixture rewrite) silently served the OLD
     estimate and could pick the wrong plan (r9 advice). Folding the
     parquet file's (mtime_ns, size) into the key makes regeneration
     self-invalidating — no ``clear()`` call to forget. Single-file and
@@ -54,9 +50,14 @@ def corpus_key(sf_dir: str, table: str) -> tuple:
     except OSError:
         return (sf_dir, table, "missing")
 
+
+# Cached probe values before the cache starts over: a few entries per
+# corpus, so this is hundreds of corpora in one driver.
+PROBE_CACHE_MAX = 1024
+
 _CACHE: dict[tuple, float] = {}
 # monotone counters, exposed for the pytest gate ("the cached probe
-# fires once") and for audit logging
+# fires once") and for graftbench's plans.probe_* metrics
 STATS = {"hits": 0, "misses": 0}
 
 
@@ -73,6 +74,8 @@ def cached_probe(key: tuple, compute: Callable[[], float]) -> float:
         return _CACHE[key]
     STATS["misses"] += 1
     value = compute()
+    if len(_CACHE) >= PROBE_CACHE_MAX:
+        _CACHE.clear()
     _CACHE[key] = value
     log.info("probe %s -> %.3f (cached for session)", key, value)
     return value

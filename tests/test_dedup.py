@@ -47,18 +47,17 @@ def test_simhash_engines_bit_identical(spark):
 def test_ngram_jaccard_prefix_filter_is_exact(spark):
     """The AllPairs prefix-filtered plan must return the IDENTICAL rows
     (pairs, isect, jaccard doubles) as the full inverted-index self-join
-    — prefix filtering is a candidate-pruning bound, never a semantics
-    change. Which form runs is the measured dup-density crossover in the
-    docstring."""
+    (``tests/ngram_reference.py``) — prefix filtering is a
+    candidate-pruning bound, never a semantics change."""
     from gcp_map_reduce_spark.operators.dedup import dedup_ngram_jaccard
+    from tests.ngram_reference import full_ngram_jaccard
 
-    full = dedup_ngram_jaccard(spark, SF_ORACLE, prefix_filter=False)
-    pref = dedup_ngram_jaccard(spark, SF_ORACLE, prefix_filter=True)
-    # schema must not vary with the prefix_filter='auto' density probe:
-    # direct callers writing parquet / unioning results would hit drift
-    # if the prefix branch emitted isect as int (r8 advice). Nullability
-    # legitimately differs (count(*) is non-null, size(intersect) is
-    # nullable) and affects neither parquet nor unions — pin name+type.
+    full = full_ngram_jaccard(spark, SF_ORACLE)
+    pref = dedup_ngram_jaccard(spark, SF_ORACLE)
+    # direct callers write parquet / union results, so isect must stay
+    # LongType like the reference's count. Nullability legitimately
+    # differs (count(*) is non-null, size(intersect) is nullable) and
+    # affects neither parquet nor unions — pin name+type.
     shape = lambda df: [(f.name, f.dataType) for f in df.schema]  # noqa: E731
     assert shape(full) == shape(pref), (full.schema, pref.schema)
     assert full.count() > 0
@@ -217,53 +216,6 @@ def test_dedup_clusters_invariants(spark):
     pairs = dedup_ngram_jaccard(spark, "/root/testdata/sf0.01").collect()
     in_pairs = {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs}
     assert {r["doc_id"] for r in rows} == in_pairs
-
-
-def test_choose_edge_source_probe_and_decision(spark, tmp_path):
-    """The adaptive edge-source chooser must (a) estimate the exact
-    plan's candidate-pair density within a reasonable band of the true
-    value, and (b) flip exact -> minhash between natural-density and
-    dup-clique-density corpora."""
-    from pyspark.sql import functions as F
-
-    from gcp_map_reduce_spark.operators.dedup import (
-        choose_edge_source,
-        estimate_candidate_pairs_per_doc,
-        gram_hash_arrays_for,
-    )
-    from tests.conftest import SF_ORACLE
-
-    # (a) full-sample probe (p = 1) equals the true collision mass
-    docs = spark.read.parquet(SF_ORACLE + "/documents.parquet").select(
-        "doc_id", "text"
-    )
-    true_pairs = (
-        gram_hash_arrays_for(docs, n=3, fast_hash=True)
-        .select(F.explode("gh_arr").alias("gh"))
-        .groupBy("gh")
-        .agg(F.count("*").alias("df"))
-        .agg(F.sum(F.expr("df * (df - 1) / 2")).alias("m"))
-        .collect()[0]["m"]
-    )
-    n = docs.count()
-    est = estimate_candidate_pairs_per_doc(spark, SF_ORACLE, sample_target=n)
-    assert abs(est - true_pairs / n) < 1e-6, (est, true_pairs / n)
-
-    # (b) natural density -> exact
-    assert choose_edge_source(spark, SF_ORACLE) == "exact"
-
-    # dense dup cliques (50 base texts x 60 byte-identical copies) -> the
-    # exact join's per-doc candidate mass blows past the threshold
-    base = [
-        " ".join(f"tok{b}w{i}" for i in range(100)) for b in range(50)
-    ]
-    dense = spark.createDataFrame(
-        [(b * 60 + c, base[b]) for b in range(50) for c in range(60)],
-        "doc_id bigint, text string",
-    )
-    dense_dir = str(tmp_path / "dense")
-    dense.write.parquet(dense_dir + "/documents.parquet")
-    assert choose_edge_source(spark, dense_dir) == "minhash"
 
 
 def test_fused_text_kernel_bit_equal_to_expr_front_half(spark):

@@ -9,7 +9,7 @@ pair. Hypothesis builds adversarial corpora (tiny shared vocab => hot
 shingles, heavy duplication, size mismatches, docs at every boundary
 length incl. |A| % 5 == 0 and |A|+|B| % 9 == 0 where the integer-ceil
 arithmetic bites) and asserts the prefix plan's output set equals the
-full inverted-index self-join's, exactly.
+full inverted-index self-join's (``tests/ngram_reference.py``), exactly.
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ _CORPUS = st.lists(_DOC, min_size=2, max_size=14)
 @given(corpus=_CORPUS)
 def test_prefix_plan_equals_full_on_random_corpora(spark, tmp_path_factory, corpus):
     from gcp_map_reduce_spark.operators.dedup import dedup_ngram_jaccard
+    from tests.ngram_reference import full_ngram_jaccard
 
     # duplicate the first doc so every corpus has at least one
     # jaccard==1.0 pair (the filters must never drop those)
@@ -50,14 +51,8 @@ def test_prefix_plan_equals_full_on_random_corpora(spark, tmp_path_factory, corp
         }
     ).to_parquet(os.path.join(str(d), "documents.parquet"), index=False)
 
-    full = {
-        tuple(r)
-        for r in dedup_ngram_jaccard(spark, str(d), prefix_filter=False).collect()
-    }
-    pref = {
-        tuple(r)
-        for r in dedup_ngram_jaccard(spark, str(d), prefix_filter=True).collect()
-    }
+    full = {tuple(r) for r in full_ngram_jaccard(spark, str(d)).collect()}
+    pref = {tuple(r) for r in dedup_ngram_jaccard(spark, str(d)).collect()}
     assert pref == full, (
         f"prefix plan diverged: missing={sorted(full - pref)[:5]} "
         f"extra={sorted(pref - full)[:5]}"

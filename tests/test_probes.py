@@ -1,14 +1,13 @@
-"""Session-scoped probe cache (r9): the density probes behind the
-cost-based plan choosers must fire ONCE per (probe, sf_dir, params) and
-hand every later caller a dict lookup — the property that makes
-``auto`` cheap enough to be the default (the r8 auto-default was
-reverted for the +0.3-0.5 s uncached probe cost per bench query)."""
+"""Session-scoped probe cache: a plan-time probe (a row count or a
+sampled share) must fire ONCE per (probe, corpus, params) and hand every
+later caller a dict lookup, re-probe when the corpus is regenerated in
+place, and never hold more than ``PROBE_CACHE_MAX`` values."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 @pytest.fixture(autouse=True)
@@ -41,49 +40,60 @@ def test_cached_probe_unit_semantics():
 
 
 def test_candidate_pair_probe_fires_once(spark):
-    from gcp_map_reduce_spark.operators.dedup import (
-        estimate_candidate_pairs_per_doc,
-    )
+    from gcp_map_reduce_spark.operators.similarity import corpus_vec_count
     from gcp_map_reduce_spark.plans.probes import STATS
 
     m0, h0 = STATS["misses"], STATS["hits"]
-    a = estimate_candidate_pairs_per_doc(spark, SF_ORACLE)
-    b = estimate_candidate_pairs_per_doc(spark, SF_ORACLE)
+    a = corpus_vec_count(spark, SF_ORACLE)
+    b = corpus_vec_count(spark, SF_ORACLE)
     assert a == b and a > 0
     assert STATS["misses"] - m0 == 1 and STATS["hits"] - h0 == 1
-    # different sampling params are a different estimate -> new key
-    estimate_candidate_pairs_per_doc(spark, SF_ORACLE, seed=7)
+    # a different corpus is a different count -> new key
+    corpus_vec_count(spark, SF_SMALL)
     assert STATS["misses"] - m0 == 2
 
 
 def test_corpus_regeneration_invalidates_probe_cache(spark, tmp_path):
-    """r10 (r9 advice): the cache key embeds the parquet file's
-    mtime/size, so regenerating a corpus IN PLACE under the same path
-    re-probes instead of silently serving the stale density estimate."""
+    """The cache key embeds the parquet file's mtime/size, so
+    regenerating a corpus IN PLACE under the same path re-probes instead
+    of silently serving the stale value."""
     import shutil
     import os
 
-    from gcp_map_reduce_spark.operators.dedup import (
-        estimate_candidate_pairs_per_doc,
-    )
+    from gcp_map_reduce_spark.operators.similarity import corpus_vec_count
     from gcp_map_reduce_spark.plans.probes import STATS, corpus_key
 
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     shutil.copy(
-        os.path.join(SF_ORACLE, "documents.parquet"),
-        os.path.join(corpus, "documents.parquet"),
+        os.path.join(SF_ORACLE, "embeddings.parquet"),
+        os.path.join(corpus, "embeddings.parquet"),
     )
     m0 = STATS["misses"]
-    estimate_candidate_pairs_per_doc(spark, corpus)
-    estimate_candidate_pairs_per_doc(spark, corpus)
+    corpus_vec_count(spark, corpus)
+    corpus_vec_count(spark, corpus)
     assert STATS["misses"] - m0 == 1
     # "regenerate" the corpus in place: same path, new bytes
-    k_before = corpus_key(corpus, "documents")
-    os.utime(os.path.join(corpus, "documents.parquet"))
-    assert corpus_key(corpus, "documents") != k_before
-    estimate_candidate_pairs_per_doc(spark, corpus)
+    k_before = corpus_key(corpus, "embeddings")
+    os.utime(os.path.join(corpus, "embeddings.parquet"))
+    assert corpus_key(corpus, "embeddings") != k_before
+    corpus_vec_count(spark, corpus)
     assert STATS["misses"] - m0 == 2
+
+
+def test_probe_cache_is_bounded(monkeypatch):
+    """Every fresh corpus adds entries; the dict starts over at
+    PROBE_CACHE_MAX instead of growing with the corpora seen."""
+    from gcp_map_reduce_spark.plans import probes
+
+    monkeypatch.setattr(probes, "PROBE_CACHE_MAX", 4)
+    for i in range(11):
+        assert probes.cached_probe(("k", i), lambda: float(i)) == float(i)
+        assert len(probes._CACHE) <= 4
+    # the newest value survives a reset and is served from the cache
+    h0 = probes.STATS["hits"]
+    assert probes.cached_probe(("k", 10), lambda: -1.0) == 10.0
+    assert probes.STATS["hits"] - h0 == 1
 
 
 def test_corpus_key_directory_layout(tmp_path):
@@ -105,15 +115,24 @@ def test_corpus_key_directory_layout(tmp_path):
     assert corpus_key(str(tmp_path), "missing")[-1] == "missing"
 
 
-def test_auto_defaults_share_one_probe_job(spark):
-    """dedup_clusters and curated_corpus both default to
-    edge_source='auto' (r9); building BOTH plans must run the sampled
-    density job at most once."""
+def test_near_dup_defaults_run_no_probe(spark, tmp_path):
+    """The default near-dup plans of dedup_clusters and curated_corpus
+    are one exact join: building them on a corpus never seen before
+    runs no plan-time probe."""
+    import os
+    import shutil
+
     from gcp_map_reduce_spark.operators.dedup import dedup_clusters
     from gcp_map_reduce_spark.operators.pipeline import curated_corpus
     from gcp_map_reduce_spark.plans.probes import STATS
 
+    corpus = str(tmp_path / "fresh")
+    os.makedirs(corpus)
+    shutil.copy(
+        os.path.join(SF_SMALL, "documents.parquet"),
+        os.path.join(corpus, "documents.parquet"),
+    )
     m0 = STATS["misses"]
-    dedup_clusters(spark, SF_ORACLE)  # plan construction triggers probe
-    curated_corpus(spark, SF_ORACLE)
-    assert STATS["misses"] - m0 == 1
+    dedup_clusters(spark, corpus)
+    curated_corpus(spark, corpus)
+    assert STATS["misses"] == m0

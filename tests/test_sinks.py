@@ -364,10 +364,10 @@ def test_bucketed_merge_freezes_nondeterministic_updates(spark, tmp_path):
 
 def test_stress_gate_exemption_list_is_pinned():
     """Empty since r9: the old dedup_clusters/curated_corpus exemption
-    covered their exact-edge quadratic straggler, and edge_source="auto"
-    now picks minhash edges at the stress density (max tasks ~1-3 s, no
-    by-design straggler left). Growing the set requires a visible diff
-    here plus a rationale in stress_ci.py."""
+    covered their exact-edge quadratic straggler, and the stress gate
+    times both with explicit minhash edges (tools/stress_bench.py; max
+    tasks ~1-3 s, no by-design straggler left). Growing the set requires
+    a visible diff here plus a rationale in stress_ci.py."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(

@@ -77,10 +77,10 @@ def run_stress_bench(runs: int, queries: list[str] | None = None) -> dict:
 
 # Empty since r9: the exemption existed for dedup_clusters /
 # curated_corpus, whose exact-edge plan carried a DELIBERATELY quadratic
-# straggler (8-20 s swing) at the stress dup density. With
-# edge_source="auto" the default (the density probe picks minhash edges
-# at stress — banked max tasks ~0.9 s / ~2.6 s), that straggler is gone
-# from the gated rows, and exempting them would mask real regressions.
+# straggler (8-20 s swing) at the stress dup density. The stress gate
+# times both with explicit minhash edges (tools/stress_bench.py — banked
+# max tasks ~0.9 s / ~2.6 s), so that straggler is not in the gated
+# rows, and exempting them would mask real regressions.
 # If a future plan reintroduces a by-design straggler, add its row HERE
 # with the rationale (tests/test_sinks.py pins this set).
 _MAX_TASK_EXEMPT: set[str] = set()

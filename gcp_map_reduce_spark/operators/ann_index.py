@@ -424,18 +424,13 @@ def _lock_pid(path: str) -> int | None:
 # rmtree'd the least-recently-used live index every resolve — rebuild
 # thrash (r14 ADVICE). Without any sweep a long-lived maintenance host
 # leaks one full index per corpus change forever (r13 verdict).
-# Both knobs are env-configurable for deployments with many corpora.
-ANN_INDEX_KEEP_GENERATIONS = int(
-    os.environ.get("ANN_INDEX_KEEP_GENERATIONS", "3")
-)
+ANN_INDEX_KEEP_GENERATIONS = 3
 # Grace window: a generation used (resolved OR appended) within the
 # TTL is skipped even when provably stale — lock-free readers hold a
 # resolved path for one query burst, and yanking files mid-scan is the
 # one eviction hazard keep-last-K alone cannot bound once candidacy is
 # staleness-based.
-ANN_INDEX_SWEEP_TTL_S = float(
-    os.environ.get("ANN_INDEX_SWEEP_TTL_S", "900")
-)
+ANN_INDEX_SWEEP_TTL_S = 900.0
 
 
 def _touch_last_used(index_dir: str) -> None:
@@ -1869,12 +1864,10 @@ def ann_index_delete(
 # ancient lineage's mark only weakens replay protection for a stream
 # that has not committed in ages — acceptable; an unbounded dict would
 # grow the manifest with every retired checkpoint forever.
-# env-configurable (r16 ADVICE fix): >8 lineages interleaving deletes on
-# one index would silently evict an ACTIVE stream's watermark each
-# commit, voiding its replay protection with no signal — raise the cap
-# for such deployments; the eviction below also warns when the evicted
-# mark was recently advanced.
-STREAM_MARKS_CAP = int(os.environ.get("ANN_INDEX_STREAM_MARKS_CAP", "8"))
+# More than 8 lineages interleaving deletes on one index would evict an
+# ACTIVE stream's watermark each commit, voiding its replay protection;
+# the eviction below warns when the evicted mark was recently advanced.
+STREAM_MARKS_CAP = 8
 
 
 def _mark_entry(rec) -> dict:
@@ -1916,7 +1909,7 @@ def _mark_streams(meta: dict, stream_mark: tuple[str, int] | None) -> None:
             warnings.warn(
                 f"stream watermark for lineage {victim!r} evicted while "
                 f"recently active ({seq - dropped['at']} commits ago) — "
-                "more than ANN_INDEX_STREAM_MARKS_CAP="
+                "more than ann_index.STREAM_MARKS_CAP="
                 f"{STREAM_MARKS_CAP} takedown lineages are interleaving "
                 "on this index; raise the cap or its replay protection "
                 "is silently void",
@@ -2073,9 +2066,7 @@ def _delete_locked(
 # predicate matching more than this is not a takedown — it is most of
 # a reindex, and a rebuild over the filtered corpus is both cheaper
 # and leaves no tombstone debt.
-DELETE_WHERE_MAX_IDS = int(
-    os.environ.get("ANN_INDEX_DELETE_WHERE_MAX_IDS", "1000000")
-)
+DELETE_WHERE_MAX_IDS = 1_000_000
 
 
 def ann_index_delete_where(

@@ -30,8 +30,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -39,8 +37,6 @@ from pyspark.sql.window import Window
 from gcp_map_reduce_spark.functions.numeric import dec, dsum
 from gcp_map_reduce_spark.plans.registry import query
 from gcp_map_reduce_spark.sources.tables import load_table
-
-log = logging.getLogger(__name__)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -521,95 +517,6 @@ def join_outer_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- window functions -----------------------------------------------------
 
-# choose_window_plan: a window partition is ONE task, so the single-pass
-# suite's worst task scales with the hottest key's row count. Route to
-# the two-pass decomposition when the hottest key is BOTH a meaningful
-# share of the corpus (share threshold — reliably visible in a sample at
-# any corpus size, unlike an absolute row estimate, whose 1/p sampling
-# noise floor grows with N) and large enough in absolute rows for the
-# straggler to dominate the two-pass form's extra shuffles (min-rows
-# floor). The floor is MEASURED, not assumed (r12 A/B, local[32]):
-#   hot rows 100k (stress sf1, 10% key):  single 1.7 s, two-pass 4.6 s
-#   hot rows 302k (stress sf3, 10% key):  single 5.4 s, two-pass 13.1 s
-#   hot rows 1.8M (60% key, 3M rows):     single 122 s, two-pass 11.6 s
-# — single's straggler grows superlinearly (Spark's sliding RANGE frame
-# rebuilds its aggregate as the frame advances), so the crossover sits
-# between 300k and 1.8M hot rows; 500k routes each measured corpus to
-# its faster plan with margin. sf0.1 events: max share 0.001 → single;
-# the 10%-hot stress sets stay single (correctly — the verdict's
-# expectation that they'd route two-pass predates the A/B).
-WINDOW_HOT_SHARE_THRESHOLD = 0.05
-WINDOW_HOT_MIN_ROWS = 500_000
-
-
-def estimate_max_user_share(
-    spark: SparkSession, sf_dir: str, sample_target: int = 20_000,
-    seed: int = 42,
-) -> float:
-    """Sampled share of the hottest events.user_id (max key count /
-    sample size). Session-cached per corpus fingerprint like every plan
-    probe; shares >= the routing threshold are estimated reliably at any
-    corpus size (a 5% key puts ~1,000 rows in a 20k sample)."""
-    from gcp_map_reduce_spark.plans.probes import cached_probe, corpus_key
-
-    def compute() -> float:
-        ev = _t(spark, sf_dir, "events").select("user_id")
-        # the row count is its own session-cached probe — without this,
-        # choose_window_plan's first call paid two full scans (review)
-        n = _events_row_count(spark, sf_dir)
-        if n == 0:
-            return 0.0
-        p = min(1.0, sample_target / n)
-        sample = ev.sample(fraction=p, seed=seed) if p < 1.0 else ev
-        row = (
-            sample.groupBy("user_id")
-            .count()
-            .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
-            .collect()[0]
-        )
-        return (row["mx"] or 0) / (row["tot"] or 1)
-
-    return cached_probe(
-        ("window_hot_share", corpus_key(sf_dir, "events"), sample_target, seed),
-        compute,
-    )
-
-
-def _events_row_count(spark: SparkSession, sf_dir: str) -> int:
-    from gcp_map_reduce_spark.plans.probes import cached_probe, corpus_key
-
-    return int(
-        cached_probe(
-            ("n_rows", corpus_key(sf_dir, "events")),
-            lambda: load_table(spark, sf_dir, "events").count(),
-        )
-    )
-
-
-def choose_window_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    share_threshold: float = WINDOW_HOT_SHARE_THRESHOLD,
-    min_rows: int = WINDOW_HOT_MIN_ROWS,
-) -> str:
-    """``"two_pass"`` when the hottest user is both >= ``share_threshold``
-    of events and >= ``min_rows`` estimated rows (a single-task window
-    straggler); ``"single"`` otherwise. Both inputs are sampled or
-    counted once per corpus and cached through ``plans.probes``."""
-    share = estimate_max_user_share(spark, sf_dir)
-    n = _events_row_count(spark, sf_dir)
-    choice = (
-        "two_pass"
-        if share >= share_threshold and share * n >= min_rows
-        else "single"
-    )
-    log.info(
-        "choose_window_plan: max-user share %.4f of %d rows -> %s",
-        share, n, choice,
-    )
-    return choice
-
-
 @query(
     "window_rank_orders",
     oracle="""
@@ -655,9 +562,7 @@ WINDOW
              RANGE BETWEEN 1800 PRECEDING AND CURRENT ROW)
 """,
 )
-def window_suite(
-    spark: SparkSession, sf_dir: str, plan: str = "auto"
-) -> DataFrame:
+def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The analytic-window family over the per-user event stream, one
     query / one partitioning: lag delta, ROWS-frame running sum,
     value-based RANGE frame (trailing 30 min on epoch seconds), and the
@@ -666,292 +571,44 @@ def window_suite(
     window; decimal-exact sums and the (ts, event_id) total order make
     each column bit-deterministic.
 
-    Hot-key posture (r11/r12): a window partition is ONE task, so a
-    pathologically hot user makes the single-pass plan's worst task
-    scale with the hot key's share (measured e=1.29 sf1→sf3 on the
-    10%-hot-user stress set). None of the legs is irreducibly
-    holistic — :func:`window_suite_two_pass` is the bit-identical
-    two-pass decomposition (chunked prefix sums, per-second range-frame
-    reduction, rank/ntile from exact integer offsets) whose worst task
-    is bounded by chunk size instead, at the cost of ~3 shuffles + two
-    joins. ``plan="auto"`` (the registered default since r12) routes by
-    the cached :func:`choose_window_plan` skew probe: the hottest
-    user's sampled share must clear both a share threshold and a
-    MEASURED absolute-rows floor (see the A/B table at
-    ``WINDOW_HOT_MIN_ROWS``) to justify the extra shuffles — this
-    corpus stays single (share ~0.001 at sf0.1), and so do the
-    10%-hot stress sets (302k hot rows: single 5.4 s vs two-pass
-    13.1 s); a 60%-hot corpus routes to two-pass (11.6 s vs 122 s).
-    Output is bit-identical either way (pytest-gated), so the SQL
-    oracle is plan-independent."""
-    if plan not in ("auto", "single", "two_pass"):
-        raise ValueError(f"plan must be auto|single|two_pass, got {plan!r}")
-    if plan == "auto":
-        plan = choose_window_plan(spark, sf_dir)
-    if plan == "two_pass":
-        return window_suite_two_pass(spark, sf_dir)
+    Every aggregate frame grows: the trailing 30 minutes are the
+    difference of two frames that start at UNBOUNDED PRECEDING (up to
+    the current second, and up to 1,801 s before it), so Spark extends
+    a running aggregate row by row instead of re-summing a sliding
+    frame, and the window pass is linear in a user's row count. Decimal
+    subtraction is exact, so the doubles equal the direct frame sum bit
+    for bit. A window partition is still ONE task: a hot user costs one
+    task that scales linearly with its rows and spills through the
+    window buffer."""
     ev = _t(spark, sf_dir, "events")
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrows = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wrange = (
-        Window.partitionBy("user_id")
-        # NTZ won't cast straight to long; session is pinned UTC, matching
-        # DuckDB's epoch()
-        .orderBy(F.col("ts").cast("timestamp").cast("long"))
-        .rangeBetween(-1800, Window.currentRow)
-    )
+    # NTZ won't cast straight to long; session is pinned UTC, matching
+    # DuckDB's epoch()
+    sec = F.col("ts").cast("timestamp").cast("long")
+    wsec = Window.partitionBy("user_id").orderBy(sec)
+    upto = wsec.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    before = wsec.rangeBetween(Window.unboundedPreceding, -1801)
     val = dec("value", precision=12)
+
+    def last_30min(agg):
+        # a NULL key's RANGE frame is its NULL peers, which sort first,
+        # so nothing precedes it
+        gone = F.coalesce(F.when(sec.isNotNull(), agg.over(before)), F.lit(0))
+        return agg.over(upto) - gone
+
     return ev.select(
         "user_id",
         "event_id",
         "value",
         (F.col("value") - F.lag("value").over(wo)).alias("delta"),
         F.sum(val).over(wrows).cast("double").alias("running_value"),
-        F.sum(val).over(wrange).cast("double").alias("value_30min"),
+        F.when(last_30min(F.count(val)) > 0, last_30min(F.sum(val)))
+        .cast("double")
+        .alias("value_30min"),
         F.ntile(4).over(wo).alias("value_quartile"),
         F.percent_rank().over(wo).alias("pct_rank"),
         F.cume_dist().over(wo).alias("cume"),
-    )
-
-
-def window_suite_two_pass(
-    spark: SparkSession, sf_dir: str, chunk_sec: int = 3600
-) -> DataFrame:
-    """Hot-key-safe two-pass decomposition of :func:`window_suite` —
-    identical output (pytest-gated equality, including bit-equal
-    doubles), different worst-task bound.
-
-    Why: a window partition is one task — Spark cannot split it, AQE
-    cannot help, and a Zipfian hot user turns the registered plan's
-    per-user windows into a straggler that scales with the hot key's
-    share (window_suite measured e=1.29 sf1→sf3 with max task 0.72→4.2 s
-    on the 10%-hot-user stress set). Every column in the suite is in
-    fact ALGEBRAIC given the strict (ts, event_id) total order, so each
-    decomposes into bounded-size pieces:
-
-    - ``running_value`` (ROWS unbounded-preceding sum): classic parallel
-      prefix — per-(user, time-chunk) partial sums (decimal addition is
-      exact integer arithmetic, so regrouping is bit-safe), a tiny
-      window over the per-chunk rows for the chunk offsets, then a
-      within-chunk prefix. Max task = rows per (user, chunk), not per
-      user.
-    - ``delta`` (lag): within-chunk lag; each chunk's first row takes
-      the PREVIOUS non-empty chunk's last value from the per-chunk
-      relation (lag over chunk rows skips empty chunks by construction).
-    - ``value_30min`` (RANGE 1800 preceding on floor-seconds): RANGE
-      frames include all ties of the current ORDER value, so the sum is
-      a pure function of (user, second). r12: computed as a prefix
-      DIFFERENCE ``P(s) - P(s-1801)`` over per-second partials, with P
-      itself chunk-decomposed (probe rows pinned at each frame floor
-      ride the same chunked prefix) — the r11 per-user RANGE window
-      over per-second rows was still one task per user AND paid
-      Spark's sliding-frame aggregate rebuild (measured ~2 min on a
-      1.8M-row hot user; this form: 11.6 s for the whole suite).
-    - ``ntile / percent_rank / cume_dist``: pure functions of
-      (rank, n) under a strict total order — rank = chunk offset count
-      + within-chunk row_number, n = per-user total; ntile's
-      uneven-bucket rule reproduced in exact integer arithmetic,
-      percent_rank = (rank-1)/(n-1), cume_dist = rank/n (ties are
-      impossible: event_id is unique).
-
-    NOTHING in the suite is irreducibly holistic; what the registered
-    plan buys instead is ONE shuffle and one window pass (this form
-    pays ~3 shuffles + two joins), so it wins whenever partitions fit a
-    task — the right default at uniform key cardinality. Use this form
-    when one key's row count makes the single-task window the
-    bottleneck. ``chunk_sec`` may be any positive value (the range leg
-    chunks over SECONDS, so its window tasks hold at most ~2*chunk_sec
-    rows per (user, chunk) regardless of row density): smaller chunks
-    bound the prefix-pass worst tasks tighter at the cost of more
-    per-chunk bookkeeping rows.
-
-    Residual bound: a hot key concentrated in ONE time chunk still
-    yields a chunk-sized task — shrink ``chunk_sec`` to match; the
-    per-second reduction of the range leg is likewise bounded by a hot
-    second's row count only in the per-second AGGREGATE (a groupBy,
-    which AQE/salting can split), never in a window task.
-    """
-    if chunk_sec < 1:
-        raise ValueError(f"chunk_sec must be positive, got {chunk_sec}")
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
-    um = F.unix_micros(F.col("ts").cast("timestamp"))
-    ep = F.col("ts").cast("timestamp").cast("long")  # floor seconds
-    val = dec("value", precision=12)
-    ev = (
-        ev.withColumn("um", um)
-        .withColumn("ep", ep)
-        .withColumn("chunk", F.floor(F.col("ep") / chunk_sec).cast("long"))
-        # struct-wrapped key: struct equality is null-safe, so a NULL
-        # user_id — its own partition in the registered window plan —
-        # survives every equi-join below instead of silently vanishing
-        .withColumn("_uk", F.struct(F.col("user_id")))
-    )
-
-    # ---- pass 1: per-(user, chunk) partials (bounded groupBy tasks) --
-    parts = ev.groupBy("_uk", "chunk").agg(
-        F.count("*").alias("cnt"),
-        F.sum(val).alias("sumv"),
-        # non-null value count: the running sum must be NULL exactly
-        # when zero non-null values precede (SQL SUM semantics), which
-        # an unconditional `offset + within` cannot reproduce
-        F.count(val).alias("cntv"),
-        # last row's value in (um, event_id) order: struct max is
-        # lexicographic and (um, event_id) is strictly increasing
-        F.max(F.struct("um", "event_id", "value")).alias("last_row"),
-    )
-    wchunk = Window.partitionBy("_uk").orderBy("chunk")
-    wprev = wchunk.rowsBetween(Window.unboundedPreceding, -1)
-    offsets = parts.select(
-        "_uk",
-        "chunk",
-        F.coalesce(
-            F.sum("sumv").over(wprev), F.lit(0).cast("decimal(22,2)")
-        ).alias("sum_off"),
-        F.coalesce(F.sum("cnt").over(wprev), F.lit(0)).alias("cnt_off"),
-        F.coalesce(F.sum("cntv").over(wprev), F.lit(0)).alias("cntv_off"),
-        F.lag(F.col("last_row")["value"]).over(wchunk).alias("prev_chunk_val"),
-    )
-    totals = parts.groupBy("_uk").agg(
-        F.sum("cnt").alias("n_total"), F.sum("sumv").alias("sum_total")
-    )
-
-    # ---- range leg: chunked prefix-difference over per-second partials.
-    # win_sum(s) = P(s) - P(s - 1801), where P is the per-user prefix sum
-    # over per-second sums: RANGE frames are a pure function of (user,
-    # second), and a prefix DIFFERENCE of exact decimals equals the
-    # direct frame sum bit-for-bit. The r11 form ran one RANGE window
-    # per user over the per-second rows — still a single task per user
-    # (bounded by DISTINCT SECONDS, which for a hot user is ~its row
-    # count), and Spark's sliding-frame executor rebuilds the aggregate
-    # as the frame advances, so a 1.8M-row hot user measured ~2 min in
-    # that one task (r12). Here P is computed with the same
-    # chunk-offset machinery as the running-sum leg: probe rows pinned
-    # at each second's frame floor (pos = ep - 1801, sorted AFTER a
-    # real row at the same pos — RANGE 1800 PRECEDING includes the
-    # boundary second) ride the same chunked prefix, so every window
-    # task is bounded by seconds-per-chunk and NO task scales with a
-    # key's row count. Null semantics ride the parallel count prefix:
-    # a frame containing zero non-null values must yield NULL, which a
-    # 0.00-valued prefix difference alone cannot express.
-    secs = ev.groupBy("_uk", "ep").agg(
-        F.sum(val).alias("w"), F.count(val).alias("cw")
-    )
-    union = secs.select(
-        "_uk",
-        F.col("ep").alias("pos"),
-        F.lit(0).alias("is_probe"),
-        F.col("ep").alias("target_ep"),
-        "w",
-        "cw",
-    ).unionByName(
-        secs.select(
-            "_uk",
-            (F.col("ep") - 1801).alias("pos"),
-            F.lit(1).alias("is_probe"),
-            F.col("ep").alias("target_ep"),
-            F.lit(None).cast("decimal(22,2)").alias("w"),
-            F.lit(0).cast("long").alias("cw"),
-        )
-    ).withColumn("schunk", F.floor(F.col("pos") / chunk_sec).cast("long"))
-    sparts = union.groupBy("_uk", "schunk").agg(
-        F.sum("w").alias("sw"), F.sum("cw").alias("scw")
-    )
-    wsch = Window.partitionBy("_uk").orderBy("schunk")
-    wsch_prev = wsch.rowsBetween(Window.unboundedPreceding, -1)
-    soffs = sparts.select(
-        "_uk",
-        "schunk",
-        F.coalesce(
-            F.sum("sw").over(wsch_prev), F.lit(0).cast("decimal(22,2)")
-        ).alias("sw_off"),
-        F.coalesce(F.sum("scw").over(wsch_prev), F.lit(0)).alias("scw_off"),
-    )
-    win_in = Window.partitionBy("_uk", "schunk").orderBy("pos", "is_probe")
-    wrun_in = win_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prefixed = union.join(soffs, ["_uk", "schunk"]).select(
-        "_uk",
-        "target_ep",
-        "is_probe",
-        (
-            F.col("sw_off")
-            + F.coalesce(
-                F.sum("w").over(wrun_in), F.lit(0).cast("decimal(22,2)")
-            )
-        ).alias("pfx"),
-        (F.col("scw_off") + F.sum("cw").over(wrun_in)).alias("cpfx"),
-    )
-    at_sec = prefixed.filter(F.col("is_probe") == 0).select(
-        "_uk",
-        F.col("target_ep").alias("ep"),
-        F.col("pfx").alias("pfx_hi"),
-        F.col("cpfx").alias("cpfx_hi"),
-    )
-    at_floor = prefixed.filter(F.col("is_probe") == 1).select(
-        "_uk",
-        F.col("target_ep").alias("ep"),
-        F.col("pfx").alias("pfx_lo"),
-        F.col("cpfx").alias("cpfx_lo"),
-    )
-    sec_win = at_sec.join(at_floor, ["_uk", "ep"]).select(
-        "_uk",
-        "ep",
-        F.when(
-            F.col("cpfx_hi") - F.col("cpfx_lo") > 0,
-            F.col("pfx_hi") - F.col("pfx_lo"),
-        ).alias("win_sum"),
-    )
-
-    # ---- pass 2: within-chunk windows (bounded partitions) + stitch --
-    win = Window.partitionBy("_uk", "chunk").orderBy("um", "event_id")
-    wrun = win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    enriched = (
-        ev.join(offsets, ["_uk", "chunk"])
-        .join(F.broadcast(totals), "_uk")
-        .join(sec_win, ["_uk", "ep"])
-    )
-    rn = F.row_number().over(win)
-    rank = (F.col("cnt_off") + rn).cast("long")
-    n = F.col("n_total").cast("long")
-    # ntile(k): first n%k buckets get ceil(n/k) rows, the rest floor
-    k = F.lit(4).cast("long")
-    base = (n / k).cast("long")
-    rem = n % k
-    big = base + 1
-    in_big = rank <= rem * big
-    ntile = F.when(in_big, ((rank - 1) / big).cast("long") + 1).otherwise(
-        rem
-        + ((rank - 1 - rem * big) / F.greatest(base, F.lit(1).cast("long")))
-        .cast("long")
-        + 1
-    )
-    prev_val = F.coalesce(
-        F.lag("value").over(win),
-        F.when(rn == 1, F.col("prev_chunk_val")),
-    )
-    # running sum with exact SQL NULL semantics: NULL while zero
-    # non-null values precede, else the exact decimal sum (within-chunk
-    # prefix may be all-NULL while earlier chunks carried values — an
-    # unconditional sum_off + NULL would wrongly null the total)
-    within_sum = F.coalesce(
-        F.sum(val).over(wrun), F.lit(0).cast("decimal(22,2)")
-    )
-    within_cntv = F.count(val).over(wrun)
-    running = F.when(
-        F.col("cntv_off") + within_cntv > 0,
-        (F.col("sum_off") + within_sum).cast("double"),
-    )
-    return enriched.select(
-        "user_id",
-        "event_id",
-        "value",
-        (F.col("value") - prev_val).alias("delta"),
-        running.alias("running_value"),
-        F.col("win_sum").cast("double").alias("value_30min"),
-        ntile.cast("int").alias("value_quartile"),
-        F.when(n > 1, (rank - 1).cast("double") / (n - 1).cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("pct_rank"),
-        (rank.cast("double") / n.cast("double")).alias("cume"),
     )
 
 

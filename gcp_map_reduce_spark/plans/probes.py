@@ -1,12 +1,10 @@
 """Session-scoped cache for plan-time probes.
 
-A few plan decisions need one number about an input table: the
-embeddings row count behind the IVF cell count
-(``similarity.corpus_vec_count``), and the events row count and hottest
-user share behind ``relational.choose_window_plan``. Each is one small
-Spark job, and several plan builds over the same corpus ask the same
-question, so the value is cached per (probe, corpus, params): the first
-caller pays the job, every later caller gets a dict lookup.
+One plan decision needs a number about an input table: the embeddings
+row count behind the IVF cell count (``similarity.corpus_vec_count``).
+It is one small Spark job, and several plan builds over the same corpus
+ask the same question, so the value is cached per (probe, corpus): the
+first caller pays the job, every later caller gets a dict lookup.
 
 Keys embed a :func:`corpus_key` fingerprint (parquet mtime/size), so
 regenerating a corpus in place self-invalidates. Every fresh corpus adds

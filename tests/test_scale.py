@@ -364,137 +364,103 @@ def test_ensure_parallelism_sees_through_empty_byte_range_splits(spark, tmp_path
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
 
 
-def test_window_suite_two_pass_bit_identical(spark):
-    """The hot-key-safe two-pass decomposition (r11, verdict task #6)
-    must reproduce the registered window_suite BIT-IDENTICALLY — every
-    column, including the double-valued distribution functions — at the
-    default chunking AND at a tiny chunk_sec that forces many chunk
-    boundaries (cross-chunk lag, offset stitching, empty chunks between
-    sparse users)."""
-    from gcp_map_reduce_spark.operators.relational import (
-        window_suite,
-        window_suite_two_pass,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    base = {
-        (r.user_id, r.event_id): tuple(r)[2:]
-        for r in window_suite(spark, sf).collect()
-    }
-    assert base
-    for chunk_sec in (3600, 600):
-        got = {
-            (r.user_id, r.event_id): tuple(r)[2:]
-            for r in window_suite_two_pass(spark, sf, chunk_sec=chunk_sec).collect()
-        }
-        assert got == base, chunk_sec
-
-    import pytest
-
-    with pytest.raises(ValueError, match="chunk_sec"):
-        window_suite_two_pass(spark, sf, chunk_sec=0)
-
-
-def test_choose_window_plan_probe_and_routing(spark, tmp_path):
-    """r12 verdict task #5: the hot-key probe must (a) keep this corpus
-    on the single-shuffle plan (max user share ~0.001 — the extra
-    shuffles would be pure cost), (b) route a genuinely hot-keyed corpus
-    to two_pass, (c) respect the absolute-rows floor (a 50% key of a
-    tiny corpus is a tiny task, not a straggler), and (d) be wired into
-    the registered window_suite via plan='auto'."""
-    import pandas as pd
-
-    from gcp_map_reduce_spark.operators.relational import (
-        choose_window_plan,
-        estimate_max_user_share,
-        window_suite,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    assert estimate_max_user_share(spark, sf) < 0.05
-    assert choose_window_plan(spark, sf) == "single"
-
-    # synthetic hot corpus: one user holds 50% of events
-    hot = str(tmp_path / "hot")
-    import os
-
-    os.makedirs(hot)
-    n = 4000
-    pd.DataFrame(
-        {
-            "event_id": range(n),
-            "user_id": [1] * (n // 2) + list(range(2, n // 2 + 2)),
-            "ts": pd.to_datetime("2024-01-01")
-            + pd.to_timedelta(range(n), unit="s"),
-            "value": [float(i % 7) for i in range(n)],
-        }
-    ).to_parquet(f"{hot}/events.parquet", index=False)
-    share = estimate_max_user_share(spark, hot)
-    assert share > 0.4, share
-    # hot share but under the absolute floor -> still single
-    assert choose_window_plan(spark, hot) == "single"
-    # floor lowered to corpus scale -> two_pass
-    assert choose_window_plan(spark, hot, min_rows=1000) == "two_pass"
-
-    # auto is the registered default and validates its input
-    import pytest
-
-    with pytest.raises(ValueError, match="plan"):
-        window_suite(spark, sf, plan="nope")
-
-
-def test_window_suite_two_pass_null_semantics(spark, tmp_path):
-    """r11 review catch: the two-pass form must match the registered
-    window suite on NULLABLE inputs too — a NULL-prefix running sum must
-    stay NULL until the first non-null value (sum_off + NULL would
-    otherwise null a valid total, and an unconditional coalesce would
-    fabricate 0.0), and a NULL user_id is a real window partition that
-    must not vanish through the stitching equi-joins."""
+def _write_window_corpus(spark, corpus: str) -> int:
+    """Tiny events table with the window suite's edge cases: a NULL
+    prefix and a mid-stream NULL value, an all-NULL user, a NULL
+    user_id partition, NULL ts rows, same-second ties, and gaps of
+    exactly 1,800 and 1,801 s. Returns the row count."""
     import datetime
-    import os
-
-    from gcp_map_reduce_spark.operators.relational import (
-        window_suite,
-        window_suite_two_pass,
-    )
 
     base = datetime.datetime(2024, 1, 1)
     rows = []
-    eid = 0
-    # user 1: NULL-prefix (2 nulls), then values, then a mid-stream NULL
-    for minutes, value in [(0, None), (10, None), (20, 5.25), (35, None),
-                           (400, 7.5), (3700, None), (3720, 1.0)]:
-        rows.append((1, eid, base + datetime.timedelta(minutes=minutes), value))
-        eid += 1
-    # user NULL: its own partition, with values and nulls
-    for minutes, value in [(0, 2.0), (15, None), (3650, 3.0)]:
-        rows.append((None, eid, base + datetime.timedelta(minutes=minutes), value))
-        eid += 1
-    # user 2: all-NULL values end to end
-    for minutes in (0, 30, 3900):
-        rows.append((2, eid, base + datetime.timedelta(minutes=minutes), None))
-        eid += 1
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, value double"
-    )
-    corpus = str(tmp_path / "corpus")
-    os.makedirs(corpus)
-    df.coalesce(1).write.parquet(f"{corpus}/events.parquet")
 
+    def add(user, sec, value):
+        ts = None if sec is None else base + datetime.timedelta(seconds=sec)
+        rows.append((user, len(rows), ts, value))
+
+    # user 1: NULL prefix (2 nulls), values, a mid-stream NULL, a
+    # same-second tie, then 1,800- and 1,801-s gaps
+    for sec, value in [(0, None), (600, None), (1200, 5.25), (2100, None),
+                       (2100, 4.0), (3900, 7.5), (5701, 1.0), (5701, None)]:
+        add(1, sec, value)
+    # user NULL: its own partition, with values and nulls
+    for sec, value in [(0, 2.0), (900, None), (2700, 3.0)]:
+        add(None, sec, value)
+    # user 2: all-NULL values end to end
+    for sec in (0, 1800, 3601):
+        add(2, sec, None)
+    # user 3: NULL ts rows (a NULL RANGE key) ahead of timed rows
+    for sec, value in [(None, 1.5), (None, None), (None, 2.5), (0, 4.0),
+                       (1801, 0.5)]:
+        add(3, sec, value)
+    spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, value double"
+    ).coalesce(1).write.parquet(f"{corpus}/events.parquet")
+    return len(rows)
+
+
+@pytest.fixture(scope="module")
+def window_corpus(spark, tmp_path_factory):
+    corpus = str(tmp_path_factory.mktemp("window") / "corpus")
+    return corpus, _write_window_corpus(spark, corpus)
+
+
+def test_window_suite_matches_sliding_reference(spark, window_corpus):
+    """window_suite takes the 30-minute RANGE sum from two growing
+    frames; it must equal the sliding-frame reference bit for bit, with
+    the same schema, at sf0.01 and on the edge-case corpus."""
+    from gcp_map_reduce_spark.operators.relational import window_suite
+    from tests.window_reference import sliding_window_suite
+
+    corpus, n = window_corpus
     key = lambda r: (r.user_id, r.event_id)  # noqa: E731
-    want = {key(r): tuple(r)[2:] for r in window_suite(spark, corpus).collect()}
-    assert len(want) == eid
-    for chunk_sec in (3600, 600):
-        got = {
-            key(r): tuple(r)[2:]
-            for r in window_suite_two_pass(
-                spark, corpus, chunk_sec=chunk_sec
-            ).collect()
-        }
-        assert got == want, chunk_sec
-    # the semantics this test exists to pin, asserted directly:
-    u1 = sorted((k[1], v) for k, v in want.items() if k[0] == 1)
-    run_vals = [v[2] for _, v in u1]  # running_value in event order
+    for sf in (SF_ORACLE, corpus):
+        got_df = window_suite(spark, sf)
+        want_df = sliding_window_suite(spark, sf)
+        assert got_df.schema == want_df.schema, sf
+        got = {key(r): tuple(r)[2:] for r in got_df.collect()}
+        want = {key(r): tuple(r)[2:] for r in want_df.collect()}
+        assert got, sf
+        assert got == want, sf
+    assert len(got) == n
+    # the semantics the edge cases exist to pin, asserted directly:
+    u1 = [got[k] for k in sorted(k for k in got if k[0] == 1)]
+    run_vals = [v[2] for v in u1]  # running_value in event order
     assert run_vals[0] is None and run_vals[1] is None  # NULL prefix
     assert run_vals[2] == 5.25 and run_vals[3] == 5.25  # mid-NULL keeps sum
-    assert any(k[0] is None for k in want)  # NULL user partition present
+    thirty = [v[3] for v in u1]  # value_30min
+    assert thirty[:2] == [None, None]  # no non-null value in the frame
+    assert thirty[3] == thirty[4] == 9.25  # tie: 900-s-old 5.25 + 4.0
+    assert thirty[5] == 11.5  # 1,800 s back is inside the frame
+    assert thirty[6] == thirty[7] == 1.0  # 1,801 s back is not
+    assert any(k[0] is None for k in got)  # NULL user partition present
+
+
+def test_window_suite_frames_grow_over_one_shuffle(spark, window_corpus):
+    """No sliding frame is left: every frame in the executed plan starts
+    at UNBOUNDED PRECEDING except lag's one-row offset, and every window
+    rides one hash shuffle on user_id."""
+    from gcp_map_reduce_spark.operators.relational import window_suite
+
+    df = window_suite(spark, window_corpus[0])
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    frames = re.findall(r"specifiedwindowframe\((\w+), ([^,]+), ", plan)
+    assert frames, plan
+    for kind, lower in frames:
+        assert lower == "unboundedpreceding$()" or (
+            kind == "RowFrame" and lower == "-1"
+        ), (kind, lower)
+    assert len(re.findall(r"\bExchange ", plan)) == 1, plan
+
+
+def test_window_suite_runs_no_probe(spark, tmp_path):
+    """Building window_suite on a fresh corpus launches no plan probe."""
+    from gcp_map_reduce_spark.operators.relational import window_suite
+    from gcp_map_reduce_spark.plans import probes
+
+    corpus = str(tmp_path / "corpus")
+    _write_window_corpus(spark, corpus)
+    misses = probes.STATS["misses"]
+    window_suite(spark, corpus)
+    assert probes.STATS["misses"] == misses

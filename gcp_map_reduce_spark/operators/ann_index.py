@@ -13,8 +13,6 @@ Layout (all under one index dir, published atomically)::
 
     index_dir/
       codebook/            parquet: (cell_id, ce: array<double>, cn2)
-      codebook2/           residual centroids, same schema (two-level
-                             indexes only; see _build_two_level)
       vectors/             parquet, partitionBy(cell_id):
                              (vec_id, e: array<double>, n2)
       vectors-segNNNN/     appended batches, same layout (LSM-style;
@@ -28,7 +26,7 @@ Layout (all under one index dir, published atomically)::
                              addressed sidecar, r15) for the screening
                              join's hot-cell sub-splitting — lazily
                              loaded via ann_index_cell_counts
-      _index_meta.json     {version, levels, n_cells, n_vec, dim,
+      _index_meta.json     {version, n_cells, n_vec, dim,
                              segments, attrs, cell_counts_file,
                              tombstones, n_deleted} — the manifest is
                              the COMMIT POINT: a segment, tombstone
@@ -60,11 +58,8 @@ Scale posture:
 - build: one corpus scan for assignment (broadcast codebook argmin —
   zero shuffle), one ``repartition(cell_id)`` shuffle to lay files out
   one-per-cell. n_cells defaults to ``ivf_dedup_n_cells(N, n_probe=1)``
-  (= ceil(N/640)) up to the 65536-cell broadcast cap; past the cap,
-  build with ``levels=2`` — the coarse+residual codebook
-  (:func:`_build_two_level`) covers ``K1 x K2`` composite cells with
-  ``K1 + K2`` collected rows, so the broadcast ceiling bounds
-  sqrt(cells), not cells.
+  (= ceil(N/640)) up to the 65536-cell broadcast cap, about 42M
+  vectors; past the cap, shard the corpus.
 - search: cost is |Q| x n_cells x d for probing (broadcast codebook)
   plus the probed cells' rows x |Q_cell| x d for exact re-rank. The
   query relation is broadcast — the documented contract is query
@@ -157,14 +152,21 @@ def ann_index_meta(index_dir: str) -> dict:
             f"ANN index at {index_dir} has version {meta.get('version')!r}, "
             f"this reader speaks {READER_VERSIONS} — rebuild the index"
         )
+    # the two-level (coarse + residual) codebook was removed: its cell ids
+    # are composites, and probing them with the coarse codebook alone
+    # would silently search the wrong cells
+    if meta.get("levels", 1) != 1:
+        raise ValueError(
+            f"ANN index at {index_dir} has a {meta['levels']!r}-level "
+            "codebook, this reader speaks single-level indexes only — "
+            "rebuild the index"
+        )
     # pre-append manifests carry no segment list; they are exactly the
     # single base segment (append always writes the key). Pre-attrs
-    # manifests carry no metadata columns; pre-two-level manifests are
-    # single-level.
+    # manifests carry no metadata columns.
     meta.setdefault("segments", ["vectors"])
     meta.setdefault("attrs", [])
     meta.setdefault("attrs_ddl", "")
-    meta.setdefault("levels", 1)
     # pre-r13 manifests predate the recorded source type; array<float>
     # is what every such index was built over (the synthetic corpus) —
     # the default keeps their streams starting, not silently lying: a
@@ -223,9 +225,9 @@ def _write_cell_counts(dir_path: str, counts: dict) -> str:
     the manifest and return its filename (recorded in the manifest as
     ``cell_counts_file``). Counts used to ride the manifest inline,
     which made the one piece of per-commit work that grows with INDEX
-    size rather than batch size: at two-level 100 TB sizing (n_cells
-    ~10^5-10^6) every append/delete/compact rewrote — and every meta
-    read parsed — a multi-MB JSON (r14 verdict finding 1). As a sidecar,
+    size rather than batch size: every append/delete/compact rewrote —
+    and every meta read parsed — a JSON of up to 65536 cells (r14
+    verdict finding 1). As a sidecar,
     commits that don't change counts (tombstone deletes) never touch it,
     reads are lazy (:func:`ann_index_cell_counts` — only the screen's
     sizing loads it), and the sha embedded in the name is the integrity
@@ -242,12 +244,26 @@ def _write_cell_counts(dir_path: str, counts: dict) -> str:
     return fname
 
 
+# Index dirs each per-index driver cache (_CELL_COUNTS_CACHE,
+# _CODEBOOK_CACHE, _IDS_MIRROR) holds before it starts over: one entry
+# per index dir, and every corpus generation ann_index_for_corpus
+# resolves is a new dir that _sweep_stale_generations removes from disk
+# but not from these dicts. A reset costs re-reads, never a different
+# answer.
+INDEX_CACHE_MAX_DIRS = 64
+
+
+def _cache_put(cache: dict, index_dir: str, value) -> None:
+    if index_dir not in cache and len(cache) >= INDEX_CACHE_MAX_DIRS:
+        cache.clear()
+    cache[index_dir] = value
+
+
 # Driver-side sidecar cache: the content-addressed filename is a
 # perfect cache key (the sha IS the content), so each generation's
 # counts are read+verified+parsed once per process instead of per
-# screen call — at two-level 100 TB sizing that is a multi-MB parse
-# saved per batch (review catch). Keyed per index_dir (one live entry
-# each, like _CODEBOOK_CACHE) so superseded generations don't pile up.
+# screen call (review catch). Keyed per index_dir (one live entry each,
+# like _CODEBOOK_CACHE) so superseded sidecars of one dir don't pile up.
 _CELL_COUNTS_CACHE: dict = {}
 
 
@@ -297,7 +313,7 @@ def ann_index_cell_counts(index_dir: str, meta: dict | None = None):
     # every later read of this generation (2nd review pass) — writers
     # that need to accumulate copy explicitly (dict(cc))
     counts = MappingProxyType(json.loads(payload))
-    _CELL_COUNTS_CACHE[index_dir] = (fname, counts)
+    _cache_put(_CELL_COUNTS_CACHE, index_dir, (fname, counts))
     return counts
 
 
@@ -571,8 +587,9 @@ def _sweep_stale_generations(
 def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
     """Column indices of each row's ``k`` nearest codebook rows by
     squared L2 distance ``(n2 - 2*dot) + cn2`` with the (d, cell_id)
-    tie-break — the one distance definition every two-level path
-    (build, append, probe) shares, so they cannot disagree."""
+    tie-break — the one numpy distance definition the Arrow build
+    assignment, the collected append and the driver-side probe share,
+    so they cannot disagree."""
     import numpy as np
 
     dist = (En2[:, None] - 2.0 * _seq_dot(E, C)) + Cn2[None, :]
@@ -581,42 +598,12 @@ def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
     )[:, :k]
 
 
-def _np_assign_2l(E, cb2l):
-    """Composite home cell ids for rows ``E`` under a two-level
-    codebook: nearest coarse centroid, then nearest residual centroid
-    of ``x - c1``; composite id = ``c1 * K2 + c2``."""
-    import numpy as np
-
-    ids1, C1, C1n2, ids2, C2, C2n2, k2 = cb2l
-    n2 = _np_n2(E)
-    i1 = _np_nearest(E, n2, ids1, C1, C1n2, 1)[:, 0]
-    R = E - C1[i1]
-    rn2 = _np_n2(R)
-    i2 = _np_nearest(R, rn2, ids2, C2, C2n2, 1)[:, 0]
-    return ids1[i1] * np.int64(k2) + ids2[i2], n2
-
-
-def _codebook_df(spark: SparkSession, sf_dir: str, n_cells: int,
-                 codebook: str, kmeans_iters: int) -> DataFrame:
-    """(cell_id, ce, cn2) coarse quantizer — rank-based seeds by default
-    (deterministic on any id space, same convention as the batch IVF
-    dedup plan), optionally refined with Lloyd rounds for clustered
-    corpora (same trade documented at similarity_ivf_ann)."""
-    if codebook == "kmeans":
-        from gcp_map_reduce_spark.operators.clustering import kmeans_fit
-
-        _, centroids = kmeans_fit(
-            spark, sf_dir, k=n_cells, n_iters=kmeans_iters
-        )
-        return centroids.select(
-            F.col("cell_id").cast("long").alias("cell_id"),
-            F.col("c").alias("ce"),
-            _dot(F.col("c"), F.col("c")).alias("cn2"),
-        )
-    if codebook != "sampled":
-        raise ValueError(
-            f"codebook must be 'sampled' or 'kmeans', got {codebook!r}"
-        )
+def _codebook_df(
+    spark: SparkSession, sf_dir: str, n_cells: int
+) -> DataFrame:
+    """(cell_id, ce, cn2) coarse quantizer — rank-based seeds, the first
+    ``n_cells`` vectors by vec_id (deterministic on any id space, same
+    convention as the batch IVF dedup plan)."""
     return _with_norm2(
         _emb(spark, sf_dir).orderBy("vec_id").limit(n_cells)
     ).select(
@@ -627,42 +614,39 @@ def _codebook_df(spark: SparkSession, sf_dir: str, n_cells: int,
 
 
 def _assign_cells(
-    feats: DataFrame,
-    seeds: DataFrame,
-    assign_side: str,
-    n_cells: int | None = None,
+    feats: DataFrame, seeds: DataFrame, n_cells: int
 ) -> DataFrame:
     """Add the home ``cell_id`` (nearest codebook cell) to every feats
     row — the N x n_cells x d term of a build/append.
 
-    ``assign_side="plan"`` is the broadcast-codebook ``ivf_probe_cells``
-    expression: zero extra jobs, but higher-order array folds are
-    CodegenFallback — ~n_cells x d interpreted ops per row, the build
-    bottleneck once n_cells grows with the corpus. ``"arrow"`` collects
-    the codebook once (bounded: <= IVF_DEDUP_CELLS_CAP x d doubles, the
-    same 32 MB broadcast ceiling) and assigns per Arrow batch with the
-    d-sequential numpy fold — bit-identical distances and (d, cell_id)
-    tie-breaks to the expression path (the ``_probes_driver`` arithmetic,
-    pytest-gated), at GEMM speed. ``"auto"`` picks arrow above
-    ARROW_ASSIGN_MIN_CELLS — measured builds, best-of-3: 94 cells/60k
-    rows 12.3 s plan vs 4.3 s arrow (2.8x); 4 cells/2k rows 2.5 s plan
-    vs 4.8 s arrow (the Arrow exchange costs more than the small fold).
+    Below ``ARROW_ASSIGN_MIN_CELLS`` cells this is the broadcast-codebook
+    ``ivf_probe_cells`` expression: zero extra jobs, but higher-order
+    array folds are CodegenFallback — ~n_cells x d interpreted ops per
+    row, the build bottleneck once n_cells grows with the corpus. From
+    the crossover on it collects the codebook once (bounded: <=
+    IVF_DEDUP_CELLS_CAP x d doubles, the same 32 MB broadcast ceiling)
+    and assigns per Arrow batch with the d-sequential numpy fold —
+    bit-identical distances and (d, cell_id) tie-breaks to the
+    expression path (the ``_probes_driver`` arithmetic, pytest-gated),
+    at GEMM speed. Measured builds, best-of-3: 94 cells/60k rows 12.3 s
+    plan vs 4.3 s arrow (2.8x); 4 cells/2k rows 2.5 s plan vs 4.8 s
+    arrow (the Arrow exchange costs more than the small fold).
     """
-    if assign_side == "auto":
-        n_seed = n_cells if n_cells is not None else seeds.count()
-        assign_side = "arrow" if n_seed >= ARROW_ASSIGN_MIN_CELLS else "plan"
-    if assign_side == "plan":
-        cb = seeds.agg(
-            F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb")
-        )
-        return feats.crossJoin(F.broadcast(cb)).select(
-            *feats.columns, ivf_probe_cells(1)[0].alias("cell_id")
-        )
-    if assign_side != "arrow":
-        raise ValueError(
-            f"assign_side must be 'auto', 'plan' or 'arrow', got "
-            f"{assign_side!r}"
-        )
+    if n_cells < ARROW_ASSIGN_MIN_CELLS:
+        return _assign_cells_plan(feats, seeds)
+    return _assign_cells_arrow(feats, seeds)
+
+
+def _assign_cells_plan(feats: DataFrame, seeds: DataFrame) -> DataFrame:
+    cb = seeds.agg(
+        F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb")
+    )
+    return feats.crossJoin(F.broadcast(cb)).select(
+        *feats.columns, ivf_probe_cells(1)[0].alias("cell_id")
+    )
+
+
+def _assign_cells_arrow(feats: DataFrame, seeds: DataFrame) -> DataFrame:
     import numpy as np
 
     rows = seeds.orderBy("cell_id").collect()
@@ -696,10 +680,10 @@ def _assign_cells(
 
 # Arrow-assignment crossover (cells): measured 94 cells -> arrow 2.8x
 # faster, 4 cells -> plan ~2x faster (numbers in _assign_cells); 32
-# splits the measured gap conservatively. The auto default means the
-# assignment term stays GEMM-bounded exactly where it starts to matter:
-# n_cells grows with the corpus (ivf_dedup_n_cells), so every
-# at-scale build takes the arrow path.
+# splits the measured gap conservatively. The assignment term stays
+# GEMM-bounded exactly where it starts to matter: n_cells grows with
+# the corpus (ivf_dedup_n_cells), so every at-scale build takes the
+# arrow path.
 ARROW_ASSIGN_MIN_CELLS = 32
 
 
@@ -747,186 +731,23 @@ def _quantize_stored(assigned: DataFrame, attrs: list[str]) -> DataFrame:
     )
 
 
-def _assign_cells_2l(feats: DataFrame, cb2l) -> DataFrame:
-    """Distributed composite-cell assignment for a two-level codebook:
-    mapInPandas over the SAME :func:`_np_assign_2l` kernel the build and
-    the collected append run — one shared numpy definition, so the
-    distributed path cannot drift from either (there is deliberately no
-    separate JVM expression to keep in sync). The ``K1 + K2`` centroid
-    arrays ride the closure (bounded by the same broadcast ceiling that
-    sizes the codebook), so this is a zero-shuffle map — the two-level
-    twin of ``_assign_cells(assign_side="arrow")``, and what lets
-    batches too large to collect append to exactly the index variant
-    built for the largest corpora."""
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(feats.schema.fields) + [StructField("cell_id", LongType())]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf):
-                E = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-                cell, _ = _np_assign_2l(E, cb2l)
-                pdf = pdf.assign(cell_id=cell)
-            else:
-                pdf = pdf.assign(cell_id=np.array([], dtype=np.int64))
-            yield pdf
-
-    return feats.mapInPandas(kernel, schema=out_schema)
-
-
-def _build_two_level(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    n_cells1: int | None,
-    n_cells2: int | None,
-    attrs: list[str],
-    storage: str = "float64",
-) -> dict:
-    """Two-level (coarse + residual) IVF build — the escape hatch past
-    the single-broadcast codebook cap: ``K1 + K2`` collected centroid
-    rows cover ``K1 x K2`` composite cells, so the 65536-row broadcast
-    ceiling bounds ``sqrt(effective cells)`` instead of the cell count
-    (4.3e9 effective cells at the cap — no realistic corpus hits it).
-
-    Determinism mirrors the sampled single-level codebook: coarse
-    centroids are the first ``K1`` vectors by vec_id; residual
-    centroids are the residuals of the NEXT ``K2`` vectors w.r.t. their
-    nearest coarse centroid. A vector's composite home cell is
-    ``c1 * K2 + c2`` (:func:`_np_assign_2l` — one shared numpy
-    definition used by build, append, and probe; there is deliberately
-    no JVM expression twin to drift from). Defaults size
-    ``K1 = ceil(sqrt(effective))``, ``K2 = ceil(effective / K1)`` from
-    the same ``ivf_dedup_n_cells`` target as single-level.
-    """
-    import math
-
-    import numpy as np
-
-    from gcp_map_reduce_spark.operators.similarity import corpus_vec_count
-
-    n_vec = corpus_vec_count(spark, sf_dir)
-    effective = ivf_dedup_n_cells(n_vec, n_probe=1)
-    if n_cells1 is None:
-        n_cells1 = max(1, math.isqrt(max(0, effective - 1)) + 1)
-    if n_cells2 is None:
-        n_cells2 = max(1, (effective + n_cells1 - 1) // n_cells1)
-    seed_rows = (
-        _emb(spark, sf_dir)
-        .orderBy("vec_id")
-        .limit(n_cells1 + n_cells2)
-        .select("embedding")
-        .collect()
-    )
-    if len(seed_rows) <= n_cells1:
-        raise ValueError(
-            f"corpus too small for a two-level codebook: need more than "
-            f"{n_cells1} vectors for K1={n_cells1}, K2={n_cells2} seeds"
-        )
-    n_cells2 = min(n_cells2, len(seed_rows) - n_cells1)
-    S = np.array([r.embedding for r in seed_rows], dtype=np.float64)
-    C1, S2 = S[:n_cells1], S[n_cells1 : n_cells1 + n_cells2]
-    C1n2 = _np_n2(C1)
-    ids1 = np.arange(n_cells1, dtype=np.int64)
-    i1 = _np_nearest(S2, _np_n2(S2), ids1, C1, C1n2, 1)[:, 0]
-    C2 = S2 - C1[i1]
-    C2n2 = _np_n2(C2)
-    ids2 = np.arange(n_cells2, dtype=np.int64)
-    cb2l = (ids1, C1, C1n2, ids2, C2, C2n2, n_cells2)
-
-    feats = _with_norm2(_emb(spark, sf_dir)).select(
-        "vec_id", "e", "n2", *attrs
-    )
-    assigned = _assign_cells_2l(feats, cb2l)
-    dim = int(C1.shape[1])
-    meta = {
-        "version": INDEX_VERSION if storage == "float64" else INDEX_VERSION_INT8,
-        "levels": 2,
-        "n_cells": int(n_cells1 * n_cells2),
-        "n_cells1": int(n_cells1),
-        "n_cells2": int(n_cells2),
-        "n_vec": int(n_vec),
-        "dim": dim,
-        "codebook": "sampled-residual",
-        "segments": ["vectors"],
-        "attrs": attrs,
-        "attrs_ddl": _attrs_ddl(feats, attrs),
-        "embedding_ddl": _embedding_ddl(spark, sf_dir),
-        "storage": storage,
-    }
-    _carry_cache_key(index_dir, meta)
-    if storage == "int8":
-        assigned = _quantize_stored(assigned, attrs)
-
-    def cb_df(ids, C, Cn2):
-        # Arrow record batch, not createDataFrame(list): these frames
-        # are coalesce(1)-written, and a list-parallelized source pays
-        # ~defaultParallelism SEQUENTIAL python-worker round-trips
-        # inside the single write task (see _ids_df)
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            {
-                "cell_id": pd.array([int(i) for i in ids], dtype="int64"),
-                "ce": [[float(x) for x in C[j]] for j in range(len(ids))],
-                "cn2": pd.array([float(x) for x in Cn2], dtype="float64"),
-            }
-        )
-        return spark.createDataFrame(
-            pdf, "cell_id long, ce array<double>, cn2 double"
-        )
-
-    def write(staging: str) -> None:
-        cb_df(ids1, C1, C1n2).coalesce(1).write.parquet(
-            os.path.join(staging, "codebook")
-        )
-        cb_df(ids2, C2, C2n2).coalesce(1).write.parquet(
-            os.path.join(staging, "codebook2")
-        )
-        (
-            assigned.repartition("cell_id")
-            .write.partitionBy("cell_id")
-            .parquet(os.path.join(staging, "vectors"))
-        )
-        _write_seg_ids(
-            spark, os.path.join(staging, "vectors"), meta["n_vec"]
-        )
-        meta["cell_counts_file"] = _write_cell_counts(
-            staging, _seg_cell_counts(spark, os.path.join(staging, "vectors"))
-        )
-        with open(os.path.join(staging, META_FILE), "w") as fh:
-            json.dump(meta, fh)
-
-    publish_atomic(index_dir, write)
-    return meta
-
-
 def ann_index_build(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str,
     n_cells: int | None = None,
-    codebook: str = "sampled",
-    kmeans_iters: int = 2,
     attrs: list[str] | None = None,
-    assign_side: str = "auto",
-    levels: int = 1,
-    n_cells2: int | None = None,
     storage: str = "float64",
 ) -> dict:
     """Build and atomically publish the IVF index for ``sf_dir``'s
     embeddings table; return the written meta dict.
 
-    One corpus scan assigns each vector to its single nearest cell
-    (``ivf_probe_cells(1)`` against the broadcast codebook — zero
-    shuffle); one ``repartition(cell_id)`` shuffle lays the cells out
-    one file per cell so the partition dirs don't fragment (at real
-    scale swap this for ``repartitionByRange`` + a files-per-cell cap).
+    The codebook is the first ``n_cells`` vectors by vec_id. One corpus
+    scan assigns each vector to its single nearest cell
+    (:func:`_assign_cells` — zero shuffle); one ``repartition(cell_id)``
+    shuffle lays the cells out one file per cell so the partition dirs
+    don't fragment (at real scale swap this for ``repartitionByRange`` +
+    a files-per-cell cap).
 
     ``attrs`` persists extra metadata columns from the embeddings table
     (e.g. ``["label"]``) alongside each vector — the storage side of
@@ -949,8 +770,7 @@ def ann_index_build(
     """
     with _write_lock(index_dir):
         return _build_unlocked(
-            spark, sf_dir, index_dir, n_cells, codebook, kmeans_iters,
-            attrs, assign_side, levels, n_cells2, storage,
+            spark, sf_dir, index_dir, n_cells, attrs, storage
         )
 
 
@@ -959,12 +779,7 @@ def _build_unlocked(
     sf_dir: str,
     index_dir: str,
     n_cells: int | None = None,
-    codebook: str = "sampled",
-    kmeans_iters: int = 2,
     attrs: list[str] | None = None,
-    assign_side: str = "auto",
-    levels: int = 1,
-    n_cells2: int | None = None,
     storage: str = "float64",
 ) -> dict:
     """:func:`ann_index_build` minus the writer lock — for callers that
@@ -989,25 +804,14 @@ def _build_unlocked(
         raise ValueError(
             f"storage must be 'float64' or 'int8', got {storage!r}"
         )
-    if levels == 2:
-        if codebook != "sampled":
-            raise ValueError(
-                "levels=2 supports only the sampled codebook (residual "
-                "seeds are defined off the sampled coarse centroids)"
-            )
-        return _build_two_level(
-            spark, sf_dir, index_dir, n_cells, n_cells2, attrs, storage
-        )
-    if levels != 1:
-        raise ValueError(f"levels must be 1 or 2, got {levels!r}")
     n_vec = corpus_vec_count(spark, sf_dir)
     if n_cells is None:
         # one home cell per vector -> n_probe=1 in the sizing formula;
         # expected cell population ~IVF_DEDUP_CELL_TARGET rows
         n_cells = ivf_dedup_n_cells(n_vec, n_probe=1)
-    seeds = _codebook_df(spark, sf_dir, n_cells, codebook, kmeans_iters)
+    seeds = _codebook_df(spark, sf_dir, n_cells)
     feats = _with_norm2(_emb(spark, sf_dir)).select("vec_id", "e", "n2", *attrs)
-    assigned = _assign_cells(feats, seeds, assign_side, n_cells=n_cells)
+    assigned = _assign_cells(feats, seeds, n_cells)
     dim = len(
         _emb(spark, sf_dir).select("embedding").head()["embedding"]
     )
@@ -1016,7 +820,6 @@ def _build_unlocked(
         "n_cells": int(n_cells),
         "n_vec": int(n_vec),
         "dim": int(dim),
-        "codebook": codebook,
         "segments": ["vectors"],
         "attrs": attrs,
         "attrs_ddl": _attrs_ddl(feats, attrs),
@@ -1508,22 +1311,15 @@ def _append_collected(
         raise ValueError("append batch contains duplicate vec_ids")
     E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     n2 = _np_n2(E)
-    if meta["levels"] == 2:
-        home, _ = _np_assign_2l(
-            E, _codebook_2l_driver(spark, index_dir, meta)
-        )
-    else:
-        cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
-        home = cell_ids[
-            _np_nearest(E, n2, cell_ids, CE, CN2, 1)[:, 0]
-        ]
+    cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
+    home = cell_ids[_np_nearest(E, n2, cell_ids, CE, CN2, 1)[:, 0]]
     mirror_key = _mirror_key(index_dir, meta["segments"])
     hit = _IDS_MIRROR.get(index_dir)
     if hit and hit[0] == mirror_key:
         by_cell = hit[1]
     else:
         by_cell = OrderedDict()
-        _IDS_MIRROR[index_dir] = (mirror_key, by_cell)
+        _cache_put(_IDS_MIRROR, index_dir, (mirror_key, by_cell))
     batch_cells = sorted({int(c) for c in home})
     missing = [c for c in batch_cells if c not in by_cell]
     if missing:
@@ -1628,8 +1424,9 @@ def _append_collected(
     for c, v in zip(home[keep], ids[keep]):
         by_cell[int(c)].add(int(v))
     _ids_mirror_evict(by_cell)
-    _IDS_MIRROR[index_dir] = (
-        _mirror_key(index_dir, new_meta["segments"]), by_cell
+    _cache_put(
+        _IDS_MIRROR, index_dir,
+        (_mirror_key(index_dir, new_meta["segments"]), by_cell),
     )
     return new_meta
 
@@ -1647,13 +1444,11 @@ def ann_index_append(
     batch is scanned/assigned/written.
 
     Mechanics (LSM-style segments): the batch is assigned against the
-    published codebook via the SHARED assignment definition —
-    :func:`similarity.ivf_probe_cells` for single-level indexes,
-    :func:`_np_assign_2l` via :func:`_assign_cells_2l` for two-level —
-    bit-identical to the build-time assignment, so an index grown by
-    appends equals a fresh build over the same rows with the same
-    codebook (pytest-gated) — and written as a NEW
-    ``partitionBy(cell_id)`` segment directory; the manifest update
+    published codebook via the SHARED assignment definition
+    (:func:`_assign_cells`) — bit-identical to the build-time
+    assignment, so an index grown by appends equals a fresh build over
+    the same rows with the same codebook (pytest-gated) — and written
+    as a NEW ``partitionBy(cell_id)`` segment directory; the manifest update
     (atomic ``os.replace``) is the commit point. Crash anywhere before
     it leaves the old index intact; an unregistered leftover segment
     dir is swept by the next append to that slot.
@@ -1679,8 +1474,7 @@ def ann_index_append(
     driver-sized batches (:func:`_append_collected`: cached codebook,
     numpy assignment, per-cell ids mirror for the dup check) —
     bit-identical results, pytest-gated; the default plan path remains
-    for batches too large to collect, on BOTH index variants (two-level
-    assignment distributes through the shared numpy kernel).
+    for batches too large to collect.
 
     The fixed codebook is the documented trade: cell populations grow
     ~uniformly (expected target+N_appended/n_cells rows/cell), so
@@ -1723,15 +1517,8 @@ def _append_locked(
     batch = _with_norm2(
         vectors.select("vec_id", "embedding", *attrs)
     ).select("vec_id", "e", "n2", *attrs)
-    if meta["levels"] == 2:
-        assigned = _assign_cells_2l(
-            batch, _codebook_2l_driver(spark, index_dir, meta)
-        )
-    else:
-        seeds = spark.read.parquet(os.path.join(index_dir, "codebook"))
-        assigned = _assign_cells(
-            batch, seeds, assign_side="auto", n_cells=meta["n_cells"]
-        )
+    seeds = spark.read.parquet(os.path.join(index_dir, "codebook"))
+    assigned = _assign_cells(batch, seeds, meta["n_cells"])
     # pin the batch BEFORE deriving anything from it: the cells list,
     # the dup check, and the segment write must all see the same rows
     # even if the source directory is still being written to — an
@@ -2146,9 +1933,10 @@ def ann_index_rebuild(
 
     ``sf_dir`` is the FULL current corpus (the caller owns the snapshot
     — the stream deliberately doesn't know it, see
-    ``run_streaming_index_maintenance``). The rebuild preserves the
-    published index's storage mode, level count, attrs, and codebook
-    kind, and RE-DERIVES ``n_cells`` from the new corpus size — the one
+    ``run_streaming_index_maintenance``). The rebuild always produces a
+    single-level index with a fresh sampled codebook, preserves the
+    published index's storage mode and attrs, and RE-DERIVES
+    ``n_cells`` from the new corpus size — the one
     thing appends and compaction cannot do, and the whole point of a
     rebuild: per-probe scan cost returns to the fresh-build
     ``~cell_target`` rows instead of the grown ``n_vec / n_cells``.
@@ -2167,11 +1955,6 @@ def ann_index_rebuild(
             sf_dir,
             index_dir,
             attrs=meta["attrs"],
-            levels=meta["levels"],
-            # two-level codebooks are always sampled-residual; the
-            # manifest's "sampled-residual" tag is not a build arg
-            codebook=("sampled" if meta["levels"] == 2
-                      else meta.get("codebook", "sampled")),
             storage=meta["storage"],
         )
 
@@ -2210,11 +1993,6 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
             "the index instead"
         )
     cb = spark.read.parquet(os.path.join(index_dir, "codebook"))
-    cb2 = (
-        spark.read.parquet(os.path.join(index_dir, "codebook2"))
-        if meta["levels"] == 2
-        else None
-    )
     new_meta = {
         **meta,
         "segments": ["vectors"],
@@ -2232,8 +2010,6 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
 
     def write(staging: str) -> None:
         cb.coalesce(1).write.parquet(os.path.join(staging, "codebook"))
-        if cb2 is not None:
-            cb2.coalesce(1).write.parquet(os.path.join(staging, "codebook2"))
         (
             vecs.repartition("cell_id")
             .write.partitionBy("cell_id")
@@ -2290,95 +2066,8 @@ def _codebook_driver(spark: SparkSession, index_dir: str):
         np.array([r.ce for r in rows], dtype=np.float64),
         np.array([r.cn2 for r in rows], dtype=np.float64),
     )
-    _CODEBOOK_CACHE[index_dir] = (key, val)
+    _cache_put(_CODEBOOK_CACHE, index_dir, (key, val))
     return val
-
-
-def _codebook_2l_driver(spark: SparkSession, index_dir: str, meta: dict):
-    """Both codebook levels as the :func:`_np_assign_2l` tuple, cached
-    like :func:`_codebook_driver` (same immutability argument — appends
-    never touch either codebook dir)."""
-    import numpy as np
-
-    key = (
-        index_dir,
-        os.stat(os.path.join(index_dir, "codebook")).st_mtime_ns,
-        "2l",
-    )
-    hit = _CODEBOOK_CACHE.get(index_dir + "#2l")
-    if hit and hit[0] == key:
-        return hit[1]
-    ids1, C1, C1n2 = _codebook_driver(spark, index_dir)
-    rows2 = (
-        spark.read.parquet(os.path.join(index_dir, "codebook2"))
-        .orderBy("cell_id")
-        .collect()
-    )
-    val = (
-        ids1,
-        C1,
-        C1n2,
-        np.array([r.cell_id for r in rows2], dtype=np.int64),
-        np.array([r.ce for r in rows2], dtype=np.float64),
-        np.array([r.cn2 for r in rows2], dtype=np.float64),
-        int(meta["n_cells2"]),
-    )
-    _CODEBOOK_CACHE[index_dir + "#2l"] = (key, val)
-    return val
-
-
-def _probes_driver_2l(
-    spark: SparkSession,
-    index_dir: str,
-    meta: dict,
-    queries: DataFrame,
-    n_probe: int,
-    n_probe2: int,
-):
-    """Composite probe assignment for a two-level index: ``n_probe``
-    nearest coarse cells, and within each, ``n_probe2`` nearest
-    residual cells of ``q - c1`` — ``n_probe x n_probe2`` composite
-    cells per query, all driver-side numpy (the 2-level distance has no
-    expression twin by design)."""
-    import numpy as np
-
-    ids1, C1, C1n2, ids2, C2, C2n2, k2 = _codebook_2l_driver(
-        spark, index_dir, meta
-    )
-    qrows = queries.select("query_id", "embedding").collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, qe array<double>, qn2 double, cell_id long"
-        ), []
-    Q = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn2 = _np_n2(Q)
-    p1 = min(n_probe, len(ids1))
-    p2 = min(n_probe2, len(ids2))
-    i1 = _np_nearest(Q, qn2, ids1, C1, C1n2, p1)
-    # ONE stacked residual GEMM for all (query, coarse-probe) pairs —
-    # row q*p1+j is query q's residual against its j-th probed coarse
-    # centroid (a per-pair loop here would be |Q| x p1 separate 1 x K2
-    # GEMMs, the driver-side bottleneck at the contract's
-    # thousands-of-searches rate)
-    R = np.repeat(Q, p1, axis=0) - C1[i1.reshape(-1)]
-    i2 = _np_nearest(R, _np_n2(R), ids2, C2, C2n2, p2)
-    coarse = ids1[i1.reshape(-1)]
-    qes = [[float(x) for x in row] for row in Q]  # once per query
-    out = []
-    for row in range(R.shape[0]):
-        q = row // p1
-        qe = qes[q]
-        for c2 in i2[row]:
-            out.append(
-                (
-                    int(qrows[q].query_id),
-                    qe,
-                    float(qn2[q]),
-                    int(coarse[row]) * k2 + int(ids2[c2]),
-                )
-            )
-    probes = _probes_rel(spark, out)
-    return probes, sorted({row[3] for row in out})
 
 
 def _probes_rel(spark: SparkSession, out: list) -> DataFrame:
@@ -2425,15 +2114,12 @@ def _probes_driver(
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
     # n2 via the same sequential fold (d loop), not np.dot's pairwise sum
     qn2 = _np_n2(Q)
-    dist = (qn2[:, None] - 2.0 * _seq_dot(Q, CE)) + CN2[None, :]
-    out = []
-    for i, qid in enumerate(qids):
-        order = np.lexsort((cell_ids, dist[i]))[:n_probe]
-        for j in order:
-            out.append(
-                (int(qid), [float(x) for x in Q[i]], float(qn2[i]),
-                 int(cell_ids[j]))
-            )
+    nearest = _np_nearest(Q, qn2, cell_ids, CE, CN2, n_probe)
+    out = [
+        (int(qid), [float(x) for x in Q[i]], float(qn2[i]), int(cell_ids[j]))
+        for i, qid in enumerate(qids)
+        for j in nearest[i]
+    ]
     probes = _probes_rel(spark, out)
     return probes, sorted({row[3] for row in out})
 
@@ -2445,7 +2131,6 @@ def ann_index_search(
     k: int = TOP_K,
     n_probe: int = 2,
     where: str | None = None,
-    n_probe2: int = 2,
 ) -> DataFrame:
     """Exact-cosine top-``k`` within the ``n_probe`` probed cells per
     query, reading ONLY those cells' files.
@@ -2474,9 +2159,7 @@ def ann_index_search(
     matches exist in un-probed ones — raise ``n_probe`` for selective
     filters.
     """
-    cand = _search_candidates(
-        spark, index_dir, queries, n_probe, where, n_probe2
-    )
+    cand = _search_candidates(spark, index_dir, queries, n_probe, where)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("cand_id")
     )
@@ -2494,7 +2177,6 @@ def ann_index_range_search(
     threshold: float,
     n_probe: int = 2,
     where: str | None = None,
-    n_probe2: int = 2,
 ) -> DataFrame:
     """All candidates with exact ``cosine >= threshold`` within the
     probed cells per query — the RANGE-query twin of
@@ -2512,9 +2194,7 @@ def ann_index_range_search(
     documented on the top-k search applies: matches in un-probed cells
     are missed, raise ``n_probe`` to trade cost for recall.
     """
-    cand = _search_candidates(
-        spark, index_dir, queries, n_probe, where, n_probe2
-    )
+    cand = _search_candidates(spark, index_dir, queries, n_probe, where)
     return cand.filter(F.col("cosine") >= threshold)
 
 
@@ -2524,7 +2204,6 @@ def ann_index_screen_batch(
     batch: DataFrame,
     threshold: float,
     n_probe: int = 2,
-    n_probe2: int = 2,
     where: str | None = None,
     tile_target: int | None = None,
 ) -> DataFrame:
@@ -2543,10 +2222,8 @@ def ann_index_screen_batch(
     driver except its DISTINCT probed-cell ids (bounded by ``n_cells``
     longs, the same compile-time pruning trick as the search): cell
     assignment runs in the plan — the shared
-    :func:`similarity.ivf_probe_cells` expression for single-level
-    indexes, the shared :func:`_np_assign_2l` numpy math distributed
-    per Arrow batch for two-level. The probed segments are still
-    partition-pruned: a batch that only touches some cells reads only
+    :func:`similarity.ivf_probe_cells` expression. The probed segments
+    are still partition-pruned: a batch that only touches some cells reads only
     those cells' files on every segment leg (same PartitionFilters gate
     as the search; a batch spread over every cell legitimately reads
     every cell — that is the work, not a missed optimization).
@@ -2582,21 +2259,16 @@ def ann_index_screen_batch(
     feats = _with_norm2(
         batch.select(F.col("vec_id").alias("query_id"), "embedding")
     )
-    if meta["levels"] == 2:
-        assigned_q = _probe_cells_2l_plan(
-            spark, index_dir, meta, feats, n_probe, n_probe2
-        )
-    else:
-        cb = (
-            spark.read.parquet(os.path.join(index_dir, "codebook"))
-            .agg(F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb"))
-        )
-        assigned_q = feats.crossJoin(F.broadcast(cb)).select(
-            "query_id",
-            F.col("e").alias("qe"),
-            F.col("n2").alias("qn2"),
-            ivf_probe_cells(n_probe).alias("cells"),
-        )
+    cb = (
+        spark.read.parquet(os.path.join(index_dir, "codebook"))
+        .agg(F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb"))
+    )
+    assigned_q = feats.crossJoin(F.broadcast(cb)).select(
+        "query_id",
+        F.col("e").alias("qe"),
+        F.col("n2").alias("qn2"),
+        ivf_probe_cells(n_probe).alias("cells"),
+    )
     # pin the assignment BEFORE deriving anything from it (the same
     # hazard ann_index_append pins against): the probed-cells list, the
     # sizing counts, and the returned plan must all see the same rows —
@@ -2605,9 +2277,9 @@ def ann_index_screen_batch(
     # rows in the final plan but its home cells missing from the prune
     # list, silently screening them against NOTHING (r13 review catch).
     # Pinned PRE-explode — one row per query with its probe-cell ARRAY —
-    # so each embedding is materialized once, not n_probe (x n_probe2)
-    # times (second review catch); the eager checkpoint also computes
-    # the assignment once instead of per downstream job.
+    # so each embedding is materialized once, not n_probe times (second
+    # review catch); the eager checkpoint also computes the assignment
+    # once instead of per downstream job.
     assigned_q = assigned_q.localCheckpoint(eager=True)
     probes = assigned_q.select(
         "query_id", "qe", "qn2", F.explode("cells").alias("cell_id")
@@ -2745,77 +2417,12 @@ def ann_index_screen_batch(
     )
 
 
-def _probe_cells_2l_plan(
-    spark: SparkSession,
-    index_dir: str,
-    meta: dict,
-    feats: DataFrame,
-    n_probe: int,
-    n_probe2: int,
-) -> DataFrame:
-    """(query_id, qe, qn2, cells) — one row per query carrying its
-    ``n_probe x n_probe2`` composite probe-cell ARRAY — computed PER
-    ARROW BATCH in the plan: the distributed twin of
-    :func:`_probes_driver_2l`, built from the same ``_np_nearest`` /
-    ``_np_n2`` primitives so composite probe ranking cannot drift
-    between the driver and plan paths. Pre-explode on purpose: the
-    screen pins this relation, and an array row stores each embedding
-    once where exploded rows would store it rep times."""
-    import numpy as np
-
-    cb2l = _codebook_2l_driver(spark, index_dir, meta)
-    ids1, C1, C1n2, ids2, C2, C2n2, k2 = cb2l
-    p1 = min(n_probe, len(ids1))
-    p2 = min(n_probe2, len(ids2))
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"query_id": pd.Series([], dtype="int64"),
-                     "qe": pd.Series([], dtype="object"),
-                     "qn2": pd.Series([], dtype="float64"),
-                     "cells": pd.Series([], dtype="object")}
-                )
-                continue
-            Q = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-            qn2 = pdf["n2"].to_numpy(dtype=np.float64)
-            i1 = _np_nearest(Q, qn2, ids1, C1, C1n2, p1)
-            R = np.repeat(Q, p1, axis=0) - C1[i1.reshape(-1)]
-            i2 = _np_nearest(R, _np_n2(R), ids2, C2, C2n2, p2)
-            coarse = ids1[i1.reshape(-1)]
-            comps = (
-                coarse[:, None] * np.int64(k2) + ids2[i2]
-            )  # (rows*p1, p2), query-major
-            rep = p1 * p2
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "qe": pdf["e"].to_numpy(),
-                    "qn2": qn2,
-                    "cells": [
-                        [int(c) for c in row]
-                        for row in comps.reshape(len(pdf), rep)
-                    ],
-                }
-            )
-
-    return feats.mapInPandas(
-        kernel,
-        schema="query_id long, qe array<double>, qn2 double, "
-               "cells array<bigint>",
-    )
-
-
 def _search_candidates(
     spark: SparkSession,
     index_dir: str,
     queries: DataFrame,
     n_probe: int,
     where: str | None,
-    n_probe2: int,
 ) -> DataFrame:
     """(query_id, cand_id, cosine) over the probed cells — the shared
     candidate plan under both the top-k and the range search."""
@@ -2824,12 +2431,7 @@ def _search_candidates(
     # (<= 65536 longs) and usually far smaller — known for free from the
     # driver-side probes; repaid by the scan never opening un-probed
     # cells' files (PartitionFilters IN, plan-gated in tests)
-    if meta["levels"] == 2:
-        probes, cells = _probes_driver_2l(
-            spark, index_dir, meta, queries, n_probe, n_probe2
-        )
-    else:
-        probes, cells = _probes_driver(spark, index_dir, queries, n_probe)
+    probes, cells = _probes_driver(spark, index_dir, queries, n_probe)
     vecs = _load_vectors(spark, index_dir, meta)
     if where is not None:
         if not meta["attrs"]:

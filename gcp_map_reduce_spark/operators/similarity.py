@@ -253,12 +253,8 @@ IVF_DEDUP_CELL_TARGET = 640
 # The codebook is collect_list-ed into ONE broadcast row, so n_cells must
 # stay bounded: 65536 cells x 64 dims x 8 B = 32 MB, the practical
 # broadcast ceiling. Linearity therefore holds up to cap*target/n_probe
-# ~ 21M vectors per dedup scope; beyond that, shard the corpus or train a
-# two-level (coarse -> residual) codebook — IMPLEMENTED for the persisted
-# index as ann_index_build(levels=2) (operators/ann_index.py:
-# _build_two_level — K1 + K2 collected rows cover K1 x K2 composite
-# cells); the one-shot dedup plan keeps the single-level codebook
-# because its SQL oracle mirrors this exact expression.
+# ~ 21M vectors per dedup scope (~42M for the persisted index's one home
+# cell per vector); beyond that, shard the corpus.
 IVF_DEDUP_CELLS_CAP = 65536
 
 
@@ -878,32 +874,17 @@ def ann_screen_recent_half(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_ann(
     spark: SparkSession,
     sf_dir: str,
-    codebook: str = "sampled",
-    kmeans_iters: int = 2,
 ) -> DataFrame:
     """IVF-Flat ANN: assign every vector to its nearest codebook cell,
     probe the IVF_NPROBE nearest cells per query, exact-cosine re-rank
     only within probed cells.
 
-    ``codebook`` selects the coarse quantizer. ``"sampled"`` (default,
-    the registered plan the SQL oracle mirrors) seeds cells with the
-    first K vectors. ``"kmeans"`` refines those seeds with
-    ``kmeans_iters`` Lloyd rounds (``clustering.kmeans_fit`` — the
-    assign step is the same broadcast-argmin as IVF assignment, the
-    update step the same exact integer-scaled mean as
-    ``embedding_centroids``), which evens out cell populations — the
-    lever for skewed real-world embedding distributions, where a
-    sampled codebook leaves hot cells (IVF's known failure mode).
-    Measured honestly on THIS corpus (near-uniform synthetic vectors):
-    Lloyd rounds trim cell skew (max/mean 1.34 -> 1.22 at sf0.01,
-    1.18 -> 1.14 at the 10x stress set) but do NOT lift recall at
-    nprobe=2 (0.92 sampled vs 0.84 kmeans at sf0.01; both 1.0 at
-    stress, where near-dup copies make top-k easy) — so the sampled
-    codebook stays the default and ``"kmeans"`` is the documented
-    option for clustered data. The pytest invariant pins the kmeans
-    path's recall floor and the per-query top-k contract. Plan cost:
-    each Lloyd round is one corpus scan + one K x dim integer-sum
-    shuffle; the search-time plan below is unchanged.
+    The codebook seeds cells with the first K vectors (the registered
+    plan the SQL oracle mirrors). A Lloyd-refined codebook
+    (``clustering.kmeans_fit`` seeds) was measured and removed: on this
+    corpus it trimmed cell skew (max/mean 1.34 -> 1.22 at sf0.01) but
+    lowered recall at nprobe=2 (0.84 vs 0.92 sampled) and cost one
+    corpus scan plus one shuffle per round.
 
     Plan shape for 100 TB: the K-row codebook is aggregated into ONE
     row of struct arrays and broadcast, so cell assignment is a per-row
@@ -927,10 +908,6 @@ def similarity_ivf_ann(
     # adding the Python stage regressed 0.85 -> 1.5 s), and moving the
     # assignment itself into Python would need a driver-side codebook
     # collect this engine deliberately avoids on registered paths.
-    if codebook not in ("sampled", "kmeans"):
-        raise ValueError(
-            f"codebook must be 'sampled' or 'kmeans', got {codebook!r}"
-        )
     emb = _with_norm2(_emb(spark, sf_dir))
     # r17: the filtered legs are constant-bound (vec_id < max(K, |Q|)
     # reaches the scan as a PushedFilter), so the degenerate-split
@@ -942,23 +919,11 @@ def similarity_ivf_ann(
             F.col("vec_id") < max(IVF_CELLS, N_QUERIES)
         )
     )
-    if codebook == "kmeans":
-        from gcp_map_reduce_spark.operators.clustering import kmeans_fit
-
-        _, centroids = kmeans_fit(
-            spark, sf_dir, k=IVF_CELLS, n_iters=kmeans_iters
-        )
-        seeds = centroids.select(
-            F.col("cell_id").cast("long").alias("cell_id"),
-            F.col("c").alias("ce"),
-            _dot(F.col("c"), F.col("c")).alias("cn2"),
-        )
-    else:
-        seeds = small.filter(F.col("vec_id") < IVF_CELLS).select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("e").alias("ce"),
-            F.col("n2").alias("cn2"),
-        )
+    seeds = small.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("e").alias("ce"),
+        F.col("n2").alias("cn2"),
+    )
     # r17, MEASURED AND REJECTED: folding the collected codebook into
     # the plan as a constant literal (driver collect of the 16 seed
     # rows + one F.expr array-of-structs). It removed both duplicated

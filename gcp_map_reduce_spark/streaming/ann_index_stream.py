@@ -108,7 +108,7 @@ def run_streaming_index_maintenance(
       re-sizes ``n_cells``. The callback decides: flag a metric, kick a
       nightly rebuild, or — if it owns the current corpus snapshot —
       rebuild inline with :func:`operators.ann_index.ann_index_rebuild`
-      (lock-held, atomic publish, storage/levels/attrs preserved,
+      (lock-held, atomic publish, storage/attrs preserved,
       ``n_cells`` re-sized; drain-tested in ``tests/test_streaming.py``).
       The stream itself never rebuilds — it does not know the corpus
       dir, and an implicit rebuild mid-ingest would swap the index under

@@ -200,6 +200,9 @@ def _emb_cache_append(store_dir: str, batch_id: int, ids, E, n2, cells) -> None:
 # uncommitted codebook never populates the cache, so the
 # killed-first-write rebuild path is unchanged)
 _CODEBOOK_CACHE: dict[str, tuple] = {}
+# Store dirs the codebook cache holds before it starts over (one entry
+# per store; a reset costs one codebook read, never a different answer).
+CODEBOOK_CACHE_MAX_STORES = 64
 
 
 def _mtime_ns(path: str) -> int | None:
@@ -250,6 +253,9 @@ def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
         np.stack([np.asarray(e, dtype=np.float64) for e in cb_pdf["ce"]]),
         cb_pdf["cn2"].to_numpy(dtype=np.float64),
     )
+    if (store_dir not in _CODEBOOK_CACHE
+            and len(_CODEBOOK_CACHE) >= CODEBOOK_CACHE_MAX_STORES):
+        _CODEBOOK_CACHE.clear()
     _CODEBOOK_CACHE[store_dir] = (_mtime_ns(path), cb)
     return cb
 

@@ -451,26 +451,27 @@ def test_compact_folds_segments_and_preserves_results(
     assert compact_ann_index(spark, d)["segments"] == ["vectors"]
 
 
-def test_arrow_assignment_bit_identical_to_plan(spark, tmp_path):
-    """assign_side='arrow' (numpy d-sequential fold per Arrow batch) and
-    'plan' (ivf_probe_cells expression) must produce the SAME home cell
-    for every vector — the mirrored-arithmetic contract extended to the
-    build path — and therefore bit-identical search results."""
-    from gcp_map_reduce_spark.operators.ann_index import _load_vectors
+def test_arrow_assignment_bit_identical_to_plan(spark):
+    """The two build/append assignment paths _assign_cells chooses
+    between by n_cells — the Arrow kernel (numpy d-sequential fold per
+    batch) and the plan (ivf_probe_cells expression) — must produce the
+    SAME home cell for every vector: the mirrored-arithmetic contract
+    extended to the build path."""
+    from gcp_map_reduce_spark.operators.ann_index import (
+        _assign_cells_arrow,
+        _assign_cells_plan,
+        _codebook_df,
+    )
+    from gcp_map_reduce_spark.operators.similarity import _emb, _with_norm2
 
-    d_plan = str(tmp_path / "plan")
-    d_arrow = str(tmp_path / "arrow")
-    ann_index_build(spark, SF, d_plan, n_cells=N_CELLS, assign_side="plan")
-    ann_index_build(spark, SF, d_arrow, n_cells=N_CELLS, assign_side="arrow")
-    rows = lambda d: sorted(  # noqa: E731
-        (r.vec_id, r.cell_id)
-        for r in _load_vectors(spark, d).select("vec_id", "cell_id").collect()
+    seeds = _codebook_df(spark, SF, N_CELLS)
+    feats = _with_norm2(_emb(spark, SF)).select("vec_id", "e", "n2")
+    rows = lambda df: sorted(  # noqa: E731
+        (r.vec_id, r.cell_id) for r in df.select("vec_id", "cell_id").collect()
     )
-    assert rows(d_plan) == rows(d_arrow)
-    res = lambda d: sorted(  # noqa: E731
-        map(tuple, ann_index_search(spark, d, _queries(spark)).collect())
-    )
-    assert res(d_plan) == res(d_arrow)
+    plan = rows(_assign_cells_plan(feats, seeds))
+    assert len(plan) == 500 and len({c for _, c in plan}) == N_CELLS
+    assert plan == rows(_assign_cells_arrow(feats, seeds))
 
 
 def test_filtered_search_pushdown_and_semantics(spark, tmp_path):
@@ -624,92 +625,6 @@ def test_ids_mirror_invalidated_by_rebuild(spark, tmp_path, split_corpus):
     assert len(ids) == len(set(ids)) == 500
 
 
-def test_two_level_index_end_to_end(spark, tmp_path, split_corpus):
-    """levels=2 (coarse + residual codebook): composite home cells are
-    reproducible from the persisted codebooks, the grown index equals a
-    fresh build, searches prune partitions and hit a recall floor vs
-    brute force, and compaction preserves codebook2."""
-    import numpy as np
-
-    from gcp_map_reduce_spark.operators.ann_index import (
-        _codebook_2l_driver,
-        _load_vectors,
-        _np_assign_2l,
-        ann_index_append,
-        compact_ann_index,
-    )
-
-    K1 = K2 = 4
-    d = str(tmp_path / "idx2l")
-    meta = ann_index_build(
-        spark, SF, d, n_cells=K1, n_cells2=K2, levels=2
-    )
-    assert meta["levels"] == 2 and meta["n_cells"] == K1 * K2
-    vecs = _load_vectors(spark, d).select("vec_id", "e", "cell_id")
-    rows = vecs.collect()
-    assert len(rows) == 500
-    # stored composite home == recompute from the persisted codebooks
-    cb = _codebook_2l_driver(spark, d, ann_index_meta(d))
-    E = np.array([r.e for r in sorted(rows, key=lambda r: r.vec_id)])
-    home, _ = _np_assign_2l(E, cb)
-    stored = [
-        r.cell_id for r in sorted(rows, key=lambda r: r.vec_id)
-    ]
-    assert list(home) == stored
-    # search: per-query top-k contract + recall vs brute force
-    res = ann_index_search(
-        spark, d, _queries(spark), k=5, n_probe=2, n_probe2=2
-    ).collect()
-    by_q: dict[int, list] = {}
-    for r in res:
-        assert r.cand_id != r.query_id
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == set(range(N_QUERIES))
-    exact = {
-        (r.query_id, r.cand_id)
-        for r in similarity_bruteforce(spark, SF).collect()
-    }
-    approx = {(r.query_id, r.cand_id) for r in res}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.3, recall  # 4-of-16 composite cells probed
-    # partition pruning still static on the composite ids
-    plan = (
-        ann_index_search(spark, d, _queries(spark, n=2), n_probe=1,
-                         n_probe2=1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert any(
-        "PartitionFilters" in line and "cell_id" in line and " IN (" in line
-        for line in plan.splitlines()
-    ), plan
-    # grown == fresh: seeds (first K1+K2 vec_ids) live in the subset
-    grown = str(tmp_path / "grown2l")
-    ann_index_build(
-        spark, split_corpus, grown, n_cells=K1, n_cells2=K2, levels=2
-    )
-    ann_index_append(spark, grown, _rest_batch(spark))
-    rows_g = sorted(
-        (r.vec_id, r.cell_id)
-        for r in _load_vectors(spark, grown)
-        .select("vec_id", "cell_id").collect()
-    )
-    rows_f = sorted((r.vec_id, r.cell_id) for r in rows)
-    assert rows_g == rows_f
-    res_g = sorted(
-        map(tuple, ann_index_search(spark, grown, _queries(spark)).collect())
-    )
-    res_f = sorted(
-        map(tuple, ann_index_search(spark, d, _queries(spark)).collect())
-    )
-    assert res_g == res_f
-    # compaction carries codebook2 and changes nothing observable
-    compact_ann_index(spark, grown)
-    assert os.path.isdir(os.path.join(grown, "codebook2"))
-    assert res_g == sorted(
-        map(tuple, ann_index_search(spark, grown, _queries(spark)).collect())
-    )
-
-
 def test_range_search_exact_on_full_probe_and_subset_on_partial(
     spark, tmp_path
 ):
@@ -802,27 +717,6 @@ def test_semantic_decontam_exact_at_driver_scale(spark):
     } and len(got) > 0
 
 
-def test_two_level_with_attrs_filtered_search(spark, tmp_path):
-    """attrs ride through the two-level build kernel and filtered search
-    works on composite cells — closing the levels x attrs matrix."""
-    d = str(tmp_path / "idx2la")
-    ann_index_build(
-        spark, SF, d, n_cells=4, n_cells2=4, levels=2, attrs=["label"]
-    )
-    meta = ann_index_meta(d)
-    assert meta["levels"] == 2 and meta["attrs"] == ["label"]
-    res = ann_index_search(
-        spark, d, _queries(spark), k=5, where="label = 3"
-    ).collect()
-    labels = {
-        r.vec_id: r.label
-        for r in spark.read.parquet(SF + "/embeddings.parquet")
-        .select("vec_id", "label").collect()
-    }
-    assert len(res) > 0
-    assert all(labels[r.cand_id] == 3 for r in res)
-
-
 def test_search_plan_isolated_from_concurrent_append(
     spark, tmp_path, split_corpus
 ):
@@ -860,6 +754,43 @@ def test_version_gate(spark, tmp_path):
     os.remove(meta_path)
     with pytest.raises(FileNotFoundError, match="no ANN index"):
         ann_index_search(spark, d, _queries(spark, 2))
+
+
+def test_multi_level_manifest_rejected(tmp_path):
+    """A manifest recording a two-level (coarse + residual) codebook
+    must fail the meta gate with the rebuild error: read as flat, its
+    composite cell ids would be probed with the coarse codebook."""
+    with open(os.path.join(tmp_path, META_FILE), "w") as fh:
+        json.dump({"version": 1, "levels": 2, "n_cells": 16}, fh)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ann_index_meta(str(tmp_path))
+
+
+def test_driver_caches_bounded(spark, tmp_path, monkeypatch):
+    """The per-index driver caches hold at most INDEX_CACHE_MAX_DIRS
+    index dirs: a new dir past the bound starts the cache over, and a
+    cleared entry re-reads to the same value."""
+    import pandas as pd
+
+    import gcp_map_reduce_spark.operators.ann_index as ai
+
+    monkeypatch.setattr(ai, "INDEX_CACHE_MAX_DIRS", 2)
+    ai._CELL_COUNTS_CACHE.clear()
+    ai._CODEBOOK_CACHE.clear()
+    cb = pd.DataFrame(
+        {"cell_id": [0, 1], "ce": [[1.0, 0.0], [0.0, 1.0]], "cn2": [1.0, 1.0]}
+    )
+    for i in range(3):
+        d = str(tmp_path / f"idx{i}")
+        os.makedirs(os.path.join(d, "codebook"))
+        fname = ai._write_cell_counts(d, {"0": i, "1": 1})
+        counts = ai.ann_index_cell_counts(d, {"cell_counts_file": fname})
+        assert dict(counts) == {"0": i, "1": 1}
+        assert len(ai._CELL_COUNTS_CACHE) <= 2
+        cb.to_parquet(os.path.join(d, "codebook", "part-0.parquet"))
+        assert [int(c) for c in ai._codebook_driver(spark, d)[0]] == [0, 1]
+        assert len(ai._CODEBOOK_CACHE) <= 2
+    assert list(ai._CODEBOOK_CACHE) == [str(tmp_path / "idx2")]
 
 
 def test_dup_check_scan_prunes_to_batch_cells(spark, tmp_path, split_corpus):
@@ -954,55 +885,6 @@ def test_ids_mirror_evicts_past_cap(spark, tmp_path, split_corpus, monkeypatch):
         spark, d, rest, collected=True, if_exists="skip"
     )
     assert meta_after["n_vec"] == 500
-
-
-def test_two_level_plan_append_distributes(spark, tmp_path, split_corpus):
-    """r13: two-level appends no longer force the collected path — the
-    default (plan) path distributes the composite assignment through
-    the shared _np_assign_2l kernel via mapInPandas, bit-identical to
-    the collected path and to a fresh build."""
-    from gcp_map_reduce_spark.operators.ann_index import (
-        _load_vectors,
-        ann_index_append,
-    )
-
-    K1 = K2 = 4
-    a = str(tmp_path / "plan2l")
-    b = str(tmp_path / "coll2l")
-    for d in (a, b):
-        ann_index_build(
-            spark, split_corpus, d, n_cells=K1, n_cells2=K2, levels=2
-        )
-    rest = _rest_batch(spark)
-    ann_index_append(spark, a, rest)  # plan path (no collect)
-    ann_index_append(spark, b, rest, collected=True)
-    rows = lambda d: sorted(  # noqa: E731
-        map(
-            tuple,
-            _load_vectors(spark, d).select("vec_id", "n2", "cell_id").collect(),
-        )
-    )
-    assert rows(a) == rows(b)
-    res = lambda d: sorted(  # noqa: E731
-        map(tuple, ann_index_search(spark, d, _queries(spark)).collect())
-    )
-    assert res(a) == res(b)
-    # the plan-path assignment runs as a distributed map (no driver
-    # collect of the batch): its physical plan carries mapInPandas
-    from gcp_map_reduce_spark.operators.ann_index import (
-        _assign_cells_2l,
-        _codebook_2l_driver,
-        ann_index_meta,
-    )
-    from gcp_map_reduce_spark.operators.similarity import _with_norm2
-
-    meta = ann_index_meta(a)
-    batch = _with_norm2(rest).select("vec_id", "e", "n2")
-    assigned = _assign_cells_2l(
-        batch, _codebook_2l_driver(spark, a, meta)
-    )
-    plan = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
 
 
 def test_writer_lock_serializes_and_releases_on_death(
@@ -1528,17 +1410,21 @@ def test_stream_marks_eviction_and_legacy_format():
     assert meta["stream_marks"]["td-old"] == {"batch": 5, "at": 0}
     assert meta["stream_marks"]["td-new"]["batch"] == 0
     # fill past the cap: oldest-by-sequence evicted, newest kept, and
-    # the key being recorded survives even when it would tie
+    # the key being recorded survives even when it would tie; evicting
+    # a recently active lineage warns
     meta = {}
-    for i in range(STREAM_MARKS_CAP + 5):
-        _mark_streams(meta, (f"td-{i:02d}", i))
-        assert len(meta["stream_marks"]) <= STREAM_MARKS_CAP
-        assert f"td-{i:02d}" in meta["stream_marks"]  # never self-evicts
-    kept = sorted(meta["stream_marks"])
-    assert kept == [f"td-{i:02d}" for i in range(5, STREAM_MARKS_CAP + 5)]
-    # re-advancing an existing key refreshes its recency
-    _mark_streams(meta, ("td-05", 99))
-    _mark_streams(meta, ("td-xx", 0))
+    with pytest.warns(UserWarning, match="STREAM_MARKS_CAP"):
+        for i in range(STREAM_MARKS_CAP + 5):
+            _mark_streams(meta, (f"td-{i:02d}", i))
+            assert len(meta["stream_marks"]) <= STREAM_MARKS_CAP
+            assert f"td-{i:02d}" in meta["stream_marks"]  # never self-evicts
+        kept = sorted(meta["stream_marks"])
+        assert kept == [
+            f"td-{i:02d}" for i in range(5, STREAM_MARKS_CAP + 5)
+        ]
+        # re-advancing an existing key refreshes its recency
+        _mark_streams(meta, ("td-05", 99))
+        _mark_streams(meta, ("td-xx", 0))
     assert "td-05" in meta["stream_marks"]  # refreshed, not evicted
     assert "td-06" not in meta["stream_marks"]  # now the oldest: gone
 
@@ -1943,40 +1829,6 @@ def test_screen_batch_matches_range_search_and_prunes(
         F.col("cell_id").isin(sorted(probed))
     )
     assert pruned_files(scan) == len(probed)
-
-
-def test_screen_batch_two_level_matches_driver_probes(
-    spark, tmp_path
-):
-    """Two-level screening distributes the composite probe enumeration
-    (mapInPandas over the same _np_nearest math as _probes_driver_2l);
-    results equal the driver-probed range search bit-for-bit."""
-    from gcp_map_reduce_spark.operators.ann_index import (
-        ann_index_range_search,
-        ann_index_screen_batch,
-    )
-
-    d = str(tmp_path / "idx2l")
-    ann_index_build(spark, SF, d, n_cells=4, n_cells2=4, levels=2)
-    thr = 0.15
-    small = (
-        spark.read.parquet(SF + "/embeddings.parquet")
-        .filter(F.col("vec_id") < 4)
-        .select("vec_id", "embedding")
-    )
-    screened = ann_index_screen_batch(
-        spark, d, small, thr, n_probe=2, n_probe2=2
-    )
-    ranged = ann_index_range_search(
-        spark, d,
-        small.select(F.col("vec_id").alias("query_id"), "embedding"),
-        thr, n_probe=2, n_probe2=2,
-    )
-    assert sorted(map(tuple, screened.collect())) == sorted(
-        map(tuple, ranged.collect())
-    )
-    plan = screened._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan, plan
 
 
 def test_int8_storage_end_to_end(spark, tmp_path, split_corpus):

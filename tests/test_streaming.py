@@ -1183,6 +1183,24 @@ def test_embedding_codebook_commit_rules(spark, tmp_path, driver):
     assert (broken / "part-00000.parquet").read_bytes() == b"not a parquet file"
 
 
+def test_embedding_codebook_cache_bounded(spark, tmp_path, monkeypatch):
+    """The driver codebook cache holds at most CODEBOOK_CACHE_MAX_STORES
+    store dirs: a new store past the bound starts the cache over."""
+    from gcp_map_reduce_spark.streaming import embedding_near_dup as end
+
+    monkeypatch.setattr(end, "CODEBOOK_CACHE_MAX_STORES", 2)
+    end._CODEBOOK_CACHE.clear()
+    committed = pd.DataFrame({"cell_id": [1], "ce": [[1.0, 0.0]], "cn2": [1.0]})
+    for i in range(3):
+        store = str(tmp_path / f"store{i}")
+        os.makedirs(os.path.join(store, "_codebook"))
+        committed.to_parquet(os.path.join(store, "_codebook", "part-0.parquet"))
+        cb = end._driver_codebook(spark, store, committed.iloc[:0], 1)
+        assert [int(c) for c in cb[0]] == [1]
+        assert len(end._CODEBOOK_CACHE) <= 2
+    assert list(end._CODEBOOK_CACHE) == [str(tmp_path / "store2")]
+
+
 def test_streaming_curated_corpus_equals_batch_pipeline(spark, tmp_path):
     """r11 flagship composition at ingest: the streaming curated corpus
     (quality gate -> first-ever exact dedup -> verified near-dup removal)

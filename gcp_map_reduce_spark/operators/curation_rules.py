@@ -19,13 +19,12 @@ alongside text_analysis.py's profiling pass:
   LANG_MARKERS; exact-integer scoring so the oracle replicates it
   bit-for-bit, fused into the same single document pass).
 
-Both are single-scan, shuffle-free, fully JVM-side (regexp + higher-order
-array functions — no Python UDFs): per-row expressions pipeline inside one
-codegen stage and scale linearly to 100 TB. The per-doc frequency fold is
-O(distinct x tokens) per row — bounded by document length, embarrassingly
-parallel, and shuffle-free, which beats an explode+groupBy+join-back
-(two shuffles of the exploded corpus) for bounded-length documents; for
-million-token documents flip to the explode plan.
+Both are single-scan and shuffle-free: one Arrow kernel
+(``mapInPandas``) per row runs every pattern and fold of the rule in
+one pass. The per-doc frequency work is O(tokens) per row (Counters) —
+bounded by document length and embarrassingly parallel, which beats an
+explode+groupBy+join-back (two shuffles of the exploded corpus) for
+bounded-length documents.
 
 Regex portability: patterns are restricted to the Java/RE2 common subset
 (no lookarounds, no backreferences; explicit character classes). DuckDB's
@@ -35,8 +34,7 @@ semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from gcp_map_reduce_spark.functions.text import WS_SPLIT
 from gcp_map_reduce_spark.operators.text_analysis import (
@@ -79,30 +77,28 @@ MAX_RUN = 2
 # function-word markers in the padded lowered text; predicted language
 # = argmax, earlier row winning ties, "und" when every score is zero.
 # Deliberately exact-integer arithmetic (no floats, no model file):
-# Python's str.count, the JVM replace-length expression, and DuckDB's
-# replace-length replica all count the same greedy left-to-right
-# non-overlapping matches, so all three engines are bit-identical by
-# construction, and it rides the same single fused document pass as
-# the other rules (zero extra scans).
+# Python's str.count and DuckDB's replace-length replica count the same
+# greedy left-to-right non-overlapping matches, so kernel and oracle
+# are bit-identical by construction, and it rides the same single fused
+# document pass as the other rules (zero extra scans).
 #
-# The marker VOCABULARY is shared with text_analysis.text_langid (the
-# token-equality profiling form registered via text_profile) — one
-# vocabulary, two mechanisms: that form scores exact token matches
-# over the split array (plus a zh char-class leg this substring form
-# deliberately omits); this form counts padded substrings so it can
-# fuse into the quality kernel's raw-text pass without re-tokenizing.
-# Deriving instead of copying means the two can never drift apart.
+# The marker VOCABULARY is shared with the token-equality language ID
+# of text_analysis.text_profile — one vocabulary, two mechanisms: that
+# form scores exact token matches over the split text (plus a zh
+# char-class leg this substring form deliberately omits); this form
+# counts padded substrings so it can fuse into the quality kernel's
+# raw-text pass without re-tokenizing. Deriving instead of copying
+# means the two can never drift apart.
 #
 # The SCORES of the two surfaces are NOT comparable — only the
 # vocabulary is shared (r15, r14 ADVICE). Non-overlapping substring
 # counting consumes the shared space between ADJACENT marker
 # occurrences: "the the" scores 1 here (the first " the " match eats
-# the middle space) but 2 in text_langid's token-equality form. The
-# undercount is systematic, identical across all three engines of THIS
-# surface (python kernel, JVM expressions, SQL oracle — all
-# non-overlapping), and pinned by the repeated-adjacent-marker case in
-# tests/test_curation_pii.py. Compare lang_pred across surfaces if you
-# must; never lang_score.
+# the middle space) but 2 in text_profile's token-equality form. The
+# undercount is systematic, identical in the kernel and the SQL oracle
+# (both non-overlapping), and pinned by the repeated-adjacent-marker
+# case in tests/test_curation_pii.py. Compare lang_pred across surfaces
+# if you must; never lang_score.
 LANG_MARKERS: list[tuple[str, list[str]]] = [
     (lang, [f" {w} " for w in words])
     for lang, words in _PROFILE_LANG_MARKERS.items()
@@ -132,40 +128,13 @@ _LANG_SQL_CASE = (
 
 
 def _lang_id_py(text: str) -> tuple[str, int]:
-    """Kernel-side scorer — the reference implementation the expression
-    form and the SQL oracle replicate exactly."""
+    """Kernel-side scorer — the SQL oracle replicates it exactly."""
     s = " " + text.lower() + " "
     pred, best = "und", 0
     for lang, markers in LANG_MARKERS:
         sc = sum(s.count(m) for m in markers)
         if sc > best:  # strict: the earlier language wins ties
             pred, best = lang, sc
-    return pred, best
-
-
-def _lang_cols(text_col: Column) -> tuple[Column, Column]:
-    """(lang_pred, lang_score) as JVM expressions — replace-length
-    counting, same padding/tie-break/und rules as :func:`_lang_id_py`."""
-    padded = F.concat(F.lit(" "), F.lower(text_col), F.lit(" "))
-
-    def count_m(m: str) -> Column:
-        return (
-            (F.length(padded) - F.length(F.replace(padded, F.lit(m), F.lit(""))))
-            / F.lit(len(m))
-        ).cast("int")
-
-    scores = []
-    for lang, markers in LANG_MARKERS:
-        sc = count_m(markers[0])
-        for m in markers[1:]:
-            sc = sc + count_m(m)
-        scores.append((lang, sc))
-    best = scores[0][1]
-    for _, sc in scores[1:]:
-        best = F.greatest(best, sc)
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang, sc in scores:
-        pred = pred.when(sc == best, F.lit(lang))
     return pred, best
 
 
@@ -196,81 +165,36 @@ SELECT doc_id, n_emails, n_phones, n_ips,
 FROM scrubbed
 """,
 )
-def pii_scrub(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction pass: count and replace emails, phone numbers, and
     IPv4 addresses with typed placeholders. Deterministic pseudo-PII is
     injected from ``doc_id`` first (the synthetic corpus is word-only) so
     the redaction machinery is value-checked end-to-end — the oracle
     recomputes the identical injection, counts, and scrubbed-text hash.
 
-    ``engine="arrow"`` (default, r8): ONE ``mapInPandas`` kernel per row
-    doing the three ``re`` passes in C (findall counts on the salted
+    ONE ``mapInPandas`` kernel per row (:func:`_pii_scrub_kernel`, r8)
+    does the three ``re`` passes in C (findall counts on the salted
     text + the chained sub replacements) — measured **4.79 -> 0.92 s at
-    the sf1 stress set (5.2x)**; every one of the 32 tasks in the
-    expression form's heavy stage ran ~4.5 s of Java-regex CPU (median
-    == max, so this was compute cost, not a straggler, and the fix is
-    cheaper passes, not more fan-out). ``engine="expr"`` keeps the JVM
-    expression form as the executable spec the SQL oracle mirrors;
-    row-identity between the two is pytest-gated on the corpus and an
-    adversarial PII set (``tests/test_curation_pii.py``) — the
-    kernel-boundary rule from SCALING.md applied once more.
+    the sf1 stress set (5.2x)** against the JVM expression form
+    (``regexp_extract_all`` / ``regexp_replace``); every one of the 32
+    tasks in that form's heavy stage ran ~4.5 s of Java-regex CPU
+    (median == max, so this was compute cost, not a straggler, and the
+    fix is cheaper passes, not more fan-out).
 
-    Plan (either engine): one documents scan, zero shuffles, linear in
-    text length; degenerate-split fan-out via ``load_corpus``.
+    Plan: one documents scan, zero shuffles, linear in text length;
+    degenerate-split fan-out via ``load_corpus``.
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine: {engine!r}")
     doc = load_corpus(spark, sf_dir, "documents")
-    if engine == "arrow":
-        return _pii_scrub_kernel(doc.select("doc_id", "text"))
-    return _pii_scrub_expr(doc)
-
-
-def _pii_scrub_expr(doc: DataFrame) -> DataFrame:
-    """JVM expression form over a (doc_id, text, ...) DataFrame — the
-    executable spec the SQL oracle mirrors."""
-    salted = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com call +1-555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        F.lit(" from 10.0."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".7"),
-    )
-    clean = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(salted, EMAIL_RE, "<EMAIL>"),
-            PHONE_RE,
-            PHONE_REPL_SPARK,
-        ),
-        IPV4_RE,
-        "<IP>",
-    )
-    return doc.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(salted, F.lit(EMAIL_RE), F.lit(0))).alias(
-            "n_emails"
-        ),
-        F.size(F.regexp_extract_all(salted, F.lit(PHONE_RE), F.lit(0))).alias(
-            "n_phones"
-        ),
-        F.size(F.regexp_extract_all(salted, F.lit(IPV4_RE), F.lit(0))).alias("n_ips"),
-        F.length(clean).alias("clean_len"),
-        F.md5(clean).alias("clean_hash"),
-    )
+    return _pii_scrub_kernel(doc.select("doc_id", "text"))
 
 
 def _pii_scrub_kernel(doc: DataFrame) -> DataFrame:
     """(doc_id, text) -> the pii_scrub row, one Arrow batch at a time.
-    Semantics mirror the expression form EXACTLY: counts are matches on
-    the salted text (each pattern independently), the replacement chain
-    is email -> phone -> IP with the phone guard-char backreference.
-    Patterns live in the Java/RE2/Python-re common subset (module
-    docstring), and expr==arrow row identity is pytest-gated."""
+    Counts are matches on the salted text (each pattern independently),
+    the replacement chain is email -> phone -> IP with the phone
+    guard-char backreference. Patterns live in the Java/RE2/Python-re
+    common subset (module docstring); row identity with the JVM regex
+    form is pytest-gated on adversarial PII strings."""
     import hashlib
     import re
 
@@ -295,7 +219,7 @@ def _pii_scrub_kernel(doc: DataFrame) -> DataFrame:
             }
             for i, t in zip(ids, texts):
                 if t is None:
-                    # expr parity: concat(NULL, ...) is NULL, so every
+                    # Spark-SQL parity: concat(NULL, ...) is NULL, so every
                     # computed column is null (the f-string would
                     # otherwise stringify None — silent divergence, not
                     # even a crash)
@@ -321,25 +245,6 @@ def _pii_scrub_kernel(doc: DataFrame) -> DataFrame:
         kernel,
         "doc_id long, n_emails int, n_phones int, n_ips int, "
         "clean_len int, clean_hash string",
-    )
-
-
-def _max_run(tokens: Column) -> Column:
-    """Longest run of consecutive identical tokens, as a single fold."""
-    return F.aggregate(
-        tokens,
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, t: F.struct(
-            t.alias("prev"),
-            F.when(t == acc.prev, acc.run + F.lit(1)).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best,
-                F.when(t == acc.prev, acc.run + F.lit(1)).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
     )
 
 
@@ -405,113 +310,37 @@ FROM m JOIN runs ON m.doc_id = runs.doc_id
   JOIN lpred ON m.doc_id = lpred.doc_id
 """,
 )
-def quality_rules(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style repetition quality gate, per document: token count,
     distinct-token ratio, most-frequent-token fraction, most-frequent-
     bigram fraction, longest identical-token run, and the combined
     keep/drop decision. All ratios are single double divisions of exact
-    integer counts, so values are bit-identical across engines.
+    integer counts, so values are bit-identical to the oracle's.
 
-    ``engine="arrow"`` (default, r8): one ``mapInPandas`` pass per row —
-    token Counters for the frequency maxima, ``itertools.groupby`` for
-    the run length — replacing the interpreted O(distinct x tokens)
-    higher-order-array folds: **1.32 -> 0.74 s at the sf1 stress set,
-    0.53 -> 0.45 s at sf0.1**, row-identical (the kernel-boundary rule:
-    many interpreted passes over the same per-row data). ``"expr"``
-    keeps the JVM expression form as the executable spec the SQL oracle
-    mirrors; row identity is pytest-gated on the corpus and an
-    adversarial set (``tests/test_curation_pii.py``).
+    One ``mapInPandas`` pass per row (:func:`_quality_rules_kernel`,
+    r8) — token Counters for the frequency maxima, ``itertools.groupby``
+    for the run length — in place of the interpreted O(distinct x
+    tokens) higher-order-array folds of the JVM expression form:
+    **1.32 -> 0.74 s at the sf1 stress set (1.8x), 0.53 -> 0.45 s at
+    sf0.1**, row-identical (the kernel-boundary rule: many interpreted
+    passes over the same per-row data).
 
-    Plan (either engine): one documents scan, zero shuffles. The DuckDB
-    oracle computes max_run relationally via gaps-and-islands over an
-    unnested (i, token) list — deliberately a DIFFERENT algorithm than
-    either engine's scan, which makes the cross-check stronger."""
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine: {engine!r}")
+    Plan: one documents scan, zero shuffles. The DuckDB oracle computes
+    max_run relationally via gaps-and-islands over an unnested (i,
+    token) list — deliberately a DIFFERENT algorithm than the kernel's
+    scan, which makes the cross-check stronger."""
     # the per-row frequency work is the heaviest CPU in the engine; a
     # small local file scans as one split and would serialize it — fan
     # out only in that degenerate case
     doc = load_corpus(spark, sf_dir, "documents")
-    if engine == "arrow":
-        return _quality_rules_kernel(doc.select("doc_id", "text"))
-    tokens = F.split(F.lower(F.col("text")), WS_SPLIT)
-    lang_pred, lang_score = _lang_cols(F.col("text"))
-    d = doc.select(
-        "doc_id",
-        tokens.alias("t"),
-        lang_pred.alias("lang_pred"),
-        lang_score.alias("lang_score"),
-    )
-    distinct = F.array_distinct(F.col("t"))
-    top_cnt = F.array_max(
-        F.transform(
-            distinct, lambda u: F.size(F.filter(F.col("t"), lambda x: x == u))
-        )
-    )
-    n = F.size(F.col("t"))
-    bigrams = F.when(
-        n >= 2,
-        F.expr(
-            "transform(sequence(2, size(t)), i ->"
-            " concat(element_at(t, i-1), ' ', element_at(t, i)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    d = d.select(
-        "doc_id",
-        "t",
-        n.alias("n_tokens"),
-        F.size(distinct).alias("n_distinct"),
-        top_cnt.alias("top_cnt"),
-        bigrams.alias("bigrams"),
-        _max_run(F.col("t")).alias("max_run"),
-        "lang_pred",
-        "lang_score",
-    )
-    top_bigram_cnt = F.coalesce(
-        F.array_max(
-            F.transform(
-                F.array_distinct(F.col("bigrams")),
-                lambda u: F.size(F.filter(F.col("bigrams"), lambda x: x == u)),
-            )
-        ),
-        F.lit(0),
-    )
-    distinct_ratio = F.col("n_distinct") * F.lit(1.0) / F.col("n_tokens")
-    top_token_frac = F.col("top_cnt") * F.lit(1.0) / F.col("n_tokens")
-    return d.select(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        distinct_ratio.alias("distinct_ratio"),
-        top_token_frac.alias("top_token_frac"),
-        F.when(
-            F.col("n_tokens") >= 2,
-            top_bigram_cnt * F.lit(1.0) / (F.col("n_tokens") - F.lit(1)),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("top_bigram_frac"),
-        "max_run",
-        "lang_pred",
-        "lang_score",
-        (
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (distinct_ratio >= MIN_DISTINCT_RATIO)
-            & (top_token_frac <= MAX_TOP_TOKEN_FRAC)
-            & (F.col("max_run") <= MAX_RUN)
-        )
-        .cast("int")
-        .alias("keep"),
-    )
+    return _quality_rules_kernel(doc.select("doc_id", "text"))
 
 
 def _quality_rules_kernel(doc: DataFrame) -> DataFrame:
     """(doc_id, text) -> the quality_rules row, one Arrow batch at a
-    time. Tokenization mirrors the expression form exactly:
-    ``re.split(WS_SPLIT, text.lower())`` reproduces Java
-    ``split(lower(text), WS_SPLIT)`` including empty leading/trailing
-    tokens (both engines keep them and count them as tokens — the same
+    time. ``re.split(WS_SPLIT, text.lower())`` reproduces Java and
+    DuckDB ``split(lower(text), WS_SPLIT)`` exactly, including empty
+    leading/trailing tokens (kept and counted as tokens — the same
     LOWERED-RAW-split equivalence the profile kernel's adversarial
     Unicode gate pins). Counters give the token/bigram frequency maxima,
     ``itertools.groupby`` the longest identical run; ratios are the
@@ -535,7 +364,7 @@ def _quality_rules_kernel(doc: DataFrame) -> DataFrame:
             }
             for i, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
                 if text is None:
-                    # expr parity: split(lower(NULL)) is NULL, every
+                    # Spark-SQL parity: split(lower(NULL)) is NULL, every
                     # derived metric is null — EXCEPT top_bigram_frac,
                     # whose when(n_tokens >= 2, ...).otherwise(0.0)
                     # treats the null condition as false. The lang

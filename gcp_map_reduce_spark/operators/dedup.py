@@ -15,9 +15,7 @@ These are the standard large-corpus dedup ladder:
 Scale notes: the prefix join in ``dedup_ngram_jaccard`` is exact at every
 density but still quadratic in the size of a dup clique sharing a prefix
 gram; at 100 TB you run ``dedup_minhash`` (bounded shuffle: k signature
-longs per doc) and verify only its candidates. Hot-shingle
-skew is handled by dropping top-percentile shingles (like stop-words),
-controlled by ``max_shingle_df``.
+longs per doc) and verify only its candidates.
 
 Hash family: every sketch here hashes through ``portable_hash64`` — a
 60-bit integer parsed from the md5 hex digest. md5 is available in both
@@ -30,9 +28,8 @@ MinHash/gram features: one numpy core (``_gram_features``) behind two
 front halves — the fused md5 text kernel (``doc_text_features_arrow``)
 and the JVM token-hash kernel (``minhash_features_arrow``, the xxhash64
 family) — picked in one place (``minhash_features_for``); every corpus
-consumer loads through ``doc_minhash_features``. The higher-order-
-function forms (``gram_hash_arrays_for``, ``minhash_signatures_for``)
-are the executable spec the kernels are tested against.
+consumer loads through ``doc_minhash_features``. The SimHash
+fingerprints are one Arrow kernel too (``simhash_fingerprints``).
 """
 
 from __future__ import annotations
@@ -136,85 +133,7 @@ def dedup_exact_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- shingling (shared by jaccard / minhash / simhash) --------------------
-
-
-def shingle_arrays_for(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sh_arr) for an arbitrary (doc_id, text) DataFrame — the
-    DF-level core of :func:`doc_shingle_arrays`, reused by the streaming
-    near-dup operator on micro-batch DataFrames."""
-    w = F.filter(
-        F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT),
-        lambda t: t != "",
-    )
-    grams = w
-    for j in range(1, n):
-        shifted = F.slice(w, j + 1, F.greatest(F.size(w) - j, F.lit(0)))
-        grams = F.zip_with(
-            grams,
-            shifted,
-            lambda g, t: F.when(
-                g.isNull() | t.isNull(), F.lit(None)
-            ).otherwise(F.concat(g, F.lit(" "), t)),
-        )
-    sh_arr = F.array_distinct(F.filter(grams, lambda x: x.isNotNull()))
-    return docs.select("doc_id", sh_arr.alias("sh_arr"))
-
-
-def doc_shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
-    """(doc_id, sh_arr: array<string>) — the DISTINCT n-token shingles of
-    each document as one array row. Zero shuffle on the scale path:
-    per-doc array work only (see ``load_corpus`` — an Exchange is added
-    ONLY when the scan under-splits a tiny local file).
-
-    Each document is one row, so shingles are built array-natively with
-    zip_with over shifted slices of the token array — ~2x faster than a
-    posexplode + lead()-window formulation (and that one shuffles every
-    token on doc_id first). Shifted zips pad with null past the shorter
-    end; nulls mark incomplete trailing grams and are filtered before
-    distinct.
-    """
-    docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
-    return shingle_arrays_for(docs, n)
-
-
-def doc_shingles(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """DISTINCT (doc_id, shingle) rows — the exploded form of
-    :func:`doc_shingle_arrays`, for inverted-index-style self-joins.
-
-    ``max_shingle_df`` drops shingles appearing in more than that many docs
-    (stop-shingles) — the skew guard for the self-join path at scale.
-    """
-    out = doc_shingle_arrays(spark, sf_dir, n).select(
-        "doc_id", F.explode("sh_arr").alias("sh")
-    )
-    if max_shingle_df is not None:
-        hot = (
-            out.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-        )
-        out = out.join(hot, "sh", "left_anti")
-    return out
-
-
-_SHINGLES_SQL = f"""
-toks AS (
-  SELECT doc_id, regexp_split_to_array({sql_normalize('text')}, '{WS_SPLIT}') AS w
-  FROM documents
-),
-shingles AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-  FROM toks, UNNEST(range(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 3
-)
-"""
+# -- gram hashes (shared by the jaccard / minhash oracles) -----------------
 
 
 def _gram_hashes_subquery(n: int = 3, pred: str = "TRUE") -> str:
@@ -412,70 +331,23 @@ NUM_HASHES = 32  # signature length k
 BANDS = 8  # b bands of r = k/b rows; P(collide) = 1-(1-j^r)^b
 
 
-def _token_hash_expr(fast_hash: bool) -> Column:
-    """array<bigint> of per-token base hashes (mod P) for the ``text``
-    column, as a JVM expression. ``fast_hash=True`` (xxhash64) is the
-    front half of :func:`minhash_features_for`'s fast family; the md5
-    form hashes every token OCCURRENCE and stays only as the reference
-    the fused text kernel is tested against."""
+def _token_hash_expr() -> Column:
+    """array<bigint> of per-token xxhash64 base hashes (mod P) for the
+    ``text`` column, as a JVM expression — the front half of
+    :func:`minhash_features_for`'s fast family."""
     w = F.filter(
         F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT),
         lambda t: t != "",
     )
-    if fast_hash:
-        base = lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE31))  # noqa: E731
-    else:
-        base = lambda s: portable_hash64(s) % MERSENNE31  # noqa: E731
-    return F.transform(w, base)
+    return F.transform(w, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE31)))
 
-
-def gram_hash_arrays_for(
-    docs: DataFrame, n: int = 3, fast_hash: bool = False
-) -> DataFrame:
-    """(doc_id, gh_arr: array<bigint>) — DISTINCT rolling hashes of each
-    doc's n-token shingles as higher-order-function expressions: hash
-    each TOKEN once (md5 portable / xxhash64 fast), then combine with
-    the exact integer polynomial ``((h1*C + h2) % P) * C + h3) % P`` via
-    the same shifted zip_with chain as the string shingles. All operands
-    stay under 2^52 (h < 2^31, C < 2^20), so the arithmetic is exact in
-    both Spark longs and DuckDB BIGINTs (null padding past the shorter
-    slice propagates through the arithmetic and is filtered, same as the
-    string form). The executable spec of the Arrow feature kernels
-    (pytest-gated); every operator runs :func:`minhash_features_for` instead."""
-    th = _token_hash_expr(fast_hash)
-    g = th
-    for j in range(1, n):
-        shifted = F.slice(th, j + 1, F.greatest(F.size(th) - j, F.lit(0)))
-        g = F.zip_with(
-            g, shifted, lambda a, b: (a * ROLL_C + b) % MERSENNE31
-        )
-    gh_arr = F.array_distinct(F.filter(g, lambda x: x.isNotNull()))
-    return docs.select("doc_id", gh_arr.alias("gh_arr"))
 
 # Fixed affine hash family over the Mersenne prime: h_i(x) = (A_i*x + B_i)
-# mod P. Literal coefficients are embedded in BOTH the Spark expressions
-# and the oracle SQL, so the two engines compute identical signatures.
+# mod P. Literal coefficients are embedded in BOTH the feature kernel
+# and the oracle SQL, so the two compute identical signatures.
 _rng = np.random.RandomState(1337)
 MINHASH_A = [int(v) for v in _rng.randint(1, MERSENNE31, NUM_HASHES, dtype=np.int64)]
 MINHASH_B = [int(v) for v in _rng.randint(0, MERSENNE31, NUM_HASHES, dtype=np.int64)]
-
-
-def minhash_signatures_for(gh: DataFrame) -> DataFrame:
-    """Signatures for a (doc_id, gh_arr) gram-hash DataFrame (see
-    :func:`gram_hash_arrays_for`) as one higher-order-function fold —
-    the reference the Arrow signature arithmetic is tested against."""
-    init = F.array(*[F.lit(MERSENNE31).cast("long")] * NUM_HASHES)
-    remaps = lambda h: F.array(  # noqa: E731
-        *[(F.lit(a) * h + F.lit(b)) % MERSENNE31 for a, b in zip(MINHASH_A, MINHASH_B)]
-    )
-    sig = F.aggregate(
-        F.col("gh_arr"),
-        init,
-        lambda acc, h: F.zip_with(acc, remaps(h), lambda x, y: F.least(x, y)),
-    )
-    return (
-        gh.filter(F.size("gh_arr") > 0).select("doc_id", sig.alias("sig"))
-    )
 
 
 # Feature and SimHash kernels reach only module constants, numpy, pandas
@@ -526,10 +398,10 @@ def _gram_features(n: int, want_sig: bool, want_arr: bool):
     60-bit hashes).
 
     A NULL array (NULL text) or one with fewer than ``n`` tokens has no
-    gram and produces no row — the size>0 semantics of the HOF form.
+    gram and produces no row.
     Signatures are the k affine remaps' per-segment minima over the raw
-    gram stream (``array_distinct`` is skipped on purpose: duplicates
-    cannot change a minimum); gram arrays are each doc's distinct values,
+    gram stream (duplicates cannot change a minimum, so none are
+    dropped first); gram arrays are each doc's distinct values,
     sorted, from one stable (segment, value) sort and a first-in-run
     mask — no Python loop over docs. Work for an output that was not
     asked for is skipped. Exactness: h < 2^31 and C < 2^20 keep every
@@ -599,7 +471,7 @@ def minhash_features_arrow(
 ) -> DataFrame:
     """(doc_id[, sig][, gh_arr]) from a (doc_id, th_arr) token-hash
     DataFrame — the JVM front half: the per-token hash already ran as a
-    Spark expression (:func:`_token_hash_expr`), and this
+    Spark expression (e.g. :func:`_token_hash_expr`), and this
     ``mapInPandas`` pass runs only the numpy core
     (:func:`_gram_features`).
 
@@ -640,10 +512,10 @@ def doc_text_features_arrow(
     sf0.1, most of it the per-occurrence md5). Here each DISTINCT token
     is md5-hashed once per task (:func:`_md5_token_hasher`), after the
     C-level Python twin of the normalize chain. ``int(md5(utf8)[:15
-    hex], 16)`` IS ``conv(substring(md5(w),1,15),16,10)``, mod the same
-    prime, so the output is bit-equal to the JVM md5 front half
-    (pytest-gated) and every downstream registered query re-checks
-    against the DuckDB oracle."""
+    hex], 16)`` IS ``conv(substring(md5(w),1,15),16,10)``
+    (:func:`portable_hash64`), mod the same prime, so the output is
+    bit-equal to a JVM md5 front half (pytest-gated) and every
+    downstream registered query re-checks against the DuckDB oracle."""
     schema = _features_schema(want_sig, want_arr)
     core = _gram_features(n, want_sig, want_arr)
     h64 = _md5_token_hasher()
@@ -689,7 +561,7 @@ def minhash_features_for(
     operators and both streaming ``foreachBatch`` bodies call this."""
     if fast_hash:
         return minhash_features_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")),
+            docs.select("doc_id", _token_hash_expr().alias("th_arr")),
             n, want_sig, want_arr,
         )
     return doc_text_features_arrow(docs, n, want_sig, want_arr)
@@ -712,9 +584,8 @@ def doc_minhash_features(
     shingle)-exploded groupBy formulation would shuffle k longs per doc.
     Docs shorter than ``n`` tokens are dropped, matching the exploded/
     grouped semantics. ``sig`` feeds the LSH bands, ``gh_arr`` (the
-    DISTINCT shingle fingerprints — the hashed replacement for
-    :func:`doc_shingle_arrays`) the exact Jaccard; ask only for what the
-    caller reads."""
+    DISTINCT shingle fingerprints) the exact Jaccard; ask only for what
+    the caller reads."""
     docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
     return minhash_features_for(docs, n, fast_hash, want_sig, want_arr)
 
@@ -883,106 +754,70 @@ SIMHASH_BITS = 60  # bits of the portable 60-bit token hash
 _CHUNK_BITS = 15  # band width for the Hamming-distance join (4 chunks)
 
 
-def simhash_fingerprints(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per doc from token-frequency-weighted bit votes.
 
     For each bit j: vote = sum over distinct tokens of (+cnt if bit j of
     portable_hash64(token) set else -cnt); bit j of the fingerprint =
-    vote > 0.
+    vote > 0. A doc without a token gets no fingerprint.
 
-    ``engine="arrow"`` (default, r8): ZERO-shuffle — one ``mapInPandas``
-    pass per doc runs the proven C-level normalize chain, a token
-    Counter, the md5 hash per DISTINCT word (the per-task memo of
-    :func:`_md5_token_hasher` — the corpus vocabulary is tiny next to
-    token occurrences) and
-    the 60 votes as one numpy sign-matrix product. Replaces the
-    tokenize-explode + (doc, word) groupBy + 60-column doc groupBy
-    pipeline (two corpus-scale shuffles). Votes are exact integer sums
-    (order-free), the hash is ``int(md5[:15], 16)`` — identical bytes
-    hashed (tokens are pure ASCII after the fold) — so fingerprints are
-    bit-equal to the expression form (pytest-gated).
-
-    ``engine="expr"`` is the executable spec the SQL oracle mirrors:
-    all 60 votes as one wide aggregate — single shuffle on doc_id.
+    ZERO-shuffle (r8): one ``mapInPandas`` pass per doc runs the proven
+    C-level normalize chain, a token Counter, the md5 hash per DISTINCT
+    word (the per-task memo of :func:`_md5_token_hasher` — the corpus
+    vocabulary is tiny next to token occurrences) and the 60 votes as
+    one numpy sign-matrix product. It replaced the tokenize-explode +
+    (doc, word) groupBy + 60-column doc groupBy pipeline (two
+    corpus-scale shuffles), which the SQL oracle still spells out. Votes
+    are exact integer sums (order-free), the hash is ``int(md5[:15],
+    16)`` — identical bytes hashed (tokens are pure ASCII after the
+    fold) — so fingerprints are bit-equal to that pipeline
+    (pytest-gated).
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
     docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
-    if engine == "arrow":
-        n_bits = SIMHASH_BITS
-        h64 = _md5_token_hasher()
+    n_bits = SIMHASH_BITS
+    h64 = _md5_token_hasher()
 
-        def kernel(batches):
-            from collections import Counter
+    def kernel(batches):
+        from collections import Counter
 
-            import pandas as pd
+        import pandas as pd
 
-            shifts = np.arange(n_bits, dtype=np.int64)
+        shifts = np.arange(n_bits, dtype=np.int64)
 
-            for pdf in batches:
-                ids, fps = [], []
-                for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                    if t is None:
-                        continue  # expr parity: explode(split(NULL))
-                        # emits no (doc, word) rows -> no fingerprint
-                    toks = (
-                        t.translate(_PUNCT_DEL)
-                        .lower()
-                        .encode("ascii", "ignore")
-                        .decode("ascii")
-                        .split()
-                    )
-                    if not toks:
-                        continue  # no (doc, word) rows -> no fingerprint
-                    cnt = Counter(toks)
-                    H = np.fromiter(
-                        (h64(w) for w in cnt), dtype=np.int64, count=len(cnt)
-                    )
-                    C = np.fromiter(
-                        cnt.values(), dtype=np.int64, count=len(cnt)
-                    )
-                    bits = (H[:, None] >> shifts) & 1  # (n_words, 60)
-                    votes = ((2 * bits - 1) * C[:, None]).sum(axis=0)
-                    fp = int(((votes > 0).astype(np.int64) << shifts).sum())
-                    ids.append(doc_id)
-                    fps.append(fp)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "simhash": pd.Series(fps, dtype="int64"),
-                    }
+        for pdf in batches:
+            ids, fps = [], []
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
+                if t is None:
+                    continue  # a NULL text has no token -> no fingerprint
+                toks = (
+                    t.translate(_PUNCT_DEL)
+                    .lower()
+                    .encode("ascii", "ignore")
+                    .decode("ascii")
+                    .split()
                 )
+                if not toks:
+                    continue  # no token -> no fingerprint
+                cnt = Counter(toks)
+                H = np.fromiter(
+                    (h64(w) for w in cnt), dtype=np.int64, count=len(cnt)
+                )
+                C = np.fromiter(
+                    cnt.values(), dtype=np.int64, count=len(cnt)
+                )
+                bits = (H[:, None] >> shifts) & 1  # (n_words, 60)
+                votes = ((2 * bits - 1) * C[:, None]).sum(axis=0)
+                fp = int(((votes > 0).astype(np.int64) << shifts).sum())
+                ids.append(doc_id)
+                fps.append(fp)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "simhash": pd.Series(fps, dtype="int64"),
+                }
+            )
 
-        return docs.mapInPandas(kernel, "doc_id long, simhash long")
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT)
-            ).alias("word"),
-        )
-        .filter(F.col("word") != "")
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("th", portable_hash64(F.col("word")))
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("th"), j).bitwiseAND(F.lit(1)) == 1, F.col("cnt"))
-            .otherwise(-F.col("cnt"))
-        ).alias(f"v{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    fp = sum(
-        F.when(F.col(f"v{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
-            F.lit(0).cast("long")
-        )
-        for j in range(SIMHASH_BITS)
-    )
-    return agg.select("doc_id", fp.alias("simhash"))
+    return docs.mapInPandas(kernel, "doc_id long, simhash long")
 
 
 def _simhash_oracle() -> str:
@@ -1116,18 +951,20 @@ def _narrow_session(spark, width: int):
     had set (3rd review pass)."""
     key = (spark.sparkContext.applicationId, width)
     with _NARROW_SESSIONS_LOCK:
-        # r16 ADVICE fix: evict clones whose SparkContext is stopped — a
-        # long-lived driver creating contexts serially would otherwise
-        # pin one session per dead application forever
-        for k in [
-            k
-            for k, s in _NARROW_SESSIONS.items()
-            if s.sparkContext._jsc is None
-            or s.sparkContext._jsc.sc().isStopped()
-        ]:
-            del _NARROW_SESSIONS[k]
         narrow = _NARROW_SESSIONS.get(key)
         if narrow is None:
+            # r16 ADVICE fix: evict clones whose SparkContext is stopped
+            # — a long-lived driver creating contexts serially would
+            # otherwise pin one session per dead application forever.
+            # Entries are only added here, so sweeping on insert keeps
+            # the same bound without a py4j call per clone on every hit.
+            for k in [
+                k
+                for k, s in _NARROW_SESSIONS.items()
+                if s.sparkContext._jsc is None
+                or s.sparkContext._jsc.sc().isStopped()
+            ]:
+                del _NARROW_SESSIONS[k]
             narrow = spark.newSession()
             narrow.conf.set("spark.sql.shuffle.partitions", str(width))
             _NARROW_SESSIONS[key] = narrow

@@ -3,21 +3,24 @@ quality scoring, token counting, fingerprinting.
 
 The reference's only text analytics are wordcount / inverted index; these
 are the corpus-curation operators a 100 TB text pipeline needs. All are
-single-scan, groupBy-free (per-row expressions) or one narrow aggregation,
-fully JVM-side (regexp/array built-ins — no Python UDFs), so they pipeline
-inside one codegen stage and scale linearly.
+single-scan and either per-row or one narrow aggregation. The per-row
+metric passes of ``text_profile`` and ``corpus_bigrams`` are Arrow
+kernels (``mapInPandas``): one fused Python pass per row of C-speed str
+and numpy ops, in place of ~10 interpreted JVM regex/array passes over
+the same text. :func:`text_quality_df` stays a JVM expression: the
+streaming curation gate applies it per micro-batch.
 
 The per-document operators (language ID, quality metrics, token counts,
 fingerprints, token statistics) are registered as ONE consolidated
 ``text_profile`` query: they share the same scan and the same per-row
-execution shape, so one wide select is both the natural plan (a 100 TB
+execution shape, so one wide pass is both the natural plan (a 100 TB
 profiling pass computes every per-doc metric in one read) and one driver
-correctness row covering all of them. The individual builders remain
-importable for composition (``pipeline.py`` uses ``text_quality``).
+correctness row covering all of them. ``text_quality`` remains
+importable for composition (``pipeline.py`` uses it).
 
 Determinism: scores are integer counts and ratios of integer counts
-(single double division) — identical across engines; classification is a
-fixed-priority argmax over integer scores.
+(single double division) — identical in the kernel and the oracle;
+classification is a fixed-priority argmax over integer scores.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import (
-    NON_WS,
     WS_SPLIT,
     normalize_text,
     sql_normalize,
@@ -45,9 +47,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
 
-# BPE-ish tokenizer regex: letter runs | digit runs | single non-space
-# symbol. RE2- and Java-compatible (no lookarounds).
-_BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
+# BPE-ish tokenizer regex of the oracle: letter runs | digit runs |
+# single non-space symbol (the kernel counts the same runs with
+# codepoint masks).
 _BPE_RE_SQL = "[a-z]+|[0-9]+|[^a-z0-9[:space:]]"
 
 
@@ -92,25 +94,6 @@ _SQL_DETECTED = """
     ELSE 'de'
   END
 """
-
-
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-stopword language ID (library form; registered via
-    ``text_profile``)."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), WS_SPLIT)
-    scores = {
-        lang: _marker_score(words, mk).alias(f"s_{lang}")
-        for lang, mk in LANG_MARKERS.items()
-    }
-    # count matches directly — a char-class regexp_count is one scan with
-    # no replacement-string build (the replace-and-measure form was ~2x
-    # the cost at the sf1 stress scale; identical integers either way)
-    s_zh = F.regexp_count("text", F.lit("[\\x{4e00}-\\x{9fff}]")).alias("s_zh")
-    scored = docs.select(
-        "doc_id", F.col("lang").alias("labeled_lang"), *scores.values(), s_zh
-    )
-    return scored.select("doc_id", "labeled_lang", _detected_lang().alias("detected_lang"))
 
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,50 +191,36 @@ SELECT doc_id, labeled_lang,
 FROM t
 """,
 )
-def text_profile(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consolidated per-document profiling pass: language ID, quality
     metrics + gate, token counts (whitespace + BPE-ish regex), content
     fingerprints, and token statistics — every per-doc metric a curation
     pipeline wants, in ONE scan and one stage.
 
-    Consolidates the formerly separate text_langid / text_quality /
-    token_count_regex / doc_fingerprint / token_stats_per_doc queries
-    (same metrics, same oracles — now one driver row).
+    Consolidates the formerly separate language-ID / quality /
+    token-count / fingerprint / token-statistics queries (same metrics,
+    same oracles — now one driver row).
 
-    ``engine`` picks the per-row metric implementation; both feed the
-    same final projection (:func:`_profile_finalize`) and are row-equal
-    (pytest-gated on the real corpus):
-
-    - ``"expr"``: JVM expression form — ~10 regex/array passes per row,
-      each individually cheap, but the query's whole cost IS this sum
-      (measured at the sf1 stress set: no single hot regex, 6 x ~0.2 s
-      marginal each). This remains the executable spec and the shape the
-      SQL oracle mirrors.
-    - ``"arrow"`` (default): ONE vectorized pass per row
-      (:func:`profile_metrics_arrow`) — codepoint masks for the
-      char-class counts, one token Counter for the marker scores,
-      C-level str ops + md5 for the fingerprint. Measured best-of-3:
-      3.07 -> 0.96 s at the sf1 stress set (3.2x, row-identical) and
-      0.76 -> 0.66 s at sf0.1 — the same Arrow-kernel boundary rule as
-      the dedup family: the win condition is many per-char interpreted
-      passes over the same text, and this query is made of exactly that.
+    The metrics come from ONE vectorized pass per row
+    (:func:`profile_metrics_arrow`) — codepoint masks for the char-class
+    counts, one token Counter for the marker scores, C-level str ops +
+    md5 for the fingerprint — and feed a trivial JVM projection
+    (:func:`_profile_finalize`). The JVM expression form spent ~10
+    regex/array passes per row, each individually cheap, but the
+    query's whole cost was their sum (at the sf1 stress set: no single
+    hot regex, 6 x ~0.2 s marginal each). Measured best-of-3 against it:
+    3.07 -> 0.96 s at the sf1 stress set (3.2x, row-identical) and
+    0.76 -> 0.66 s at sf0.1 — the same Arrow-kernel boundary rule as
+    the dedup family: the win condition is many per-char interpreted
+    passes over the same text, and this query is made of exactly that.
     """
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"engine must be 'expr' or 'arrow', got {engine!r}")
     # heaviest per-row pass in the text family; fan out the degenerate
     # single-split local scan (no-op at real scale)
     docs = load_corpus(spark, sf_dir, "documents")
-    metrics = (
-        profile_metrics_arrow(docs)
-        if engine == "arrow"
-        else _profile_metrics_expr(docs)
-    )
-    return _profile_finalize(metrics)
+    return _profile_finalize(profile_metrics_arrow(docs))
 
 
-# m-level metric schema shared by the expression and Arrow forms
+# m-level metric schema of the Arrow kernel, read by _profile_finalize
 _PROFILE_METRICS_SCHEMA = (
     "doc_id long, labeled_lang string, "
     "s_en int, s_fr int, s_es int, s_de int, s_zh int, "
@@ -261,48 +230,14 @@ _PROFILE_METRICS_SCHEMA = (
 )
 
 
-def _profile_metrics_expr(docs: DataFrame) -> DataFrame:
-    """Expression-form per-document metrics — the executable spec the
-    SQL oracle mirrors and the Arrow kernel is gated against."""
-    low_words = F.split(F.lower(F.col("text")), WS_SPLIT)
-    norm = normalize_text(F.col("text"))
-    w = F.filter(F.split(norm, WS_SPLIT), lambda t: t != "")
-    n_bpe = F.regexp_count(F.lower(F.col("text")), F.lit(_BPE_RE))
-    scores = {
-        lang: _marker_score(low_words, mk).alias(f"s_{lang}")
-        for lang, mk in LANG_MARKERS.items()
-    }
-    # count matches directly — a char-class regexp_count is one scan with
-    # no replacement-string build (the replace-and-measure form was ~2x
-    # the cost at the sf1 stress scale; identical integers either way)
-    s_zh = F.regexp_count("text", F.lit("[\\x{4e00}-\\x{9fff}]")).alias("s_zh")
-    return docs.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        *scores.values(),
-        s_zh,
-        F.length("text").alias("n_chars"),
-        F.size(w).alias("n_tokens"),
-        F.size(F.array_distinct(w)).alias("n_distinct_tokens"),
-        _marker_score(low_words, STOPWORDS).alias("n_stop"),
-        F.regexp_count("text", F.lit(r"[\p{Punct}]")).alias("n_punct"),
-        F.regexp_count("text", F.lit("[0-9]")).alias("n_digit"),
-        F.regexp_count("text", F.lit(NON_WS + "+")).alias("n_ws_tokens"),
-        n_bpe.alias("n_bpe_tokens"),
-        F.md5(norm).alias("fp"),
-        F.length(norm).alias("n_norm_chars"),
-        F.regexp_count(norm, F.lit(NON_WS)).alias("n_nonws"),
-    )
-
-
 def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
-    """One-pass Arrow kernel computing every per-document profile metric,
-    row-identical to :func:`_profile_metrics_expr` (the executable spec;
-    equality pytest-gated on the real corpus in
-    ``tests/test_text_analysis.py``).
+    """One-pass Arrow kernel computing every per-document profile metric
+    over a (doc_id, lang, text) DataFrame; the DuckDB oracle of
+    ``text_profile`` checks its output, and adversarial Unicode inputs
+    pin it row-identical to the JVM regex/array form.
 
-    Why: the expression form is ~10 independent interpreted regex/array
-    passes over the same text per row — at the sf1 stress set they are
+    Why: the expression form was ~10 independent interpreted regex/array
+    passes over the same text per row — at the sf1 stress set they were
     the entire cost of ``text_profile`` (82 s stage CPU, no single hot
     pass). This kernel replaces them with one pass per row of C-speed
     primitives, streaming over Arrow batches — no shuffle, bounded
@@ -327,8 +262,9 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
       WS class equals Python's ASCII whitespace set so ``.split()`` is
       exact (the WS_CLASS design invariant, property-tested);
     - ``lower()``: Python ``str.lower()`` vs the JVM's — both implement
-      Unicode simple+special lowercase; equality on the corpus is what
-      the pytest gate pins (any future divergence fails loudly there).
+      Unicode simple+special lowercase; the oracle gate on the corpus
+      and the adversarial Unicode gate pin equality (any future
+      divergence fails loudly there).
     """
     import hashlib
     import re as _re
@@ -380,9 +316,9 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
             null_rows = np.zeros(n, dtype=bool)
             for i, t in enumerate(pdf["text"]):
                 if t is None:
-                    # expr parity: every metric expression propagates
-                    # the null (regexp_count/size/length/md5 of NULL
-                    # are NULL); mask this row to nulls after the loop
+                    # every metric of a NULL text is NULL, as in
+                    # Spark SQL (regexp_count/size/length/md5 of NULL);
+                    # mask this row to nulls after the loop
                     null_rows[i] = True
                     fps.append(None)
                     continue
@@ -448,9 +384,8 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
 
 
 def _profile_finalize(m: DataFrame) -> DataFrame:
-    """Shared final projection over the m-level metrics: ratios, the
-    quality gate, language argmax, fingerprint prefix — trivial JVM
-    arithmetic, identical for both metric engines."""
+    """Final projection over the m-level metrics: ratios, the quality
+    gate, language argmax, fingerprint prefix — trivial JVM arithmetic."""
     g = lambda c: F.greatest(F.col(c), F.lit(1))  # noqa: E731
     stop_ratio = F.col("n_stop").cast("double") / g("n_tokens")
     punct_ratio = F.col("n_punct").cast("double") / g("n_chars")
@@ -578,51 +513,22 @@ SELECT bigram, count(*) AS n_occurrences,
 FROM grams GROUP BY bigram
 """,
 )
-def corpus_bigrams(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram statistics (occurrences + doc frequency).
 
-    ``engine="arrow"`` (default, r8): one ``mapInPandas`` pass per doc —
-    the same C-level normalize chain the profile kernel proved exact
-    (punct-delete -> lower -> ASCII-fold -> WS-strip; after the fold
-    ``str.split()`` equals the WS-class split), then a bigram Counter —
-    emitting PRE-COLLAPSED (bigram, per-doc count) partials. Downstream
-    the doc-frequency is a plain ``count(*)`` (one row per (doc,
-    bigram) by construction) instead of a ``count_distinct`` expansion,
-    and the shuffle carries per-doc distinct bigrams rather than raw
-    occurrences. Row-identical to the expression form (pytest-gated).
-
-    ``engine="expr"`` is the executable spec the SQL oracle mirrors:
-    array-native zip_with over a shifted slice (no per-token shuffle),
-    explode, groupBy + count_distinct."""
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
+    One ``mapInPandas`` pass per doc (r8) — the same C-level normalize
+    chain the profile kernel proved exact (punct-delete -> lower ->
+    ASCII-fold -> WS-strip; after the fold ``str.split()`` equals the
+    WS-class split), then a bigram Counter — emits PRE-COLLAPSED
+    (bigram, per-doc count) partials. Downstream the doc-frequency is a
+    plain ``count(*)`` (one row per (doc, bigram) by construction)
+    instead of a ``count_distinct`` expansion, and the shuffle carries
+    per-doc distinct bigrams rather than raw occurrences: 3.1x at the
+    sf1 stress set against the JVM form (``zip_with`` over a shifted
+    slice, explode, groupBy + count_distinct)."""
     # Fan out ONLY if the scan under-splits (tiny local files); at scale
     # the scan's own splits carry the per-row work with no Exchange.
     docs = load_corpus(spark, sf_dir, "documents").select("doc_id", "text")
-    if engine == "expr":
-        w = F.filter(
-            F.split(normalize_text(F.col("text"), trim=False), WS_SPLIT),
-            lambda t: t != "",
-        )
-        shifted = F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(0)))
-        grams = F.zip_with(
-            w,
-            shifted,
-            lambda g, t: F.when(g.isNull() | t.isNull(), F.lit(None)).otherwise(
-                F.concat(g, F.lit(" "), t)
-            ),
-        )
-        flat = docs.select(
-            "doc_id",
-            F.explode(F.filter(grams, lambda x: x.isNotNull())).alias("bigram"),
-        )
-        return flat.groupBy("bigram").agg(
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-
     import string as _string
 
     ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
@@ -638,8 +544,7 @@ def corpus_bigrams(
             cnts: list[int] = []
             for t in pdf["text"]:
                 if t is None:
-                    continue  # expr parity: explode of the NULL gram
-                    # array emits no bigram rows
+                    continue  # a NULL text has no bigram
                 norm = (
                     t.translate(punct_del)
                     .lower()

@@ -47,9 +47,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # back to their session (df._session), so the value dict kept every key
 # alive forever. Entries are now keyed on (applicationId, id(session))
 # — id() is safe here because the entry holds the session strongly, so
-# the id cannot be reused while the entry lives — and swept when their
-# SparkContext is stopped (the ``_NARROW_SESSIONS`` eviction
-# discipline, dedup.py). Per (sf_dir, table) only the LATEST corpus
+# the id cannot be reused while the entry lives — and swept, on each
+# insert, when their SparkContext is stopped (the ``_NARROW_SESSIONS``
+# eviction discipline, dedup.py). Per (sf_dir, table) only the LATEST corpus
 # generation is kept, so in-place regenerations replace instead of
 # accumulate. Each generation's record is ``(corpus_key, scan,
 # fanned-out scan or None)``; :func:`load_corpus` fills the third slot.
@@ -90,18 +90,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = corpus_key(sf_dir, name)
     cache_id = (spark.sparkContext.applicationId, id(spark))
     with _DF_CACHE_LOCK:
-        _sweep_stopped_entries()
-        _, per_session = _DF_CACHE.setdefault(cache_id, (spark, {}))
-        hit = per_session.get((sf_dir, name))
+        entry = _DF_CACHE.get(cache_id)
+        hit = None if entry is None else entry[1].get((sf_dir, name))
         df = hit[1] if hit is not None and hit[0] == key else None
     if df is None:
         df = _canonicalize_timestamps(
             spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
         )
         with _DF_CACHE_LOCK:
-            entry = _DF_CACHE.get(cache_id)
-            if entry is not None:
-                entry[1][(sf_dir, name)] = (key, df, None)
+            # sweep on insert only: records are only added here, so the
+            # bound is the same and a cache hit makes no py4j call
+            _sweep_stopped_entries()
+            _, per_session = _DF_CACHE.setdefault(cache_id, (spark, {}))
+            per_session[(sf_dir, name)] = (key, df, None)
     return df
 
 

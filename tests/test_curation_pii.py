@@ -86,27 +86,13 @@ def test_spark_duckdb_agree_on_phone_regex(spark, s):
     assert (spark_row.clean, spark_row.n) == duck, (s, spark_row, duck)
 
 
-def test_pii_arrow_kernel_row_identical_to_expr_on_corpus(spark):
-    """The Arrow default engine must be row-identical to the expression
-    spec on the real corpus (the oracle checks the spec; this pins the
-    kernel to it)."""
-    from gcp_map_reduce_spark.operators.curation_rules import pii_scrub
-
-    d = "/root/testdata/sf0.01"
-    a = {tuple(r) for r in pii_scrub(spark, d, engine="expr").collect()}
-    b = {tuple(r) for r in pii_scrub(spark, d, engine="arrow").collect()}
-    assert a == b and a
-
-
 def test_pii_arrow_kernel_row_identical_on_adversarial_texts(spark):
-    """Java regex (expr) vs Python re (kernel) must agree on the nasty
-    cases: every REDACTED/KEPT phone variant, emails with dots/plus
-    tags/subdomains, IPs adjacent to phones, unicode text, placeholder
-    literals already present, and empty-ish strings."""
-    from gcp_map_reduce_spark.operators.curation_rules import (
-        _pii_scrub_expr,
-        _pii_scrub_kernel,
-    )
+    """Java regex (reference) vs Python re (kernel) must agree on the
+    nasty cases: every REDACTED/KEPT phone variant, emails with
+    dots/plus tags/subdomains, IPs adjacent to phones, unicode text,
+    placeholder literals already present, and empty-ish strings."""
+    from gcp_map_reduce_spark.operators.curation_rules import _pii_scrub_kernel
+    from tests.text_kernel_reference import pii_scrub_expr
 
     texts = (
         [f"call {s} now" for s in REDACTED + KEPT]
@@ -125,24 +111,20 @@ def test_pii_arrow_kernel_row_identical_on_adversarial_texts(spark):
     doc = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    a = sorted(map(tuple, _pii_scrub_expr(doc).collect()))
+    a = sorted(map(tuple, pii_scrub_expr(doc).collect()))
     b = sorted(map(tuple, _pii_scrub_kernel(doc).collect()))
     assert a == b
 
 
 def test_quality_rules_arrow_kernel_row_identical(spark):
-    """Arrow default vs the expression spec, on the corpus and an
+    """The Arrow kernel vs the JVM expression reference on an
     adversarial set (empty/whitespace strings, unicode lowering,
-    repeated-token runs, bigram ties, single-token docs)."""
+    repeated-token runs, bigram ties, single-token docs); on the corpus
+    the ``quality_rules`` oracle checks it against DuckDB."""
     from gcp_map_reduce_spark.operators.curation_rules import (
         _quality_rules_kernel,
-        quality_rules,
     )
-
-    d = "/root/testdata/sf0.01"
-    a = sorted(map(tuple, quality_rules(spark, d, engine="expr").collect()))
-    b = sorted(map(tuple, quality_rules(spark, d, engine="arrow").collect()))
-    assert a == b and a
+    from tests.text_kernel_reference import quality_rules_expr
 
     texts = [
         "",
@@ -165,58 +147,39 @@ def test_quality_rules_arrow_kernel_row_identical(spark):
         # r15 (r14 ADVICE pin): ADJACENT repeats of one marker share
         # their separating space, and non-overlapping substring
         # counting consumes it — "the the" scores 1 on this surface
-        # (text_langid's token-equality form would say 2; only the
+        # (text_profile's token-equality form would say 2; only the
         # VOCABULARY is shared across surfaces, never the scores)
         "the the",
     ]
     doc = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    from pyspark.sql import functions as F  # noqa: F401
+    got_rows = _quality_rules_kernel(doc).collect()
+    a = sorted(map(tuple, quality_rules_expr(doc).collect()))
+    assert a == sorted(map(tuple, got_rows)) and len(a) == len(texts)
+    # r14 language-ID semantics: marker counts, tie-break to the
+    # earlier language, "und" on zero hits, case-folded markers
+    got = {r.doc_id: (r.lang_pred, r.lang_score) for r in got_rows}
+    assert got[9] == ("es", 2)
+    assert got[10] == ("de", 4)
+    assert got[11] == ("en", 6)  # markers matched case-insensitively
+    assert got[12] == ("fr", 4)
+    assert got[13] == ("en", 3)  # 3-3 tie with es: earlier lang wins
+    assert got[14] == ("und", 0)
+    # repeated-adjacent-marker: non-overlapping counting eats the
+    # shared space, so "the the" is 1 here, not token-form's 2
+    assert got[15] == ("en", 1)
+    # one vocabulary, two mechanisms: the curation marker table is
+    # DERIVED from text_analysis.LANG_MARKERS (padded), so the two
+    # language-ID surfaces cannot drift apart
+    from gcp_map_reduce_spark.operators.curation_rules import (
+        LANG_MARKERS,
+    )
+    from gcp_map_reduce_spark.operators.text_analysis import (
+        LANG_MARKERS as PROFILE,
+    )
 
-    # expression form over the same custom frame: reuse quality_rules'
-    # internals by writing the frame to a temp table dir is overkill —
-    # compare the kernel against a DuckDB-free python reimplementation?
-    # No: run the real expression pipeline by monkey-path — simplest is
-    # the library seam: both engines share load_corpus(sf_dir, "documents")
-    # so drive them through a parquet round-trip.
-    import tempfile, shutil, os
-    work = tempfile.mkdtemp(prefix="qr_adv_")
-    try:
-        doc.withColumn("lang", F.lit("en")).write.parquet(
-            os.path.join(work, "documents.parquet")
-        )
-        a = sorted(map(tuple, quality_rules(spark, work, engine="expr").collect()))
-        b = sorted(map(tuple, quality_rules(spark, work, engine="arrow").collect()))
-        assert a == b and len(a) == len(texts)
-        # r14 language-ID semantics (both engines just proved identical;
-        # assert the arrow one): marker counts, tie-break to the earlier
-        # language, "und" on zero hits, case-folded markers
-        got = {
-            r.doc_id: (r.lang_pred, r.lang_score)
-            for r in quality_rules(spark, work, engine="arrow").collect()
-        }
-        assert got[9] == ("es", 2)
-        assert got[10] == ("de", 4)
-        assert got[11] == ("en", 6)  # markers matched case-insensitively
-        assert got[12] == ("fr", 4)
-        assert got[13] == ("en", 3)  # 3-3 tie with es: earlier lang wins
-        assert got[14] == ("und", 0)
-        # repeated-adjacent-marker: non-overlapping counting eats the
-        # shared space, so "the the" is 1 here, not token-form's 2
-        assert got[15] == ("en", 1)
-        # one vocabulary, two mechanisms: the curation marker table is
-        # DERIVED from text_analysis.LANG_MARKERS (padded), so the two
-        # language-ID surfaces cannot drift apart
-        from gcp_map_reduce_spark.operators.curation_rules import (
-            LANG_MARKERS,
-        )
-        from gcp_map_reduce_spark.operators.text_analysis import (
-            LANG_MARKERS as PROFILE,
-        )
+    assert LANG_MARKERS == [
+        (lang, [f" {w} " for w in ws]) for lang, ws in PROFILE.items()
+    ]
 
-        assert LANG_MARKERS == [
-            (lang, [f" {w} " for w in ws]) for lang, ws in PROFILE.items()
-        ]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

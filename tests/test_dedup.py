@@ -29,17 +29,18 @@ def test_minhash_recall_vs_exact(spark):
 def test_simhash_engines_bit_identical(spark):
     """The Arrow fingerprint kernel (cached md5 per distinct word +
     numpy sign votes) must produce bit-equal 60-bit fingerprints to the
-    60-column aggregate spec for every doc — votes are exact integer
-    sums, so any divergence is a normalize/hash parity bug."""
+    60-column aggregate reference for every doc — votes are exact
+    integer sums, so any divergence is a normalize/hash parity bug. (The
+    ``dedup_pair_scores`` oracle checks only the pairs.)"""
     from gcp_map_reduce_spark.operators.dedup import simhash_fingerprints
+    from gcp_map_reduce_spark.sources.tables import load_table
+    from tests.text_kernel_reference import simhash_fingerprints_expr
 
-    a = {
-        r.doc_id: r.simhash
-        for r in simhash_fingerprints(spark, SF_ORACLE, engine="expr").collect()
-    }
+    docs = load_table(spark, SF_ORACLE, "documents")
+    a = {r.doc_id: r.simhash for r in simhash_fingerprints_expr(docs).collect()}
     b = {
         r.doc_id: r.simhash
-        for r in simhash_fingerprints(spark, SF_ORACLE, engine="arrow").collect()
+        for r in simhash_fingerprints(spark, SF_ORACLE).collect()
     }
     assert a and a == b
 
@@ -97,12 +98,12 @@ def test_minhash_arrow_kernel_bit_identical_to_hof(spark):
     higher-order-function reference EXACTLY (same rolling-gram + affine
     min arithmetic in numpy int64) — the oracle's value-hash gate rides
     on this equivalence."""
-    from gcp_map_reduce_spark.operators.dedup import (
-        doc_minhash_features,
+    from gcp_map_reduce_spark.operators.dedup import doc_minhash_features
+    from gcp_map_reduce_spark.sources.tables import load_table
+    from tests.text_kernel_reference import (
         gram_hash_arrays_for,
         minhash_signatures_for,
     )
-    from gcp_map_reduce_spark.sources.tables import load_table
 
     d = "/root/testdata/sf0.01"
     docs = load_table(spark, d, "documents").select("doc_id", "text")
@@ -221,19 +222,18 @@ def test_dedup_clusters_invariants(spark):
 def test_fused_text_kernel_bit_equal_to_expr_front_half(spark):
     """r17: the fused text->features kernel (normalize+tokenize+md5 in
     Python, md5 per DISTINCT token) must be BIT-identical to the r16
-    shape (JVM _token_hash_expr front half + th_arr kernel) — same
+    shape (JVM md5 token-hash front half + th_arr kernel) — same
     rows, same sig vectors, same sorted gram arrays."""
     from gcp_map_reduce_spark.operators.dedup import (
-        _token_hash_expr,
         doc_text_features_arrow,
         minhash_features_arrow,
     )
     from gcp_map_reduce_spark.sources.tables import load_table
-    from tests.conftest import SF_ORACLE
+    from tests.text_kernel_reference import token_hash_expr
 
     docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
     old = minhash_features_arrow(
-        docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), 3
+        docs.select("doc_id", token_hash_expr().alias("th_arr")), 3
     )
     new = doc_text_features_arrow(docs, 3)
     a = {r["doc_id"]: (list(r["sig"]), list(r["gh_arr"])) for r in old.collect()}
@@ -245,11 +245,9 @@ def test_text_kernel_gram_arrays_equal_jvm_md5_reference_n5(spark):
     """Decontamination's shingles (n=5, want_sig=False) come from the
     fused text kernel: its gram arrays must equal the JVM md5 front-half
     reference set-for-set, with docs shorter than n dropped."""
-    from gcp_map_reduce_spark.operators.dedup import (
-        doc_text_features_arrow,
-        gram_hash_arrays_for,
-    )
+    from gcp_map_reduce_spark.operators.dedup import doc_text_features_arrow
     from gcp_map_reduce_spark.sources.tables import load_table
+    from tests.text_kernel_reference import gram_hash_arrays_for
 
     docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
     ref = {

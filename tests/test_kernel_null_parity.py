@@ -1,12 +1,14 @@
-"""NULL-text engine parity for every Arrow kernel with an expression twin.
+"""NULL-text parity for every per-row Arrow kernel.
 
-The corpus fixtures never carry a NULL ``text``, so the corpus-wide
-engine-equality gates can't catch a kernel that raises (or silently
-diverges) on one — the round-8 advice flagged exactly that latent class:
-``t.translate``/``t.lower`` on a None row raises AttributeError while the
-expression engines propagate the null (no token rows, or a row of null
-outputs). Each test here drives BOTH engines through the same parquet
-seam with a mixed null/non-null corpus and asserts row identity.
+The corpus fixtures never carry a NULL ``text``, so the DuckDB oracle
+gates can't catch a kernel that raises (or silently diverges) on one —
+the round-8 advice flagged exactly that latent class: ``t.translate``/
+``t.lower`` on a None row raises AttributeError while Spark's JVM
+expressions propagate the null (no token rows, or a row of null
+outputs). Each test here drives the operator through its parquet seam
+with a mixed null/non-null corpus and asserts row identity with the JVM
+expression form of ``tests/text_kernel_reference.py`` over the same
+table.
 """
 
 from __future__ import annotations
@@ -44,36 +46,46 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _docs(spark, sf_dir):
+    from gcp_map_reduce_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "documents")
+
+
 def test_pii_scrub_null_parity(spark, null_docs_dir):
     from gcp_map_reduce_spark.operators.curation_rules import pii_scrub
+    from tests.text_kernel_reference import pii_scrub_expr
 
-    a = _rows(pii_scrub(spark, null_docs_dir, engine="expr"))
-    b = _rows(pii_scrub(spark, null_docs_dir, engine="arrow"))
+    a = _rows(pii_scrub_expr(_docs(spark, null_docs_dir)))
+    b = _rows(pii_scrub(spark, null_docs_dir))
     assert a == b and len(a) == len(TEXTS)
 
 
 def test_quality_rules_null_parity(spark, null_docs_dir):
     from gcp_map_reduce_spark.operators.curation_rules import quality_rules
+    from tests.text_kernel_reference import quality_rules_expr
 
-    a = _rows(quality_rules(spark, null_docs_dir, engine="expr"))
-    b = _rows(quality_rules(spark, null_docs_dir, engine="arrow"))
+    a = _rows(quality_rules_expr(_docs(spark, null_docs_dir)))
+    b = _rows(quality_rules(spark, null_docs_dir))
     assert a == b and len(a) == len(TEXTS)
 
 
 def test_simhash_null_parity(spark, null_docs_dir):
     from gcp_map_reduce_spark.operators.dedup import simhash_fingerprints
+    from tests.text_kernel_reference import simhash_fingerprints_expr
 
-    a = _rows(simhash_fingerprints(spark, null_docs_dir, engine="expr"))
-    b = _rows(simhash_fingerprints(spark, null_docs_dir, engine="arrow"))
-    # null/empty docs produce NO fingerprint row in the expr form
+    a = _rows(simhash_fingerprints_expr(_docs(spark, null_docs_dir)))
+    b = _rows(simhash_fingerprints(spark, null_docs_dir))
+    # null/empty docs produce NO fingerprint row
     assert a == b and len(a) == 3
 
 
 def test_corpus_bigrams_null_parity(spark, null_docs_dir):
     from gcp_map_reduce_spark.operators.text_analysis import corpus_bigrams
+    from tests.text_kernel_reference import corpus_bigrams_expr
 
-    a = _rows(corpus_bigrams(spark, null_docs_dir, engine="expr"))
-    b = _rows(corpus_bigrams(spark, null_docs_dir, engine="arrow"))
+    a = _rows(corpus_bigrams_expr(_docs(spark, null_docs_dir)))
+    b = _rows(corpus_bigrams(spark, null_docs_dir))
     assert a == b and a
 
 
@@ -102,8 +114,12 @@ def test_decontamination_and_fast_minhash_survive_null_text(spark, null_docs_dir
 
 
 def test_text_profile_null_parity(spark, null_docs_dir):
-    from gcp_map_reduce_spark.operators.text_analysis import text_profile
+    from gcp_map_reduce_spark.operators.text_analysis import (
+        _profile_finalize,
+        text_profile,
+    )
+    from tests.text_kernel_reference import profile_metrics_expr
 
-    a = _rows(text_profile(spark, null_docs_dir, engine="expr"))
-    b = _rows(text_profile(spark, null_docs_dir, engine="arrow"))
+    a = _rows(_profile_finalize(profile_metrics_expr(_docs(spark, null_docs_dir))))
+    b = _rows(text_profile(spark, null_docs_dir))
     assert a == b and len(a) == len(TEXTS)

@@ -271,7 +271,6 @@ def test_grouped_topk_equals_one_window_form(spark):
     [
         "wordcount.doc_tokens",
         "scale._tokenized_docs",
-        "dedup.doc_shingle_arrays",
         "similarity._emb",
         "text_analysis.text_quality",
     ],

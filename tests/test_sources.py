@@ -110,14 +110,20 @@ class _StoppedSession:
     sparkContext = _StoppedSC()
 
 
-def test_df_cache_sweeps_stopped_sessions(spark):
-    # r17 ADVICE fix: the plan memo must not pin dead sessions' entries
+def test_df_cache_sweeps_stopped_sessions(spark, tmp_path):
+    # r17 ADVICE fix: the plan memo must not pin dead sessions' entries.
+    # The sweep runs when a record is inserted (a miss), never on a hit.
     from gcp_map_reduce_spark.sources import tables
 
+    load_table(spark, SF_ORACLE, "documents")
     dead_key = ("app-dead", 0)
     with tables._DF_CACHE_LOCK:
         tables._DF_CACHE[dead_key] = (_StoppedSession(), {})
-    load_table(spark, SF_ORACLE, "documents")  # any call sweeps
+    load_table(spark, SF_ORACLE, "documents")  # a hit does not sweep
+    with tables._DF_CACHE_LOCK:
+        assert dead_key in tables._DF_CACHE
+    _copy_documents(str(tmp_path))
+    load_table(spark, str(tmp_path), "documents")  # a miss sweeps
     with tables._DF_CACHE_LOCK:
         assert dead_key not in tables._DF_CACHE
         live = [

@@ -1,26 +1,10 @@
-"""Gates for the text-profile Arrow kernel: the expression form
-(_profile_metrics_expr) is the executable spec the SQL oracle mirrors;
-profile_metrics_arrow must be row-identical to it — on the real corpus
-AND on adversarial Unicode edge cases (the classes where Python str ops
-could silently diverge from the JVM regex semantics)."""
+"""Gate for the text-profile Arrow kernel on adversarial Unicode edge
+cases: the classes where Python str ops could silently diverge from the
+JVM regex semantics. ``profile_metrics_arrow`` must be row-identical to
+the JVM regex/array form (``tests/text_kernel_reference.py``); on the
+real corpus the ``text_profile`` oracle checks it against DuckDB."""
 
 from __future__ import annotations
-
-from tests.conftest import SF_ORACLE
-
-
-def test_profile_engines_row_identical_on_corpus(spark):
-    from gcp_map_reduce_spark.operators.text_analysis import text_profile
-
-    a = {
-        r.doc_id: tuple(r)
-        for r in text_profile(spark, SF_ORACLE, engine="expr").collect()
-    }
-    b = {
-        r.doc_id: tuple(r)
-        for r in text_profile(spark, SF_ORACLE, engine="arrow").collect()
-    }
-    assert a and a == b
 
 
 def test_profile_engines_row_identical_on_unicode_edges(spark):
@@ -31,9 +15,9 @@ def test_profile_engines_row_identical_on_unicode_edges(spark):
     Turkish dotted I, final sigma exercise the lower()/codepoint paths."""
     from gcp_map_reduce_spark.operators.text_analysis import (
         _profile_finalize,
-        _profile_metrics_expr,
         profile_metrics_arrow,
     )
+    from tests.text_kernel_reference import profile_metrics_expr
 
     rows = [
         (1, "en", "The quick brown fox, and the lazy dog! 42 times."),
@@ -52,7 +36,7 @@ def test_profile_engines_row_identical_on_unicode_edges(spark):
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     a = {
         r.doc_id: tuple(r)
-        for r in _profile_finalize(_profile_metrics_expr(docs)).collect()
+        for r in _profile_finalize(profile_metrics_expr(docs)).collect()
     }
     b = {
         r.doc_id: tuple(r)
@@ -61,30 +45,3 @@ def test_profile_engines_row_identical_on_unicode_edges(spark):
     assert set(a) == set(b)
     for k in a:
         assert a[k] == b[k], (k, a[k], b[k])
-
-
-def test_bigram_engines_row_identical_on_corpus(spark):
-    """The Arrow bigram Counter kernel must produce the identical
-    (bigram, n_occurrences, n_docs) rows as the zip_with expression spec
-    — the normalize-chain parity is pinned by the profile kernel's
-    adversarial gate; this pins the pairing + per-doc collapse."""
-    from gcp_map_reduce_spark.operators.text_analysis import corpus_bigrams
-
-    a = {
-        r.bigram: (r.n_occurrences, r.n_docs)
-        for r in corpus_bigrams(spark, SF_ORACLE, engine="expr").collect()
-    }
-    b = {
-        r.bigram: (r.n_occurrences, r.n_docs)
-        for r in corpus_bigrams(spark, SF_ORACLE, engine="arrow").collect()
-    }
-    assert a and a == b
-
-
-def test_profile_rejects_unknown_engine(spark):
-    import pytest
-
-    from gcp_map_reduce_spark.operators.text_analysis import text_profile
-
-    with pytest.raises(ValueError, match="engine"):
-        text_profile(spark, SF_ORACLE, engine="nope")

@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import tokenize
 from gcp_map_reduce_spark.operators.wordcount import reduce_tokens
@@ -40,6 +41,17 @@ def _run_operation(spark: SparkSession, operation: str, input_dir: str) -> DataF
         raise ValueError(f"unknown operation {operation!r}; known: {OPERATIONS}")
     corpus = read_text_corpus(spark, input_dir)
     toks = tokenize(corpus, text_col="line", out_col="word", keep_cols=["doc"])
+    if operation == "invertedindex":
+        # ``doc`` is a whole file, so a (word, doc) pair repeats once per
+        # line that holds it: dedup the pairs in a codegen HashAggregate
+        # first (the reference mapper's set dedup,
+        # ``invertedindex_map.py:13-16``). The posting list then collects
+        # a LIST, because Catalyst's RemoveRedundantAggregates deletes a
+        # distinct below a duplicate-agnostic collect_set.
+        pairs = toks.select("word", "doc").distinct()
+        return pairs.groupBy("word").agg(
+            F.sort_array(F.collect_list("doc")).alias("docs")
+        )
     return reduce_tokens(toks, operation, doc="doc")
 
 

@@ -127,15 +127,23 @@ _LANG_SQL_CASE = (
 )
 
 
-def _lang_id_py(text: str) -> tuple[str, int]:
-    """Kernel-side scorer — the SQL oracle replicates it exactly."""
-    s = " " + text.lower() + " "
-    pred, best = "und", 0
-    for lang, markers in LANG_MARKERS:
-        sc = sum(s.count(m) for m in markers)
-        if sc > best:  # strict: the earlier language wins ties
-            pred, best = lang, sc
-    return pred, best
+def _lang_id_scorer():
+    """``text -> (lang_pred, lang_score)``, the kernel-side scorer — the
+    SQL oracle replicates it exactly. Built on the driver as a closure
+    over the marker list, so the kernel that calls it pickles by value
+    and runs where Spark's Python workers cannot import this package."""
+    markers_by_lang = LANG_MARKERS
+
+    def lang_id(text: str) -> tuple[str, int]:
+        s = " " + text.lower() + " "
+        pred, best = "und", 0
+        for lang, markers in markers_by_lang:
+            sc = sum(s.count(m) for m in markers)
+            if sc > best:  # strict: the earlier language wins ties
+                pred, best = lang, sc
+        return pred, best
+
+    return lang_id
 
 
 @query(
@@ -351,6 +359,8 @@ def _quality_rules_kernel(doc: DataFrame) -> DataFrame:
 
     import pandas as pd
 
+    lang_id = _lang_id_scorer()
+
     def kernel(batches):
         pat = re.compile(WS_SPLIT)
         for pdf in batches:
@@ -392,7 +402,7 @@ def _quality_rules_kernel(doc: DataFrame) -> DataFrame:
                 mr = max(sum(1 for _ in g) for _, g in groupby(t))
                 dr = nd * 1.0 / n
                 tf = top * 1.0 / n
-                lp, ls = _lang_id_py(text)
+                lp, ls = lang_id(text)
                 out["doc_id"].append(i)
                 out["n_tokens"].append(n)
                 out["n_distinct"].append(nd)

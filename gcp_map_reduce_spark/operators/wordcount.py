@@ -18,8 +18,9 @@ These re-express the reference's two built-in "queries" over the synthetic
   the reference (nondeterministic), so they are sorted here, and the
   oracle-checked form joins them into a canonical string.
 
-Both reduce steps live in :func:`reduce_tokens`, shared with
-``api.launch_map_reduce``.
+Both reduce steps live in :func:`reduce_tokens`; ``api.launch_map_reduce``
+shares its word count (its inverted index dedups (word, file) pairs
+first, see there).
 
 Scale notes (100 TB): groupBy(token) hash-partitions on the full token —
 strictly better than the reference's letter->reducer round-robin
@@ -57,8 +58,12 @@ def reduce_tokens(toks: DataFrame, operation: str, doc: str = "doc_id") -> DataF
 
     - ``wordcount`` -> (word, cnt);
     - ``invertedindex`` -> (word, docs: sorted distinct ``doc`` values).
-      ``collect_set`` dedups per (word, doc) by itself, so a
-      ``distinct()`` pre-pass would only add a second Exchange (r17).
+      ``collect_set`` dedups per (word, doc) by itself, so where a doc
+      is one row (the registered plans) a ``distinct()`` pre-pass would
+      only add a second Exchange (r17); Catalyst drops such a pre-pass
+      below ``collect_set`` anyway. Where a doc is a whole file, each
+      pair repeats once per line, so ``api.launch_map_reduce`` dedups
+      the pairs first and builds its posting lists itself.
     """
     if operation == "wordcount":
         return toks.groupBy("word").agg(F.count("*").alias("cnt"))

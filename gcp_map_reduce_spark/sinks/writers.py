@@ -6,8 +6,9 @@ merges reducer outputs into one key-sorted JSON file
 (``:246-277``), serves point lookups by (category, key) (``:197-244``)
 and deletes everything on ``cleanup`` (``:279-304``). Spark equivalents:
 
-- fidelity sink: globally sorted single JSON file (``coalesce(1)`` — ONLY
-  for this byte-parity mode; the native sink is partitioned parquet);
+- fidelity sink: globally sorted single JSON file (one shuffle into a
+  single partition, sorted there — ONLY for this byte-parity mode; the
+  native sink is partitioned parquet);
 - native sink: parquet partitioned by a column, which turns the
   reference's accidental "storage-side filter" into real partition pruning;
 - point lookup: predicate-pushdown read, not a server-side scan;
@@ -75,9 +76,14 @@ def write_sorted_single_json(df: DataFrame, path: str, sort_col: str) -> None:
     """Reference-fidelity final sink: one globally key-sorted JSON file
     (mirrors ``final-output-{op}.json``, sort at ``kv_store_server.py:267``).
 
-    ``coalesce(1)`` funnels through one task — acceptable ONLY because the
-    merged final output is small by construction (post-aggregation); never
-    use this shape for fact-table writes at scale.
+    ``repartition(1).sortWithinPartitions`` shuffles every row into one
+    partition and sorts it there, in the writer task: a single-partition
+    sort IS the global sort, so no range-bounds sampling job runs (3
+    Spark jobs per call where ``orderBy().coalesce(1)`` ran 4). The
+    writer task holds the same rows either way — acceptable ONLY because
+    the merged final output is small by construction (post-aggregation,
+    one row per distinct key; the sort spills past its memory share);
+    never use this shape for fact-table writes at scale.
 
     Crash posture (r10 kill-audit): retry-self-healing — a killed run
     leaves ``_temporary`` garbage that the retried ``overwrite`` deletes
@@ -85,7 +91,8 @@ def write_sorted_single_json(df: DataFrame, path: str, sort_col: str) -> None:
     in :func:`publish_atomic` when live readers must never observe the
     in-between state.
     """
-    df.orderBy(sort_col).coalesce(1).write.mode("overwrite").json(path)
+    one_sorted = df.repartition(1).sortWithinPartitions(sort_col)
+    one_sorted.write.mode("overwrite").json(path)
 
 
 def write_partitioned(

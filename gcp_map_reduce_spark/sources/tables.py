@@ -113,12 +113,13 @@ def load_corpus(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :func:`~gcp_map_reduce_spark.operators.scale.ensure_parallelism`
     probe).
 
-    The probe plans the scan on the driver (~200 ms), so its result is
-    kept in the scan's own ``_DF_CACHE`` record: one probe per session
-    and corpus generation, dropped with the record on regeneration or
-    session stop. Callers project and filter AFTER this call; Spark
-    pushes projections and deterministic filters below the round-robin
-    repartition, so the scan still reads only what they ask for."""
+    The probe plans the scan on the driver (26-50 ms on fresh sf0.01
+    copies), so its result is kept in the scan's own ``_DF_CACHE``
+    record: one probe per session and corpus generation, dropped with
+    the record on regeneration or session stop. Callers project and
+    filter AFTER this call; Spark pushes projections and deterministic
+    filters below the round-robin repartition, so the scan still reads
+    only what they ask for."""
     # imported here: operators.scale imports this module
     from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 

@@ -241,3 +241,102 @@ def test_semantic_search_validates_input_and_ranks(spark, tmp_path):
     for cands in got.values():
         coss = [c["cosine"] for c in cands]
         assert coss == sorted(coss, reverse=True) and len(coss) == 5
+
+
+def _launch_in_group(spark, operation, inp, store):
+    """Run ``launch_map_reduce`` under its own job group; return the
+    group's job ids and the physical plan text of every SQL execution
+    that ran one of them (read from the SQL status store)."""
+    from gcp_map_reduce_spark.api import launch_map_reduce
+
+    sc = spark.sparkContext
+    group = f"launch-budget-{operation}"
+    sc.setJobGroup(group, "launch_map_reduce job budget")
+    try:
+        launch_map_reduce(spark, operation, inp, store)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    plans = [
+        e.physicalPlanDescription()
+        for e in conv.asJava(sql_store.executionsList())
+        if {int(j) for j in conv.asJava(e.jobs().keySet())} & jobs
+    ]
+    return jobs, plans
+
+
+def test_launch_job_and_plan_budget(spark, tmp_path):
+    """The sorted sink is one shuffle into one sorted partition (no
+    range-bounds sampling job), and the inverted index dedups (word,
+    doc) in a HashAggregate below its posting-list aggregate."""
+    import re
+
+    inp = _corpus(tmp_path)
+    store = str(tmp_path / "store")
+
+    jobs, plans = _launch_in_group(spark, "wordcount", inp, store)
+    assert 0 < len(jobs) <= 3, sorted(jobs)
+    assert plans and not any("rangepartitioning" in p.lower() for p in plans)
+
+    jobs, plans = _launch_in_group(spark, "invertedindex", inp, store)
+    assert plans and not any("rangepartitioning" in p.lower() for p in plans)
+    plan = plans[-1]
+    dedup = re.search(
+        r"\((\d+)\) HashAggregate.*\nInput \[2\]: \[word#\d+, doc#\d+\]\n"
+        r"Keys \[2\]: \[word#\d+, doc#\d+\]\nFunctions: \[\]",
+        plan,
+    )
+    posting = re.search(
+        r"\((\d+)\) ObjectHashAggregate.*\n.*\nKeys \[1\]: \[word#\d+\]\n"
+        r"Functions \[1\]: \[partial_collect_list\(doc#",
+        plan,
+    )
+    assert dedup and posting, plan
+    # formatted plans number nodes children-first
+    assert int(dedup.group(1)) < int(posting.group(1)), plan
+
+
+def test_launch_inverted_index_matches_raw_token_reduce(spark, tmp_path):
+    """The deduped launch path writes the same bytes as
+    ``reduce_tokens`` over the raw token stream, on a corpus where one
+    word repeats across lines of one file, one is in every file and one
+    in a single file."""
+    import glob
+    import os
+
+    from gcp_map_reduce_spark.api import get_final_output, launch_map_reduce
+    from gcp_map_reduce_spark.functions.text import tokenize
+    from gcp_map_reduce_spark.operators.wordcount import reduce_tokens
+    from gcp_map_reduce_spark.sinks.writers import write_sorted_single_json
+    from gcp_map_reduce_spark.sources.text import read_text_corpus
+
+    inp = tmp_path / "raw"
+    inp.mkdir()
+    (inp / "a.txt").write_text("spark alpha\nSpark beta\n\nspark, spark gamma\n")
+    (inp / "b.txt").write_text("alpha delta\nbeta\nalpha alpha\n")
+    (inp / "c.txt").write_text("Alpha\nomega!\n")
+    store = str(tmp_path / "store")
+    out = launch_map_reduce(spark, "invertedindex", str(inp), store)
+
+    toks = tokenize(
+        read_text_corpus(spark, str(inp)),
+        text_col="line", out_col="word", keep_cols=["doc"],
+    )
+    ref = str(tmp_path / "ref")
+    write_sorted_single_json(reduce_tokens(toks, "invertedindex", doc="doc"), ref, "word")
+
+    (got,) = glob.glob(os.path.join(out, "part-*"))
+    (want,) = glob.glob(os.path.join(ref, "part-*"))
+    with open(got, "rb") as g, open(want, "rb") as w:
+        assert g.read() == w.read()
+
+    idx = {
+        r["word"]: list(r["docs"])
+        for r in get_final_output(spark, "invertedindex", store).collect()
+    }
+    assert idx["spark"] == ["a.txt"]
+    assert idx["alpha"] == ["a.txt", "b.txt", "c.txt"]
+    assert idx["omega"] == ["c.txt"]

@@ -23,6 +23,43 @@ def test_sorted_single_json_sink(spark, tmp_path):
     assert [r["word"] for r in rows] == ["a", "b", "c"]
 
 
+def test_sorted_single_json_sink_merges_many_partitions(spark, tmp_path):
+    """Many input partitions with shuffled keys still give ONE part file,
+    sorted across what were different partitions."""
+    import random
+
+    from gcp_map_reduce_spark.sinks import write_sorted_single_json
+
+    keys = [f"w{i:04d}" for i in range(400)]
+    random.Random(7).shuffle(keys)
+    df = spark.createDataFrame([(k, i) for i, k in enumerate(keys)], ["word", "cnt"])
+    df = df.repartition(9)
+    assert df.rdd.getNumPartitions() >= 8
+    out = str(tmp_path / "final")
+    write_sorted_single_json(df, out, "word")
+    parts = glob.glob(os.path.join(out, "part-*"))
+    assert len(parts) == 1
+    rows = [json.loads(line) for line in open(parts[0])]
+    assert [r["word"] for r in rows] == sorted(keys)
+
+
+def test_launch_on_all_blank_corpus_writes_one_empty_file(spark, tmp_path):
+    """Lines that normalize to nothing give no tokens: each operation
+    still publishes exactly one (empty) part file, read back as 0 rows."""
+    from gcp_map_reduce_spark.api import get_final_output, launch_map_reduce
+
+    inp = tmp_path / "raw"
+    inp.mkdir()
+    (inp / "blank.txt").write_text("\n   \n!!!\n")
+    store = str(tmp_path / "store")
+    for op in ("wordcount", "invertedindex"):
+        out = launch_map_reduce(spark, op, str(inp), store)
+        parts = glob.glob(os.path.join(out, "part-*"))
+        assert len(parts) == 1, (op, parts)
+        assert os.path.getsize(parts[0]) == 0, op
+        assert get_final_output(spark, op, store).count() == 0, op
+
+
 def test_partitioned_write_and_point_lookup(spark, tmp_path):
     from gcp_map_reduce_spark.sinks import (
         cleanup_store,

@@ -96,7 +96,7 @@ def pii_scrub_expr(doc: DataFrame) -> DataFrame:
 def _lang_cols(text_col: Column) -> tuple[Column, Column]:
     """(lang_pred, lang_score): replace-length counting of the padded
     markers, with the padding, tie-break and "und" rules of
-    ``curation_rules._lang_id_py``."""
+    ``curation_rules._lang_id_scorer``."""
     padded = F.concat(F.lit(" "), F.lower(text_col), F.lit(" "))
 
     def count_m(m: str) -> Column:

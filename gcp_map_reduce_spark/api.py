@@ -33,12 +33,23 @@ from gcp_map_reduce_spark.operators.wordcount import reduce_tokens
 from gcp_map_reduce_spark.sinks.writers import write_sorted_single_json
 from gcp_map_reduce_spark.sources.text import read_text_corpus
 
-OPERATIONS = ("wordcount", "invertedindex")
+# operation -> the schema of its final output, so a read never depends
+# on JSON inference (an empty output would infer no columns at all)
+OPERATIONS = {
+    "wordcount": "word string, cnt bigint",
+    "invertedindex": "word string, docs array<string>",
+}
+
+
+def _check_operation(operation: str) -> None:
+    if operation not in OPERATIONS:
+        raise ValueError(
+            f"unknown operation {operation!r}; known: {tuple(OPERATIONS)}"
+        )
 
 
 def _run_operation(spark: SparkSession, operation: str, input_dir: str) -> DataFrame:
-    if operation not in OPERATIONS:
-        raise ValueError(f"unknown operation {operation!r}; known: {OPERATIONS}")
+    _check_operation(operation)
     corpus = read_text_corpus(spark, input_dir)
     toks = tokenize(corpus, text_col="line", out_col="word", keep_cols=["doc"])
     if operation == "invertedindex":
@@ -68,8 +79,13 @@ def launch_map_reduce(
 
 
 def get_final_output(spark: SparkSession, operation: str, store_dir: str) -> DataFrame:
-    """Reference E2 (``GET /final_output`` -> ``app.py:23-46``)."""
-    return spark.read.json(os.path.join(store_dir, f"final-output-{operation}"))
+    """Reference E2 (``GET /final_output`` -> ``app.py:23-46``), read
+    with the operation's schema: an empty output still has its
+    columns."""
+    _check_operation(operation)
+    return spark.read.schema(OPERATIONS[operation]).json(
+        os.path.join(store_dir, f"final-output-{operation}")
+    )
 
 
 # /semantic_search caps: the route serves interactive top-k probes; the

@@ -4,7 +4,7 @@ from gcp_map_reduce_spark.functions.text import (
     sql_tokens_cte,
     tokenize,
 )
-from gcp_map_reduce_spark.functions.numeric import dec, dsum, davg
+from gcp_map_reduce_spark.functions.numeric import dec, dsum
 
 __all__ = [
     "normalize_text",
@@ -13,5 +13,4 @@ __all__ = [
     "tokenize",
     "dec",
     "dsum",
-    "davg",
 ]

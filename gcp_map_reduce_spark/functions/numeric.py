@@ -30,9 +30,3 @@ def dec(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
 def dsum(col: Column | str, alias: str, scale: int = 2) -> Column:
     """Exact (decimal) sum of a 2-decimal double column, surfaced as double."""
     return F.sum(dec(col, scale)).cast("double").alias(alias)
-
-
-def davg(col: Column | str, alias: str, scale: int = 2) -> Column:
-    """Order-insensitive average: exact decimal sum / count, in doubles."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c, scale)).cast("double") / F.count(c)).alias(alias)

@@ -92,15 +92,24 @@ def tokenize(
     return df.select(*keep, tok).filter(F.col(out_col) != "")
 
 
-_PUNCT_TABLE = str.maketrans("", "", string.punctuation)
+def _py_normalizer():
+    """Build the Python twin of :func:`normalize_text` as a closure over
+    its de-punctuate table, so a kernel that calls it pickles it by
+    value and runs where Spark's Python workers cannot import this
+    package."""
+    punct = str.maketrans("", "", string.punctuation)
+
+    def normalize(text: str) -> str:
+        """Driver/UDTF-side Python twin of :func:`normalize_text` —
+        identical rule order (de-punctuate, lower, ASCII-delete, trim)
+        so Python-path operators hash-match the JVM and SQL paths."""
+        t = text.translate(punct).lower()
+        return t.encode("ascii", "ignore").decode().strip()
+
+    return normalize
 
 
-def PY_NORMALIZE(text: str) -> str:
-    """Driver/UDTF-side Python twin of :func:`normalize_text` — identical
-    rule order (de-punctuate, lower, ASCII-delete, trim) so Python-path
-    operators hash-match the JVM and SQL paths."""
-    t = text.translate(_PUNCT_TABLE).lower()
-    return t.encode("ascii", "ignore").decode().strip()
+PY_NORMALIZE = _py_normalizer()
 
 
 def reference_shuffle_filter(col: Column | str) -> Column:

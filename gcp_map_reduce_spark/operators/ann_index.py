@@ -26,12 +26,15 @@ Layout (all under one index dir, published atomically)::
                              addressed sidecar, r15) for the screening
                              join's hot-cell sub-splitting — lazily
                              loaded via ann_index_cell_counts
-      _index_meta.json     {version, n_cells, n_vec, dim,
-                             segments, attrs, cell_counts_file,
-                             tombstones, n_deleted} — the manifest is
-                             the COMMIT POINT: a segment, tombstone
-                             batch, or counts sidecar exists iff
-                             listed here
+      _index_meta.json     {version, n_cells, n_vec, dim, segments,
+                             attrs, attrs_ddl, embedding_ddl, storage,
+                             cell_counts_file, tombstones, n_deleted},
+                             every key required, version exactly
+                             INDEX_VERSION (anything else: "rebuild
+                             the index"); optional cache_key_source
+                             and stream_marks. The manifest is the
+                             COMMIT POINT: a segment, tombstone batch,
+                             or counts sidecar exists iff listed here
 
 Why ``partitionBy(cell_id)`` is the load-bearing choice: the partition
 column becomes a DIRECTORY level, so a search's cell restriction is a
@@ -100,28 +103,19 @@ from gcp_map_reduce_spark.operators.similarity import (
 )
 from gcp_map_reduce_spark.sinks.writers import publish_atomic
 
-INDEX_VERSION = 1
-# int8-storage manifests carry a HIGHER version on purpose: their vector
-# schema (ec/scale instead of e) is unreadable by pre-r13 code, and the
-# version gate is what turns that into the designed "rebuild the index"
-# error instead of an unresolved-column crash deep in a search plan.
-# float64 indexes keep version 1 so pre-r13 readers stay compatible.
-INDEX_VERSION_INT8 = 2
-# Tombstoned manifests (ann_index_delete) bump again, same precedent
-# but a WORSE silent failure class: a pre-delete-aware reader would
-# pass the version gate, ignore the unknown tombstones key, and serve
-# every deleted row — silently wrong results in exactly the takedown
-# use-case the feature exists for (vs int8's loud column crash). The
-# bump makes old readers fail loud; compaction folds tombstones to
-# zero and RESTORES the base version, so a compacted index is readable
-# by every round's code again.
-INDEX_VERSION_TOMBSTONED = {INDEX_VERSION: 3, INDEX_VERSION_INT8: 4}
-READER_VERSIONS = (1, 2, 3, 4)
+# The one manifest format this module writes and reads. An index written
+# under any other version is a derived artifact of an older format:
+# ann_index_meta rejects it with "rebuild the index", and the cache
+# digest embeds the version, so ann_index_for_corpus never resolves one.
+INDEX_VERSION = 5
 META_FILE = "_index_meta.json"
-
-
-def _base_version(storage: str) -> int:
-    return INDEX_VERSION_INT8 if storage == "int8" else INDEX_VERSION
+# every key the build writes; a manifest missing any of them is not this
+# format (storage type and tombstones are plain fields, not versions)
+MANIFEST_KEYS = (
+    "version", "n_cells", "n_vec", "dim", "segments", "attrs", "attrs_ddl",
+    "embedding_ddl", "storage", "cell_counts_file", "tombstones",
+    "n_deleted",
+)
 
 
 class FullyTombstonedError(ValueError):
@@ -137,8 +131,10 @@ def _meta_path(index_dir: str) -> str:
 
 
 def ann_index_meta(index_dir: str) -> dict:
-    """Read and validate the index manifest; raise a actionable error on
-    a missing or version-mismatched index rather than scanning garbage."""
+    """Read and validate the index manifest; raise an actionable error
+    on a missing index, or on one whose manifest is not exactly
+    ``INDEX_VERSION`` with every key of ``MANIFEST_KEYS``, rather than
+    scanning garbage."""
     path = _meta_path(index_dir)
     if not os.path.isfile(path):
         raise FileNotFoundError(
@@ -147,43 +143,15 @@ def ann_index_meta(index_dir: str) -> dict:
         )
     with open(path) as fh:
         meta = json.load(fh)
-    if meta.get("version") not in READER_VERSIONS:
+    missing = [k for k in MANIFEST_KEYS if k not in meta]
+    if meta.get("version") != INDEX_VERSION or missing:
         raise ValueError(
-            f"ANN index at {index_dir} has version {meta.get('version')!r}, "
-            f"this reader speaks {READER_VERSIONS} — rebuild the index"
-        )
-    # the two-level (coarse + residual) codebook was removed: its cell ids
-    # are composites, and probing them with the coarse codebook alone
-    # would silently search the wrong cells
-    if meta.get("levels", 1) != 1:
-        raise ValueError(
-            f"ANN index at {index_dir} has a {meta['levels']!r}-level "
-            "codebook, this reader speaks single-level indexes only — "
+            f"ANN index at {index_dir} has manifest version "
+            f"{meta.get('version')!r}"
+            + (f" without {missing}" if missing else "")
+            + f", this reader speaks version {INDEX_VERSION} only — "
             "rebuild the index"
         )
-    # pre-append manifests carry no segment list; they are exactly the
-    # single base segment (append always writes the key). Pre-attrs
-    # manifests carry no metadata columns.
-    meta.setdefault("segments", ["vectors"])
-    meta.setdefault("attrs", [])
-    meta.setdefault("attrs_ddl", "")
-    # pre-r13 manifests predate the recorded source type; array<float>
-    # is what every such index was built over (the synthetic corpus) —
-    # the default keeps their streams starting, not silently lying: a
-    # mismatch still fails at the first trigger exactly as before
-    meta.setdefault("embedding_ddl", "array<float>")
-    meta.setdefault("storage", "float64")
-    # pre-r14 manifests carry no per-cell populations: None means
-    # UNKNOWN (consumers fall back to mean-based sizing), distinct from
-    # {} which would claim an empty index. pre-r15 manifests carry the
-    # dict INLINE here; current ones point at a content-addressed
-    # sidecar via cell_counts_file — consumers go through
-    # ann_index_cell_counts (lazy: only the screen's sizing pays the
-    # parse, and commits that don't change counts never rewrite it)
-    meta.setdefault("cell_counts", None)
-    # pre-delete manifests: nothing was ever tombstoned
-    meta.setdefault("tombstones", [])
-    meta.setdefault("n_deleted", 0)
     return meta
 
 
@@ -270,28 +238,18 @@ _CELL_COUNTS_CACHE: dict = {}
 def ann_index_cell_counts(index_dir: str, meta: dict | None = None):
     """The index's exact per-cell populations as a READ-ONLY mapping
     (``types.MappingProxyType`` — consumers that accumulate copy with
-    ``dict(...)``, see ``_commit_segment``), or None when unknown
-    (pre-r14 manifests — consumers fall back to mean-based sizing).
-    Reads the inline dict of pre-r15 manifests; for current manifests
-    lazily loads the ``cell_counts_file`` sidecar, verifying the
-    content sha embedded in its name (a mismatch is external
-    mutation/corruption and raises). A MISSING sidecar returns None
-    rather than raising: counts are a sizing hint, and the only way the
-    file is absent is a lock-free reader racing a commit's sidecar
-    sweep — mean sizing keeps results identical, just less balanced."""
+    ``dict(...)``, see ``_commit_segment``). Lazily loads the
+    ``cell_counts_file`` sidecar, verifying the content sha embedded in
+    its name (a mismatch is external mutation/corruption and raises).
+    A MISSING sidecar returns None rather than raising: counts are a
+    sizing hint, and a lock-free reader can race a commit's sidecar
+    sweep — the screen then sizes from the mean, which keeps results
+    identical, just less balanced."""
     from types import MappingProxyType
 
     if meta is None:
         meta = ann_index_meta(index_dir)
-    inline = meta.get("cell_counts")
-    if isinstance(inline, dict):
-        # same read-only contract as the sidecar path (3rd review
-        # pass: one mutable and one immutable return shape invited
-        # exactly the shared-dict corruption the proxy prevents)
-        return MappingProxyType(inline)
-    fname = meta.get("cell_counts_file")
-    if not fname:
-        return None
+    fname = meta["cell_counts_file"]
     hit = _CELL_COUNTS_CACHE.get(index_dir)
     if hit and hit[0] == fname:
         return hit[1]
@@ -342,7 +300,7 @@ def _carry_cache_key(index_dir: str, meta: dict) -> dict:
     """Carry an existing manifest's ``cache_key_source`` into a
     rebuild's fresh manifest: an in-place rebuild of a cache generation
     (``ann_index_rebuild`` on a dir ``ann_index_for_corpus`` resolved)
-    must not demote the dir from provably-live to legacy-LRU sweep
+    must not demote the dir from provably-live to unprovable-LRU sweep
     candidacy (r15, ADVICE fix). No-op when the dir has no manifest or
     no recorded source (user-directed index paths)."""
     try:
@@ -432,13 +390,13 @@ def _lock_pid(path: str) -> int | None:
 # candidate only if it is provably superseded — its manifest records
 # the source corpus it was built from (``cache_key_source``, r15) and
 # that file no longer fingerprints to the dir's digest (changed,
-# deleted, or built under an older INDEX_VERSION) — or if it predates
-# the recorded source (legacy dirs, LRU as before). A generation whose
-# corpus still fingerprints to its digest is LIVE (some other corpus /
-# storage variant resolves to it) and is never a victim: with >K
-# actively-resolved corpora in one cache root the old pure-LRU sweep
-# rmtree'd the least-recently-used live index every resolve — rebuild
-# thrash (r14 ADVICE). Without any sweep a long-lived maintenance host
+# deleted, or built under an older INDEX_VERSION) — or if it records
+# no source (a crash between build and source record; LRU decides). A
+# generation whose corpus still fingerprints to its digest is LIVE
+# (some other corpus / storage variant resolves to it) and is never a
+# victim: with >K actively-resolved corpora in one cache root the old
+# pure-LRU sweep rmtree'd the least-recently-used live index every
+# resolve — rebuild thrash (r14 ADVICE). Without any sweep a long-lived maintenance host
 # leaks one full index per corpus change forever (r13 verdict).
 ANN_INDEX_KEEP_GENERATIONS = 3
 # Grace window: a generation used (resolved OR appended) within the
@@ -486,12 +444,7 @@ def _corpus_cache_digest(src: str, storage: str, attrs=()) -> str:
     st = os.stat(src)
     return hashlib.sha1(
         f"{os.path.realpath(src)}|{st.st_size}|{st.st_mtime_ns}|"
-        f"v{INDEX_VERSION}"
-        # storage/attr variants are distinct indexes of the same
-        # corpus; the float64/attr-less tags are elided so pre-r13 /
-        # pre-r15 cache dirs stay valid
-        f"{'' if storage == 'float64' else '|' + storage}"
-        f"{'|attrs:' + ','.join(attrs) if attrs else ''}".encode()
+        f"v{INDEX_VERSION}|{storage}|attrs:{','.join(attrs)}".encode()
     ).hexdigest()[:16]
 
 
@@ -501,26 +454,30 @@ def _generation_is_live(root: str, name: str) -> bool:
     would land HERE, so sweeping it would destroy a live index (r14
     ADVICE: distinct corpora / storage variants coexist in one root).
     Manifest read is raw JSON, not :func:`ann_index_meta`: a version
-    outside READER_VERSIONS means NEWER code owns the dir — treat as
-    live, never as garbage. Legacy manifests with no recorded source
-    (pre-r15) return False: liveness unprovable, LRU decides as it
-    always did."""
+    above INDEX_VERSION means NEWER code owns the dir — treat as live,
+    never as garbage. A lower version is stale: its digest embeds the
+    old version, so no resolve can land on it again. A manifest with
+    no recorded source returns False: liveness unprovable, LRU
+    decides."""
     try:
         with open(os.path.join(root, name, META_FILE)) as fh:
             meta = json.load(fh)
     except (OSError, ValueError):
         return False  # unreadable manifest: let LRU + lock decide
-    if meta.get("version") not in READER_VERSIONS:
+    version = meta.get("version")
+    if isinstance(version, int) and version < INDEX_VERSION:
+        return False
+    if version != INDEX_VERSION:
         return True
     src = meta.get("cache_key_source")
     if not src:
         return False
     try:
         return _corpus_cache_digest(
-            src, meta.get("storage", "float64"), meta.get("attrs") or ()
+            src, meta["storage"], meta["attrs"]
         ) == name
-    except OSError:
-        return False  # corpus deleted: provably stale
+    except (OSError, KeyError):
+        return False  # corpus deleted or manifest malformed: stale
 
 
 def _sweep_stale_generations(
@@ -534,7 +491,7 @@ def _sweep_stale_generations(
     fingerprints to its digest is LIVE and skipped
     (:func:`_generation_is_live` — another corpus resolves to it; LRU
     alone evicted live indexes when >K corpora shared a root), and the
-    rest — provably superseded or legacy-unprovable — age out by
+    rest — provably superseded or unprovable — age out by
     recency as before. Each victim is claimed via its own writer lock
     NON-blocking — a held lock means a live builder/appender owns it
     and it is skipped this pass, never broken (flock dies with its
@@ -584,18 +541,28 @@ def _sweep_stale_generations(
             continue  # live writer owns it — not stale, skip this pass
 
 
-def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
-    """Column indices of each row's ``k`` nearest codebook rows by
-    squared L2 distance ``(n2 - 2*dot) + cn2`` with the (d, cell_id)
-    tie-break — the one numpy distance definition the Arrow build
-    assignment, the collected append and the driver-side probe share,
-    so they cannot disagree."""
-    import numpy as np
+def _nearest_cells():
+    """Build ``nearest(E, En2, cell_ids, C, Cn2, k)``: column indices of
+    each row's ``k`` nearest codebook rows by squared L2 distance
+    ``(n2 - 2*dot) + cn2`` with the (d, cell_id) tie-break — the one
+    numpy distance definition the Arrow build assignment, the append
+    and the driver-side probe share, so they cannot disagree. Built as
+    a closure so the Arrow build kernel that calls it pickles it by
+    value and runs where Spark's Python workers cannot import this
+    package."""
 
-    dist = (En2[:, None] - 2.0 * _seq_dot(E, C)) + Cn2[None, :]
-    return np.lexsort(
-        (np.broadcast_to(cell_ids, dist.shape), dist), axis=1
-    )[:, :k]
+    def nearest(E, En2, cell_ids, C, Cn2, k: int):
+        import numpy as np
+
+        dist = (En2[:, None] - 2.0 * _seq_dot(E, C)) + Cn2[None, :]
+        return np.lexsort(
+            (np.broadcast_to(cell_ids, dist.shape), dist), axis=1
+        )[:, :k]
+
+    return nearest
+
+
+_np_nearest = _nearest_cells()
 
 
 def _codebook_df(
@@ -617,7 +584,7 @@ def _assign_cells(
     feats: DataFrame, seeds: DataFrame, n_cells: int
 ) -> DataFrame:
     """Add the home ``cell_id`` (nearest codebook cell) to every feats
-    row — the N x n_cells x d term of a build/append.
+    row — the N x n_cells x d term of a build.
 
     Below ``ARROW_ASSIGN_MIN_CELLS`` cells this is the broadcast-codebook
     ``ivf_probe_cells`` expression: zero extra jobs, but higher-order
@@ -816,7 +783,7 @@ def _build_unlocked(
         _emb(spark, sf_dir).select("embedding").head()["embedding"]
     )
     meta = {
-        "version": INDEX_VERSION if storage == "float64" else INDEX_VERSION_INT8,
+        "version": INDEX_VERSION,
         "n_cells": int(n_cells),
         "n_vec": int(n_vec),
         "dim": int(dim),
@@ -825,6 +792,8 @@ def _build_unlocked(
         "attrs_ddl": _attrs_ddl(feats, attrs),
         "embedding_ddl": _embedding_ddl(spark, sf_dir),
         "storage": storage,
+        "tombstones": [],
+        "n_deleted": 0,
     }
     _carry_cache_key(index_dir, meta)
     if storage == "int8":
@@ -1002,21 +971,12 @@ def _write_seg_ids(spark: SparkSession, seg_dir: str, n_rows: int) -> None:
 
 
 def _live_ids(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame:
-    """(vec_id) of every LIVE row — the delete path's membership read.
-    Segments with an ``_ids`` sidecar are read from it (a few file
-    opens per segment); pre-sidecar segments fall back to the ids-only
-    segment scan (one open per cell — the pre-r16 cost, kept for
-    back-compat with already-published indexes)."""
+    """(vec_id) of every LIVE row — the delete path's membership read,
+    from each segment's ``_ids`` sidecar (a few file opens per segment,
+    not one per cell)."""
     df = None
     for seg in meta["segments"]:
-        seg_dir = os.path.join(index_dir, seg)
-        ids_dir = os.path.join(seg_dir, "_ids")
-        if os.path.isdir(ids_dir):
-            leg = spark.read.parquet(ids_dir)
-        else:
-            leg = spark.read.parquet(seg_dir).select(
-                F.col("vec_id").cast("long")
-            )
+        leg = spark.read.parquet(os.path.join(index_dir, seg, "_ids"))
         df = leg if df is None else df.unionByName(leg)
     if meta["tombstones"]:
         tombs = None
@@ -1032,9 +992,10 @@ def _live_ids(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame:
 def _seg_cell_counts(spark: SparkSession, seg_dir: str) -> dict:
     """{str(cell_id): rows} of ONE written segment dir, read from the
     parquet FOOTERS (the projection is the partition column alone, so no
-    data page is ever decoded — one metadata-weight job). The manifest
-    accumulates these per commit into ``cell_counts``: the exact
-    per-cell populations the screening join sizes its sub-blocks from —
+    data page is ever decoded — one metadata-weight job). Build and
+    compaction record these in the counts sidecar (appends add the
+    batch's driver-side histogram): the exact per-cell populations the
+    screening join sizes its sub-blocks from —
     sizing from the MEAN left a Zipf-hot cell's worst task bounded by
     its own population instead of the tile target (r13 verdict task 5),
     and at 100 TB the hot cell IS the workload. JSON object keys are
@@ -1071,22 +1032,23 @@ def _commit_segment(
     index_dir: str,
     meta: dict,
     assigned: DataFrame,
-    n_batch: int,
-    expected_gen: int | None = None,
-    seg_counts: dict | None = None,
+    seg_counts: dict,
+    expected_gen: int,
 ) -> dict:
     """Write ``assigned`` as the next segment dir and commit it into the
     manifest (atomic replace = the commit point; a pre-existing dir at
-    the slot is an unregistered crash leftover and is swept). Callers
-    hold the writer lock; the manifest re-read below turns a
-    NON-locking external mutation (which the lock cannot see) into a
-    loud error instead of a silent lost update. ``expected_gen`` is the
-    :func:`_generation` fingerprint captured when ``meta`` was read —
-    it catches the mutation the segments list alone cannot: an external
-    REBUILD that lands segments==['vectors'] while our stale meta also
-    reads ['vectors'] (first append on a fresh index) swapped the
-    codebook underneath, and committing would register rows assigned
-    against the OLD codebook (r13 ADVICE)."""
+    the slot is an unregistered crash leftover and is swept).
+    ``seg_counts`` is the batch's ``{str(cell_id): rows}`` histogram,
+    already known on the driver. Callers hold the writer lock; the
+    manifest re-read below turns a NON-locking external mutation (which
+    the lock cannot see) into a loud error instead of a silent lost
+    update. ``expected_gen`` is the :func:`_generation` fingerprint
+    captured when ``meta`` was read — it catches the mutation the
+    segments list alone cannot: an external REBUILD that lands
+    segments==['vectors'] while our stale meta also reads ['vectors']
+    (first append on a fresh index) swapped the codebook underneath,
+    and committing would register rows assigned against the OLD
+    codebook (r13 ADVICE)."""
     on_disk = ann_index_meta(index_dir)
     if (
         on_disk["segments"] != meta["segments"]
@@ -1094,8 +1056,7 @@ def _commit_segment(
         # would have its tombstone registration silently dropped by
         # the manifest replace below
         or on_disk["tombstones"] != meta["tombstones"]
-        or (expected_gen is not None
-            and _generation(index_dir) != expected_gen)
+        or _generation(index_dir) != expected_gen
     ):
         raise RuntimeError(
             f"index at {index_dir} was mutated outside the writer lock "
@@ -1104,6 +1065,20 @@ def _commit_segment(
             "codebook generation changed — an external rebuild) — "
             "aborting before overwriting its commit; retry the append"
         )
+    prev_file = meta["cell_counts_file"]
+    cc = ann_index_cell_counts(index_dir, meta)
+    if cc is None:
+        # r16 ADVICE fix: UNDER THE WRITER LOCK a manifest-referenced
+        # sidecar cannot be missing via the sweep race that excuses
+        # lock-free readers — it is external mutation, the same class
+        # the sha-mismatch path raises on. Committing would carry the
+        # dangling reference forward.
+        raise ValueError(
+            f"cell-counts sidecar {prev_file} referenced by the manifest "
+            f"at {index_dir} is missing under the writer lock — the "
+            "index was mutated externally; rebuild the index"
+        )
+    n_batch = sum(seg_counts.values())
     seg = f"vectors-seg{len(meta['segments']):04d}"
     seg_dir = os.path.join(index_dir, seg)
     if os.path.exists(seg_dir):
@@ -1117,53 +1092,26 @@ def _commit_segment(
     )
     _write_seg_ids(assigned.sparkSession, seg_dir, n_batch)
     meta["segments"] = list(meta["segments"]) + [seg]
-    meta["n_vec"] = int(meta["n_vec"]) + int(n_batch)
+    meta["n_vec"] = int(meta["n_vec"]) + n_batch
     # accumulate exact per-cell populations (the screening join's
-    # sub-split sizing). ``seg_counts`` lets the collected path pass its
-    # already-known driver-side histogram (zero extra jobs); the plan
-    # path reads the new segment's FOOTERS (metadata-weight). A pre-r14
-    # manifest (counts None) stays unknown — one unknown base segment
-    # would poison every later exact count. Counts commit as a sidecar
-    # (r15): the sidecar is written BEFORE the manifest replace (a crash
-    # between leaves an orphan the next commit's sweep reclaims, never a
-    # manifest pointing at nothing), and a pre-r15 inline dict migrates
-    # to the sidecar here on its first append.
-    prev_file = meta.get("cell_counts_file")
-    cc = ann_index_cell_counts(index_dir, meta)
-    if cc is None and prev_file:
-        # r16 ADVICE fix: UNDER THE WRITER LOCK a manifest-referenced
-        # sidecar cannot be missing via the sweep race that excuses
-        # lock-free readers — it is external mutation, the same class
-        # the sha-mismatch path raises on. Committing would carry the
-        # dangling reference forward and silently degrade exact counts
-        # to unknown forever.
-        raise ValueError(
-            f"cell-counts sidecar {prev_file} referenced by the manifest "
-            f"at {index_dir} is missing under the writer lock — the "
-            "index was mutated externally; rebuild or re-append"
-        )
-    if cc is not None:
-        if seg_counts is None:
-            seg_counts = _seg_cell_counts(assigned.sparkSession, seg_dir)
-        cc = dict(cc)
-        for k, v in seg_counts.items():
-            cc[k] = cc.get(k, 0) + int(v)
-        meta.pop("cell_counts", None)
-        meta["cell_counts_file"] = _write_cell_counts(index_dir, cc)
+    # sub-split sizing) into a new sidecar, written BEFORE the manifest
+    # replace: a crash between leaves an orphan the next commit's sweep
+    # reclaims, never a manifest pointing at nothing
+    cc = dict(cc)
+    for k, v in seg_counts.items():
+        cc[k] = cc.get(k, 0) + int(v)
+    meta["cell_counts_file"] = _write_cell_counts(index_dir, cc)
     _meta_write(index_dir, meta)
-    keep = {meta.get("cell_counts_file"), prev_file}
-    _sweep_old_count_files(index_dir, {k for k in keep if k})
+    _sweep_old_count_files(index_dir, {meta["cell_counts_file"], prev_file})
     return meta
 
 
-# driver-side PER-CELL ids mirror for the collected append path: the
-# dup check needs ONLY membership of vec_ids within the batch's HOME
-# CELLS — the same cell-pruned semantics as the plan path's check join
-# (ann_index_append): a replayed batch carries the same embeddings,
-# hence the same home cells under the fixed codebook, so every
-# already-present id is found there; a vec_id reused with a DIFFERENT
-# embedding violates the append contract on both paths alike (vec_ids
-# are unique by contract — appends are inserts, not upserts).
+# driver-side PER-CELL ids mirror for the append's dup check: it needs
+# ONLY membership of vec_ids within the batch's HOME CELLS — a replayed
+# batch carries the same embeddings, hence the same home cells under
+# the fixed codebook, so every already-present id is found there; a
+# vec_id reused with a DIFFERENT embedding violates the append contract
+# (vec_ids are unique by contract — appends are inserts, not upserts).
 # So the mirror holds id sets for TOUCHED CELLS only, seeded lazily by
 # one cell-pruned ids-only scan per newly-touched cell set
 # (_ids_scan_df: the cell restriction is a static PartitionFilters IN
@@ -1219,8 +1167,8 @@ def _ids_for_cells(
 
 def _ids_mirror_evict(by_cell: "OrderedDict") -> None:
     """Drop least-recently-touched cells until the cached id count fits
-    IDS_MIRROR_MAX_IDS — the driver-memory bound of the collected
-    append path (evicted cells re-fetch via _ids_for_cells on next
+    IDS_MIRROR_MAX_IDS — the driver-memory bound of the append's dup
+    check (evicted cells re-fetch via _ids_for_cells on next
     touch)."""
     total = sum(len(s) for s in by_cell.values())
     while total > IDS_MIRROR_MAX_IDS and len(by_cell) > 1:
@@ -1280,30 +1228,25 @@ def _warn_tombstoned_skips(n: int) -> None:
     )
 
 
-def _append_collected(
+def _append_locked(
     spark: SparkSession,
     index_dir: str,
-    meta: dict,
     vectors: DataFrame,
     if_exists: str,
-    expected_gen: int | None = None,
 ) -> dict:
-    """Driver-centric append (the streaming triggers' pattern,
-    streaming/embedding_near_dup.py): collect the batch once, assign in
-    numpy against the session-cached codebook (``_seq_dot`` +
-    ``lexsort`` — the arithmetic ``_probes_driver`` already pins
-    bit-identical to the plan), dup-check against the per-cell ids
-    mirror (cold cells fetched by ONE cell-pruned ids-only scan of the
-    batch's home cells — PartitionFilters on every segment leg, so the
-    check's read scales with the batch's cells, never ``n_vec``; warm
-    cells cost zero jobs), write the segment. Two Spark jobs per cold
-    append, one per warm — the difference between 148 and
-    streaming-worthy trigger rates. Contract: batches that fit on the
-    driver (a micro-batch, by construction); driver memory is bounded
-    by IDS_MIRROR_MAX_IDS (LRU over cells), not the index size."""
     import numpy as np
 
+    meta = ann_index_meta(index_dir)
+    # generation fingerprint captured WITH the manifest read: the two
+    # together define what "unchanged index" means to _commit_segment
+    expected_gen = _generation(index_dir)
     attrs = meta["attrs"]
+    missing = [c for c in attrs if c not in vectors.columns]
+    if missing:
+        raise ValueError(
+            f"index persists attrs {attrs} but the append batch lacks "
+            f"{missing} — every segment must carry the same columns"
+        )
     pdf = vectors.select("vec_id", "embedding", *attrs).toPandas()
     if pdf.empty:
         return meta
@@ -1321,9 +1264,9 @@ def _append_collected(
         by_cell = OrderedDict()
         _cache_put(_IDS_MIRROR, index_dir, (mirror_key, by_cell))
     batch_cells = sorted({int(c) for c in home})
-    missing = [c for c in batch_cells if c not in by_cell]
-    if missing:
-        by_cell.update(_ids_for_cells(spark, index_dir, meta, missing))
+    cold = [c for c in batch_cells if c not in by_cell]
+    if cold:
+        by_cell.update(_ids_for_cells(spark, index_dir, meta, cold))
     existing = set()
     for c in batch_cells:
         by_cell.move_to_end(c)  # newest = last to evict
@@ -1356,9 +1299,10 @@ def _append_collected(
         return meta
     out = pdf.loc[keep].copy()
     out["cell_id"] = home[keep]
+    out["e"] = [list(map(float, row)) for row in E[keep]]
+    out["n2"] = n2[keep]
     from pyspark.sql.types import (
         ArrayType,
-        ByteType,
         DoubleType,
         LongType,
         StructField,
@@ -1370,56 +1314,27 @@ def _append_collected(
     # whose columns arrive as (b, a) for attrs ['a', 'b'] would
     # otherwise silently persist each attr under the other's name
     fields_by_name = {f.name: f for f in vectors.schema.fields}
-    attr_fields = [fields_by_name[c] for c in attrs]
-    if meta["storage"] == "int8":
-        # numpy mirror of _quantize_stored — max, /127, floor, * are
-        # all single correctly-rounded IEEE ops, so codes and decoded
-        # norms are bit-identical to the expression path (pytest-gated
-        # collected == plan parity on int8 indexes)
-        Ek = E[keep]
-        scale = np.max(np.abs(Ek), axis=1) / 127
-        safe = np.where(scale == 0, 1.0, scale)
-        codes = np.floor(Ek / safe[:, None])
-        codes[scale == 0] = 0.0
-        decoded = codes * scale[:, None]
-        out["ec"] = [
-            [int(c) for c in row] for row in codes.astype(np.int64)
+    schema = StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("e", ArrayType(DoubleType())),
+            StructField("n2", DoubleType()),
+            *[fields_by_name[c] for c in attrs],
+            StructField("cell_id", LongType()),
         ]
-        out["scale"] = scale
-        out["n2"] = _np_n2(decoded)
-        schema = StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("ec", ArrayType(ByteType())),
-                StructField("scale", DoubleType()),
-                StructField("n2", DoubleType()),
-                *attr_fields,
-                StructField("cell_id", LongType()),
-            ]
-        )
-        cols = ["vec_id", "ec", "scale", "n2", *attrs, "cell_id"]
-    else:
-        out["e"] = [list(map(float, row)) for row in E[keep]]
-        out["n2"] = n2[keep]
-        schema = StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("e", ArrayType(DoubleType())),
-                StructField("n2", DoubleType()),
-                *attr_fields,
-                StructField("cell_id", LongType()),
-            ]
-        )
-        cols = ["vec_id", "e", "n2", *attrs, "cell_id"]
-    assigned = spark.createDataFrame(out[cols], schema=schema)
+    )
+    assigned = spark.createDataFrame(
+        out[["vec_id", "e", "n2", *attrs, "cell_id"]], schema=schema
+    )
+    if meta["storage"] == "int8":
+        # the build's own quantizer: a segment's stored form is a pure
+        # function of its float rows, whichever commit wrote it
+        assigned = _quantize_stored(assigned, attrs)
     # per-cell histogram is already on the driver — no footer job needed
     uniq, cnts = np.unique(home[keep], return_counts=True)
-    seg_counts = {
-        str(int(c)): int(n) for c, n in zip(uniq, cnts)
-    }
+    seg_counts = {str(int(c)): int(n) for c, n in zip(uniq, cnts)}
     new_meta = _commit_segment(
-        index_dir, meta, assigned, int(keep.sum()), expected_gen,
-        seg_counts=seg_counts,
+        index_dir, meta, assigned, seg_counts, expected_gen
     )
     for c, v in zip(home[keep], ids[keep]):
         by_cell[int(c)].add(int(v))
@@ -1436,22 +1351,25 @@ def ann_index_append(
     index_dir: str,
     vectors: DataFrame,
     if_exists: str = "error",
-    collected: bool = False,
 ) -> dict:
     """Append a batch of new ``(vec_id, embedding)`` rows into a
     published index WITHOUT rebuilding — the ingest-cycle shape: the
     corpus grows by a batch, the codebook stays FIXED, and only the
-    batch is scanned/assigned/written.
+    batch is assigned and written.
 
-    Mechanics (LSM-style segments): the batch is assigned against the
-    published codebook via the SHARED assignment definition
-    (:func:`_assign_cells`) — bit-identical to the build-time
-    assignment, so an index grown by appends equals a fresh build over
-    the same rows with the same codebook (pytest-gated) — and written
-    as a NEW ``partitionBy(cell_id)`` segment directory; the manifest update
-    (atomic ``os.replace``) is the commit point. Crash anywhere before
-    it leaves the old index intact; an unregistered leftover segment
-    dir is swept by the next append to that slot.
+    Contract: the batch must fit on the driver, the same contract as a
+    search's query batch. It is collected once, assigned in numpy
+    against the session-cached codebook (:func:`_np_nearest`, the
+    arithmetic the build's Arrow assignment and the search's probes
+    share), so an index grown by appends equals a fresh build over the
+    same rows with the same codebook (pytest-gated, float64 and int8),
+    and written as a NEW ``partitionBy(cell_id)`` segment directory;
+    the manifest update (atomic ``os.replace``) is the commit point.
+    Crash anywhere before it leaves the old index intact; an
+    unregistered leftover segment dir is swept by the next append to
+    that slot. Bulk growth goes through :func:`ann_index_rebuild`,
+    which also re-sizes ``n_cells``. Two Spark jobs per append whose
+    cells are cold in the ids mirror, one when they are warm.
 
     Concurrency: the whole append (manifest read -> dup check -> segment
     write -> manifest commit) holds the index's exclusive writer lock
@@ -1461,20 +1379,17 @@ def ann_index_append(
     lock: they see whichever manifest the last commit published.
 
     Duplicate vec_ids are rejected up front — checked against the
-    batch itself and against ONLY the batch's home cells (the check
-    join prunes to affected partitions, so its cost scales with the
-    batch, not the corpus). ``if_exists`` governs the index-side check:
-    ``"error"`` (default) raises; ``"skip"`` drops already-present ids
-    and appends the rest — appends become IDEMPOTENT, which is what an
-    at-least-once streaming caller needs (a replayed batch whose
-    manifest commit already happened skips everything and is a no-op;
-    see streaming/ann_index_stream.py).
-
-    ``collected=True`` runs the driver-centric fast path for
-    driver-sized batches (:func:`_append_collected`: cached codebook,
-    numpy assignment, per-cell ids mirror for the dup check) —
-    bit-identical results, pytest-gated; the default plan path remains
-    for batches too large to collect.
+    batch itself and against ONLY the batch's home cells, through a
+    driver-side per-cell ids mirror whose cold cells are fetched by one
+    cell-pruned ids-only scan (PartitionFilters on every segment leg),
+    so the check's read scales with the batch's cells, never ``n_vec``;
+    driver memory is bounded by ``IDS_MIRROR_MAX_IDS`` (LRU over cells).
+    ``if_exists`` governs the index-side check: ``"error"`` (default)
+    raises; ``"skip"`` drops already-present ids and appends the rest —
+    appends become IDEMPOTENT, which is what an at-least-once streaming
+    caller needs (a replayed batch whose manifest commit already
+    happened skips everything and is a no-op; see
+    streaming/ann_index_stream.py).
 
     The fixed codebook is the documented trade: cell populations grow
     ~uniformly (expected target+N_appended/n_cells rows/cell), so
@@ -1489,100 +1404,7 @@ def ann_index_append(
             f"if_exists must be 'error' or 'skip', got {if_exists!r}"
         )
     with _write_lock(index_dir):
-        return _append_locked(spark, index_dir, vectors, if_exists, collected)
-
-
-def _append_locked(
-    spark: SparkSession,
-    index_dir: str,
-    vectors: DataFrame,
-    if_exists: str,
-    collected: bool,
-) -> dict:
-    meta = ann_index_meta(index_dir)
-    # generation fingerprint captured WITH the manifest read: the two
-    # together define what "unchanged index" means to _commit_segment
-    expected_gen = _generation(index_dir)
-    attrs = meta["attrs"]
-    missing = [c for c in attrs if c not in vectors.columns]
-    if missing:
-        raise ValueError(
-            f"index persists attrs {attrs} but the append batch lacks "
-            f"{missing} — every segment must carry the same columns"
-        )
-    if collected:
-        return _append_collected(
-            spark, index_dir, meta, vectors, if_exists, expected_gen
-        )
-    batch = _with_norm2(
-        vectors.select("vec_id", "embedding", *attrs)
-    ).select("vec_id", "e", "n2", *attrs)
-    seeds = spark.read.parquet(os.path.join(index_dir, "codebook"))
-    assigned = _assign_cells(batch, seeds, meta["n_cells"])
-    # pin the batch BEFORE deriving anything from it: the cells list,
-    # the dup check, and the segment write must all see the same rows
-    # even if the source directory is still being written to — an
-    # unpinned plan would re-list the source per job and a row landing
-    # in a cell outside the stale cells list would bypass the pruned
-    # dup check entirely
-    assigned = assigned.localCheckpoint(eager=True)
-    # dedupe gate: batch-internal, then vs the affected cells only
-    n_batch = assigned.count()
-    if n_batch == 0:
-        return meta
-    if assigned.select("vec_id").distinct().count() != n_batch:
-        raise ValueError("append batch contains duplicate vec_ids")
-    cells = sorted(
-        r.cell_id for r in assigned.select("cell_id").distinct().collect()
-    )
-    # physical rows (include_deleted): a tombstoned id's slot stays
-    # occupied until compaction — see ann_index_delete
-    existing = _load_vectors(
-        spark, index_dir, meta, include_deleted=True
-    ).where(F.col("cell_id").isin(cells))
-    if if_exists == "skip":
-        # the skipped-id scan is the same cell-pruned join as the error
-        # check — cost still scales with the batch's cells. Re-count and
-        # bail on all-skipped (the replayed-committed-batch no-op). The
-        # batch side is already pinned above; the index side is stable
-        # (reads only manifest-listed segments).
-        n_before = n_batch
-        assigned = assigned.join(existing, "vec_id", "left_anti")
-        n_batch = assigned.count()
-        if n_batch < n_before and meta["tombstones"]:
-            # skipped-because-tombstoned is a REPLACEMENT being silently
-            # lost unless it's an at-least-once replay — surface it
-            # (review catch on the streaming maintainer's skip path)
-            tomb = _tombstoned_ids(spark, index_dir, meta)
-            if tomb:
-                tomb_df = _ids_df(spark, tomb)
-                n_dead = (
-                    vectors.select("vec_id")
-                    .join(F.broadcast(tomb_df), "vec_id", "left_semi")
-                    .count()
-                )
-                if n_dead:
-                    _warn_tombstoned_skips(n_dead)
-        if n_batch == 0:
-            return meta
-    else:
-        clash_rows = (
-            assigned.join(existing, "vec_id", "left_semi")
-            .select("vec_id").limit(20).collect()
-        )
-        if clash_rows:
-            _raise_dup_append(
-                [int(r.vec_id) for r in clash_rows],
-                _tombstoned_ids(spark, index_dir, meta)
-                if meta["tombstones"] else set(),
-            )
-    if meta["storage"] == "int8":
-        # quantize ONLY what survives the dup gate, with the same
-        # expression pipeline the build used — a segment's stored form
-        # is a pure function of its rows regardless of which path
-        # wrote it
-        assigned = _quantize_stored(assigned, attrs)
-    return _commit_segment(index_dir, meta, assigned, n_batch, expected_gen)
+        return _append_locked(spark, index_dir, vectors, if_exists)
 
 
 def ann_index_delete(
@@ -1657,14 +1479,6 @@ def ann_index_delete(
 STREAM_MARKS_CAP = 8
 
 
-def _mark_entry(rec) -> dict:
-    """Normalize a recorded mark (tolerates the short-lived int-only
-    format) to ``{"batch": int, "at": int}``."""
-    if isinstance(rec, dict):
-        return {"batch": int(rec["batch"]), "at": int(rec.get("at", 0))}
-    return {"batch": int(rec), "at": 0}
-
-
 def _mark_streams(meta: dict, stream_mark: tuple[str, int] | None) -> None:
     """Record ``stream_mark`` = (lineage key, batch id) into
     ``meta["stream_marks"]`` (see the watermark comment in
@@ -1676,9 +1490,7 @@ def _mark_streams(meta: dict, stream_mark: tuple[str, int] | None) -> None:
     candidate."""
     if stream_mark is None:
         return
-    marks = {
-        k: _mark_entry(v) for k, v in meta.get("stream_marks", {}).items()
-    }
+    marks = dict(meta.get("stream_marks", {}))
     seq = 1 + max((m["at"] for m in marks.values()), default=-1)
     marks[stream_mark[0]] = {"batch": int(stream_mark[1]), "at": seq}
     while len(marks) > STREAM_MARKS_CAP:
@@ -1741,7 +1553,7 @@ def _delete_locked(
     if stream_mark is not None:
         key, batch_id = stream_mark
         rec = meta.get("stream_marks", {}).get(key)
-        if rec is not None and _mark_entry(rec)["batch"] >= int(batch_id):
+        if rec is not None and rec["batch"] >= int(batch_id):
             return meta
     ids = sorted({int(v) for v in vec_ids})
     if not ids:
@@ -1825,12 +1637,6 @@ def _delete_locked(
     meta["tombstones"] = [slot]
     meta["n_vec"] = int(meta["n_vec"]) - n_hit
     meta["n_deleted"] = int(meta["n_deleted"]) + n_hit
-    # version bump: a pre-delete-aware reader would pass the version
-    # gate, ignore the tombstones key, and silently serve deleted rows
-    # (see INDEX_VERSION_TOMBSTONED); compaction restores the base
-    meta["version"] = INDEX_VERSION_TOMBSTONED[
-        _base_version(meta["storage"])
-    ]
     _mark_streams(meta, stream_mark)
     _meta_write(index_dir, meta)
     # superseded + crash-orphan tombstone dirs: keep the dirs the
@@ -1865,8 +1671,7 @@ def ann_index_delete_where(
     Resolves the ids INDEX-side (an ids+attrs column scan, so the
     vector payload is never read), then reuses the tombstone commit
     path (:func:`ann_index_delete` mechanics: folded single tombstone
-    dir, version gate, broadcast anti-join readers, compaction
-    materializes).
+    dir, broadcast anti-join readers, compaction materializes).
 
     The resolved id set is driver-collected — bounded by
     ``DELETE_WHERE_MAX_IDS`` (default 1M): past that the operation
@@ -1998,15 +1803,7 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
         "segments": ["vectors"],
         "tombstones": [],
         "n_deleted": 0,
-        # tombstones folded to zero: restore the base version so every
-        # pre-delete-aware reader can read the compacted index again
-        "version": _base_version(meta["storage"]),
     }
-    # never carry count keys into the fresh manifest: the inline dict is
-    # the pre-r15 format, and the old sidecar dies with the swapped dir
-    counts_known = ann_index_cell_counts(index_dir, meta) is not None
-    new_meta.pop("cell_counts", None)
-    new_meta.pop("cell_counts_file", None)
 
     def write(staging: str) -> None:
         cb.coalesce(1).write.parquet(os.path.join(staging, "codebook"))
@@ -2019,12 +1816,12 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
             spark, os.path.join(staging, "vectors"), new_meta["n_vec"]
         )
         # re-record rather than carry: materialized deletes change the
-        # physical per-cell populations (live == physical again)
-        if counts_known:
-            new_meta["cell_counts_file"] = _write_cell_counts(
-                staging,
-                _seg_cell_counts(spark, os.path.join(staging, "vectors")),
-            )
+        # physical per-cell populations (live == physical again), and
+        # the old sidecar dies with the swapped dir
+        new_meta["cell_counts_file"] = _write_cell_counts(
+            staging,
+            _seg_cell_counts(spark, os.path.join(staging, "vectors")),
+        )
         with open(os.path.join(staging, META_FILE), "w") as fh:
             json.dump(new_meta, fh)
 
@@ -2301,13 +2098,15 @@ def ann_index_screen_batch(
         vecs = vecs.where(F.col("cell_id").isin(cells))
     # PER-CELL sub-block counts (r14, verdict task 5): the batch side's
     # probe count per cell is exact (the bounded job above); the index
-    # side's population per cell rides the manifest (``cell_counts``,
-    # accumulated at every build/append commit), so a Zipf-hot cell
+    # side's population per cell rides the counts sidecar (accumulated
+    # at every build/append commit), so a Zipf-hot cell
     # splits into proportionally more sub-blocks and its worst task is
     # bounded by ~tile_target rows per side like everyone else's —
     # sizing from the MEAN left the hot cell's task bounded by its own
-    # population, the 100 TB worst-task killer. Pre-r14 manifests
-    # (cell_counts unknown) fall back to the mean for the index side.
+    # population, the 100 TB worst-task killer. A lock-free reader
+    # that lost the race with a commit's sidecar sweep (counts None)
+    # falls back to the mean for the index side: same results, less
+    # balanced.
     # The sizing relation is <= |probed cells| rows, broadcast onto both
     # sides; coverage is unchanged — within one cell every (q, v) pair
     # still meets in exactly one (bq, bv) group because both sides read

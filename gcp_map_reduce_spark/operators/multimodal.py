@@ -81,21 +81,26 @@ def decode_media(payload: bytes, modality: str) -> dict:
     return fn(payload)
 
 
-def _byte_stats(b: bytes) -> dict:
+def _byte_stats():
     """Deterministic stand-in for a media feature extractor: pure integer
     byte statistics (mean is one double division), reproducible across
-    engines/runs."""
-    s = sum(b)
-    return {
-        "n_bytes": len(b),
-        "first_byte": b[0] if len(b) else -1,
-        "last_byte": b[-1] if len(b) else -1,
-        "byte_sum_mod": s % 997,
-        "mean_byte": float(s) / len(b) if len(b) else 0.0,
-    }
+    engines/runs. Built as a closure: the codec snapshot ships it to the
+    workers by value."""
+
+    def byte_stats(b: bytes) -> dict:
+        s = sum(b)
+        return {
+            "n_bytes": len(b),
+            "first_byte": b[0] if len(b) else -1,
+            "last_byte": b[-1] if len(b) else -1,
+            "byte_sum_mod": s % 997,
+            "mean_byte": float(s) / len(b) if len(b) else 0.0,
+        }
+
+    return byte_stats
 
 
-register_codec("text-as-bytes", _byte_stats)
+register_codec("text-as-bytes", _byte_stats())
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -174,91 +179,6 @@ RESIZE_STRIDE = 4  # keep every 4th byte (stand-in for spatial downsample)
 FRAME_SIZE = 256  # bytes per pseudo-frame
 FRAME_STEP = 8  # sample every 8th frame
 
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes_in", T.LongType()),
-        T.StructField("n_bytes_out", T.LongType()),
-        T.StructField("resized", T.BinaryType()),
-    ]
-)
-
-
-def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic 'resize': stride-subsample the byte stream (a real
-    implementation decodes, resamples pixels, re-encodes — same Arrow
-    in/out shape, same 1-row-in/1-row-out contract)."""
-    for pdf in batches:
-        payloads = pdf["payload"]
-        resized = payloads.map(lambda b: bytes(b[:: RESIZE_STRIDE]))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes_in": payloads.map(len).astype("int64"),
-                "n_bytes_out": resized.map(len).astype("int64"),
-                "resized": resized,
-            }
-        )
-
-
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing over binary payloads (1 row -> 1 smaller row) via
-    ``mapInPandas``; emits the actual resized bytes. Library form — the
-    registered, oracle-checked stats view is ``multimodal_transforms``."""
-    return (
-        build_binary_table(spark, sf_dir)
-        .select("doc_id", "payload")
-        .mapInPandas(_resize_batches, schema=_RESIZE_SCHEMA)
-    )
-
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-        T.StructField("frame_sum_mod", T.LongType()),
-    ]
-)
-
-
-def _frame_sample_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Deterministic frame sampler: treat the payload as FRAME_SIZE-byte
-    frames, emit every FRAME_STEP-th frame — 1 row -> N rows, the video
-    keyframe-extraction shape."""
-    for pdf in batches:
-        ids, idxs, frames, sums = [], [], [], []
-        for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-            n_frames = (len(b) + FRAME_SIZE - 1) // FRAME_SIZE
-            for fi in range(0, n_frames, FRAME_STEP):
-                fr = bytes(b[fi * FRAME_SIZE : (fi + 1) * FRAME_SIZE])
-                ids.append(doc_id)
-                idxs.append(fi)
-                frames.append(fr)
-                sums.append(sum(fr) % 997)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame": pd.Series(frames, dtype="object"),
-                "frame_sum_mod": pd.Series(sums, dtype="int64"),
-            }
-        )
-
-
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over binary payloads (1 row -> N frame rows) via
-    ``mapInPandas``; emits the actual frame bytes. Library form — the
-    registered, oracle-checked stats view is ``multimodal_transforms``."""
-    return (
-        build_binary_table(spark, sf_dir)
-        .select("doc_id", "payload")
-        .mapInPandas(_frame_sample_batches, schema=_FRAME_SCHEMA)
-    )
-
-
 _TRANSFORM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -270,38 +190,43 @@ _TRANSFORM_SCHEMA = T.StructType(
 )
 
 
-def _transform_stats_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _transform_stats_batches():
     """One pass over payload batches emitting the checkable statistics of
     BOTH binary transforms: the strided resize (1 row/doc, kind='resize')
-    and the sampled frames (N rows/doc, kind='frame')."""
-    for pdf in batches:
-        ids, kinds, idxs, nbytes, sums = [], [], [], [], []
-        for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-            rs = bytes(b[::RESIZE_STRIDE])
-            ids.append(doc_id)
-            kinds.append("resize")
-            idxs.append(0)
-            nbytes.append(len(rs))
-            sums.append(sum(rs) % 997)
-            n_frames = (len(b) + FRAME_SIZE - 1) // FRAME_SIZE
-            for fi in range(0, n_frames, FRAME_STEP):
-                fr = bytes(b[fi * FRAME_SIZE : (fi + 1) * FRAME_SIZE])
+    and the sampled frames (N rows/doc, kind='frame'). Built as a
+    closure so it pickles by value."""
+
+    def transform_stats(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, kinds, idxs, nbytes, sums = [], [], [], [], []
+            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+                rs = bytes(b[::RESIZE_STRIDE])
                 ids.append(doc_id)
-                kinds.append("frame")
-                idxs.append(fi)
-                nbytes.append(len(fr))
-                sums.append(sum(fr) % 997)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "kind": pd.Series(kinds, dtype="object"),
-                "idx": pd.Series(idxs, dtype="int32"),
-                "n_bytes": pd.Series(nbytes, dtype="int64"),
-                "sum_mod": pd.Series(sums, dtype="int64"),
-            }
-        )
+                kinds.append("resize")
+                idxs.append(0)
+                nbytes.append(len(rs))
+                sums.append(sum(rs) % 997)
+                n_frames = (len(b) + FRAME_SIZE - 1) // FRAME_SIZE
+                for fi in range(0, n_frames, FRAME_STEP):
+                    fr = bytes(b[fi * FRAME_SIZE : (fi + 1) * FRAME_SIZE])
+                    ids.append(doc_id)
+                    kinds.append("frame")
+                    idxs.append(fi)
+                    nbytes.append(len(fr))
+                    sums.append(sum(fr) % 997)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "kind": pd.Series(kinds, dtype="object"),
+                    "idx": pd.Series(idxs, dtype="int32"),
+                    "n_bytes": pd.Series(nbytes, dtype="int64"),
+                    "sum_mod": pd.Series(sums, dtype="int64"),
+                }
+            )
+
+    return transform_stats
 
 
 _TRANSFORMS_ORACLE = f"""
@@ -330,14 +255,12 @@ def multimodal_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary transform plumbing, stats view: the strided 'resize'
     (1 row -> 1 row) and the FRAME_SIZE/FRAME_STEP keyframe sampler
     (1 row -> N rows) in one Arrow-batched ``mapInPandas`` pass, emitting
-    per-output byte counts + checksums. The byte-emitting forms are
-    :func:`multimodal_resize` / :func:`multimodal_frame_sample`; this
-    registered view computes the same transforms where every value is
-    oracle-checkable (ASCII corpus: bytes == codepoints)."""
+    per-output byte counts + checksums: every value is oracle-checkable
+    (ASCII corpus: bytes == codepoints)."""
     return (
         build_binary_table(spark, sf_dir)
         .select("doc_id", "payload")
-        .mapInPandas(_transform_stats_batches, schema=_TRANSFORM_SCHEMA)
+        .mapInPandas(_transform_stats_batches(), schema=_TRANSFORM_SCHEMA)
     )
 
 

@@ -248,33 +248,6 @@ def orders_by_month_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def percentiles_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles (sort + linear interpolation — bit-identical
-    across engines). Library form; the registered profiling query is
-    ``customer_profile``. At 100 TB swap to approx_percentile (t-digest
-    sketch): exact percentile materializes each group."""
-    orders = _t(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.expr("percentile(o_totalprice, 0.5)").alias("p50"),
-        F.expr("percentile(o_totalprice, 0.9)").alias("p90"),
-        F.expr("percentile(o_totalprice, 0.99)").alias("p99"),
-    )
-
-
-def approx_percentiles_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate percentiles (Greenwald-Khanna sketch, accuracy 1e4):
-    the 100 TB path — constant memory per group, mergeable partials,
-    single shuffle of sketches instead of materialized groups. Library
-    form; its tolerance-vs-exact invariant is registered inside
-    ``customer_profile``."""
-    orders = _t(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.percentile_approx("o_totalprice", 0.5, 10000).alias("p50"),
-        F.percentile_approx("o_totalprice", 0.9, 10000).alias("p90"),
-        F.percentile_approx("o_totalprice", 0.99, 10000).alias("p99"),
-    )
-
-
 @query(
     "customer_profile",
     oracle="""

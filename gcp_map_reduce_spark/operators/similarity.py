@@ -8,7 +8,7 @@ O24). This is the ANN ladder for training-data pipelines:
 - ``similarity_lsh_ann``: random-hyperplane LSH — sign-bit sketches, banded
   bucket join, exact re-rank of candidates only. The 100 TB path: per-row
   state is one long, the join touches only colliding buckets.
-- ``embedding_norms`` / ``embedding_centroids``: supporting numerics.
+- ``embedding_centroids``: supporting numerics.
 
 FP determinism for the oracle (two distinct mechanisms):
 - WITHIN-row reductions (dot, norm): strict left-fold in double. Spark's
@@ -127,16 +127,6 @@ def _seq_folds():
 
 
 _seq_dot, _np_n2 = _seq_folds()
-
-
-def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Squared L2 norm per vector — per-row array fold, no shuffle at all.
-    (Library form; the registered norm audit is the ``norm2`` column of
-    ``embedding_quantize_error``.)"""
-    emb = _emb(spark, sf_dir)
-    return embed_features_arrow(emb, sketch=False).select(
-        "vec_id", "label", F.col("n2").alias("norm2")
-    )
 
 
 @query(

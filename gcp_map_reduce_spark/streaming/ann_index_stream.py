@@ -39,7 +39,7 @@ index quality to whatever files happened to land first; an explicit
 build keeps that decision with the operator. Parity is exact, not
 statistical: an index grown by this stream over N files equals a fresh
 build over the concatenated corpus bit-for-bit (same codebook, shared
-assignment expression) — pytest-gated in ``tests/test_streaming.py``.
+assignment arithmetic) — pytest-gated in ``tests/test_streaming.py``.
 """
 
 from __future__ import annotations
@@ -88,9 +88,7 @@ def run_streaming_index_maintenance(
 
     Indexes with persisted attrs are supported: the manifest records
     the attr DDL at build time, and the reader schema extends to match,
-    so arriving files must carry those columns (a pre-attrs-ddl index
-    with attrs fails HERE with guidance, not mid-stream inside
-    foreachBatch).
+    so arriving files must carry those columns.
 
     Maintenance hooks (opt-in — a long-running ingest otherwise grows
     segment count and per-probe scan cost forever):
@@ -116,18 +114,11 @@ def run_streaming_index_maintenance(
       target the criterion assumes (default: the module's
       IVF_DEDUP_CELL_TARGET)."""
     meta = ann_index_meta(index_dir)  # fail fast on a missing index
-    # the manifest records the BUILD corpus's embedding element type
-    # (pre-r13 manifests default to array<float>, what they were all
-    # built over) — typing the reader from it means an array<double>
-    # index fails nowhere: the stream reads doubles as doubles
+    # the manifest records the BUILD corpus's embedding element type —
+    # typing the reader from it means an array<double> index fails
+    # nowhere: the stream reads doubles as doubles
     schema = f"vec_id bigint, embedding {meta['embedding_ddl']}"
     if meta["attrs"]:
-        if not meta["attrs_ddl"]:
-            raise ValueError(
-                f"index persists attrs {meta['attrs']} but its manifest "
-                "predates attrs_ddl — rebuild the index so the stream "
-                "can type its reader schema"
-            )
         schema += ", " + meta["attrs_ddl"]
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -135,12 +126,10 @@ def run_streaming_index_maintenance(
     vecs = reader.parquet(emb_dir)
 
     def process(batch_df, batch_id: int) -> None:
-        # collected=True: micro-batches are driver-sized by construction,
-        # and the driver-centric append is the difference between ~6 and
-        # 2 Spark jobs per trigger (this repo's streaming-trigger rule)
+        # micro-batches are driver-sized by construction, which is the
+        # append's contract
         new_meta = ann_index_append(
-            batch_df.sparkSession, index_dir, batch_df,
-            if_exists="skip", collected=True,
+            batch_df.sparkSession, index_dir, batch_df, if_exists="skip"
         )
         if (
             compact_at_segments is not None

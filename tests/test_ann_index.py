@@ -18,6 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.operators.ann_index import (
+    INDEX_VERSION,
+    MANIFEST_KEYS,
     META_FILE,
     ann_index_build,
     ann_index_meta,
@@ -51,7 +53,7 @@ def _queries(spark, n=N_QUERIES):
 
 def test_layout_and_meta(spark, index_dir):
     meta = ann_index_meta(index_dir)
-    assert meta["version"] == 1
+    assert meta["version"] == INDEX_VERSION
     assert meta["n_vec"] == 500 and meta["dim"] == 64
     # one directory per cell; every vector stored exactly once
     vec_dir = os.path.join(index_dir, "vectors")
@@ -367,62 +369,40 @@ def test_append_rejects_duplicates_and_commits_atomically(
     assert meta["segments"] == ["vectors", "vectors-seg0001"]
 
 
-def test_collected_append_bit_identical_to_plan_append(
+def test_append_replay_noop_duplicate_errors_and_mirror_reseed(
     spark, tmp_path, split_corpus
 ):
-    """collected=True (driver-centric: cached codebook + numpy
-    assignment + ids-only dup check) must produce the same segment rows
-    and search results as the plan-side append — and the idempotent
-    skip path must no-op on a full replay."""
+    """The append's idempotent skip path no-ops on a full replay,
+    duplicates raise (vs the index and batch-internal), and the
+    driver-side ids mirror re-seeds after a compaction changes the
+    segment list instead of serving a stale set."""
     from gcp_map_reduce_spark.operators.ann_index import (
-        _load_vectors,
         ann_index_append,
+        compact_ann_index,
     )
 
-    a = str(tmp_path / "plan_side")
-    b = str(tmp_path / "collected")
-    for d in (a, b):
-        ann_index_build(spark, split_corpus, d, n_cells=N_CELLS)
+    d = str(tmp_path / "idx")
+    ann_index_build(spark, split_corpus, d, n_cells=N_CELLS)
     rest = _rest_batch(spark)
-    ann_index_append(spark, a, rest, if_exists="skip")
-    ann_index_append(spark, b, rest, if_exists="skip", collected=True)
-    rows = lambda d: sorted(  # noqa: E731
-        map(
-            tuple,
-            _load_vectors(spark, d)
-            .select("vec_id", "n2", "cell_id")
-            .collect(),
-        )
-    )
-    assert rows(a) == rows(b)  # includes float equality on n2
-    res = lambda d: sorted(  # noqa: E731
-        map(tuple, ann_index_search(spark, d, _queries(spark)).collect())
-    )
-    assert res(a) == res(b)
+    ann_index_append(spark, d, rest, if_exists="skip")
     # replayed batch -> skip-all no-op, no new segment
-    meta_before = ann_index_meta(b)
-    meta_after = ann_index_append(
-        spark, b, rest, if_exists="skip", collected=True
-    )
+    meta_before = ann_index_meta(d)
+    meta_after = ann_index_append(spark, d, rest, if_exists="skip")
     assert meta_after["segments"] == meta_before["segments"]
-    # duplicate detection still raises on the collected path
+    assert meta_after["n_vec"] == 500
     with pytest.raises(ValueError, match="already in the index"):
-        ann_index_append(spark, b, rest.limit(3), collected=True)
-    # the ids mirror must survive interleaved plan-side mutation: a
-    # compaction changes the segment list, forcing a re-seed rather
+        ann_index_append(spark, d, rest.limit(3))
+    # a compaction changes the segment list, forcing a re-seed rather
     # than a stale driver set
-    from gcp_map_reduce_spark.operators.ann_index import compact_ann_index
-
-    compact_ann_index(spark, b)
+    compact_ann_index(spark, d)
     with pytest.raises(ValueError, match="already in the index"):
-        ann_index_append(spark, b, rest.limit(3), collected=True)
+        ann_index_append(spark, d, rest.limit(3))
     with pytest.raises(ValueError, match="duplicate vec_ids"):
         ann_index_append(
-            spark, b,
+            spark, d,
             rest.limit(2).unionByName(rest.limit(2)).withColumn(
                 "vec_id", F.col("vec_id") + 777000
             ),
-            collected=True,
         )
 
 
@@ -535,7 +515,7 @@ def test_filtered_search_pushdown_and_semantics(spark, tmp_path):
 
 
 def test_collected_append_attrs_order_and_reserved_names(spark, tmp_path):
-    """Two regressions from review: (1) the collected append pairs its
+    """Two regressions: (1) the append pairs its
     explicit StructType with pandas columns POSITIONALLY, so attrs
     declared in a different order than the batch's schema must still
     land under their own names; (2) attrs shadowing ANY internal plan
@@ -567,7 +547,7 @@ def test_collected_append_attrs_order_and_reserved_names(spark, tmp_path):
             (F.col("vec_id") % 7).cast("int").alias("bucket"),
         )
     )
-    ann_index_append(spark, d, batch, collected=True)
+    ann_index_append(spark, d, batch)
     got = {
         r.vec_id: (r.bucket, r.label)
         for r in _load_vectors(spark, d)
@@ -604,7 +584,6 @@ def test_ids_mirror_invalidated_by_rebuild(spark, tmp_path, split_corpus):
     ann_index_append(
         spark, d,
         _rest_batch(spark).filter(F.col("vec_id") < 450),
-        collected=True,
     )
     # rebuild over live from the FULL corpus (new generation, same
     # segments tuple as a fresh index)
@@ -615,7 +594,7 @@ def test_ids_mirror_invalidated_by_rebuild(spark, tmp_path, split_corpus):
     meta = ann_index_append(
         spark, d,
         _rest_batch(spark).filter(F.col("vec_id") >= 450),
-        if_exists="skip", collected=True,
+        if_exists="skip",
     )
     assert meta["n_vec"] == 500 and meta["segments"] == ["vectors"]
     ids = [
@@ -740,15 +719,28 @@ def test_search_plan_isolated_from_concurrent_append(
     assert {c for _, c, _ in post} & set(range(400, 500))
 
 
-def test_version_gate(spark, tmp_path):
+def _built_manifest(spark, tmp_path):
     d = str(tmp_path / "idx")
     ann_index_build(spark, SF, d, n_cells=2)
     meta_path = os.path.join(d, META_FILE)
     with open(meta_path) as fh:
-        meta = json.load(fh)
-    meta["version"] = 99
+        return d, meta_path, json.load(fh)
+
+
+def _assert_rejected(d, meta_path, manifest):
     with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+        json.dump(manifest, fh)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ann_index_meta(d)
+
+
+def test_version_gate(spark, tmp_path):
+    """The reader speaks exactly one manifest format: every earlier
+    version (1-4) and a newer one raise the "rebuild the index" error,
+    through search too; a missing manifest is a FileNotFoundError."""
+    d, meta_path, good = _built_manifest(spark, tmp_path)
+    for version in (1, 2, 3, 4, INDEX_VERSION + 1):
+        _assert_rejected(d, meta_path, {**good, "version": version})
     with pytest.raises(ValueError, match="version"):
         ann_index_search(spark, d, _queries(spark, 2))
     os.remove(meta_path)
@@ -764,6 +756,63 @@ def test_multi_level_manifest_rejected(tmp_path):
         json.dump({"version": 1, "levels": 2, "n_cells": 16}, fh)
     with pytest.raises(ValueError, match="rebuild the index"):
         ann_index_meta(str(tmp_path))
+
+
+def test_manifest_rejects_missing_keys(spark, tmp_path):
+    """A current-version manifest missing any required key raises the
+    same "rebuild the index" error."""
+    d, meta_path, good = _built_manifest(spark, tmp_path)
+    for key in MANIFEST_KEYS:
+        _assert_rejected(d, meta_path, {k: v for k, v in good.items() if k != key})
+
+
+def test_every_manifest_holds_exactly_the_required_keys(
+    spark, tmp_path, split_corpus
+):
+    """Every manifest the writers commit — build (float64, int8, with
+    attrs), append, delete, delete_where, compaction and rebuild — holds
+    exactly MANIFEST_KEYS at INDEX_VERSION: storage and tombstones are
+    plain fields, never version numbers, so no operation leaves a shape
+    the reader would reject."""
+    from gcp_map_reduce_spark.operators.ann_index import (
+        ann_index_append,
+        ann_index_delete,
+        ann_index_delete_where,
+        ann_index_rebuild,
+        compact_ann_index,
+    )
+
+    def check(d, returned):
+        with open(os.path.join(d, META_FILE)) as fh:
+            on_disk = json.load(fh)
+        for m in (returned, on_disk):
+            assert set(m) == set(MANIFEST_KEYS), sorted(m)
+            assert m["version"] == INDEX_VERSION
+        assert returned == on_disk
+
+    rest = (
+        spark.read.parquet(SF + "/embeddings.parquet")
+        .filter(F.col("vec_id") >= 400)
+        .select("vec_id", "embedding", "label")
+    )
+    plain = str(tmp_path / "plain")
+    check(plain, ann_index_build(spark, split_corpus, plain, n_cells=N_CELLS))
+    check(plain, ann_index_append(spark, plain, rest.drop("label")))
+    for storage in ("float64", "int8"):
+        d = str(tmp_path / storage)
+        check(d, ann_index_build(
+            spark, split_corpus, d, n_cells=N_CELLS, attrs=["label"],
+            storage=storage,
+        ))
+        m = ann_index_append(spark, d, rest)
+        check(d, m)
+        assert m["storage"] == storage
+        check(d, ann_index_delete(spark, d, [450]))
+        check(d, ann_index_delete_where(spark, d, "label = 3 AND vec_id >= 64"))
+        m = compact_ann_index(spark, d)
+        check(d, m)
+        assert m["tombstones"] == [] and m["storage"] == storage
+        check(d, ann_index_rebuild(spark, SF, d))
 
 
 def test_driver_caches_bounded(spark, tmp_path, monkeypatch):
@@ -794,7 +843,7 @@ def test_driver_caches_bounded(spark, tmp_path, monkeypatch):
 
 
 def test_dup_check_scan_prunes_to_batch_cells(spark, tmp_path, split_corpus):
-    """The collected append's dup check reads ONLY the batch's home
+    """The append's dup check reads ONLY the batch's home
     cells (r13, closing the r12 full-index vec_id collect): the
     ids-only scan carries a cell_id PartitionFilters gate on every
     segment leg, opens strictly the probed cells' files, and the driver
@@ -842,11 +891,11 @@ def test_dup_check_scan_prunes_to_batch_cells(spark, tmp_path, split_corpus):
         if os.path.isdir(os.path.join(d, seg, f"cell_id={c}"))
     )
     assert n_read == per_seg_subset
-    # collected append touching a few cells seeds the mirror with
-    # exactly those cells, not the whole id space
+    # an append touching a few cells seeds the mirror with exactly
+    # those cells, not the whole id space
     _IDS_MIRROR.clear()
     batch = rest.filter(F.col("vec_id") >= 450)
-    ann_index_append(spark, d, batch, collected=True)
+    ann_index_append(spark, d, batch)
     key, by_cell = _IDS_MIRROR[d]
     stored = spark.read.parquet(os.path.join(d, "vectors-seg0002"))
     touched = {r.cell_id for r in stored.select("cell_id").distinct().collect()}
@@ -857,13 +906,13 @@ def test_dup_check_scan_prunes_to_batch_cells(spark, tmp_path, split_corpus):
     assert cached_ids < n_vec  # not the O(index) mirror of r12
     # the cached sets are still a correct dup gate: full replay no-ops
     meta_after = ann_index_append(
-        spark, d, batch, if_exists="skip", collected=True
+        spark, d, batch, if_exists="skip"
     )
     assert meta_after["segments"] == ann_index_meta(d)["segments"]
 
 
 def test_ids_mirror_evicts_past_cap(spark, tmp_path, split_corpus, monkeypatch):
-    """Driver memory of the collected path is bounded: past
+    """Driver memory of the append's dup check is bounded: past
     IDS_MIRROR_MAX_IDS cached ids, least-recently-touched cells evict
     (and later re-fetch via the cell-pruned scan, still correct)."""
     import gcp_map_reduce_spark.operators.ann_index as ai
@@ -874,7 +923,7 @@ def test_ids_mirror_evicts_past_cap(spark, tmp_path, split_corpus, monkeypatch):
     monkeypatch.setattr(ai, "IDS_MIRROR_MAX_IDS", 20)
     ai._IDS_MIRROR.clear()
     rest = _rest_batch(spark)
-    ann_index_append(spark, d, rest, collected=True, if_exists="skip")
+    ann_index_append(spark, d, rest, if_exists="skip")
     _, by_cell = ai._IDS_MIRROR[d]
     total = sum(len(s) for s in by_cell.values())
     # eviction leaves at most the cap plus the single newest cell
@@ -882,7 +931,7 @@ def test_ids_mirror_evicts_past_cap(spark, tmp_path, split_corpus, monkeypatch):
     assert len(by_cell) >= 1
     # correctness after eviction: a replay of evicted ids still skips
     meta_after = ann_index_append(
-        spark, d, rest, collected=True, if_exists="skip"
+        spark, d, rest, if_exists="skip"
     )
     assert meta_after["n_vec"] == 500
 
@@ -946,6 +995,7 @@ def test_commit_detects_external_mutation(spark, tmp_path, split_corpus):
     manifest re-read catches everything else)."""
     from gcp_map_reduce_spark.operators.ann_index import (
         _commit_segment,
+        _generation,
         _load_vectors,
         _meta_write,
         ann_index_meta,
@@ -959,15 +1009,15 @@ def test_commit_detects_external_mutation(spark, tmp_path, split_corpus):
     forged = {**meta, "segments": ["vectors", "vectors-seg0001"]}
     _meta_write(d, forged)
     with pytest.raises(RuntimeError, match="mutated outside"):
-        _commit_segment(d, meta, assigned, 1)
+        _commit_segment(d, meta, assigned, {"0": 1}, _generation(d))
 
 
 def test_manifest_cell_counts_exact_across_lifecycle(
     spark, tmp_path, split_corpus
 ):
     """r14 (verdict task 5): the index accumulates EXACT per-cell
-    populations at every commit — build, plan-path append, collected
-    append — and compaction carries them unchanged; they always equal a
+    populations at every commit — build and each append — and
+    compaction carries them unchanged; they always equal a
     direct count over the stored segments. Since r15 they live in a
     content-addressed sidecar (ann_index_cell_counts), never inline in
     the manifest, and superseded sidecars are swept (keep current +
@@ -994,15 +1044,13 @@ def test_manifest_cell_counts_exact_across_lifecycle(
         )
 
     meta = ann_index_meta(d)
-    assert meta["cell_counts"] is None  # never inline since r15
+    assert "cell_counts" not in meta  # never inline since r15
     assert meta["cell_counts_file"] in sidecars()
     assert ann_index_cell_counts(d) == actual()
     rest = _rest_batch(spark)
     m = ann_index_append(spark, d, rest.filter(F.col("vec_id") < 450))
     assert ann_index_cell_counts(d, m) == actual()
-    m = ann_index_append(
-        spark, d, rest.filter(F.col("vec_id") >= 450), collected=True
-    )
+    m = ann_index_append(spark, d, rest.filter(F.col("vec_id") >= 450))
     cc = ann_index_cell_counts(d, m)
     assert cc == actual()
     assert sum(cc.values()) == m["n_vec"] == 500
@@ -1015,38 +1063,20 @@ def test_manifest_cell_counts_exact_across_lifecycle(
 
 
 def test_cell_counts_sidecar_integrity_and_legacy(spark, tmp_path, split_corpus):
-    """A pre-r15 manifest's INLINE cell_counts dict still resolves (and
-    migrates to a sidecar on its first append); a sidecar whose bytes no
-    longer hash to its recorded name raises loudly."""
-    import json as _json
-
+    """A sidecar whose bytes no longer hash to its recorded name raises
+    loudly, and a sidecar missing under the writer lock (external
+    mutation, not the lock-free reader's sweep race) fails the append
+    before it writes a segment."""
     from gcp_map_reduce_spark.operators import ann_index as mod
     from gcp_map_reduce_spark.operators.ann_index import (
-        META_FILE,
         ann_index_append,
         ann_index_cell_counts,
     )
 
     d = str(tmp_path / "idx")
     ann_index_build(spark, split_corpus, d, n_cells=N_CELLS)
-    mp = os.path.join(d, META_FILE)
-    with open(mp) as fh:
-        raw = _json.load(fh)
-    # forge a pre-r15 manifest: counts inline, no sidecar pointer
-    # the loader returns an immutable view (2nd review pass); the forge
-    # needs a plain dict for json.dump
-    inline = dict(ann_index_cell_counts(d))
-    fname = raw.pop("cell_counts_file")
-    raw["cell_counts"] = inline
-    with open(mp, "w") as fh:
-        _json.dump(raw, fh)
-    os.remove(os.path.join(d, fname))
-    assert ann_index_cell_counts(d) == inline
-    m = ann_index_append(spark, d, _rest_batch(spark))
-    assert "cell_counts_file" in m  # migrated on first append
-    assert sum(ann_index_cell_counts(d).values()) == 500
-    with open(mp) as fh:
-        assert _json.load(fh).get("cell_counts") is None
+    m = ann_index_append(spark, d, _rest_batch(spark).limit(20))
+    assert sum(ann_index_cell_counts(d).values()) == 420
     # corrupt the sidecar: the FIRST load per process must refuse, not
     # mis-size silently (the driver cache keyed on the content-
     # addressed name legitimately serves later calls without re-reading
@@ -1057,18 +1087,24 @@ def test_cell_counts_sidecar_integrity_and_legacy(spark, tmp_path, split_corpus)
         fh.write(" ")
     with pytest.raises(ValueError, match="hash"):
         ann_index_cell_counts(d)
+    mod._CELL_COUNTS_CACHE.clear()
+    os.remove(side)
+    with pytest.raises(ValueError, match="missing under the writer lock"):
+        ann_index_append(
+            spark, d, _rest_batch(spark).filter(F.col("vec_id") >= 450)
+        )
+    assert ann_index_meta(d)["segments"] == m["segments"]
+    assert not os.path.exists(os.path.join(d, "vectors-seg0002"))
 
 
 def test_screen_batch_per_cell_split_is_exact(spark, tmp_path, split_corpus):
     """Hot-cell sub-splitting must not change RESULTS: screening with a
     tile_target small enough to force multi-way per-cell splits returns
     the bit-identical (query, cand, cosine) set as the single-block
-    screen; and a pre-r14 manifest (no cell_counts) falls back to
-    mean sizing and still matches."""
-    import json as _json
-
+    screen; and a lock-free reader whose counts sidecar was swept by a
+    concurrent commit falls back to mean sizing and still matches."""
+    from gcp_map_reduce_spark.operators import ann_index as mod
     from gcp_map_reduce_spark.operators.ann_index import (
-        META_FILE,
         ann_index_screen_batch,
     )
 
@@ -1096,14 +1132,11 @@ def test_screen_batch_per_cell_split_is_exact(spark, tmp_path, split_corpus):
         )
     )
     assert split == one_block and len(one_block) > 0
-    # pre-r14 manifest: no counts at all -> mean fallback, same results
-    mp = os.path.join(d, META_FILE)
-    with open(mp) as fh:
-        meta = _json.load(fh)
-    meta.pop("cell_counts_file")
-    with open(mp, "w") as fh:
-        _json.dump(meta, fh)
-    legacy = sorted(
+    # sidecar swept under the reader: counts unknown -> mean fallback
+    os.remove(os.path.join(d, ann_index_meta(d)["cell_counts_file"]))
+    mod._CELL_COUNTS_CACHE.clear()
+    assert mod.ann_index_cell_counts(d) is None
+    mean_sized = sorted(
         map(
             tuple,
             ann_index_screen_batch(
@@ -1111,7 +1144,7 @@ def test_screen_batch_per_cell_split_is_exact(spark, tmp_path, split_corpus):
             ).collect(),
         )
     )
-    assert legacy == one_block
+    assert mean_sized == one_block
 
 
 def test_delete_lifecycle_tombstone_then_compaction(spark, tmp_path):
@@ -1138,9 +1171,7 @@ def test_delete_lifecycle_tombstone_then_compaction(spark, tmp_path):
     m = ann_index_delete(spark, d, dead)
     assert m["n_vec"] == 496 and m["n_deleted"] == 4
     assert m["tombstones"] == ["tombstones-t0000"]
-    # version bumps so a pre-delete-aware reader fails LOUD instead of
-    # silently serving the deleted rows (the int8 gate precedent)
-    assert m["version"] == 3
+    assert m["version"] == INDEX_VERSION
     # ground truth: fresh build over the corpus minus the dead rows —
     # the dead ids are non-seeds, so the codebook is identical and the
     # searches must be bit-identical
@@ -1184,10 +1215,6 @@ def test_delete_lifecycle_tombstone_then_compaction(spark, tmp_path):
     with pytest.warns(UserWarning, match="tombstoned"):
         m2 = ann_index_append(spark, d, rows, if_exists="skip")
     assert m2["n_vec"] == 496  # idempotent skip, no phantom segment
-    with pytest.warns(UserWarning, match="tombstoned"):
-        m2c = ann_index_append(spark, d, rows, if_exists="skip",
-                               collected=True)
-    assert m2c["n_vec"] == 496
     # double delete: error by default, no-op with skip
     with pytest.raises(ValueError, match="not live"):
         ann_index_delete(spark, d, dead)
@@ -1198,7 +1225,7 @@ def test_delete_lifecycle_tombstone_then_compaction(spark, tmp_path):
     # == live, cell_counts exact, search unchanged, ids re-appendable
     m3 = compact_ann_index(spark, d)
     assert m3["tombstones"] == [] and m3["n_deleted"] == 0
-    assert m3["version"] == 1  # base version restored with zero tombstones
+    assert m3["version"] == INDEX_VERSION
     assert not [p for p in os.listdir(d) if p.startswith("tombstones")]
     assert _load_vectors(spark, d, include_deleted=True).count() == 496
     actual = {
@@ -1393,22 +1420,16 @@ def test_delete_stream_mark_survives_compaction_and_reappend(
 def test_stream_marks_eviction_and_legacy_format():
     """r15 (5th review pass): the marks dict is bounded at
     STREAM_MARKS_CAP with LOGICAL-sequence LRU — the just-recorded key
-    is never evicted even under recency ties, and the short-lived
-    int-only mark format normalizes instead of crashing the cap
-    machinery."""
+    is never evicted even under recency ties."""
     from gcp_map_reduce_spark.operators.ann_index import (
         STREAM_MARKS_CAP,
-        _mark_entry,
         _mark_streams,
     )
 
-    # legacy int entries normalize on read and in the check path
-    assert _mark_entry(5) == {"batch": 5, "at": 0}
-    assert _mark_entry({"batch": 7, "at": 3}) == {"batch": 7, "at": 3}
-    meta = {"stream_marks": {"td-old": 5}}  # legacy int format
+    meta = {"stream_marks": {"td-old": {"batch": 5, "at": 0}}}
     _mark_streams(meta, ("td-new", 0))
     assert meta["stream_marks"]["td-old"] == {"batch": 5, "at": 0}
-    assert meta["stream_marks"]["td-new"]["batch"] == 0
+    assert meta["stream_marks"]["td-new"] == {"batch": 0, "at": 1}
     # fill past the cap: oldest-by-sequence evicted, newest kept, and
     # the key being recorded survives even when it would tie; evicting
     # a recently active lineage warns
@@ -1451,7 +1472,7 @@ def test_delete_validation_and_locking(spark, tmp_path, split_corpus, monkeypatc
     # the full batch would silently kill its later legitimate append)
     m = ann_index_delete(spark, d, [398, 10**9 + 7], if_missing="skip")
     assert m["n_vec"] == 399 and m["n_deleted"] == 1
-    assert m["version"] == 4  # int8 base (2) bumped to tombstone-aware
+    assert m["version"] == INDEX_VERSION and m["storage"] == "int8"
     tomb = spark.read.parquet(
         os.path.join(d, m["tombstones"][-1])
     ).collect()
@@ -1563,7 +1584,7 @@ def test_commit_detects_external_rebuild_same_segments(
     ann_index_build(spark, split_corpus, d, n_cells=N_CELLS)
     assert ann_index_meta(d)["segments"] == meta["segments"] == ["vectors"]
     with pytest.raises(RuntimeError, match="mutated outside"):
-        _commit_segment(d, meta, assigned, 1, expected_gen=gen)
+        _commit_segment(d, meta, assigned, {"0": 1}, gen)
 
 
 def _copy_corpus(tmp_path, name: str) -> str:
@@ -1737,6 +1758,39 @@ def test_sweep_never_claims_a_held_generation(spark, tmp_path, monkeypatch):
     assert not os.path.isdir(first)  # released -> reclaimed
 
 
+def test_sweep_reclaims_older_version_keeps_newer_version(
+    spark, tmp_path, monkeypatch
+):
+    """A generation whose manifest carries an older version is stale —
+    its digest embeds that version, so no resolve lands on it again —
+    and is swept; one carrying a NEWER version belongs to newer code and
+    is kept."""
+    import shutil
+
+    from gcp_map_reduce_spark.operators import ann_index as mod
+
+    monkeypatch.setattr(mod, "ANN_INDEX_KEEP_GENERATIONS", 1)
+    monkeypatch.setattr(mod, "ANN_INDEX_SWEEP_TTL_S", 0.0)
+    root = str(tmp_path / "cache")
+    corpus = _copy_corpus(tmp_path, "corpus")
+    live = mod.ann_index_for_corpus(spark, corpus, cache_root=root)
+    with open(os.path.join(live, META_FILE)) as fh:
+        good = json.load(fh)
+    gens = {}
+    for tag, version in (("a" * 16, INDEX_VERSION - 1),
+                         ("b" * 16, INDEX_VERSION + 1)):
+        g = os.path.join(root, tag)
+        shutil.copytree(live, g)
+        with open(os.path.join(g, META_FILE), "w") as fh:
+            json.dump({**good, "version": version}, fh)
+        os.utime(g, (1, 1))
+        gens[version] = g
+    assert mod.ann_index_for_corpus(spark, corpus, cache_root=root) == live
+    assert not os.path.isdir(gens[INDEX_VERSION - 1])
+    assert os.path.isdir(gens[INDEX_VERSION + 1])
+    assert os.path.isdir(live)
+
+
 def test_rebuild_resizes_and_preserves_storage(spark, tmp_path, split_corpus):
     """r14 (verdict task 6): ann_index_rebuild over the grown corpus
     re-derives n_cells, keeps the storage mode, folds back to one base
@@ -1835,9 +1889,9 @@ def test_int8_storage_end_to_end(spark, tmp_path, split_corpus):
     """r13 quantized storage (ann_index_build(storage='int8')): codes +
     scale persist instead of float64 vectors (measured 3.4x smaller
     files), every consumer reads the exactly-decoded floor(x/scale)*
-    scale doubles through _load_vectors' in-plan decode, both append
-    paths quantize bit-identically (n2 float equality across expression
-    and numpy), compaction preserves the stored form, and search
+    scale doubles through _load_vectors' in-plan decode, appends
+    quantize bit-identically to the build (n2 float equality),
+    compaction preserves the stored form, and search
     quality is measurably intact (top-k overlap and cosine error
     bounds vs the float64 index)."""
     import glob
@@ -1855,10 +1909,7 @@ def test_int8_storage_end_to_end(spark, tmp_path, split_corpus):
     ann_index_build(spark, SF, f64, n_cells=N_CELLS, attrs=["label"])
     meta = ann_index_meta(q8)
     assert meta["storage"] == "int8"
-    # int8 manifests carry version 2 ON PURPOSE: a pre-r13 reader's
-    # version gate then rejects them with the designed rebuild message
-    # instead of crashing on the changed vector schema
-    assert meta["version"] == 2
+    assert meta["version"] == INDEX_VERSION
     raw = spark.read.parquet(os.path.join(q8, "vectors"))
     assert "ec" in raw.columns and "scale" in raw.columns
     assert "e" not in raw.columns
@@ -1895,15 +1946,15 @@ def test_int8_storage_end_to_end(spark, tmp_path, split_corpus):
         spark, q8, qs, k=3, n_probe=8, where="label = 1"
     ).collect()
     assert flt and all(r.cand_id is not None for r in flt)
-    # grown == fresh across BOTH append paths, n2 float-equal (the
-    # expression and numpy quantizers agree bitwise)
+    # grown == fresh over two appends, n2 float-equal (the append
+    # quantizes with the build's own expression)
     grown = str(tmp_path / "grown")
     ann_index_build(spark, split_corpus, grown, n_cells=N_CELLS,
                     storage="int8")
     rest = _rest_batch(spark)
     ann_index_append(spark, grown, rest.filter(F.col("vec_id") < 450))
     ann_index_append(
-        spark, grown, rest.filter(F.col("vec_id") >= 450), collected=True
+        spark, grown, rest.filter(F.col("vec_id") >= 450)
     )
     fresh = str(tmp_path / "fresh")
     ann_index_build(spark, SF, fresh, n_cells=N_CELLS, storage="int8")
@@ -1948,11 +1999,8 @@ def test_int8_storage_end_to_end(spark, tmp_path, split_corpus):
 def test_seg_ids_sidecar_bounds_delete_scan(spark, tmp_path):
     """r16: every segment write lands an ``_ids`` sidecar, the delete's
     live-intersection reads it (file opens follow SEGMENT count, not
-    cell count), the sidecar is invisible to the partitioned segment
-    scan, and a pre-sidecar index (sidecars removed) still deletes
-    correctly via the fallback scan — with identical results."""
-    import shutil
-
+    cell count), and the sidecar is invisible to the partitioned segment
+    scan."""
     from gcp_map_reduce_spark.operators.ann_index import (
         _live_ids,
         ann_index_append,
@@ -1985,9 +2033,6 @@ def test_seg_ids_sidecar_bounds_delete_scan(spark, tmp_path):
     appended_ids = [r.vec_id for r in batch.select("vec_id").collect()]
     m = ann_index_delete(spark, d, appended_ids[:3])
     assert m["n_deleted"] == 3
-    # legacy fallback: strip every sidecar, delete again — same behavior
-    for s in m["segments"]:
-        shutil.rmtree(os.path.join(d, s, "_ids"))
     m2 = ann_index_delete(spark, d, [450, 451])
     assert m2["n_deleted"] == 5 and m2["n_vec"] == meta["n_vec"] - 5
     # compaction rewrites one segment WITH a fresh sidecar

@@ -33,6 +33,13 @@ def test_launch_and_fetch_functions(spark, tmp_path):
     }
     assert idx["beta"] == ["doc1.txt", "doc2.txt"]
     assert idx["alpha"] == ["doc1.txt"]
+    # the read schema is the one JSON inference gave these outputs
+    assert dict(get_final_output(spark, "wordcount", store).dtypes) == {
+        "word": "string", "cnt": "bigint",
+    }
+    assert dict(get_final_output(spark, "invertedindex", store).dtypes) == {
+        "word": "string", "docs": "array<string>",
+    }
 
 
 def test_flask_facade_routes(spark, tmp_path):
@@ -58,10 +65,12 @@ def test_flask_facade_routes(spark, tmp_path):
 def test_unknown_operation_rejected(spark, tmp_path):
     import pytest
 
-    from gcp_map_reduce_spark.api import launch_map_reduce
+    from gcp_map_reduce_spark.api import get_final_output, launch_map_reduce
 
     with pytest.raises(ValueError, match="unknown operation"):
         launch_map_reduce(spark, "nope", _corpus(tmp_path), str(tmp_path / "s"))
+    with pytest.raises(ValueError, match="unknown operation"):
+        get_final_output(spark, "nope", str(tmp_path / "s"))
 
 
 def test_cli_list_names_every_query(capsys):

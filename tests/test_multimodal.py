@@ -90,50 +90,3 @@ def test_registered_codec_round_trips_through_features(spark):
         )
     finally:
         del CODEC_REGISTRY["upper-text"]
-
-
-def test_resize_shrinks_deterministically(spark):
-    from gcp_map_reduce_spark.operators.multimodal import (
-        RESIZE_STRIDE,
-        multimodal_resize,
-    )
-
-    rows = multimodal_resize(spark, "/root/testdata/sf0.001").collect()
-    assert rows
-    for r in rows:
-        want = (r["n_bytes_in"] + RESIZE_STRIDE - 1) // RESIZE_STRIDE
-        assert r["n_bytes_out"] == want
-        assert len(r["resized"]) == r["n_bytes_out"]
-    again = multimodal_resize(spark, "/root/testdata/sf0.001").collect()
-    assert {(r["doc_id"], bytes(r["resized"])) for r in rows} == {
-        (r["doc_id"], bytes(r["resized"])) for r in again
-    }
-
-
-def test_frame_sample_counts_and_checksums(spark):
-    from gcp_map_reduce_spark.operators.multimodal import (
-        FRAME_SIZE,
-        FRAME_STEP,
-        build_binary_table,
-        multimodal_frame_sample,
-    )
-    from pyspark.sql import functions as F
-
-    sizes = {
-        r["doc_id"]: r["n"]
-        for r in build_binary_table(spark, "/root/testdata/sf0.001")
-        .select("doc_id", F.col("meta.n_bytes").alias("n"))
-        .collect()
-    }
-    frames = multimodal_frame_sample(spark, "/root/testdata/sf0.001").collect()
-    assert frames
-    from collections import Counter
-
-    per_doc = Counter(r["doc_id"] for r in frames)
-    for doc_id, n_bytes in sizes.items():
-        n_frames = (n_bytes + FRAME_SIZE - 1) // FRAME_SIZE
-        want = (n_frames + FRAME_STEP - 1) // FRAME_STEP
-        assert per_doc[doc_id] == want, doc_id
-    for r in frames:
-        assert r["frame_idx"] % FRAME_STEP == 0
-        assert sum(r["frame"]) % 997 == r["frame_sum_mod"]

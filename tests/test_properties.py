@@ -148,28 +148,6 @@ def test_normalize_and_tokenize_handle_null_and_empty(spark):
     assert {(r["doc_id"], r["w"]) for r in toks} == {(4, "ok")}
 
 
-def test_approx_percentiles_close_to_exact(spark):
-    from gcp_map_reduce_spark.operators.relational_ext import (
-        approx_percentiles_totalprice,
-        percentiles_totalprice,
-    )
-
-    exact = {
-        r["o_orderpriority"]: (r["p50"], r["p90"], r["p99"])
-        for r in percentiles_totalprice(spark, SF_ORACLE).collect()
-    }
-    approx = {
-        r["o_orderpriority"]: (r["p50"], r["p90"], r["p99"])
-        for r in approx_percentiles_totalprice(spark, SF_ORACLE).collect()
-    }
-    assert exact.keys() == approx.keys()
-    for k, ex in exact.items():
-        for e, a in zip(ex, approx[k]):
-            # GK sketch at accuracy 1e4 over ~3k rows/group: near-exact;
-            # allow 1% relative slack
-            assert abs(a - e) <= 0.01 * abs(e), (k, e, a)
-
-
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(_TRICKY, min_size=1, max_size=30))
 def test_portable_hash64_spark_duckdb_agree(spark, samples):

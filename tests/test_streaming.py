@@ -1712,9 +1712,9 @@ def test_streaming_index_maintenance_double_typed_corpus(spark, tmp_path):
 
 def test_streaming_index_maintenance_int8_storage(spark, tmp_path):
     """The maintenance stream grows an int8-quantized index with exact
-    parity to a fresh int8 build: the collected append's numpy
-    quantizer matches the build's expression quantizer bit-for-bit
-    (n2 float equality), and the stored form stays tinyint codes."""
+    parity to a fresh int8 build: the append quantizes with the
+    build's own expression, so n2 is float-equal, and the stored form
+    stays tinyint codes."""
     import duckdb
 
     from gcp_map_reduce_spark.operators.ann_index import (

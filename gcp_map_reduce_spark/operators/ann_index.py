@@ -100,6 +100,7 @@ from gcp_map_reduce_spark.operators.similarity import (
     _with_norm2,
     ivf_dedup_n_cells,
     ivf_probe_cells,
+    ivf_seed_codebook,
 )
 from gcp_map_reduce_spark.sinks.writers import publish_atomic
 
@@ -212,12 +213,13 @@ def _write_cell_counts(dir_path: str, counts: dict) -> str:
     return fname
 
 
-# Index dirs each per-index driver cache (_CELL_COUNTS_CACHE,
+# Dirs each per-index driver cache (_CELL_COUNTS_CACHE,
 # _CODEBOOK_CACHE, _IDS_MIRROR) holds before it starts over: one entry
-# per index dir, and every corpus generation ann_index_for_corpus
-# resolves is a new dir that _sweep_stale_generations removes from disk
-# but not from these dicts. A reset costs re-reads, never a different
-# answer.
+# per index dir (per codebook dir in _CODEBOOK_CACHE, which also holds
+# the embedding streams' codebooks), and every corpus generation
+# ann_index_for_corpus resolves is a new dir that
+# _sweep_stale_generations removes from disk but not from these dicts.
+# A reset costs re-reads, never a different answer.
 INDEX_CACHE_MAX_DIRS = 64
 
 
@@ -545,8 +547,9 @@ def _nearest_cells():
     """Build ``nearest(E, En2, cell_ids, C, Cn2, k)``: column indices of
     each row's ``k`` nearest codebook rows by squared L2 distance
     ``(n2 - 2*dot) + cn2`` with the (d, cell_id) tie-break — the one
-    numpy distance definition the Arrow build assignment, the append
-    and the driver-side probe share, so they cannot disagree. Built as
+    numpy distance definition the Arrow build assignment, the append,
+    the driver-side probe and the embedding stream's driver-side
+    triggers share, so they cannot disagree. Built as
     a closure so the Arrow build kernel that calls it pickles it by
     value and runs where Spark's Python workers cannot import this
     package."""
@@ -563,21 +566,6 @@ def _nearest_cells():
 
 
 _np_nearest = _nearest_cells()
-
-
-def _codebook_df(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> DataFrame:
-    """(cell_id, ce, cn2) coarse quantizer — rank-based seeds, the first
-    ``n_cells`` vectors by vec_id (deterministic on any id space, same
-    convention as the batch IVF dedup plan)."""
-    return _with_norm2(
-        _emb(spark, sf_dir).orderBy("vec_id").limit(n_cells)
-    ).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("e").alias("ce"),
-        F.col("n2").alias("cn2"),
-    )
 
 
 def _assign_cells(
@@ -776,7 +764,7 @@ def _build_unlocked(
         # one home cell per vector -> n_probe=1 in the sizing formula;
         # expected cell population ~IVF_DEDUP_CELL_TARGET rows
         n_cells = ivf_dedup_n_cells(n_vec, n_probe=1)
-    seeds = _codebook_df(spark, sf_dir, n_cells)
+    seeds = ivf_seed_codebook(spark, sf_dir, n_cells)
     feats = _with_norm2(_emb(spark, sf_dir)).select("vec_id", "e", "n2", *attrs)
     assigned = _assign_cells(feats, seeds, n_cells)
     dim = len(
@@ -1254,7 +1242,9 @@ def _append_locked(
         raise ValueError("append batch contains duplicate vec_ids")
     E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     n2 = _np_n2(E)
-    cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
+    cell_ids, CE, CN2 = _codebook_driver(
+        spark, os.path.join(index_dir, "codebook")
+    )
     home = cell_ids[_np_nearest(E, n2, cell_ids, CE, CN2, 1)[:, 0]]
     mirror_key = _mirror_key(index_dir, meta["segments"])
     hit = _IDS_MIRROR.get(index_dir)
@@ -1829,41 +1819,39 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
     return new_meta
 
 
-# driver-side codebook cache: the codebook is immutable for a published
-# index (publish_atomic swaps the whole dir; appends add SEGMENTS, never
-# touch the codebook), so one collect per (index_dir, publish) serves
-# every subsequent search AND append in the session — same pattern as
-# the streaming codebook cache (streaming/embedding_near_dup.py). Keyed
-# on the codebook DIRECTORY's mtime, not the manifest's: the manifest is
+# driver-side codebook cache: a codebook is immutable once committed
+# (an index's is swapped whole by publish_atomic and appends add
+# SEGMENTS, never touch it; the embedding stream's is written once, by
+# its first batch), so one collect per committed codebook dir serves
+# every later search, append and trigger in the session. Keyed on the
+# codebook DIRECTORY's mtime, not the manifest's: the manifest is
 # rewritten by every append, and invalidating on it would re-collect an
 # unchanged codebook once per streamed batch (r12 measured: the
-# per-trigger codebook job was ~1/4 of the maintenance stream's floor).
+# per-trigger codebook job was ~1/4 of the maintenance stream's floor);
+# a dir removed and reseeded under the same path is a new mtime, hence
+# a miss.
 _CODEBOOK_CACHE: dict = {}
 
 
-def _codebook_driver(spark: SparkSession, index_dir: str):
+def _codebook_driver(spark: SparkSession, cb_dir: str):
     """(cell_ids int64[n], CE float64[n, d], CN2 float64[n]) sorted by
-    cell_id, collected once per published index."""
+    cell_id, collected once per committed codebook dir: an index's
+    ``<index_dir>/codebook`` or an embedding stream's
+    ``<store_dir>/_codebook``. A committed codebook that cannot be read
+    raises."""
     import numpy as np
 
-    key = (
-        index_dir,
-        os.stat(os.path.join(index_dir, "codebook")).st_mtime_ns,
-    )
-    hit = _CODEBOOK_CACHE.get(index_dir)
+    key = os.stat(cb_dir).st_mtime_ns
+    hit = _CODEBOOK_CACHE.get(cb_dir)
     if hit and hit[0] == key:
         return hit[1]
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "codebook"))
-        .orderBy("cell_id")
-        .collect()
-    )
+    rows = spark.read.parquet(cb_dir).orderBy("cell_id").collect()
     val = (
         np.array([r.cell_id for r in rows], dtype=np.int64),
         np.array([r.ce for r in rows], dtype=np.float64),
         np.array([r.cn2 for r in rows], dtype=np.float64),
     )
-    _cache_put(_CODEBOOK_CACHE, index_dir, (key, val))
+    _cache_put(_CODEBOOK_CACHE, cb_dir, (key, val))
     return val
 
 
@@ -1901,7 +1889,9 @@ def _probes_driver(
     :func:`ann_index_screen_batch` in ``tests/test_ann_index.py``."""
     import numpy as np
 
-    cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
+    cell_ids, CE, CN2 = _codebook_driver(
+        spark, os.path.join(index_dir, "codebook")
+    )
     qrows = queries.select("query_id", "embedding").collect()
     if not qrows:
         return spark.createDataFrame(

@@ -224,10 +224,11 @@ def _hyperplanes(dim: int = 64) -> list[list[float]]:
     return rng.standard_normal((N_PLANES, dim)).tolist()
 
 
-IVF_DEDUP_CELLS = 64  # legacy fixed codebook size — still the STREAMING
-# default (a stream cannot observe final corpus size; size the codebook
-# from the expected corpus via ivf_dedup_n_cells instead). The BATCH plan
-# derives n_cells from the corpus count since r12 (ivf_dedup_n_cells).
+IVF_DEDUP_CELLS = 64  # codebook size of an embedding stream started
+# without expected_corpus_size: a stream cannot observe its final corpus
+# size, and passing expected_corpus_size sizes it by ivf_dedup_n_cells
+# instead. The batch plan and the persisted index size their codebooks
+# from the corpus count (ivf_dedup_n_cells).
 IVF_DEDUP_NPROBE = 2
 
 # r12: probe-scaled codebook sizing. Target per-cell population INCLUDING
@@ -369,25 +370,50 @@ DEDUP_TILE_TARGET = 1536  # max rows per side of one IVF sub-block task
 # (embedding_near_dup_pairs_ivf, ann_index.ann_index_screen_batch)
 
 
-def ivf_probe_cells(n_probe: int) -> Column:
-    """The ``n_probe`` nearest codebook cell_ids (array<long>) for a row
-    carrying ``e`` (array<double>), ``n2`` (double) and the one-row
-    collected codebook column ``cb`` (array<struct<cell_id, ce, cn2>>):
-    squared-L2 distances ``n2 - 2*dot(e, ce) + cn2`` sorted with
-    ``array_sort(struct(d, cell_id))`` (ties break on cell_id, matching
-    the SQL oracle's ``ORDER BY d, cell_id``). SHARED by the batch IVF
-    near-dup plan and the streaming ingest filter
-    (``streaming/embedding_near_dup.py``) so their cell assignment stays
-    bit-identical BY CONSTRUCTION, not by two copies staying in sync."""
-    dists = F.transform(
+def ivf_cell_dists() -> Column:
+    """Per codebook entry, the ``struct(d, cell_id)`` of a row carrying
+    ``e`` (array<double>), ``n2`` (double) and the one-row collected
+    codebook column ``cb`` (array<struct<cell_id, ce, cn2>>), where
+    ``d = n2 - 2*dot(e, ce) + cn2`` is the squared-L2 distance. Struct
+    ordering gives the (d, cell_id) tie-break for free, matching the SQL
+    oracles' ``ORDER BY d, cell_id`` and ``ann_index._np_nearest``. The
+    one distance expression of every plan-side IVF assignment."""
+    return F.transform(
         F.col("cb"),
         lambda c: F.struct(
             (F.col("n2") - 2 * _dot(F.col("e"), c["ce"]) + c["cn2"]).alias("d"),
             c["cell_id"].alias("cell_id"),
         ),
     )
+
+
+def ivf_probe_cells(n_probe: int) -> Column:
+    """The ``n_probe`` nearest codebook cell_ids (array<long>) of a row,
+    by :func:`ivf_cell_dists`. Shared by the batch IVF near-dup plan,
+    the store-side plan of the streaming ingest filter
+    (``streaming/embedding_near_dup.py``) and the persisted index's
+    plan-side build assignment, so their cells agree by construction."""
     return F.transform(
-        F.slice(F.array_sort(dists), 1, n_probe), lambda p: p["cell_id"]
+        F.slice(F.array_sort(ivf_cell_dists()), 1, n_probe),
+        lambda p: p["cell_id"],
+    )
+
+
+def ivf_seed_codebook(
+    spark: SparkSession, sf_dir: str, n_cells: int
+) -> DataFrame:
+    """(cell_id, ce, cn2) coarse quantizer of a corpus: the ``n_cells``
+    LOWEST vec_ids, a TakeOrderedAndProject of ``n_cells`` rows. Rank,
+    not a ``vec_id < n_cells`` filter, so a corpus whose ids do not
+    start near 0 still gets a full codebook; on dense-from-0 ids the
+    two coincide, which keeps the SQL oracle's seed CTE exact. Seeds
+    both the batch IVF near-dup plan and the persisted index build."""
+    return _with_norm2(
+        _emb(spark, sf_dir).orderBy("vec_id").limit(n_cells)
+    ).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("e").alias("ce"),
+        F.col("n2").alias("cn2"),
     )
 
 
@@ -477,22 +503,7 @@ def embedding_near_dup_pairs_ivf(
     feats = embed_features_arrow(_emb(spark, sf_dir), sketch=False).select(
         "vec_id", "e", "n2"
     )
-    # Codebook seeds = the n_cells LOWEST vec_ids (rank-based, r11): a
-    # TakeOrderedAndProject of n_cells rows, deterministic for ANY id
-    # space. The previous `vec_id < n_cells` filter silently built an
-    # empty codebook on corpora whose ids don't start near 0 (sparse or
-    # offset id spaces) and then emitted ZERO pairs; rank-based seeds
-    # give every non-empty corpus a full (or corpus-sized) codebook. On
-    # dense-from-0 ids the two conventions coincide, which keeps the
-    # registered SQL oracle's seed CTE exact.
-    seeds = (
-        _with_norm2(_emb(spark, sf_dir).orderBy("vec_id").limit(n_cells))
-        .select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("e").alias("ce"),
-            F.col("n2").alias("cn2"),
-        )
-    )
+    seeds = ivf_seed_codebook(spark, sf_dir, n_cells)
     cb = seeds.agg(F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb"))
 
     assigned = feats.crossJoin(F.broadcast(cb)).select(
@@ -929,17 +940,6 @@ def similarity_ivf_ann(
     # without the serial collect.
     cb = seeds.agg(F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb"))
 
-    # (squared-L2 distance, cell_id) per codebook entry; struct ordering
-    # gives the d-then-cell_id tie-break for free.
-    def cells(col_e: Column, col_n2: Column) -> Column:
-        return F.transform(
-            F.col("cb"),
-            lambda c: F.struct(
-                (col_n2 - 2 * _dot(col_e, c["ce"]) + c["cn2"]).alias("d"),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
-
     with_cb = emb.crossJoin(F.broadcast(cb))
     probes_src = small.filter(F.col("vec_id") < N_QUERIES).crossJoin(
         F.broadcast(cb)
@@ -948,7 +948,7 @@ def similarity_ivf_ann(
         F.col("vec_id").alias("cand_id"),
         F.col("e").alias("ce2"),
         F.col("n2").alias("cn22"),
-        F.array_min(cells(F.col("e"), F.col("n2")))["cell_id"].alias("cell_id"),
+        F.array_min(ivf_cell_dists())["cell_id"].alias("cell_id"),
     )
     probes = (
         probes_src
@@ -957,9 +957,7 @@ def similarity_ivf_ann(
             F.col("e").alias("qe"),
             F.col("n2").alias("qn2"),
             F.explode(
-                F.slice(
-                    F.array_sort(cells(F.col("e"), F.col("n2"))), 1, IVF_NPROBE
-                )
+                F.slice(F.array_sort(ivf_cell_dists()), 1, IVF_NPROBE)
             ).alias("probe"),
         )
         .select("query_id", "qe", "qn2", F.col("probe")["cell_id"].alias("cell_id"))

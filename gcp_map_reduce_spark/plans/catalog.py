@@ -1,7 +1,9 @@
 """Catalog — importing this module registers every query in the registry.
 
-Add one import line per operator module; modules self-register via the
-``@query`` decorator. IMPORT ORDER IS REGISTRATION ORDER, and the driver
+Add each operator module to ``MODULES``; modules self-register via the
+``@query`` decorator when imported. ``MODULES`` ORDER IS
+REGISTRATION ORDER (``registry.load_catalog`` sorts the registry by it,
+whatever the process imported first), and the driver
 evaluates queries in registration order with a bounded (~50-row)
 correctness window — the registry is consolidated to exactly fit it
 (same-family operators register as tagged suite unions;
@@ -13,21 +15,16 @@ list because its ``salted_token_counts`` has always registered ahead of
 ``wordcount``.
 """
 
-from gcp_map_reduce_spark.operators import (  # noqa: F401,I001
-    scale,
-    wordcount,
-    udf_plugin,
-    text_analysis,
-    curation_rules,
-    decontam,
-    dedup,
-    pipeline,
-    sampling,
-    similarity,
-    clustering,
-    multimodal,
-    relational,
-    relational_ext,
-    relational_subq,
-    timeseries,
-)  # noqa: F401
+from importlib import import_module
+
+MODULES = tuple(
+    f"gcp_map_reduce_spark.operators.{name}"
+    for name in (
+        "scale", "wordcount", "udf_plugin", "text_analysis",
+        "curation_rules", "dedup", "decontam", "pipeline", "sampling",
+        "similarity", "clustering", "multimodal", "relational",
+        "relational_ext", "relational_subq", "timeseries",
+    )
+)
+for _module in MODULES:
+    import_module(_module)

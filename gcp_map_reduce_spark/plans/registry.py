@@ -40,5 +40,15 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def load_catalog() -> None:
-    """Import every operator module for its registration side effects."""
-    from gcp_map_reduce_spark.plans import catalog  # noqa: F401
+    """Import every operator module for its registration side effects,
+    then order ``QUERIES`` by ``catalog.MODULES`` (within a module, by
+    registration order), so the order does not depend on which operator
+    module the process imported first."""
+    from gcp_map_reduce_spark.plans import catalog
+
+    rank = {name: i for i, name in enumerate(catalog.MODULES)}
+    ordered = sorted(
+        QUERIES.items(), key=lambda kv: rank.get(kv[1].__module__, len(rank))
+    )
+    QUERIES.clear()
+    QUERIES.update(ordered)

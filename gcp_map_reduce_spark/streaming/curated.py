@@ -99,6 +99,16 @@ GRAM_FETCH_MAX_IDS = 2_000
 # flips back (documented — density dropping mid-stream is rare, and the
 # full scan stays correct).
 _DENSE_STORES: set[str] = set()
+# Store dirs the latch holds before it starts over (one entry per dense
+# store; a reset costs one probing trigger per store, never a different
+# answer).
+DENSE_STORES_MAX = 64
+
+
+def _latch_dense(store_dir: str) -> None:
+    if len(_DENSE_STORES) >= DENSE_STORES_MAX:
+        _DENSE_STORES.clear()
+    _DENSE_STORES.add(store_dir)
 
 
 def _verified_dup_ids(
@@ -202,7 +212,7 @@ def _verified_dup_ids(
                 batch_id,
             ).select("doc_id", "gh_arr")
         else:
-            _DENSE_STORES.add(store_dir)
+            _latch_dense(store_dir)
     all_grams = store_grams.unionByName(
         feats.select("doc_id", "gh_arr")
     )

@@ -11,24 +11,30 @@ emits only vectors that are not semantic near-dups of anything earlier.
 Accepted vectors (with their features and cell assignments) append to
 the store.
 
-Codebook stability across batches: the coarse quantizer is built ONCE,
-from the first batch's ``n_cells`` lowest vec_ids (the batch op's
+Codebook stability across batches: the coarse quantizer is seeded
+ONCE, from the first batch's ``n_cells`` lowest vec_ids (the batch op's
 rank-based seed convention), and persisted under ``store_dir/_codebook``
 — every later batch (and every replay) reads the same centroids, so
 cell recall is a fixed property of the stream, not of batch order. When
 ingest is id-ordered the codebook equals the batch op's, which is what
 the parity test exploits to replay the streaming acceptance policy over
-``embedding_near_dup_pairs_ivf``'s pair graph EXACTLY.
+``embedding_near_dup_pairs_ivf``'s pair graph EXACTLY. Both trigger
+paths seed through :func:`_stream_codebook`.
 
 Per trigger the batch is collected once, and cells and acceptance are
-decided in numpy against a driver mirror of the store. A remote store,
-or one over ``near_dup.STORE_MIRROR_MAX_ROWS`` rows, takes the
-store-side plan instead (the r11 minhash-stream lessons): the batch side
-is broadcast, so the growing store is only ever touched MAP-SIDE (scan
--> broadcast hash join on cell_id — zero store shuffle); the dups
-relation has no shuffle at all (the anti-join consumer is
+decided in numpy against a driver mirror of the store: the codebook
+comes from ``ann_index._codebook_driver`` (the one bounded driver cache
+of every IVF codebook) and cells from ``ann_index._np_nearest``. A
+remote store, or one over ``near_dup.STORE_MIRROR_MAX_ROWS`` rows,
+takes the store-side plan instead (the r11 minhash-stream lessons): it
+reads the codebook lazily and assigns cells with ``ivf_probe_cells``;
+the batch side is broadcast, so the growing store is only ever touched
+MAP-SIDE (scan -> broadcast hash join on cell_id — zero store shuffle);
+the dups relation has no shuffle at all (the anti-join consumer is
 multiplicity-blind); accepted rows are localCheckpointed once and
-written coalesce(1) per batch dir. Both make identical decisions.
+written coalesce(1) per batch dir. Both assignments compute the same
+distances with the same (d, cell_id) tie-break, so both paths make
+identical decisions and write identical store rows (pytest-asserted).
 
 Replay safety mirrors ``near_dup``: per-batch ``batch_id=N`` dirs are
 rewritten on replay; same-id store rows are excluded by
@@ -40,11 +46,13 @@ key="vec_id")`` applies unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_map_reduce_spark.operators.ann_index import (
+    _codebook_driver,
+    _np_nearest,
+)
 from gcp_map_reduce_spark.operators.similarity import (
     IVF_DEDUP_CELLS,
     IVF_DEDUP_NPROBE,
@@ -83,12 +91,13 @@ def _codebook_committed(ss: SparkSession, path: str) -> bool:
     return bool(glob_paths(ss, f"{path}/[!_.]*"))
 
 
-def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
-              n_cells: int) -> DataFrame:
-    """Read the persisted codebook, creating it from this batch's
-    ``n_cells`` lowest vec_ids if absent or UNCOMMITTED (first batch /
-    replayed first batch — deterministic either way). One row per cell:
-    (cell_id, ce, cn2).
+def _stream_codebook(ss: SparkSession, store_dir: str, batch_seeds,
+                     n_cells: int) -> str:
+    """The stream's codebook dir ``store_dir/_codebook``, seeded first
+    when it is not committed (first batch / replayed first batch —
+    deterministic either way): one row per cell (cell_id, ce, cn2) from
+    the ``n_cells`` lowest vec_ids of ``batch_seeds()``, a pandas frame
+    of (vec_id, e, n2) rows that is built only then.
 
     Dir existence is NOT commitment (:func:`_codebook_committed`): a
     first trigger killed mid-write leaves ``_codebook/_temporary`` only,
@@ -96,27 +105,29 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
     empty probe list and disable dedup forever. A committed-but-empty
     codebook is impossible: an empty first batch raises instead of
     seeding."""
+    import pandas as pd
+
     path = f"{store_dir}/_codebook"
     if _codebook_committed(ss, path):
-        return ss.read.schema(_CODEBOOK_SCHEMA).parquet(path)
-    seeds = (
-        batch_feats.orderBy("vec_id")
-        .limit(n_cells)
-        .select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("e").alias("ce"),
-            F.col("n2").alias("cn2"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    if seeds.limit(1).count() == 0:
+        return path
+    seeds = batch_seeds().nsmallest(n_cells, "vec_id")
+    if len(seeds) == 0:
         raise ValueError(
             "run_streaming_embedding_near_dup: the first batch is empty — "
             "cannot seed the IVF codebook"
         )
+    cb_pdf = pd.DataFrame(
+        {
+            "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
+            "ce": [[float(x) for x in e] for e in seeds["e"]],
+            "cn2": seeds["n2"].astype("float64").to_numpy(),
+        }
+    )
     # overwrite heals a killed prior write's _temporary debris
-    seeds.coalesce(1).write.mode("overwrite").parquet(path)
-    return ss.read.schema(_CODEBOOK_SCHEMA).parquet(path)
+    ss.createDataFrame(cb_pdf, _CODEBOOK_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return path
 
 
 # Driver-side store mirror (r12 — the minhash stream's ``_SIG_CACHE``
@@ -191,82 +202,12 @@ def _emb_cache_append(store_dir: str, batch_id: int, ids, E, n2, cells) -> None:
     cache["merged_bids"] = cache["merged_bids"] | {batch_id}
 
 
-# the committed codebook is immutable (created once, first batch), so
-# re-reading it every trigger was one whole Spark job per trigger of
-# pure waste — cache the arrays per store_dir after the first
-# successful load/create, keyed on the ``_codebook`` dir's mtime as
-# ``ann_index._codebook_driver`` keys its codebook: a store removed and
-# reseeded under the same path gets a new dir, hence a cache miss (an
-# uncommitted codebook never populates the cache, so the
-# killed-first-write rebuild path is unchanged)
-_CODEBOOK_CACHE: dict[str, tuple] = {}
-# Store dirs the codebook cache holds before it starts over (one entry
-# per store; a reset costs one codebook read, never a different answer).
-CODEBOOK_CACHE_MAX_STORES = 64
-
-
-def _mtime_ns(path: str) -> int | None:
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return None
-
-
-def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
-                     n_cells: int):
-    """Driver twin of :func:`_codebook`: (cell_ids, C, cn2) numpy
-    arrays, loaded from the persisted parquet or created from this
-    batch's ``n_cells`` lowest vec_ids (same commitment rules: an
-    uncommitted codebook is reseeded, an unreadable committed one
-    raises, and an empty first batch raises)."""
-    import numpy as np
-
-    path = f"{store_dir}/_codebook"
-    key = _mtime_ns(path)
-    hit = _CODEBOOK_CACHE.get(store_dir)
-    if key is not None and hit is not None and hit[0] == key:
-        return hit[1]
-    if _codebook_committed(ss, path):
-        cb_pdf = ss.read.schema(_CODEBOOK_SCHEMA).parquet(path).toPandas()
-    else:
-        if len(feats_pdf) == 0:
-            raise ValueError(
-                "run_streaming_embedding_near_dup: the first batch is empty — "
-                "cannot seed the IVF codebook"
-            )
-        import pandas as pd
-
-        seeds = feats_pdf.nsmallest(n_cells, "vec_id")
-        cb_pdf = pd.DataFrame(
-            {
-                "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
-                "ce": [[float(x) for x in e] for e in seeds["e"]],
-                "cn2": seeds["n2"].astype("float64").to_numpy(),
-            }
-        )
-        # overwrite heals a killed prior write's _temporary debris
-        ss.createDataFrame(cb_pdf, _CODEBOOK_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-    cb = (
-        cb_pdf["cell_id"].to_numpy(dtype=np.int64),
-        np.stack([np.asarray(e, dtype=np.float64) for e in cb_pdf["ce"]]),
-        cb_pdf["cn2"].to_numpy(dtype=np.float64),
-    )
-    if (store_dir not in _CODEBOOK_CACHE
-            and len(_CODEBOOK_CACHE) >= CODEBOOK_CACHE_MAX_STORES):
-        _CODEBOOK_CACHE.clear()
-    _CODEBOOK_CACHE[store_dir] = (_mtime_ns(path), cb)
-    return cb
-
-
 def run_streaming_embedding_near_dup(
     spark: SparkSession,
     emb_dir: str,
     checkpoint_dir: str,
     store_dir: str,
     output_dir: str,
-    n_cells: int | None = None,
     n_probe: int = IVF_DEDUP_NPROBE,
     threshold: float = NEAR_DUP_COSINE,
     max_files_per_trigger: int | None = None,
@@ -283,27 +224,26 @@ def run_streaming_embedding_near_dup(
     ``expected_corpus_size`` (the planned ingest volume) and the stream
     sizes its codebook exactly as the batch op would on that corpus
     (``ceil(N·n_probe/IVF_DEDUP_CELL_TARGET)``, clamped) — what the
-    batch-parity test and the throughput bench do. An explicit
-    ``n_cells`` overrides; with neither, the legacy ``IVF_DEDUP_CELLS``
-    constant applies (documented mid-scale default — undersized
-    codebooks degrade throughput, never correctness: precision is the
-    exact cosine gate either way).
+    batch-parity test and the throughput bench do. Without it the
+    ``IVF_DEDUP_CELLS`` constant applies (documented mid-scale default —
+    undersized codebooks degrade throughput, never correctness:
+    precision is the exact cosine gate either way).
 
     Triggers run driver-centric (r12, the minhash stream's pattern) —
     batch features collected once, cell assignment and acceptance
     decided in numpy with bit-identical folds (``similarity._seq_dot``
-    = the JVM left fold; probe tie-breaks via lexsort on (d, cell_id))
-    against a driver mirror of the store; three Spark actions per
-    steady-state trigger. Measured on the 20k-vector stress drain @16
-    batches: 518 → 632 vecs/s fresh, 823 warm. A remote store, or one
-    over ``STORE_MIRROR_MAX_ROWS`` rows, runs the store-side plan;
-    decisions AND store rows are pytest-asserted identical."""
-    if n_cells is None:
-        n_cells = (
-            ivf_dedup_n_cells(expected_corpus_size, n_probe)
-            if expected_corpus_size is not None
-            else IVF_DEDUP_CELLS
-        )
+    = the JVM left fold; cells by ``ann_index._np_nearest``, whose
+    (d, cell_id) tie-break is the plan's) against a driver mirror of
+    the store; three Spark actions per steady-state trigger. Measured
+    on the 20k-vector stress drain @16 batches: 518 → 632 vecs/s fresh,
+    823 warm. A remote store, or one over ``STORE_MIRROR_MAX_ROWS``
+    rows, runs the store-side plan; decisions AND store rows are
+    pytest-asserted identical."""
+    n_cells = (
+        ivf_dedup_n_cells(expected_corpus_size, n_probe)
+        if expected_corpus_size is not None
+        else IVF_DEDUP_CELLS
+    )
     reader = spark.readStream.schema("vec_id bigint, embedding array<float>")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -315,28 +255,24 @@ def run_streaming_embedding_near_dup(
         collect the batch's features (ONE job — the old plan broadcast
         the batch twice, each broadcast a driver collect), assign cells
         and decide acceptance in numpy against the driver store mirror
-        (bit-identical folds: `_seq_dot` for assignment distances and
-        pair cosines, `np.lexsort` for the (d, cell_id) probe
-        tie-break), then write the two batch dirs. Steady state = three
-        Spark actions; the batch-parity test pins exactness."""
+        (bit-identical folds: `_np_nearest` for the cells, `_seq_dot`
+        for pair cosines), then write the two batch dirs. Steady state
+        = three Spark actions; the batch-parity test pins exactness."""
         import numpy as np
 
         feats_pdf = feats.toPandas()
-        cell_ids, C, cn2 = _driver_codebook(ss, store_dir, feats_pdf, n_cells)
+        cell_ids, C, cn2 = _codebook_driver(
+            ss, _stream_codebook(ss, store_dir, lambda: feats_pdf, n_cells)
+        )
         ids = feats_pdf["vec_id"].to_numpy(dtype=np.int64)
         if len(feats_pdf):
             E = np.stack(
                 [np.asarray(e, dtype=np.float64) for e in feats_pdf["e"]]
             )
             n2 = feats_pdf["n2"].to_numpy(dtype=np.float64)
-            # assignment distances: (n2 - 2*dot) + cn2 — the same
-            # operand order as ivf_probe_cells' expression
-            dists = (n2[:, None] - 2 * _seq_dot(E, C)) + cn2[None, :]
-            k = min(n_probe, len(cell_ids))
-            cells = []
-            for i in range(len(ids)):
-                order = np.lexsort((cell_ids, dists[i]))[:k]
-                cells.append([int(cell_ids[j]) for j in order])
+            cells = cell_ids[
+                _np_nearest(E, n2, cell_ids, C, cn2, n_probe)
+            ].tolist()
         else:
             E = np.empty((0, 0))
             n2 = np.empty(0)
@@ -413,7 +349,13 @@ def run_streaming_embedding_near_dup(
             _process_collected(ss, feats, batch_id, cache)
             return
         # store-side plan: a remote store, or one over the mirror bound
-        cb = _codebook(ss, store_dir, feats, n_cells)
+        cb = ss.read.schema(_CODEBOOK_SCHEMA).parquet(
+            _stream_codebook(
+                ss, store_dir,
+                lambda: feats.orderBy("vec_id").limit(n_cells).toPandas(),
+                n_cells,
+            )
+        )
         cb_row = cb.agg(
             F.collect_list(F.struct("cell_id", "ce", "cn2")).alias("cb")
         )

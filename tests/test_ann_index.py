@@ -440,11 +440,14 @@ def test_arrow_assignment_bit_identical_to_plan(spark):
     from gcp_map_reduce_spark.operators.ann_index import (
         _assign_cells_arrow,
         _assign_cells_plan,
-        _codebook_df,
     )
-    from gcp_map_reduce_spark.operators.similarity import _emb, _with_norm2
+    from gcp_map_reduce_spark.operators.similarity import (
+        _emb,
+        _with_norm2,
+        ivf_seed_codebook,
+    )
 
-    seeds = _codebook_df(spark, SF, N_CELLS)
+    seeds = ivf_seed_codebook(spark, SF, N_CELLS)
     feats = _with_norm2(_emb(spark, SF)).select("vec_id", "e", "n2")
     rows = lambda df: sorted(  # noqa: E731
         (r.vec_id, r.cell_id) for r in df.select("vec_id", "cell_id").collect()
@@ -837,9 +840,10 @@ def test_driver_caches_bounded(spark, tmp_path, monkeypatch):
         assert dict(counts) == {"0": i, "1": 1}
         assert len(ai._CELL_COUNTS_CACHE) <= 2
         cb.to_parquet(os.path.join(d, "codebook", "part-0.parquet"))
-        assert [int(c) for c in ai._codebook_driver(spark, d)[0]] == [0, 1]
+        cb_dir = os.path.join(d, "codebook")
+        assert [int(c) for c in ai._codebook_driver(spark, cb_dir)[0]] == [0, 1]
         assert len(ai._CODEBOOK_CACHE) <= 2
-    assert list(ai._CODEBOOK_CACHE) == [str(tmp_path / "idx2")]
+    assert list(ai._CODEBOOK_CACHE) == [str(tmp_path / "idx2" / "codebook")]
 
 
 def test_dup_check_scan_prunes_to_batch_cells(spark, tmp_path, split_corpus):

@@ -31,6 +31,31 @@ def test_every_registered_query_has_an_oracle_or_rationale():
     )
 
 
+def _registry_order(first_import: str) -> list[str]:
+    """QUERIES names, in order, of a fresh process that imports
+    ``first_import`` (if any) before ``load_catalog()``."""
+    script = (
+        (f"import {first_import}\n" if first_import else "")
+        + "from gcp_map_reduce_spark.plans import registry\n"
+        "registry.load_catalog()\n"
+        "print('\\n'.join(registry.QUERIES))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, cwd=str(REPO), check=True,
+    )
+    return out.stdout.split()
+
+
+def test_registry_order_independent_of_prior_imports():
+    """The driver reads the registry in order, so importing an operator
+    module before ``load_catalog()`` must not reorder it."""
+    fresh = _registry_order("")
+    assert fresh[:2] == ["salted_token_counts", "wordcount"]
+    assert fresh == list(registry.QUERIES)
+    assert _registry_order("gcp_map_reduce_spark.operators.wordcount") == fresh
+
+
 def test_queries_md_matches_live_registry():
     on_disk = (REPO / "QUERIES.md").read_text()
     regenerated = subprocess.run(

@@ -1098,6 +1098,7 @@ def test_embedding_stream_reseeds_codebook_after_store_removed(
     import duckdb
     import shutil
 
+    from gcp_map_reduce_spark.operators.similarity import IVF_DEDUP_CELLS
     from gcp_map_reduce_spark.streaming.embedding_near_dup import (
         run_streaming_embedding_near_dup,
     )
@@ -1114,7 +1115,7 @@ def test_embedding_stream_reseeds_codebook_after_store_removed(
         )
         q = run_streaming_embedding_near_dup(
             spark, str(src), str(tmp_path / name / "ckpt"), str(store),
-            str(tmp_path / name / "out"), n_cells=3,
+            str(tmp_path / name / "out"),
         )
         q.awaitTermination(300)
 
@@ -1130,29 +1131,25 @@ def test_embedding_stream_reseeds_codebook_after_store_removed(
         for r in spark.read.parquet(
             "/root/testdata/sf0.001/embeddings.parquet"
         ).collect()
-    )[:3]
+    )[:IVF_DEDUP_CELLS]
     assert cells == lowest
 
 
-def _codebook_cell_ids(spark, store_dir, feats, driver: bool) -> list[int]:
-    """Cell ids of the codebook the plan-side (`_codebook`) or the
-    driver-side (`_driver_codebook`) loader returns, n_cells = 3."""
-    from gcp_map_reduce_spark.streaming import embedding_near_dup as end
+def test_embedding_codebook_commit_rules(spark, tmp_path):
+    """The stream's one seed-and-load path decides "is there a codebook"
+    by one listing, not by a failed read: an uncommitted
+    (`_temporary`-only) codebook is reseeded from the batch and then
+    kept; an empty first batch raises; a committed codebook that cannot
+    be read raises and is left as is."""
+    from gcp_map_reduce_spark.operators.ann_index import _codebook_driver
+    from gcp_map_reduce_spark.streaming.embedding_near_dup import (
+        _stream_codebook,
+    )
 
-    if driver:
-        end._CODEBOOK_CACHE.pop(str(store_dir), None)
-        cb = end._driver_codebook(spark, str(store_dir), feats.toPandas(), 3)
-        return sorted(int(c) for c in cb[0])
-    cb = end._codebook(spark, str(store_dir), feats, 3)
-    return sorted(r.cell_id for r in cb.collect())
+    def cell_ids(store_dir, batch) -> list[int]:
+        cb_dir = _stream_codebook(spark, str(store_dir), batch.toPandas, 3)
+        return sorted(int(c) for c in _codebook_driver(spark, cb_dir)[0])
 
-
-@pytest.mark.parametrize("driver", [False, True], ids=["plan", "driver"])
-def test_embedding_codebook_commit_rules(spark, tmp_path, driver):
-    """Both codebook loaders decide "is there a codebook" by one listing,
-    not by a failed read: an uncommitted (`_temporary`-only) codebook is
-    reseeded from the batch and then kept; an empty first batch raises;
-    a committed codebook that cannot be read raises and is left as is."""
     schema = "vec_id bigint, e array<double>, n2 double"
     feats = spark.createDataFrame(
         [(i, [float(i), 1.0], float(i * i + 1)) for i in range(10, 0, -1)],
@@ -1165,40 +1162,33 @@ def test_embedding_codebook_commit_rules(spark, tmp_path, driver):
     spark.createDataFrame(
         [(100, [1.0, 0.0], 1.0)], "cell_id bigint, ce array<double>, cn2 double"
     ).write.parquet(str(killed / "_codebook" / "_temporary" / "0"))
-    assert _codebook_cell_ids(spark, killed, feats, driver) == [1, 2, 3]
-    later = feats.filter("vec_id > 5")
-    assert _codebook_cell_ids(spark, killed, later, driver) == [1, 2, 3]
+    assert cell_ids(killed, feats) == [1, 2, 3]
+    assert cell_ids(killed, feats.filter("vec_id > 5")) == [1, 2, 3]
 
     with pytest.raises(ValueError, match="first batch is empty"):
-        _codebook_cell_ids(
-            spark, tmp_path / "fresh", spark.createDataFrame([], schema), driver
-        )
+        cell_ids(tmp_path / "fresh", spark.createDataFrame([], schema))
 
     broken = tmp_path / "broken" / "_codebook"
     broken.mkdir(parents=True)
     (broken / "part-00000.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
-        _codebook_cell_ids(spark, broken.parent, feats, driver)
+        cell_ids(broken.parent, feats)
     assert sorted(os.listdir(broken)) == ["part-00000.parquet"]
     assert (broken / "part-00000.parquet").read_bytes() == b"not a parquet file"
 
 
-def test_embedding_codebook_cache_bounded(spark, tmp_path, monkeypatch):
-    """The driver codebook cache holds at most CODEBOOK_CACHE_MAX_STORES
-    store dirs: a new store past the bound starts the cache over."""
-    from gcp_map_reduce_spark.streaming import embedding_near_dup as end
+def test_curated_dense_latch_bounded(monkeypatch):
+    """The per-driver dense-store latch holds at most DENSE_STORES_MAX
+    store dirs: a new dense store past the bound starts it over."""
+    from gcp_map_reduce_spark.streaming import curated
 
-    monkeypatch.setattr(end, "CODEBOOK_CACHE_MAX_STORES", 2)
-    end._CODEBOOK_CACHE.clear()
-    committed = pd.DataFrame({"cell_id": [1], "ce": [[1.0, 0.0]], "cn2": [1.0]})
-    for i in range(3):
-        store = str(tmp_path / f"store{i}")
-        os.makedirs(os.path.join(store, "_codebook"))
-        committed.to_parquet(os.path.join(store, "_codebook", "part-0.parquet"))
-        cb = end._driver_codebook(spark, store, committed.iloc[:0], 1)
-        assert [int(c) for c in cb[0]] == [1]
-        assert len(end._CODEBOOK_CACHE) <= 2
-    assert list(end._CODEBOOK_CACHE) == [str(tmp_path / "store2")]
+    monkeypatch.setattr(curated, "DENSE_STORES_MAX", 2)
+    monkeypatch.setattr(curated, "_DENSE_STORES", set())
+    for i in range(5):
+        curated._latch_dense(f"store{i}")
+        assert f"store{i}" in curated._DENSE_STORES
+        assert len(curated._DENSE_STORES) <= 2
+    assert curated._DENSE_STORES == {"store4"}
 
 
 def test_streaming_curated_corpus_equals_batch_pipeline(spark, tmp_path):

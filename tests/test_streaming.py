@@ -1135,20 +1135,30 @@ def test_embedding_stream_reseeds_codebook_after_store_removed(
     assert cells == lowest
 
 
-def test_embedding_codebook_commit_rules(spark, tmp_path):
-    """The stream's one seed-and-load path decides "is there a codebook"
-    by one listing, not by a failed read: an uncommitted
-    (`_temporary`-only) codebook is reseeded from the batch and then
-    kept; an empty first batch raises; a committed codebook that cannot
-    be read raises and is left as is."""
+@pytest.mark.parametrize("driver", [False, True], ids=["plan", "driver"])
+def test_embedding_codebook_commit_rules(spark, tmp_path, driver):
+    """The stream's one seed step decides "is there a codebook" by one
+    listing, not by a failed read, on both trigger paths (the store-side
+    plan and the driver mirror, each with its own seed rows and codebook
+    reader): an uncommitted (`_temporary`-only) codebook is reseeded
+    from the batch and then kept; an empty first batch raises; a
+    committed codebook that cannot be read raises and is left as is."""
     from gcp_map_reduce_spark.operators.ann_index import _codebook_driver
     from gcp_map_reduce_spark.streaming.embedding_near_dup import (
+        _CODEBOOK_SCHEMA,
         _stream_codebook,
     )
 
     def cell_ids(store_dir, batch) -> list[int]:
-        cb_dir = _stream_codebook(spark, str(store_dir), batch.toPandas, 3)
-        return sorted(int(c) for c in _codebook_driver(spark, cb_dir)[0])
+        if driver:
+            cb_dir = _stream_codebook(spark, str(store_dir), batch.toPandas, 3)
+            return sorted(int(c) for c in _codebook_driver(spark, cb_dir)[0])
+        cb_dir = _stream_codebook(
+            spark, str(store_dir),
+            lambda: batch.orderBy("vec_id").limit(3).toPandas(), 3,
+        )
+        cb = spark.read.schema(_CODEBOOK_SCHEMA).parquet(cb_dir)
+        return sorted(r.cell_id for r in cb.collect())
 
     schema = "vec_id bigint, e array<double>, n2 double"
     feats = spark.createDataFrame(
